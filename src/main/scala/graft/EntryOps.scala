@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.ops.Barrier.BarrierOps
+import graft.streaming.LearningGate
 
 /** Training-data-pipeline operators wired to the test tables, with DuckDB
   * oracles that implement the *same algorithm* — so LSH/IVF approximations are
@@ -114,7 +115,7 @@ object EntryOps {
     // refuse a corpus.
     val n = graft.ops.ParquetMeta.rowCountOrScan(spark,
       s"$dir/embeddings.parquet", e.count())
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= n).get
+    val planes = grownPlanes(n)
     graft.ops.Dedup.embedNearDupBanded(e, minCosine = 0.3, planes)
   }
 
@@ -129,19 +130,10 @@ object EntryOps {
     */
   def embedDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    // two in-plan refusal arrivals exercise the operator's `invalid` tier
-    // (the media path's planted-corrupt-payload discipline — a refusal
-    // route that no fixture row reaches is an unchecked claim): a null
-    // vector and a wrong-dimension vector, mirrored in the oracle
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
     graft.ops.Dedup.embedDedupAgainstIndex(
       e.filter(col("vec_id") % 10 === 0)
-        .select(col("vec_id"), col("embedding")).unionByName(refusals),
+        .select(col("vec_id"), col("embedding"))
+        .unionByName(vecRefusals(spark)),
       graft.ops.Dedup.buildEmbedIndex(e.filter(col("vec_id") % 10 =!= 0)),
       minCosine = 0.3)
   }
@@ -156,17 +148,12 @@ object EntryOps {
     */
   def semDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
     val (centroids, members) =
       Similarity.buildSemIndex(e.filter(col("vec_id") % 10 =!= 0))
     Similarity.semDedupAgainstIndex(
       e.filter(col("vec_id") % 10 === 0)
-        .select(col("vec_id"), col("embedding")).unionByName(refusals),
+        .select(col("vec_id"), col("embedding"))
+        .unionByName(vecRefusals(spark)),
       centroids, members, minCosine = 0.3)
   }
 
@@ -221,9 +208,9 @@ object EntryOps {
   /** d24 — the SELF-LEARNING text-dedup stream under the hard correctness
     * signal (r12 verdict item 1, closing the last major family verified by
     * spec alone): three arrival batches replay through the stream's OWN
-    * micro-batch body ([[graft.streaming.LogStream.dedupLearningTextBatch]]
-    * — shared code with [[graft.streaming.LogStream.dedupLearningArrivals]],
-    * so the streamed route cannot drift from the hash-checked one) against
+    * gate ([[graft.streaming.LearningGate.text]] — the same
+    * [[graft.streaming.LearningGate.batch]] the stream runs, so the
+    * streamed route cannot drift from the hash-checked one) against
     * a scratch index root: doc_id % 10 ≤ 6 plays the ingest-built base
     * ([[graft.ops.Dedup.buildCorpusIndex]]), cohorts 7/8/9 play batches
     * 0/1/2. Batch b's verdicts read base + learned batches STRICTLY BELOW
@@ -241,25 +228,14 @@ object EntryOps {
     */
   def dedupLearningReplay(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_text").resolve("root").toString
-    Dedup.buildCorpusIndex(d.filter(col("doc_id") % 10 <= 6))
-      .write.parquet(s"$root/base")
     def planted(id: Long): DataFrame = spark.sql(
       s"SELECT CAST($id AS BIGINT) AS doc_id, '$plantedLearnText' AS text")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = d.filter(col("doc_id") % 10 === 7 + b)
-      val arr = b match {
-        case 0 => cohort.unionByName(planted(-100L))
-        case 1 => cohort.unionByName(planted(-101L))
-        case _ => cohort
-      }
-      graft.streaming.LogStream.dedupLearningTextBatch(arr, root, b.toLong)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("doc_id"), col("verdict"), col("match_id"))
-      .orderBy(col("batch_id"), col("doc_id"))
+    LearningGate.text().replay(
+      root => Dedup.buildCorpusIndex(d.filter(col("doc_id") % 10 <= 6))
+        .write.parquet(s"$root/base"),
+      cohortBatches(c => d.filter(col("doc_id") % 10 === c),
+        planted(-100L), planted(-101L)),
+      "doc_id", "verdict", "match_id")
   }
 
   /** The d34 planted URLs: two raw forms whose canonical form is the
@@ -278,7 +254,7 @@ object EntryOps {
     * the hard correctness signal, the SIXTH learning modality (text d24,
     * embedding d25, media d27, semantic d28, banded d30, URLs here):
     * three arrival batches replay through the stream's own micro-batch
-    * body ([[graft.streaming.LogStream.dedupLearningUrlBatch]]) against a
+    * ([[graft.streaming.LearningGate.url]]) against a
     * scratch frontier root — doc_id % 10 ≤ 6 of [[urlAssets]] plays the
     * ingest-built base ([[graft.ops.Dedup.buildUrlIndex]] over canonical
     * forms), cohorts 7/8/9 play batches 0/1/2. Batch b reads the frontier
@@ -293,32 +269,29 @@ object EntryOps {
     * simplest knowledge chain in the family).
     */
   def dedupLearningUrlReplay(spark: SparkSession, dir: String): DataFrame = {
+    val (base, batches) = urlLearnFixture(spark, dir, plantedUrlRaw1)
+    LearningGate.url.replay(
+      root => Dedup.buildUrlIndex(base).write.parquet(s"$root/base"),
+      batches, "doc_id", "verdict", "match_id", "url")
+  }
+
+  /** d34/d35's fixture: the canonicalized % 10 ≤ 6 base of [[urlAssets]]
+    * and cohorts 7/8/9 as batches 0/1/2 of (doc_id, raw_url), with
+    * [[plantedUrlRaw0]] planted as −100 in batch 0 and `alias` as −101 in
+    * batch 1.
+    */
+  private def urlLearnFixture(spark: SparkSession, dir: String,
+      alias: String): (DataFrame, Seq[DataFrame]) = {
     val u = urlAssets(spark, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_url").resolve("root").toString
-    Dedup.buildUrlIndex(
-      u.filter(col("asset_id") % 10 <= 6)
-        .select(col("asset_id").as("doc_id"),
-          graft.functions.Staged(
-            graft.functions.UrlCanonicalize(col("raw_url"))).as("url")))
-      .write.parquet(s"$root/base")
     def planted(id: Long, raw: String): DataFrame = spark.sql(
       s"SELECT CAST($id AS BIGINT) AS doc_id, '$raw' AS raw_url")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = u.filter(col("asset_id") % 10 === 7 + b)
-        .select(col("asset_id").as("doc_id"), col("raw_url"))
-      val arr = b match {
-        case 0 => cohort.unionByName(planted(-100L, plantedUrlRaw0))
-        case 1 => cohort.unionByName(planted(-101L, plantedUrlRaw1))
-        case _ => cohort
-      }
-      graft.streaming.LogStream.dedupLearningUrlBatch(arr, root, b.toLong)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("doc_id"), col("verdict"),
-        col("match_id"), col("url"))
-      .orderBy(col("batch_id"), col("doc_id"))
+    val base = u.filter(col("asset_id") % 10 <= 6)
+      .select(col("asset_id").as("doc_id"),
+        graft.functions.Staged(
+          graft.functions.UrlCanonicalize(col("raw_url"))).as("url"))
+    (base, cohortBatches(c => u.filter(col("asset_id") % 10 === c)
+        .select(col("asset_id").as("doc_id"), col("raw_url")),
+      planted(-100L, plantedUrlRaw0), planted(-101L, alias)))
   }
 
   /** The d35 planted NEAR alias: batch 1's raw form canonicalizes to the
@@ -339,8 +312,8 @@ object EntryOps {
     * candidate grams, exact-Jaccard ≥ 0.4 verify — O(1) per pair at
     * ≤ ~12 tokens/URL — deterministic best match by (jaccard DESC,
     * ex_id ASC)), and `new` URLs learn their own gram rows
-    * ([[graft.streaming.LogStream.dedupLearningUrlNearBatch]], the
-    * stream's own micro-batch body). Base: doc_id % 10 ≤ 6 of
+    * ([[graft.streaming.LearningGate.urlNear]], the stream's own
+    * gate). Base: doc_id % 10 ≤ 6 of
     * [[urlAssets]] as [[graft.ops.Dedup.buildUrlGramIndex]]; cohorts
     * 7/8/9 play batches 0/1/2; unparseable arrivals `invalid`, never
     * learned. The planted pair proves the loop: batch 1's
@@ -351,32 +324,10 @@ object EntryOps {
     * against each batch's knowledge state exactly as the gate does.
     */
   def dedupLearningUrlNearReplay(spark: SparkSession, dir: String): DataFrame = {
-    val u = urlAssets(spark, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_urlnear").resolve("root").toString
-    Dedup.buildUrlGramIndex(
-      u.filter(col("asset_id") % 10 <= 6)
-        .select(col("asset_id").as("doc_id"),
-          graft.functions.Staged(
-            graft.functions.UrlCanonicalize(col("raw_url"))).as("url")))
-      .write.parquet(s"$root/base")
-    def planted(id: Long, raw: String): DataFrame = spark.sql(
-      s"SELECT CAST($id AS BIGINT) AS doc_id, '$raw' AS raw_url")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = u.filter(col("asset_id") % 10 === 7 + b)
-        .select(col("asset_id").as("doc_id"), col("raw_url"))
-      val arr = b match {
-        case 0 => cohort.unionByName(planted(-100L, plantedUrlRaw0))
-        case 1 => cohort.unionByName(planted(-101L, plantedUrlNearRaw))
-        case _ => cohort
-      }
-      graft.streaming.LogStream.dedupLearningUrlNearBatch(arr, root, b.toLong)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("doc_id"), col("verdict"),
-        col("match_id"), col("jaccard"), col("url"))
-      .orderBy(col("batch_id"), col("doc_id"))
+    val (base, batches) = urlLearnFixture(spark, dir, plantedUrlNearRaw)
+    LearningGate.urlNear().replay(
+      root => Dedup.buildUrlGramIndex(base).write.parquet(s"$root/base"),
+      batches, "doc_id", "verdict", "match_id", "jaccard", "url")
   }
 
   /** EXACT float literal: the float's precise decimal expansion (finite,
@@ -399,10 +350,45 @@ object EntryOps {
   private val plantedLearnVec: Seq[Float] =
     (0 until 64).map(j => if (j % 3 == 0) 1.0f else if (j % 3 == 1) -1.0f else 0.5f)
 
+  /** `v` as an exact FLOAT-array Spark SQL literal ([[floatLit]]). */
+  private def vecSql(v: Seq[Float]): String =
+    v.map(f => s"CAST(${floatLit(f)} AS FLOAT)").mkString("array(", ", ", ")")
+
+  /** One planted (vec_id, embedding) arrival, [[plantedLearnVec]] by
+    * default.
+    */
+  private def vecLit(spark: SparkSession, id: Long,
+      v: Seq[Float] = plantedLearnVec): DataFrame =
+    spark.sql(s"SELECT CAST($id AS BIGINT) AS vec_id, ${vecSql(v)} AS embedding")
+
+  /** d17's planted refusal arrivals, the `invalid` tier every vector gate
+    * must surface (a refusal route no fixture row reaches is an unchecked
+    * claim): a NULL vector (−1) and a wrong-dimension one (−2).
+    */
+  private def vecRefusals(spark: SparkSession): DataFrame = spark.sql(
+    """SELECT CAST(-1 AS BIGINT) AS vec_id,
+              CAST(NULL AS ARRAY<FLOAT>) AS embedding
+       UNION ALL
+       SELECT CAST(-2 AS BIGINT),
+              CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
+
+  /** The learning replays' three batches: cohorts % 10 = 7/8/9 as batches
+    * 0/1/2, batch 0 carrying `plant0` and batch 1 `plant1`.
+    */
+  private def cohortBatches(cohort: Int => DataFrame, plant0: DataFrame,
+      plant1: DataFrame): Seq[DataFrame] =
+    Seq(cohort(7).unionByName(plant0), cohort(8).unionByName(plant1), cohort(9))
+
+  /** Grown LSH plane count: the smallest p ≥ 4 with 2^p · 48 ≥ `n`, so the
+    * expected bucket population stays ~48 as the corpus grows (the d26
+    * constant-cell-size rule; the oracles mirror the same arithmetic).
+    */
+  private def grownPlanes(n: Long): Int =
+    (4 to 30).find(p => (1L << p) * 48L >= n).get
+
   /** d25 — [[dedupLearningReplay]]'s contract for the VECTOR modality: the
-    * self-learning embedding-dedup stream's batch body
-    * ([[graft.streaming.LogStream.dedupLearningEmbedBatch]], shared with
-    * [[graft.streaming.LogStream.dedupLearningEmbedArrivals]]) replayed
+    * self-learning embedding-dedup stream's gate
+    * ([[graft.streaming.LearningGate.embed]]) replayed
     * over three batches (vec_id % 10 = 7/8/9) against a scratch
     * [[graft.ops.Dedup.buildEmbedIndex]] root (% 10 ≤ 6 plays the base)
     * built at GROWN geometry (planes = smallest p ≥ 4 with 2^p · 48 ≥ N —
@@ -418,9 +404,6 @@ object EntryOps {
     */
   def dedupLearningEmbedReplay(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_embed").resolve("root").toString
-    val corpus = e.filter(col("vec_id") % 10 <= 6)
     // GROWN plane count (the d26 constant-cell-size rule for the
     // hyperplane space): smallest p ≥ 4 with 2^p · 48 ≥ N, so expected
     // bucket size stays ~48 as the corpus grows — a fixed plane count
@@ -428,43 +411,35 @@ object EntryOps {
     // N from parquet footer metadata × the cohort share (% 10 ≤ 6 ⇒
     // 7/10) — the d26/d31 footer-sizing rule (r14 verdict item 3), the
     // oracle's `pl` CTE mirrors the identical integer arithmetic; the
-    // batch body follows `planes` FROM the index, so the stream needs no
+    // gate follows `planes` FROM the index, so the stream needs no
     // parameter at all. (Known LSH tradeoff, documented in BENCH_NOTES:
     // single-table collision probability at a given cosine falls as
     // planes grow — the recall-preserving scale paths are the banded
     // text forms and the sem/ANN index routes.)
-    val n = graft.ops.ParquetMeta.rowCountOrScan(spark,
-      s"$dir/embeddings.parquet", e.count()) * 7L / 10L
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= n).get
-    Dedup.buildEmbedIndex(corpus, planes)
-      .write.parquet(s"$root/base")
-    val pvSql = plantedLearnVec.map(v => s"CAST(${floatLit(v)} AS FLOAT)")
-      .mkString("array(", ", ", ")")
-    def planted(id: Long): DataFrame = spark.sql(
-      s"SELECT CAST($id AS BIGINT) AS vec_id, $pvSql AS embedding")
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = e.filter(col("vec_id") % 10 === 7 + b)
-        .select(col("vec_id"), col("embedding"))
-      val arr = b match {
-        case 0 => cohort.unionByName(refusals).unionByName(planted(-100L))
-        case 1 => cohort.unionByName(planted(-101L))
-        case _ => cohort
-      }
-      graft.streaming.LogStream
-        .dedupLearningEmbedBatch(arr, root, b.toLong, minCosine = 0.9)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("vec_id"), col("verdict"),
-        col("match_id"), col("cosine"))
-      .orderBy(col("batch_id"), col("vec_id"))
+    val planes = grownPlanes(learnBaseRows(spark, dir, e))
+    LearningGate.embed().replay(
+      root => Dedup.buildEmbedIndex(e.filter(col("vec_id") % 10 <= 6), planes)
+        .write.parquet(s"$root/base"),
+      vecLearnBatches(spark, e), "vec_id", "verdict", "match_id", "cosine")
   }
+
+  /** Footer-metadata row count of the vector learning replays' base
+    * cohort (% 10 ≤ 6 ⇒ 7/10 of the table) — the d26 sizing rule.
+    */
+  private def learnBaseRows(spark: SparkSession, dir: String,
+      e: DataFrame): Long =
+    graft.ops.ParquetMeta.rowCountOrScan(spark,
+      s"$dir/embeddings.parquet", e.count()) * 7L / 10L
+
+  /** d25/d28/d30's batches: vec_id cohorts 7/8/9, with d17's refusal pair
+    * and [[plantedLearnVec]] as −100 in batch 0, its copy −101 in batch 1.
+    */
+  private def vecLearnBatches(spark: SparkSession,
+      e: DataFrame): Seq[DataFrame] =
+    cohortBatches(c => e.filter(col("vec_id") % 10 === c)
+        .select(col("vec_id"), col("embedding")),
+      vecRefusals(spark).unionByName(vecLit(spark, -100L)),
+      vecLit(spark, -101L))
 
   /** d26 — d22 ([[semDedupIncremental]]) re-registered at the DEPLOYMENT
     * geometry (r12 verdict item 2): nCentroids derives from the corpus
@@ -489,14 +464,8 @@ object EntryOps {
   def semDedupIncrementalGrown(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val corpus = e.filter(col("vec_id") % 10 =!= 0)
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
     val arrivals = e.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id"), col("embedding")).unionByName(refusals)
+      .select(col("vec_id"), col("embedding")).unionByName(vecRefusals(spark))
     val ct = s"$dir/sem_centroids.parquet"
     val fs = graft.ops.IndexFs.fs(spark, dir)
     val (centroids, members) =
@@ -551,8 +520,7 @@ object EntryOps {
   /** d27 — the SELF-LEARNING media-dedup stream under the hard correctness
     * signal: [[dedupLearningReplay]]'s three-batch replay discipline for
     * the perceptual-hash modality, through the stream's own micro-batch
-    * body ([[graft.streaming.LogStream.dedupLearningMediaBatch]] — shared
-    * with [[graft.streaming.LogStream.dedupLearningMediaArrivals]]) over
+    * gate ([[graft.streaming.LearningGate.media]]) over
     * the cross-codec audio corpus ([[audioCorpusAssetsOf]]): asset_id
     * % 10 ≤ 6 builds the base index ([[graft.ops.Dedup.buildMediaIndex]]
     * over `coalesce(wav_dhash, flac_dhash)` — one hash space across
@@ -575,44 +543,28 @@ object EntryOps {
     */
   def dedupLearningMediaReplay(spark: SparkSession, dir: String): DataFrame = {
     val ids = docIds(spark, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_media").resolve("root").toString
     def hashOf(c: Column): Column = graft.functions.Staged(coalesce(
       graft.functions.WavDHash(c), graft.functions.FlacDHash(c)))
-    graft.ops.Dedup.buildMediaIndex(
-      audioCorpusAssetsOf(ids.filter(col("doc_id") % 10 <= 6))
-        .select(col("asset_id").cast("string").as("asset_id"),
-          col("payload")),
-      hashOf(col("payload")))
-      .write.parquet(s"$root/base")
     def planted(id: Long): DataFrame = spark.sql(
       s"SELECT CAST($id AS STRING) AS path, unhex('$plantedWavHex') AS content")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = ids.filter(col("doc_id") % 10 === 7 + b)
-      val arr0 = audioCorpusAssetsOf(cohort)
-        .select(col("asset_id").cast("string").as("path"),
-          col("payload").as("content"))
-      val arr = b match {
-        case 0 => arr0.unionByName(planted(plantedMediaIds._1))
-        case 1 => arr0.unionByName(planted(plantedMediaIds._2))
-        case _ => arr0
-      }
-      graft.streaming.LogStream.dedupLearningMediaBatch(
-        arr, root, b.toLong, hashOf(col("content")))
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("asset_id"), col("verdict"),
-        col("match_id"), col("hamming"))
-      .orderBy(col("batch_id"), col("asset_id"))
+    LearningGate.media(hashOf(col("content"))).replay(
+      root => Dedup.buildMediaIndex(
+        audioCorpusAssetsOf(ids.filter(col("doc_id") % 10 <= 6))
+          .select(col("asset_id").cast("string").as("asset_id"),
+            col("payload")),
+        hashOf(col("payload"))).write.parquet(s"$root/base"),
+      cohortBatches(c => audioCorpusAssetsOf(ids.filter(col("doc_id") % 10 === c))
+          .select(col("asset_id").cast("string").as("path"),
+            col("payload").as("content")),
+        planted(plantedMediaIds._1), planted(plantedMediaIds._2)),
+      "asset_id", "verdict", "match_id", "hamming")
   }
 
   /** d28 — the SELF-LEARNING incremental-SemDeDup stream under the hard
     * correctness signal, completing the replay family across all four
     * learning modalities (text d24, embedding d25, media d27, semantic
-    * here): the stream's micro-batch body
-    * ([[graft.streaming.LogStream.dedupLearningSemBatch]] — shared with
-    * [[graft.streaming.LogStream.dedupLearningSemArrivals]]) replayed
+    * here): the stream's gate
+    * ([[graft.streaming.LearningGate.sem]]) replayed
     * over three batches (vec_id % 10 = 7/8/9) against a scratch index
     * root whose FROZEN centroids and base members come from
     * [[graft.ops.Similarity.buildSemIndex]] over the % 10 ≤ 6 corpus at
@@ -630,43 +582,17 @@ object EntryOps {
     */
   def dedupLearningSemReplay(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val corpus = e.filter(col("vec_id") % 10 <= 6)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_sem").resolve("root").toString
-    // K from table metadata × the cohort share (% 10 ≤ 6 ⇒ 7/10) — the
-    // d26 footer-sizing rule; see semDedupIncrementalGrown
-    val n = graft.ops.ParquetMeta.rowCountOrScan(spark,
-      s"$dir/embeddings.parquet", e.count()) * 7L / 10L
-    val (centroids, members) = Similarity.buildSemIndex(corpus,
-      nCentroids = math.max(8L, (n + 47L) / 48L).toInt)
-    centroids.write.parquet(s"$root/centroids")
-    members.write.parquet(s"$root/members/base")
-    val pvSql = plantedLearnVec.map(v => s"CAST(${floatLit(v)} AS FLOAT)")
-      .mkString("array(", ", ", ")")
-    def planted(id: Long): DataFrame = spark.sql(
-      s"SELECT CAST($id AS BIGINT) AS vec_id, $pvSql AS embedding")
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = e.filter(col("vec_id") % 10 === 7 + b)
-        .select(col("vec_id"), col("embedding"))
-      val arr = b match {
-        case 0 => cohort.unionByName(refusals).unionByName(planted(-100L))
-        case 1 => cohort.unionByName(planted(-101L))
-        case _ => cohort
-      }
-      graft.streaming.LogStream
-        .dedupLearningSemBatch(arr, root, b.toLong, minCosine = 0.9)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("vec_id"), col("verdict"), col("cell"),
-        col("match_id"), col("cosine"))
-      .orderBy(col("batch_id"), col("vec_id"))
+    // K from table metadata × the cohort share — the d26 footer-sizing
+    // rule; see semDedupIncrementalGrown
+    val n = learnBaseRows(spark, dir, e)
+    LearningGate.sem().replay({ root =>
+      val (centroids, members) = Similarity.buildSemIndex(
+        e.filter(col("vec_id") % 10 <= 6),
+        nCentroids = math.max(8L, (n + 47L) / 48L).toInt)
+      centroids.write.parquet(s"$root/centroids")
+      members.write.parquet(s"$root/members/base")
+    }, vecLearnBatches(spark, e),
+      "vec_id", "verdict", "cell", "match_id", "cosine")
   }
 
   /** The d29 planted arrival: [[plantedLearnVec]] shifted by +0.8 at every
@@ -706,28 +632,18 @@ object EntryOps {
     */
   def embedDedupBanded(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    def lits(id: Long, v: Seq[Float]): DataFrame = spark.sql(
-      s"SELECT CAST($id AS BIGINT) AS vec_id, " +
-        v.map(f => s"CAST(${floatLit(f)} AS FLOAT)").mkString("array(", ", ", ")") +
-        " AS embedding")
     val corpus = e.filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id"), col("embedding"))
-      .unionByName(lits(-50L, plantedLearnVec))
+      .unionByName(vecLit(spark, -50L))
     // footer-metadata sizing: 9/10 cohort share + the one planted witness
     val n = graft.ops.ParquetMeta.rowCountOrScan(spark,
       s"$dir/embeddings.parquet", e.count()) * 9L / 10L + 1L
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= n).get
+    val planes = grownPlanes(n)
     val index = graft.ops.Dedup.buildEmbedIndexBanded(corpus, planes)
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
     val arrivals = e.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id"), col("embedding"))
-      .unionByName(refusals)
-      .unionByName(lits(-100L, plantedBandedNear))
+      .unionByName(vecRefusals(spark))
+      .unionByName(vecLit(spark, -100L, plantedBandedNear))
     graft.ops.Dedup.embedDedupAgainstIndexBanded(arrivals, index,
       minCosine = 0.9)
   }
@@ -735,9 +651,8 @@ object EntryOps {
   /** d30 — the BANDED route as the SELF-LEARNING ingest gate, composing
     * the round's two threads: d29's recall-preserving grown geometry
     * (4 tables of p grown planes) run through the learning replay
-    * discipline (d24/d25/d27/d28), via the stream's own micro-batch body
-    * ([[graft.streaming.LogStream.dedupLearningBandedBatch]] — shared
-    * with [[graft.streaming.LogStream.dedupLearningBandedArrivals]]).
+    * discipline (d24/d25/d27/d28), via the stream's own gate
+    * ([[graft.streaming.LearningGate.banded]]).
     * Base = banded index over the % 10 ≤ 6 corpus at grown p; batches
     * 7/8/9; knowledge strictly below each batch; `new` valid vectors
     * learn their T banded rows under the INDEX's geometry. The planted
@@ -754,41 +669,11 @@ object EntryOps {
     */
   def dedupLearningBandedReplay(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_banded").resolve("root").toString
-    val corpus = e.filter(col("vec_id") % 10 <= 6)
-    // footer-metadata sizing (7/10 cohort share) — the d25 rule
-    val n = graft.ops.ParquetMeta.rowCountOrScan(spark,
-      s"$dir/embeddings.parquet", e.count()) * 7L / 10L
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= n).get
-    graft.ops.Dedup.buildEmbedIndexBanded(corpus, planes)
-      .write.parquet(s"$root/base")
-    val pvSql = plantedLearnVec.map(v => s"CAST(${floatLit(v)} AS FLOAT)")
-      .mkString("array(", ", ", ")")
-    def planted(id: Long): DataFrame = spark.sql(
-      s"SELECT CAST($id AS BIGINT) AS vec_id, $pvSql AS embedding")
-    val refusals = spark.sql(
-      """SELECT CAST(-1 AS BIGINT) AS vec_id,
-                CAST(NULL AS ARRAY<FLOAT>) AS embedding
-         UNION ALL
-         SELECT CAST(-2 AS BIGINT),
-                CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)""")
-    val verdicts = (0 to 2).map { b =>
-      val cohort = e.filter(col("vec_id") % 10 === 7 + b)
-        .select(col("vec_id"), col("embedding"))
-      val arr = b match {
-        case 0 => cohort.unionByName(refusals).unionByName(planted(-100L))
-        case 1 => cohort.unionByName(planted(-101L))
-        case _ => cohort
-      }
-      graft.streaming.LogStream
-        .dedupLearningBandedBatch(arr, root, b.toLong, minCosine = 0.9)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("vec_id"), col("verdict"),
-        col("match_id"), col("cosine"))
-      .orderBy(col("batch_id"), col("vec_id"))
+    val planes = grownPlanes(learnBaseRows(spark, dir, e))
+    LearningGate.banded().replay(
+      root => Dedup.buildEmbedIndexBanded(e.filter(col("vec_id") % 10 <= 6),
+        planes).write.parquet(s"$root/base"),
+      vecLearnBatches(spark, e), "vec_id", "verdict", "match_id", "cosine")
   }
 
   def topkBrute(spark: SparkSession, dir: String): DataFrame =
@@ -828,7 +713,7 @@ object EntryOps {
     val e = emb(spark, dir)
     val n = graft.ops.ParquetMeta.rowCountOrScan(spark,
       s"$dir/embeddings.parquet", e.count())
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= n).get
+    val planes = grownPlanes(n)
     Similarity.commitSq8Root(spark, e.filter(col("vec_id") % 10 =!= 0),
       rootsPath, planes)
     val v = Similarity.resolvePqIndexPath(spark, rootsPath)
@@ -1609,7 +1494,7 @@ object EntryOps {
     // footer-metadata sizing (9/10 cohort share — % 10 ≠ 7); r14 item 3
     val nE = graft.ops.ParquetMeta.rowCountOrScan(spark,
       s"$dir/embeddings.parquet", e.count()) * 9L / 10L
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= nE).get
+    val planes = grownPlanes(nE)
     val textIdx = Dedup.buildCorpusIndex(corpusD)
     val embIdx = Dedup.buildEmbedIndexBanded(corpusE, planes)
     val evalIdx = Dedup.buildEvalGramIndex(
@@ -1619,11 +1504,9 @@ object EntryOps {
     // novel embedding with NULL text (text/contamination gates cannot
     // run), −2 refuses both gates (empty text + NULL embedding). Both
     // must come back quarantine_unverifiable with text_verdict 'invalid'.
-    val pvSql = plantedLearnVec.map(v => s"CAST(${floatLit(v)} AS FLOAT)")
-      .mkString("array(", ", ", ")")
     val plantedRefusals = spark.sql(
       s"""SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(NULL AS STRING) AS text,
-                 $pvSql AS embedding
+                 ${vecSql(plantedLearnVec)} AS embedding
           UNION ALL
           SELECT CAST(-2 AS BIGINT), '', CAST(NULL AS ARRAY<FLOAT>)""")
     val arrivals = d.filter(col("doc_id") % 10 === 7)
@@ -1651,18 +1534,16 @@ object EntryOps {
       .select(col("vec_id"), col("embedding"))
     val nE = graft.ops.ParquetMeta.rowCountOrScan(spark,
       s"$dir/embeddings.parquet", e.count()) * 9L / 10L
-    val planes = (4 to 30).find(p => (1L << p) * 48L >= nE).get
+    val planes = grownPlanes(nE)
     Dedup.buildCorpusIndex(d.filter(col("doc_id") % 10 =!= 7))
       .write.mode("overwrite").parquet(s"$root/text")
     Dedup.buildEmbedIndexBanded(corpusE, planes)
       .write.mode("overwrite").parquet(s"$root/emb")
     Dedup.buildEvalGramIndex(d.filter(col("doc_id") % 100 === 0), n = 8)
       .write.mode("overwrite").parquet(s"$root/eval")
-    val pvSql = plantedLearnVec.map(v => s"CAST(${floatLit(v)} AS FLOAT)")
-      .mkString("array(", ", ", ")")
     val plantedRefusals = spark.sql(
       s"""SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(NULL AS STRING) AS text,
-                 $pvSql AS embedding
+                 ${vecSql(plantedLearnVec)} AS embedding
           UNION ALL
           SELECT CAST(-2 AS BIGINT), '', CAST(NULL AS ARRAY<FLOAT>)""")
     d.filter(col("doc_id") % 10 === 7)
@@ -4768,8 +4649,8 @@ object EntryOps {
     * modality: text d24, embedding d25, media d27, semantic d28, banded
     * d30, URLs d34/d35, video here — closing the lifecycle every other
     * modality already has, r18 verdict item 1): three arrival batches
-    * replay through the stream's own micro-batch body
-    * ([[graft.streaming.LogStream.dedupLearningVideoBatch]]) against a
+    * replay through the stream's own gate
+    * ([[graft.streaming.LearningGate.video]]) against a
     * scratch descriptor-gram root. Cohorts: doc_id % 10 ∈ {4..8} play the
     * ingest-built base; batch 0 is the PARTNER classes {0, 2} (novel vs
     * the base — every decodable one learns its gram rows); batch 1 is the
@@ -4784,25 +4665,16 @@ object EntryOps {
     * recomputing the df cap against each batch's knowledge state exactly
     * as the gate does.
     */
-  def dedupLearningVideoReplay(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_learn_video").resolve("root").toString
-    graft.ops.Dedup.buildVideoGramIndex(
-      videoDescriptorTable(spark, dir,
-        where = (col("doc_id") % 10).isin(4, 5, 6, 7, 8))
-        .select(col("doc_id"), col("text")))
-      .write.parquet(s"$root/base")
-    val batches = Seq(Seq(0, 2), Seq(1, 3), Seq(9))
-    val verdicts = batches.zipWithIndex.map { case (cls, b) =>
-      val arr = mp4RemuxAssets(spark, dir, (col("doc_id") % 10).isin(cls: _*))
-      graft.streaming.LogStream.dedupLearningVideoBatch(arr, root, b.toLong)
-        .withColumn("batch_id", lit(b.toLong))
-    }
-    verdicts.reduce(_ unionByName _)
-      .select(col("batch_id"), col("doc_id"), col("verdict"),
-        col("match_id"), col("jaccard"))
-      .orderBy(col("batch_id"), col("doc_id"))
-  }
+  def dedupLearningVideoReplay(spark: SparkSession, dir: String): DataFrame =
+    LearningGate.video().replay(
+      root => Dedup.buildVideoGramIndex(
+        videoDescriptorTable(spark, dir,
+          where = (col("doc_id") % 10).isin(4, 5, 6, 7, 8))
+          .select(col("doc_id"), col("text")))
+        .write.parquet(s"$root/base"),
+      Seq(Seq(0, 2), Seq(1, 3), Seq(9)).map(cls =>
+        mp4RemuxAssets(spark, dir, (col("doc_id") % 10).isin(cls: _*))),
+      "doc_id", "verdict", "match_id", "jaccard")
 
   /** t20/d32/d33 fixture formulas — crawl-style URLs synthesized in-plan
     * from doc_id, written once in dialect-neutral SQL (CASE/concat/%) so
@@ -5978,7 +5850,7 @@ object EntryOps {
     * kidx holds banded rows for every valid vector, each batch restricts
     * it to its knowledge set k$n and recomputes the per-(band, key)
     * frequency cap over THAT set (exactly what
-    * `embedDedupAgainstIndexBanded` sees through `readEmbedIndex`), and
+    * `embedDedupAgainstIndexBanded` sees through `readWithLearned`), and
     * `new` valid arrivals join the next batch's knowledge. The planted
     * byte-identical pair (−100/−101) collides in every band at any plane
     * count, so its learned-row `near` at cosine 1.0 is scale-independent.

@@ -126,9 +126,6 @@ object Ingest {
       .parquet(warehouse.path(table))
   }
 
-  /** W5 — dead-letter sink (schema `graft.model.Schemas.deadLetter`), same
-    * overwrite-by-batchId idempotence as the fact append.
-    */
   /** Bucketed table write — the 100 TB co-location primitive: hash-bucketing
     * a fact table by its dominant join/aggregation key ONCE at write time
     * lets every downstream equi-join and groupBy on that key run with NO
@@ -211,9 +208,16 @@ object Ingest {
       .write.mode("overwrite").parquet(path)
   }
 
-  def appendDeadLetters(df: DataFrame, warehouse: Warehouse,
+  /** W5 — dead-letter sink (schema `graft.model.Schemas.deadLetter`), same
+    * overwrite-by-batchId idempotence as the fact append, keyed by feed
+    * (`dead_letters/feed=<feed>/batch_id=N`): every feed numbers its
+    * micro-batches from 0, so a redelivery replaces only its own feed's
+    * batch, never another feed's dead letters of the same batch id.
+    */
+  def appendDeadLetters(df: DataFrame, warehouse: Warehouse, feed: String,
       batchId: Long = 0L): Unit =
-    if (!df.isEmpty) idempotentAppend(df, warehouse, "dead_letters", batchId)
+    if (!df.isEmpty)
+      idempotentAppend(df, warehouse, s"dead_letters/feed=$feed", batchId)
 
   /** Idempotent un-dated append (bridge tables like `inbox_tocc`):
     * overwrite-by-batchId, partitioned by `batch_id` only.

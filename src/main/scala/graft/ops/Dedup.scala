@@ -86,13 +86,6 @@ object Dedup {
     urls.filter(col("url").isNotNull)
       .groupBy(col("url")).agg(min(col("doc_id")).as("ex_id"))
 
-  /** [[readCorpusIndex]]'s base ∪ learned-below-b layout for the URL
-    * frontier ([[buildUrlIndex]] base + the learning stream's delta).
-    */
-  def readUrlIndex(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, rootPath, beforeBatch)
-
   /** URL dedup of incoming (doc_id, raw_url) rows against a persisted
     * [[buildUrlIndex]] table: arrivals canonicalize in their own scan
     * stage ([[graft.functions.UrlCanonicalize]]) and LEFT-join the
@@ -145,14 +138,6 @@ object Dedup {
   def buildUrlGramIndex(urls: DataFrame): DataFrame =
     urlGrams(urls.groupBy(col("url")).agg(min(col("doc_id")).as("ex_id")),
       "ex_id").select(col("gram"), col("ex_id"))
-
-  /** [[readCorpusIndex]]'s base ∪ learned-below-b layout for the near-URL
-    * gram index ([[buildUrlGramIndex]] base + the learning stream's
-    * delta).
-    */
-  def readUrlGramIndex(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, rootPath, beforeBatch)
 
   /** NEAR-URL dedup of incoming (doc_id, raw_url) rows against a persisted
     * [[buildUrlGramIndex]] table — the d33 banded machinery as an
@@ -242,14 +227,6 @@ object Dedup {
     videoGrams(videos.filter(col("text").isNotNull)
       .groupBy(col("text")).agg(min(col("doc_id")).as("ex_id")), "ex_id")
       .select(col("gram"), col("ex_id"))
-
-  /** [[readCorpusIndex]]'s base ∪ learned-below-b layout for the video
-    * descriptor gram index ([[buildVideoGramIndex]] base + the learning
-    * stream's delta).
-    */
-  def readVideoGramIndex(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, rootPath, beforeBatch)
 
   /** NEAR-VIDEO dedup of DECODED arrivals (doc_id, text — NULL text = the
     * walker refused the container) against a persisted
@@ -611,60 +588,27 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Combined corpus index for the SELF-LEARNING dedup stream
-    * ([[graft.streaming.LogStream.dedupLearningArrivals]]): the
-    * ingest-built base (`<root>/base`, a [[buildCorpusIndex]] table) plus
-    * the stream's own learned rows (`<root>/learned/batch_id=N` — the
-    * index rows of docs the stream judged `new`), restricted to batches
-    * BELOW `beforeBatch`. The bound is the replay-safety contract: a
-    * redelivered micro-batch must never see its own learned rows (every
-    * doc would match itself as `exact`), so batch b reads strictly
-    * earlier knowledge — bitwise the same verdicts on every replay.
+  /** [[readWithLearned]] for the text corpus index ([[buildCorpusIndex]]
+    * base + the text learning gate's delta).
     */
   def readCorpusIndex(spark: org.apache.spark.sql.SparkSession,
       rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
     readWithLearned(spark, rootPath, beforeBatch)
 
-  /** [[readCorpusIndex]]'s shape for the MEDIA hash index
-    * ([[buildMediaIndex]] base + the learning stream's delta) — the
-    * same base ∪ learned-below-b layout and replay contract.
+  /** Combined index of a SELF-LEARNING root
+    * ([[graft.streaming.LearningGate]]), for any index schema: the
+    * ingest-built base (`<root>/base`) plus the gate's own learned rows
+    * (`<root>/learned/batch_id=N` and compacted generations), restricted
+    * to batches BELOW `beforeBatch`. The bound is the replay-safety
+    * contract: a redelivered micro-batch must never see its own learned
+    * rows (every arrival would match itself), so batch b reads strictly
+    * earlier knowledge — bitwise the same verdicts on every replay. The
+    * gram index stays ONE-ROW-PER-GRAM under this union
+    * ([[spanCheckAgainstIndex]]'s run merging depends on it) because its
+    * learning stream writes only first-seen grams.
     */
-  def readMediaIndex(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, rootPath, beforeBatch)
-
-  /** [[readCorpusIndex]]'s shape for the EMBEDDING index
-    * ([[buildEmbedIndex]] base + the learning stream's delta). The planes
-    * column rides every row, so the combined view stays self-describing.
-    */
-  def readEmbedIndex(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, rootPath, beforeBatch)
-
-  /** [[readCorpusIndex]]'s shape for the SEMANTIC index's MEMBERS table
-    * ([[graft.ops.Similarity.buildSemIndex]] members at `<root>/members/base`
-    * + the learning stream's delta) — centroids stay a single table at
-    * `<root>/centroids` (learning adds members to existing cells; new
-    * cells only appear at retrain, which is a rebuild).
-    */
-  def readSemMembers(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, s"$rootPath/members", beforeBatch)
-
-  /** [[readCorpusIndex]]'s shape for the GRAM index ([[buildGramIndex]]
-    * base + the learning stream's delta). The combined view stays
-    * ONE-ROW-PER-GRAM — the invariant [[spanCheckAgainstIndex]]'s run
-    * merging depends on (duplicate membership rows would split runs and
-    * double-count dup_grams) — because the learning stream writes only
-    * FIRST-SEEN grams (anti-joined against prior knowledge), never
-    * re-learning a gram the base or an earlier batch already holds.
-    */
-  def readGramIndex(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
-    readWithLearned(spark, rootPath, beforeBatch)
-
-  private def readWithLearned(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long): DataFrame = {
+  def readWithLearned(spark: org.apache.spark.sql.SparkSession,
+      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame = {
     val base = spark.read.parquet(s"$rootPath/base")
     // Hadoop FileSystem listing ([[IndexFs]]) so a learned-delta root on
     // hdfs://s3a:// works the same as local disk
@@ -723,7 +667,7 @@ object Dedup {
 
   /** COMPACT a self-learning index root's `learned/` delta — the
     * batch-per-partition layout every learning stream writes
-    * ([[graft.streaming.LogStream.dedupLearningArrivals]] family) grows
+    * ([[graft.streaming.LearningGate]] and the substring check) grows
     * one directory per micro-batch forever; this folds the partitions at
     * or below the current horizon into one consolidated
     * `learned_g<G+1>/` GENERATION, `batch_id` retained as a column so the
@@ -1567,25 +1511,25 @@ object Dedup {
     var labels = und.groupBy(col("src").as("doc_id"))
       .agg(min(least(col("dst"), col("src"))).as("label"))
       .barriered
-    // One action for (sum, emptiness); the per-round convergence metric
-    // below reads the checkpointed labels in a single stage (no shuffle,
-    // exact BigInt arithmetic — label sums may exceed double precision).
-    def labelSum(df: DataFrame): BigInt =
+    // The convergence metric (label sum, row count): one action reading the
+    // checkpointed labels in a single stage (no shuffle, exact BigInt
+    // arithmetic — a Long sum of 2^62-scale ids wraps or overflows).
+    def labelStats(df: DataFrame): (BigInt, Long) =
       df.select(col("label")).rdd
         .mapPartitions(it => Iterator.single(
-          it.foldLeft(BigInt(0))((a, r) => a + r.getLong(0))))
-        .fold(BigInt(0))(_ + _)
-    val firstRow = labels.agg(sum(col("label")), count(lit(1))).head()
-    var prevSum = BigInt(Option(firstRow.get(0)).fold(0L)(_.asInstanceOf[Long]))
+          it.foldLeft((BigInt(0), 0L))((a, r) => (a._1 + r.getLong(0), a._2 + 1))))
+        .fold((BigInt(0), 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
+    val (firstSum, firstCount) = labelStats(labels)
+    var prevSum = firstSum
     var it = 1 // round 1 was folded into the initialization
-    var converged = firstRow.getLong(1) == 0L
+    var converged = firstCount == 0L
     while (!converged && it < maxIters) {
       val nbr = und.join(labels, und("src") === labels("doc_id"))
         .select(col("dst").as("doc_id"), col("label"))
       val next = labels.select(col("doc_id"), col("label")).union(nbr)
         .groupBy(col("doc_id")).agg(min(col("label")).as("label"))
         .barriered
-      val nextSum = labelSum(next)
+      val nextSum = labelStats(next)._1
       labels = next
       converged = nextSum == prevSum // labels only decrease; equal sum ⇒ fixpoint
       prevSum = nextSum

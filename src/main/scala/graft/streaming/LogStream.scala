@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -23,31 +23,28 @@ object LogStream {
       lines: DataFrame,
       warehouse: Warehouse,
       table: String,
+      feed: String,
       checkpoint: String
   ): StreamingQuery =
-    lines.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId threads through to overwrite-by-batchId idempotent appends:
-        // a redelivered micro-batch rewrites its own partitions, not duplicates
-        val res = parsed(batch)
-        Ingest.appendEvents(res.events, warehouse, table, batchId)
-        Ingest.appendDeadLetters(res.deadLetters, warehouse, batchId)
-      }
-      .start()
+    eachBatch(lines, checkpoint) { (batch, batchId) =>
+      // batchId threads through to overwrite-by-batchId idempotent appends:
+      // a redelivered micro-batch rewrites its own partitions, not duplicates
+      val res = parsed(batch)
+      Ingest.appendEvents(res.events, warehouse, table, batchId)
+      Ingest.appendDeadLetters(res.deadLetters, warehouse, feed, batchId)
+    }
 
   /** Apache access-log directory stream → `apache_access` table. */
   def apache(spark: SparkSession, dir: String, warehouse: Warehouse,
       checkpoint: String): StreamingQuery =
     run(ApacheParser.parse, spark.readStream.text(dir), warehouse,
-      "apache_access", checkpoint)
+      "apache_access", "apache", checkpoint)
 
   /** sshd journal directory stream → `authfail` table. */
   def authfail(spark: SparkSession, dir: String, warehouse: Warehouse,
       checkpoint: String): StreamingQuery =
     run(AuthfailParser.parse, spark.readStream.text(dir), warehouse,
-      "authfail", checkpoint)
+      "authfail", "authfail", checkpoint)
 
   /** Raw RFC-5322 message directory stream → contacts upsert + inbox + tocc
     * (reference maillog.py:66-104: per-address N+1 lookups and per-row inserts
@@ -55,25 +52,16 @@ object LogStream {
     */
   def maillog(spark: SparkSession, dir: String, warehouse: Warehouse,
       checkpoint: String): StreamingQuery =
+    eachBatch(binaryFiles(spark, dir)
+      .select(col("content"), col("modificationTime")), checkpoint) {
+      (batch, batchId) => ingestMailBatch(batch, warehouse, batchId)
+    }
+
+  /** A `binaryFile` stream over `dir`: one row per file. */
+  private def binaryFiles(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType))))
+      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
       .load(dir)
-      .select(col("content"), col("modificationTime"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestMailBatch(batch, warehouse, batchId)
-      }
-      .start()
 
   /** Media asset directory stream → decoded-feature table: the streaming
     * MULTIMODAL ingest path. Every native decoder (container sniff, GIF
@@ -87,14 +75,7 @@ object LogStream {
     */
   def mediaAssets(spark: SparkSession, dir: String, outDir: String,
       checkpoint: String): StreamingQuery = {
-    import org.apache.spark.sql.types._
-    val arrivals = spark.readStream.format("binaryFile")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(dir)
+    val arrivals = binaryFiles(spark, dir)
       .select(col("path"), col("length").as("n_bytes"), col("content"))
     mediaDecorations(arrivals, Seq("path", "n_bytes"))
       .writeStream
@@ -184,6 +165,20 @@ object LogStream {
           .as("mp4_bytes")): _*)
   }
 
+  /** The one stream shape of this file: `Trigger.AvailableNow`
+    * micro-batches of `arrivals` through `f(batch, batchId)`, offsets in
+    * `checkpoint`. Every sink `f` writes is keyed by the batch id, so a
+    * redelivered micro-batch rewrites its own output instead of
+    * duplicating it.
+    */
+  private[streaming] def eachBatch(arrivals: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    arrivals.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(f)
+      .start()
+
   /** STREAMING incremental dedup against the WAREHOUSE — the production
     * shape of the d11 batch operator: arrivals stream → per micro-batch,
     * join the PERSISTED corpus dedup index ([[graft.ops.Dedup
@@ -209,23 +204,11 @@ object LogStream {
     */
   def dedupArrivals(arrivals: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, maxHamming: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = graft.ops.Dedup
-          .dedupAgainstIndex(batch, spark.read.parquet(indexPath), maxHamming)
-          .withColumn("batch_id", lit(batchId))
-        // replayed micro-batch overwrites its own partition, not duplicates
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try verdicts.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      LearningGate.writeBatch(graft.ops.Dedup.dedupAgainstIndex(batch,
+        batch.sparkSession.read.parquet(indexPath), maxHamming),
+        batchId, outPath)
+    }
 
   /** STREAMING decontamination gate — [[dedupArrivals]]' shape for the
     * train/eval contamination check ([[graft.ops.Dedup
@@ -242,20 +225,11 @@ object LogStream {
   def contaminationArrivals(arrivals: DataFrame, indexPath: String,
       outPath: String, checkpoint: String, n: Int = 8,
       minShared: Long = 1): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = graft.ops.Dedup.contaminationGateAgainstIndex(
-          batch, spark.read.parquet(indexPath), n, minShared)
-          .withColumn("batch_id", lit(batchId))
-        withDynamicOverwrite(spark) {
-          verdicts.write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      LearningGate.writeBatch(graft.ops.Dedup.contaminationGateAgainstIndex(
+        batch, batch.sparkSession.read.parquet(indexPath), n, minShared),
+        batchId, outPath)
+    }
 
   /** STREAMING admission pipeline — the e08 decision table as the ingest
     * gate it exists to be ([[graft.ops.Dedup.admitAgainstIndexes]], shared
@@ -272,285 +246,32 @@ object LogStream {
       embIndexPath: String, evalIndexPath: String, outPath: String,
       checkpoint: String, maxHamming: Int = 3, minCosine: Double = 0.9,
       n: Int = 8): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val decisions = graft.ops.Dedup.admitAgainstIndexes(
-          graft.ops.Barrier.barrier(batch),
-          spark.read.parquet(textIndexPath),
-          spark.read.parquet(embIndexPath),
-          spark.read.parquet(evalIndexPath),
-          maxHamming, minCosine, n)
-          .withColumn("batch_id", lit(batchId))
-        withDynamicOverwrite(spark) {
-          decisions.write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      LearningGate.writeBatch(graft.ops.Dedup.admitAgainstIndexes(
+        graft.ops.Barrier.barrier(batch),
+        spark.read.parquet(textIndexPath),
+        spark.read.parquet(embIndexPath),
+        spark.read.parquet(evalIndexPath),
+        maxHamming, minCosine, n), batchId, outPath)
+    }
 
-  /** Dynamic-partition-overwrite scope: a replayed micro-batch must rewrite
-    * only its OWN `batch_id=N` partition, never truncate siblings.
-    */
-  private def withDynamicOverwrite[A](spark: SparkSession)(f: => A): A = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try f
-    finally prev.foreach(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-  }
-
-  /** The SELF-LEARNING text-dedup micro-batch BODY — the single
-    * implementation [[dedupLearningArrivals]] runs per trigger and the
-    * registered batch-replay query (d24, `EntryOps.dedupLearningReplay`)
-    * drives under the oracle, so the stream's verdicts and the
-    * hash-checked ones cannot drift: verdicts come from base + learned
-    * batches STRICTLY BELOW `batchId`
-    * ([[graft.ops.Dedup.readCorpusIndex]] — the replay-exactness
-    * contract), and docs judged `new` write their own index rows to
-    * `<root>/learned/batch_id=N` (dynamic partition overwrite —
-    * idempotent on redelivery). Returns the barriered verdict table;
-    * the learned-rows write has already happened when it returns.
+  /** [[LearningGate.text]]'s micro-batch ([[LearningGate.batch]]): the
+    * self-learning text gate's verdicts for `batch` against the index root
+    * strictly below `batchId`, its `new` docs learned.
     */
   def dedupLearningTextBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, maxHamming: Int = 3): DataFrame = {
-    val spark = batch.sparkSession
-    // verdicts feed TWO actions (the learned-rows write and the caller's
-    // verdict write) — barrier the tiny verdict table so the index join
-    // runs once (multi-action class, the fence's home turf)
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .dedupAgainstIndex(batch,
-        graft.ops.Dedup.readCorpusIndex(spark, indexRoot,
-          beforeBatch = batchId), maxHamming))
-    val learned = graft.ops.Dedup.buildCorpusIndex(
-      batch.join(verdicts.filter(col("verdict") === "new")
-        .select(col("doc_id")), Seq("doc_id")))
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
-    }
-    verdicts
-  }
+      batchId: Long, maxHamming: Int = 3): DataFrame =
+    LearningGate.text(maxHamming).batch(batch, indexRoot, batchId)
 
-  /** SELF-LEARNING streaming dedup — [[dedupArrivals]] plus the missing
-    * half of the incremental loop: docs judged `new` write their OWN index
-    * rows (`<root>/learned/batch_id=N`, batch-partitioned for idempotent
-    * replay), so a later batch's duplicate of an earlier batch's novel doc
-    * is caught — the static-index stream keeps yielding `keep` for every
-    * copy of content the base corpus has never seen. Knowledge is
-    * per-batch MONOTONE and replay-exact: batch b's verdicts read base +
-    * learned batches STRICTLY BELOW b
-    * ([[graft.ops.Dedup.readCorpusIndex]]), so a redelivered batch never
-    * sees its own rows and reproduces its verdicts bitwise. Within one
-    * micro-batch, arrivals are still only compared against prior
-    * knowledge (two novel duplicates in the SAME batch both read `new` —
-    * intra-batch self-dedup is the batch operators' job, d01/d08 class);
-    * the learned rows carry the same ~24 bytes/doc as the base index, so
-    * the stream's state is still nothing but parquet. Zero state-store
-    * state; a compaction folding `learned/` into `base/` at ingest
-    * cadence follows the [[graft.ops.Similarity.compactPqIndex]] marker
-    * protocol if the batch tail ever dominates listing cost. The per-batch
-    * body is [[dedupLearningTextBatch]] — shared with the d24 registered
-    * replay, so the streamed route is itself oracle-hash-checked.
+  /** SELF-LEARNING text dedup stream: [[LearningGate.text]] as a stream
+    * ([[LearningGate.arrivals]]).
     */
   def dedupLearningArrivals(arrivals: DataFrame, indexRoot: String,
       outPath: String, checkpoint: String,
       maxHamming: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts =
-          dedupLearningTextBatch(batch, indexRoot, batchId, maxHamming)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** The SELF-LEARNING URL-dedup micro-batch BODY — the crawl FRONTIER
-    * loop, [[dedupLearningTextBatch]]'s contract for the URL modality
-    * (shared with the d34 registered replay,
-    * `EntryOps.dedupLearningUrlReplay`): arriving (doc_id, raw_url) rows
-    * canonicalize in their own scan stage, verdicts come from the
-    * frontier STRICTLY BELOW `batchId`
-    * ([[graft.ops.Dedup.readUrlIndex]] — replay-exact), and `new` URLs
-    * write their first-seen frontier rows to `<root>/learned/batch_id=N`
-    * — so a later batch's re-discovery of an earlier batch's novel URL is
-    * `dup`, the property a crawl frontier exists for. `invalid`
-    * (unparseable) arrivals are never learned. Intra-batch: two arrivals
-    * sharing a canonical URL in ONE batch both read `new` and learn one
-    * frontier row (min doc_id) — prior-knowledge-only, the whole learning
-    * family's contract. Zero state-store state.
-    */
-  def dedupLearningUrlBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .urlDedupAgainstIndex(batch,
-        graft.ops.Dedup.readUrlIndex(spark, indexRoot,
-          beforeBatch = batchId)))
-    val learned = graft.ops.Dedup.buildUrlIndex(
-      verdicts.filter(col("verdict") === "new")
-        .select(col("doc_id"), col("url")))
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
-    }
-    verdicts
-  }
-
-  /** SELF-LEARNING URL dedup stream — [[dedupLearningArrivals]]' contract
-    * for the crawl frontier: per-trigger micro-batches through
-    * [[dedupLearningUrlBatch]], verdicts batch-partitioned for idempotent
-    * replay. Zero state-store state.
-    */
-  def dedupLearningUrlArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = dedupLearningUrlBatch(batch, indexRoot, batchId)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** The SELF-LEARNING NEAR-URL-dedup micro-batch BODY —
-    * [[dedupLearningUrlBatch]]'s contract for the d33 gram space (shared
-    * with the d35 registered replay, `EntryOps.dedupLearningUrlNearReplay`):
-    * a crawl that mutates one query param per fetch defeats the exact
-    * frontier, so this gate verdicts arrivals against the persisted
-    * token-bigram index STRICTLY BELOW `batchId`
-    * ([[graft.ops.Dedup.readUrlGramIndex]] — replay-exact) via
-    * [[graft.ops.Dedup.urlNearDedupAgainstIndex]] (df-capped candidate
-    * grams, exact-Jaccard verify, deterministic best match), and `new`
-    * URLs learn their OWN gram rows into `<root>/learned/batch_id=N` —
-    * so a later batch's near-alias of an earlier batch's novel URL is
-    * `dup` through learned rows alone. `invalid` arrivals are never
-    * learned; intra-batch near-aliases both read `new`
-    * (prior-knowledge-only, the family contract). Zero state-store state.
-    */
-  def dedupLearningUrlNearBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, minJaccard: Double = 0.4,
-      maxDocFreq: Long = 64): DataFrame = {
-    val spark = batch.sparkSession
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .urlNearDedupAgainstIndex(batch,
-        graft.ops.Dedup.readUrlGramIndex(spark, indexRoot,
-          beforeBatch = batchId),
-        minJaccard, maxDocFreq))
-    val learned = graft.ops.Dedup.buildUrlGramIndex(
-      verdicts.filter(col("verdict") === "new")
-        .select(col("doc_id"), col("url")))
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
-    }
-    verdicts
-  }
-
-  /** SELF-LEARNING NEAR-URL dedup stream — [[dedupLearningUrlArrivals]]'
-    * contract for the gram space: per-trigger micro-batches through
-    * [[dedupLearningUrlNearBatch]], verdicts batch-partitioned for
-    * idempotent replay. Zero state-store state.
-    */
-  def dedupLearningUrlNearArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String, minJaccard: Double = 0.4,
-      maxDocFreq: Long = 64): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = dedupLearningUrlNearBatch(batch, indexRoot, batchId,
-          minJaccard, maxDocFreq)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** Per-micro-batch body of the self-learning VIDEO near-dup gate (shared
-    * with the d38 registered replay, `EntryOps.dedupLearningVideoReplay` —
-    * the SEVENTH learning modality): arriving MP4 payloads decode IN THE
-    * BATCH SCAN STAGE (native `mp4_sample_tables` — payloads never leave
-    * it) into d36's layout-free descriptor text, verdict against the
-    * persisted descriptor gram index STRICTLY BELOW `batchId`
-    * ([[graft.ops.Dedup.readVideoGramIndex]] — replay-exact) via
-    * [[graft.ops.Dedup.videoNearDedupAgainstIndex]] (df-capped candidate
-    * grams, exact-Jaccard verify, deterministic best match), and `new`
-    * assets learn their OWN gram rows into `<root>/learned/batch_id=N` —
-    * so a later batch's re-mux of an earlier batch's novel upload is
-    * `dup` through learned rows alone. Refused decodes are `invalid`,
-    * never learned; intra-batch re-muxes both read `new`
-    * (prior-knowledge-only, the family contract). Zero state-store state.
-    */
-  def dedupLearningVideoBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, minJaccard: Double = 0.4,
-      maxDocFreq: Long = 64): DataFrame = {
-    val spark = batch.sparkSession
-    val decoded = batch
-      .select(col("asset_id").as("doc_id"),
-        graft.functions.Staged(
-          graft.functions.Mp4SampleTables(col("payload"))).as("f"))
-      .select(col("doc_id"),
-        when(col("f.tracks").isNotNull,
-          graft.functions.F.videoDescriptorText("f.tracks")).as("text"))
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .videoNearDedupAgainstIndex(decoded,
-        graft.ops.Dedup.readVideoGramIndex(spark, indexRoot,
-          beforeBatch = batchId),
-        minJaccard, maxDocFreq))
-    val learned = graft.ops.Dedup.buildVideoGramIndex(
-      verdicts.filter(col("verdict") === "new")
-        .select(col("doc_id"), col("text")))
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
-    }
-    verdicts
-  }
-
-  /** SELF-LEARNING VIDEO near-dup stream —
-    * [[dedupLearningUrlNearArrivals]]' contract for the video modality:
-    * per-trigger micro-batches of (asset_id, payload) through
-    * [[dedupLearningVideoBatch]], verdicts batch-partitioned for
-    * idempotent replay. Zero state-store state.
-    */
-  def dedupLearningVideoArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String, minJaccard: Double = 0.4,
-      maxDocFreq: Long = 64): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = dedupLearningVideoBatch(batch, indexRoot, batchId,
-          minJaccard, maxDocFreq)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
+    LearningGate.text(maxHamming)
+      .arrivals(arrivals, indexRoot, outPath, checkpoint)
 
   /** STREAMING media dedup against the warehouse — [[dedupArrivals]]' shape
     * for IMAGES: arriving payloads hash in the micro-batch scan stage
@@ -565,90 +286,13 @@ object LogStream {
   def dedupImageArrivals(arrivals: DataFrame, indexPath: String,
       outPath: String, checkpoint: String,
       maxHamming: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch.select(col("path").as("asset_id"),
-          graft.functions.PpmDHash(col("content")).as("dhash"))
-        val verdicts = graft.ops.Dedup.mediaDedupAgainstIndex(
-          hashed, spark.read.parquet(indexPath), maxHamming)
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try verdicts.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
-
-  /** SELF-LEARNING media dedup — [[dedupLearningArrivals]]' contract for
-    * perceptual-hash spaces: arriving payloads hash ONCE in the scan
-    * stage (the `hash` column — `ppm_dhash` for images,
-    * `coalesce(wav_dhash, flac_dhash)` for cross-codec audio; barriered
-    * so decode feeds the verdict join AND the learned rows from one
-    * evaluation), verdicts come from base + learned batches strictly
-    * below this one ([[graft.ops.Dedup.readMediaIndex]] — replay-exact),
-    * and `new` HASHABLE assets write their (ex_id, dhash) row to the
-    * `learned/` delta so the next batch's re-upload of a novel asset is
-    * caught. `unhashable` arrivals are never learned — a refusal is not
-    * knowledge. Zero state-store state. Contract: the base index's
-    * `ex_id` must be STRING-typed (learned rows key on arrival paths,
-    * and the union is by name AND type).
-    */
-  def dedupLearningMediaArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String, hash: Column,
-      maxHamming: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts =
-          dedupLearningMediaBatch(batch, indexRoot, batchId, hash, maxHamming)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** The SELF-LEARNING media-dedup micro-batch BODY —
-    * [[dedupLearningTextBatch]]'s contract for perceptual-hash spaces,
-    * shared between [[dedupLearningMediaArrivals]] and the d27 registered
-    * replay (`EntryOps.dedupLearningMediaReplay`): payloads hash ONCE in
-    * the scan stage (barriered — decode feeds the verdict join AND the
-    * learned rows from one evaluation), verdicts come from base + learned
-    * batches strictly below `batchId`
-    * ([[graft.ops.Dedup.readMediaIndex]]), and `new` HASHABLE assets
-    * learn their (ex_id, dhash) row; `unhashable` arrivals never do — a
-    * refusal is not knowledge. Returns the barriered verdict table; the
-    * learned write has already happened.
-    */
-  def dedupLearningMediaBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, hash: Column, maxHamming: Int = 3): DataFrame = {
-    val spark = batch.sparkSession
-    val hashed = graft.ops.Barrier.barrier(
-      batch.select(col("path").as("asset_id"), hash.as("dhash")))
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .mediaDedupAgainstIndex(hashed,
-        graft.ops.Dedup.readMediaIndex(spark, indexRoot,
-          beforeBatch = batchId), maxHamming))
-    val learned = hashed
-      .join(verdicts.filter(col("verdict") === "new")
-        .select(col("asset_id")), Seq("asset_id"))
-      .filter(col("dhash").isNotNull)
-      .select(col("asset_id").as("ex_id"), col("dhash"))
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val hashed = batch.select(col("path").as("asset_id"),
+        graft.functions.PpmDHash(col("content")).as("dhash"))
+      LearningGate.writeBatch(graft.ops.Dedup.mediaDedupAgainstIndex(
+        hashed, batch.sparkSession.read.parquet(indexPath), maxHamming),
+        batchId, outPath)
     }
-    verdicts
-  }
 
   /** STREAMING cross-codec AUDIO dedup against the warehouse —
     * [[dedupImageArrivals]]' shape for recordings: arriving payloads hash
@@ -663,26 +307,15 @@ object LogStream {
   def dedupAudioArrivals(arrivals: DataFrame, indexPath: String,
       outPath: String, checkpoint: String,
       maxHamming: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch.select(col("path").as("asset_id"),
-          coalesce(
-            graft.functions.WavDHash(col("content")),
-            graft.functions.FlacDHash(col("content"))).as("dhash"))
-        val verdicts = graft.ops.Dedup.mediaDedupAgainstIndex(
-          hashed, spark.read.parquet(indexPath), maxHamming)
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try verdicts.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val hashed = batch.select(col("path").as("asset_id"),
+        coalesce(
+          graft.functions.WavDHash(col("content")),
+          graft.functions.FlacDHash(col("content"))).as("dhash"))
+      LearningGate.writeBatch(graft.ops.Dedup.mediaDedupAgainstIndex(
+        hashed, batch.sparkSession.read.parquet(indexPath), maxHamming),
+        batchId, outPath)
+    }
 
   /** STREAMING duplicated-substring check against the warehouse — the
     * fourth member of the incremental family (text hashes
@@ -695,62 +328,37 @@ object LogStream {
     * ingest-time ExactSubstr gate. Span rows land batch-partitioned for
     * idempotent replay; zero state-store state.
     */
-  /** SELF-LEARNING substring check — [[dedupLearningArrivals]]' contract
-    * for the gram index, the FIFTH and last member of the learning
-    * family: every arrival's FIRST-SEEN grams (anti-joined against base +
+  def spanCheckArrivals(arrivals: DataFrame, indexPath: String,
+      outPath: String, checkpoint: String, n: Int = 5): StreamingQuery =
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      LearningGate.writeBatch(graft.ops.Dedup.spanCheckAgainstIndex(
+        batch, batch.sparkSession.read.parquet(indexPath), n),
+        batchId, outPath)
+    }
+
+  /** SELF-LEARNING substring check — [[LearningGate]]'s contract for the
+    * gram index, outside it because its learned rows are not derived from
+    * verdicts: every arrival's FIRST-SEEN grams (anti-joined against base +
     * earlier learned batches, so the one-row-per-gram invariant
     * [[graft.ops.Dedup.spanCheckAgainstIndex]]'s run merging depends on
     * holds globally, at arrival-bounded cost) land in the `learned/`
     * delta — a later arrival quoting an earlier arrival's content gets
     * its span flagged, which the static-index stream cannot see. Batch b
     * reads base + learned strictly below b
-    * ([[graft.ops.Dedup.readGramIndex]] — replay-exact). Zero
+    * ([[graft.ops.Dedup.readWithLearned]] — replay-exact). Zero
     * state-store state.
     */
   def spanCheckLearningArrivals(arrivals: DataFrame, indexRoot: String,
       outPath: String, checkpoint: String, n: Int = 5): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val idx = graft.ops.Dedup.readGramIndex(spark, indexRoot,
-          beforeBatch = batchId)
-        val spans = graft.ops.Dedup.spanCheckAgainstIndex(batch, idx, n)
-          .withColumn("batch_id", lit(batchId))
-        val novelGrams = graft.ops.Dedup.buildGramIndex(batch, n)
-          .join(idx, Seq("gram"), "left_anti")
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          novelGrams.write.mode("overwrite").partitionBy("batch_id")
-            .parquet(s"$indexRoot/learned")
-          spans.write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        } finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
-
-  def spanCheckArrivals(arrivals: DataFrame, indexPath: String,
-      outPath: String, checkpoint: String, n: Int = 5): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val spans = graft.ops.Dedup.spanCheckAgainstIndex(
-          batch, spark.read.parquet(indexPath), n)
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try spans.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val idx = graft.ops.Dedup.readWithLearned(batch.sparkSession,
+        indexRoot, beforeBatch = batchId)
+      val novelGrams = graft.ops.Dedup.buildGramIndex(batch, n)
+        .join(idx, Seq("gram"), "left_anti")
+      LearningGate.writeBatch(novelGrams, batchId, s"$indexRoot/learned")
+      LearningGate.writeBatch(
+        graft.ops.Dedup.spanCheckAgainstIndex(batch, idx, n), batchId, outPath)
+    }
 
   /** STREAMING embedding dedup against the warehouse — the third modality
     * of the incremental family (text [[dedupArrivals]], images
@@ -767,149 +375,11 @@ object LogStream {
   def dedupEmbedArrivals(arrivals: DataFrame, indexPath: String,
       outPath: String, checkpoint: String,
       minCosine: Double = 0.9, planes: Int = 4): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = graft.ops.Dedup.embedDedupAgainstIndex(
-          batch, spark.read.parquet(indexPath), minCosine, planes)
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try verdicts.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
-
-  /** SELF-LEARNING embedding dedup — [[dedupLearningArrivals]]' contract
-    * for the vector modality: verdicts come from base + learned batches
-    * strictly below this one ([[graft.ops.Dedup.readEmbedIndex]] —
-    * replay-exact), and `new` VALID vectors write their own bucketed
-    * index rows to the `learned/` delta (bucketed with the planes value
-    * read FROM the index — self-describing, so an index rebuilt with a
-    * different quantizer re-buckets the stream's learning without a
-    * restart). `invalid` arrivals are never learned. Zero state-store
-    * state.
-    */
-  def dedupLearningEmbedArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String,
-      minCosine: Double = 0.9): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts =
-          dedupLearningEmbedBatch(batch, indexRoot, batchId, minCosine)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** SELF-LEARNING BANDED embedding dedup — [[dedupLearningEmbedArrivals]]
-    * with [[graft.ops.Dedup.embedDedupAgainstIndexBanded]] as the verdict
-    * join: the recall-preserving grown-geometry route (4 tables of grown
-    * planes, d29) run as the ingest gate, with `new` VALID vectors
-    * learning their T banded rows into `<root>/learned/batch_id=N`.
-    * Geometry follows the index on BOTH sides (the verdict join and the
-    * learned-row banding), so a retrained index re-bands the stream
-    * without restart. Zero state-store state; replay-exact.
-    */
-  def dedupLearningBandedArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String,
-      minCosine: Double = 0.9): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts =
-          dedupLearningBandedBatch(batch, indexRoot, batchId, minCosine)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** The SELF-LEARNING BANDED embedding-dedup micro-batch BODY — shared
-    * between [[dedupLearningBandedArrivals]] and the d30 registered
-    * replay (`EntryOps.dedupLearningBandedReplay`): knowledge strictly
-    * below `batchId` ([[graft.ops.Dedup.readEmbedIndex]] — the banded
-    * schema rides the same base ∪ learned-below-b layout), verdicts from
-    * the banded join, `new` valid vectors banded under the INDEX's
-    * geometry (planes/tables columns — the one-row scalar read class)
-    * into the learned delta. Returns the barriered verdict table; the
-    * learned write has already happened. The verdict join enforces the
-    * coefficient-family gate (Dedup.requireFamily) BEFORE any learned row
-    * is written: an index keyed under a different hyperplane family fails
-    * the whole micro-batch loudly instead of silently learning every
-    * arrival as `new`.
-    */
-  def dedupLearningBandedBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, minCosine: Double = 0.9): DataFrame = {
-    val spark = batch.sparkSession
-    val idx = graft.ops.Dedup.readEmbedIndex(spark, indexRoot,
-      beforeBatch = batchId)
-    val hasDims = idx.columns.contains("dims")
-    val geo = idx.select(col("planes") +: col("tables") +:
-      (if (hasDims) Seq(col("dims")) else Nil): _*).head()
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .embedDedupAgainstIndexBanded(batch, idx, minCosine))
-    val learned = graft.ops.Dedup.buildEmbedIndexBanded(
-      batch.join(verdicts.filter(col("verdict") === "new")
-        .select(col("vec_id")), Seq("vec_id")),
-      planes = geo.getInt(0), tables = geo.getInt(1),
-      dims = if (hasDims) geo.getInt(2) else 64)
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      LearningGate.writeBatch(graft.ops.Dedup.embedDedupAgainstIndex(
+        batch, batch.sparkSession.read.parquet(indexPath), minCosine, planes),
+        batchId, outPath)
     }
-    verdicts
-  }
-
-  /** The SELF-LEARNING embedding-dedup micro-batch BODY —
-    * [[dedupLearningTextBatch]]'s contract for the vector modality, shared
-    * between [[dedupLearningEmbedArrivals]] and the d25 registered replay
-    * (`EntryOps.dedupLearningEmbedReplay`): knowledge strictly below
-    * `batchId` ([[graft.ops.Dedup.readEmbedIndex]]), planes followed FROM
-    * the index (one-row scalar read, planes-guard class), `new` VALID
-    * vectors learned into `<root>/learned/batch_id=N`. Returns the
-    * barriered verdict table; the learned write has already happened.
-    * The verdict join enforces the coefficient-family gate
-    * (Dedup.requireFamily) before the learned write — see
-    * [[dedupLearningBandedBatch]].
-    */
-  def dedupLearningEmbedBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, minCosine: Double = 0.9): DataFrame = {
-    val spark = batch.sparkSession
-    val idx = graft.ops.Dedup.readEmbedIndex(spark, indexRoot,
-      beforeBatch = batchId)
-    val hasDims = idx.columns.contains("dims")
-    val geo = idx.select(col("planes") +:
-      (if (hasDims) Seq(col("dims")) else Nil): _*).head()
-    val planes = geo.getInt(0)
-    val dims = if (hasDims) geo.getInt(1) else 64
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Dedup
-      .embedDedupAgainstIndex(batch, idx, minCosine, planes, dims))
-    val learned = graft.ops.Dedup.buildEmbedIndex(
-      batch.join(verdicts.filter(col("verdict") === "new")
-        .select(col("vec_id")), Seq("vec_id")), planes, dims)
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/learned")
-    }
-    verdicts
-  }
 
   /** STREAMING incremental SemDeDup against the warehouse — the semantic
     * member of the incremental family (text [[dedupArrivals]], images
@@ -927,86 +397,13 @@ object LogStream {
   def dedupSemArrivals(arrivals: DataFrame, indexPath: String,
       outPath: String, checkpoint: String,
       minCosine: Double = 0.9): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts = graft.ops.Similarity.semDedupAgainstIndex(
-          batch, spark.read.parquet(s"$indexPath/centroids"),
-          spark.read.parquet(s"$indexPath/members"), minCosine)
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try verdicts.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
-
-  /** SELF-LEARNING incremental SemDeDup — [[dedupLearningArrivals]]'
-    * contract for the semantic modality, closing the learning loop on the
-    * LAST member of the incremental family: `keep` arrivals join their
-    * assigned cell's member set (`members/learned/batch_id=N` under the
-    * index root), so a later arrival semantically covered by an earlier
-    * KEPT arrival is pruned against it — the static-members stream keeps
-    * admitting every paraphrase of novel content. Batch b reads
-    * `members/base` + learned batches strictly below b
-    * ([[graft.ops.Dedup.readSemMembers]] — replay-exact); centroids stay
-    * frozen (a cell set only changes at retrain, which is a rebuild), so
-    * learning never re-clusters. `invalid` arrivals are never learned.
-    * Zero state-store state.
-    */
-  def dedupLearningSemArrivals(arrivals: DataFrame, indexRoot: String,
-      outPath: String, checkpoint: String,
-      minCosine: Double = 0.9): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verdicts =
-          dedupLearningSemBatch(batch, indexRoot, batchId, minCosine)
-        withDynamicOverwrite(spark) {
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(outPath)
-        }
-      }
-      .start()
-
-  /** The SELF-LEARNING semantic-dedup micro-batch BODY —
-    * [[dedupLearningTextBatch]]'s contract for the semantic modality,
-    * shared between [[dedupLearningSemArrivals]] and the d28 registered
-    * replay (`EntryOps.dedupLearningSemReplay`): verdicts come from the
-    * frozen centroid table plus members/base + learned batches strictly
-    * below `batchId` ([[graft.ops.Dedup.readSemMembers]] — replay-exact),
-    * and `keep` arrivals learn their (ex_id, cell, ex_e) member row so a
-    * later paraphrase is pruned against them; `invalid` arrivals never
-    * do. Returns the barriered verdict table; the learned write has
-    * already happened.
-    */
-  def dedupLearningSemBatch(batch: DataFrame, indexRoot: String,
-      batchId: Long, minCosine: Double = 0.9): DataFrame = {
-    val spark = batch.sparkSession
-    val verdicts = graft.ops.Barrier.barrier(graft.ops.Similarity
-      .semDedupAgainstIndex(batch,
-        spark.read.parquet(s"$indexRoot/centroids"),
-        graft.ops.Dedup.readSemMembers(spark, indexRoot,
-          beforeBatch = batchId), minCosine))
-    val learned = batch
-      .join(verdicts.filter(col("verdict") === "keep")
-        .select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .select(col("vec_id").as("ex_id"), col("cell"),
-        col("embedding").as("ex_e"))
-      .withColumn("batch_id", lit(batchId))
-    withDynamicOverwrite(spark) {
-      learned.write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$indexRoot/members/learned")
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      LearningGate.writeBatch(graft.ops.Similarity.semDedupAgainstIndex(
+        batch, spark.read.parquet(s"$indexPath/centroids"),
+        spark.read.parquet(s"$indexPath/members"), minCosine),
+        batchId, outPath)
     }
-    verdicts
-  }
 
   /** STREAMING PQ-index APPEND — the INGEST side of the ANN index's
     * maintenance cadence ([[graft.ops.Similarity.appendToPqIndex]] as a
@@ -1027,26 +424,16 @@ object LogStream {
     */
   def pqIndexAppendArrivals(arrivals: DataFrame, indexPath: String,
       checkpoint: String): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // per-batch root resolution: under a versioned container a
-        // drift-triggered rebuild flips this stream to the new quantizer
-        // (and its own append delta) without restart
-        val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
-        val coded = graft.ops.Similarity.appendToPqIndex(
-          batch, spark.read.parquet(s"$root/codebooks"))
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try coded.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(s"$root/codes_appended")
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // per-batch root resolution: under a versioned container a
+      // drift-triggered rebuild flips this stream to the new quantizer
+      // (and its own append delta) without restart
+      val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
+      LearningGate.writeBatch(graft.ops.Similarity.appendToPqIndex(
+        batch, spark.read.parquet(s"$root/codebooks")),
+        batchId, s"$root/codes_appended")
+    }
 
   /** STREAMING ANN against the warehouse — the query-side counterpart of
     * the incremental dedup family (r10, completing the verdict's item-8
@@ -1057,40 +444,27 @@ object LogStream {
     * micro-batch the batch's ADC lookup table builds against the broadcast
     * codebooks and every candidate costs M table hits
     * ([[graft.ops.Similarity.topkPqAgainstIndex]] — no training, no
-    * vector-width joins in the hot path); the persisted geometry columns
-    * The quantizer geometry is read FROM the index per batch (the index
-    * is self-describing — one-row scalar read, planes-guard class), so an
-    * ingest-cadence rebuild that re-sizes the quantizer is honored by the
-    * running stream exactly like corpus growth, instead of tripping a
-    * caller-parameter guard. Results land batch-partitioned for
-    * idempotent replay; zero state-store state.
+    * vector-width joins in the hot path). The quantizer geometry is read
+    * FROM the index per batch (the index is self-describing — one-row
+    * scalar read, planes-guard class), so an ingest-cadence rebuild that
+    * re-sizes the quantizer is honored by the running stream exactly like
+    * corpus growth, instead of tripping a caller-parameter guard. Results
+    * land batch-partitioned for idempotent replay; zero state-store state.
     */
   def annArrivals(arrivals: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, k: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // versioned containers resolve per batch (resolvePqIndexPath): a
-        // drift-triggered rebuild routes queries to the new root next batch
-        val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
-        val codebooks = spark.read.parquet(s"$root/codebooks")
-        val g = codebooks.select(col("subspaces"), col("codebook_size"),
-          col("dims")).head()
-        val neighbors = graft.ops.Similarity.topkPqAgainstIndex(
-          batch, codebooks,
-          graft.ops.Similarity.readPqCodes(spark, root), k,
-          g.getInt(0), g.getInt(1), g.getInt(2))
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try neighbors.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // versioned containers resolve per batch (resolvePqIndexPath): a
+      // drift-triggered rebuild routes queries to the new root next batch
+      val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
+      val codebooks = spark.read.parquet(s"$root/codebooks")
+      val g = codebooks.select(col("subspaces"), col("codebook_size"),
+        col("dims")).head()
+      LearningGate.writeBatch(graft.ops.Similarity.topkPqAgainstIndex(
+        batch, codebooks, graft.ops.Similarity.readPqCodes(spark, root), k,
+        g.getInt(0), g.getInt(1), g.getInt(2)), batchId, outPath)
+    }
 
   /** [[pqIndexAppendArrivals]] for an IVF-PQ index root: arrivals are
     * coarse-assigned AND residual-coded under the root's frozen quantizer
@@ -1106,24 +480,14 @@ object LogStream {
     */
   def ivfPqIndexAppendArrivals(arrivals: DataFrame, indexPath: String,
       checkpoint: String): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
-        val coded = graft.ops.Similarity.appendToIvfPqIndex(batch,
-          spark.read.parquet(s"$root/centroids"),
-          spark.read.parquet(s"$root/codebooks"))
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try coded.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(s"$root/codes_appended")
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
+      LearningGate.writeBatch(graft.ops.Similarity.appendToIvfPqIndex(batch,
+        spark.read.parquet(s"$root/centroids"),
+        spark.read.parquet(s"$root/codebooks")),
+        batchId, s"$root/codes_appended")
+    }
 
   /** [[annArrivals]] through the deployed IVFADC route: per micro-batch,
     * cell probing + table-driven ADC + shortlist against the persisted
@@ -1138,29 +502,19 @@ object LogStream {
   def annIvfArrivals(arrivals: DataFrame, indexPath: String,
       corpusPath: String, outPath: String, checkpoint: String,
       k: Int = 3, nprobe: Int = 3): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
-        val centroids = spark.read.parquet(s"$root/centroids")
-        val g = centroids.select(col("n_cells"), col("subspaces"),
-          col("codebook_size"), col("dims")).head()
-        val neighbors = graft.ops.Similarity.topkIvfPqAgainstIndex(
-          batch, spark.read.parquet(corpusPath),
-          centroids, spark.read.parquet(s"$root/codebooks"),
-          graft.ops.Similarity.readPqCodes(spark, root), k,
-          g.getInt(0), g.getInt(1), g.getInt(2), nprobe, g.getInt(3))
-          .withColumn("batch_id", lit(batchId))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try neighbors.write.mode("overwrite").partitionBy("batch_id")
-          .parquet(outPath)
-        finally prev.foreach(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
-      .start()
+    eachBatch(arrivals, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val root = graft.ops.Similarity.resolvePqIndexPath(spark, indexPath)
+      val centroids = spark.read.parquet(s"$root/centroids")
+      val g = centroids.select(col("n_cells"), col("subspaces"),
+        col("codebook_size"), col("dims")).head()
+      LearningGate.writeBatch(graft.ops.Similarity.topkIvfPqAgainstIndex(
+        batch, spark.read.parquet(corpusPath),
+        centroids, spark.read.parquet(s"$root/codebooks"),
+        graft.ops.Similarity.readPqCodes(spark, root), k,
+        g.getInt(0), g.getInt(1), g.getInt(2), nprobe, g.getInt(3)),
+        batchId, outPath)
+    }
 
   /** Batch-shared maillog ingest body. `batch` needs columns
     * (content binary, modificationTime timestamp).
@@ -1181,7 +535,7 @@ object LogStream {
     val res = MailParser.fromRaw(raw)
     // reference parity: a message process_input would raise on is NOT
     // ingested (maillog.py:159-164) — it lands in dead_letters instead
-    Ingest.appendDeadLetters(res.deadLetters, warehouse, batchId)
+    Ingest.appendDeadLetters(res.deadLetters, warehouse, "mail", batchId)
     val parsed = res.events
     try {
       val addrs = parsed

@@ -41,7 +41,8 @@ object Prof {
 
     val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
     val stageToJob = mutable.HashMap.empty[Int, Int]
-    var recording = false
+    // written by the main thread, read by the listener-bus thread
+    @volatile var recording = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
         val r = JobRec(e.jobId, start = e.time)
@@ -85,13 +86,18 @@ object Prof {
       println(s"==== $name ====")
       (1 to reps).foreach { i =>
         val last = i == reps
-        if (last) { jobs.clear(); stageToJob.clear(); recording = true }
+        // drain first: events of earlier reps still queued on the bus must
+        // not land in the cleared maps once recording is on
+        if (last) {
+          org.apache.spark.sql.GraftBridge.drain(spark)
+          jobs.clear(); stageToJob.clear(); recording = true
+        }
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         val t2 = System.nanoTime()
-        if (last) recording = false
+        if (last) { org.apache.spark.sql.GraftBridge.drain(spark); recording = false }
         println(f"[prof] $name rep $i: construct ${(t1 - t0) / 1e9}%.2f s, " +
           f"exec ${(t2 - t1) / 1e9}%.2f s, total ${(t2 - t0) / 1e9}%.2f s")
         spark.catalog.clearCache()

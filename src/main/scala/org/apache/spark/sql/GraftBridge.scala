@@ -15,4 +15,11 @@ object GraftBridge {
     * native expressions can declare their input types.
     */
   type AbsDataType = org.apache.spark.sql.types.AbstractDataType
+
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`), so a listener's counters include
+    * every job and task that ran before the call.
+    */
+  def drain(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -512,10 +512,30 @@ class IngestSpec extends GraftSpec {
     val wh = tmpWarehouse()
     val dead = Seq(("2026-08-11T00:00:00Z", "bad line", "ValueError",
       "Could not parse logfile entry")).toDF("time", "line", "error_type", "error")
-    Ingest.appendDeadLetters(dead, wh)
+    Ingest.appendDeadLetters(dead, wh, "apache")
     val rows = wh.deadLetters(spark).collect()
     assert(rows.length === 1)
     assert(rows(0).getAs[String]("error_type") === "ValueError")
+  }
+
+  test("dead letters are keyed by feed: two feeds at one batch id both " +
+      "survive, a redelivery replaces only its own feed") {
+    val wh = tmpWarehouse()
+    def dead(lines: String*) = lines.map(l => ("2026-08-11T00:00:00Z", l,
+      "ValueError", "Could not parse logfile entry"))
+      .toDF("time", "line", "error_type", "error")
+    def byFeed() = wh.deadLetters(spark).collect()
+      .map(r => (r.getAs[String]("feed"),
+        r.getAs[Number]("batch_id").longValue, r.getAs[String]("line"))).toSet
+    // both feeds number their micro-batches from 0
+    Ingest.appendDeadLetters(dead("a1", "a2"), wh, "apache", 0L)
+    Ingest.appendDeadLetters(dead("f1"), wh, "authfail", 0L)
+    assert(byFeed() === Set(("apache", 0L, "a1"), ("apache", 0L, "a2"),
+      ("authfail", 0L, "f1")))
+    // a redelivered authfail batch 0 rewrites only authfail's rows
+    Ingest.appendDeadLetters(dead("f1-again"), wh, "authfail", 0L)
+    assert(byFeed() === Set(("apache", 0L, "a1"), ("apache", 0L, "a2"),
+      ("authfail", 0L, "f1-again")))
   }
 
   test("contacts time travel: exact retained versions, loud eviction error") {

@@ -1530,6 +1530,25 @@ class OpsSpec extends GraftSpec {
     assert(out.toSeq === Seq((3L, 3L, 2L), (9L, 3L, 2L)))
   }
 
+  test("clusterComponents: vertex ids >= 2^62 give the same components " +
+      "(exact first convergence sum)") {
+    // six active labels near 2^62 sum past Long.MaxValue: the first
+    // convergence sum must be as exact as every later round's
+    def components(off: Long): Seq[(Long, Long, Long)] = {
+      val ds = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).map(_ + off).toDF("doc_id")
+      val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (11L, 10L))
+        .map { case (a, b) => (a + off, b + off) }.toDF("doc1", "doc2")
+      Dedup.clusterComponents(ds, edges, fallbackToStar = false)
+        .select("doc_id", "cluster_id", "cluster_size")
+        .as[(Long, Long, Long)].collect().toSeq
+        .map { case (d, c, n) => (d - off, c - off, n) }
+    }
+    val small = components(0L)
+    assert(small === Seq((1L, 1L, 4L), (2L, 1L, 4L), (3L, 1L, 4L),
+      (4L, 1L, 4L), (10L, 10L, 2L), (11L, 10L, 2L), (20L, 20L, 1L)))
+    assert(components(1L << 62) === small)
+  }
+
   test("barrierAll returns positionally bit-identical frames to barrier") {
     val a = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
     val b = Seq((3L, 0.5), (4L, 1.5)).toDF("id", "v")
@@ -2301,7 +2320,7 @@ class OpsSpec extends GraftSpec {
         .withColumn("batch_id", lit(1L))
         .write.partitionBy("batch_id").mode("append")
         .parquet(s"$root/learned")
-      val full = graft.ops.Dedup.readGramIndex(spark, root)
+      val full = graft.ops.Dedup.readWithLearned(spark, root)
         .orderBy("gram").collect().toSeq
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -2333,7 +2352,7 @@ class OpsSpec extends GraftSpec {
         .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
       assert(!names.exists(_.contains("__")),
         s"staging dirs must be cleaned up: $names")
-      assert(graft.ops.Dedup.readGramIndex(spark, root)
+      assert(graft.ops.Dedup.readWithLearned(spark, root)
         .orderBy("gram").collect().toSeq === full,
         "no lost or duplicated learned rows across the race")
     } finally {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.ingest.Warehouse
-import graft.streaming.{LogStream, StreamingReports}
+import graft.streaming.{LearningGate, LogStream, StreamingReports}
 
 /** End-to-end Structured Streaming ingest (reference §2.7: continuous per-line
   * pipes → here file-source streams with Trigger.AvailableNow), through the real
@@ -654,7 +654,7 @@ class StreamingSpec extends GraftSpec {
     LogStream.spanCheckLearningArrivals(arrivals, root, out,
       tmp("lcomp-ck").toString, n = 3).awaitTermination()
     def gramView(beforeBatch: Long = Long.MaxValue) =
-      graft.ops.Dedup.readGramIndex(spark, root, beforeBatch)
+      graft.ops.Dedup.readWithLearned(spark, root, beforeBatch)
         .orderBy("gram").collect().toSeq
     val full = gramView()
     val below1 = gramView(beforeBatch = 1)
@@ -735,10 +735,10 @@ class StreamingSpec extends GraftSpec {
     def arrivals = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1").json(in.toString)
-    LogStream.dedupLearningEmbedArrivals(arrivals, root, out,
+    LearningGate.embed().arrivals(arrivals, root, out,
       tmp("ecomp-ck").toString).awaitTermination()
     def view(beforeBatch: Long = Long.MaxValue) =
-      graft.ops.Dedup.readEmbedIndex(spark, root, beforeBatch)
+      graft.ops.Dedup.readWithLearned(spark, root, beforeBatch)
         .orderBy("ex_id").collect().toSeq
     val full = view()
     val below1 = view(beforeBatch = 1)
@@ -755,7 +755,7 @@ class StreamingSpec extends GraftSpec {
       spark.read.parquet(s"$root/base").orderBy("ex_id").collect().toSeq)
     // replay through the compacted root: verdicts identical (each replayed
     // batch reads knowledge strictly below itself through the generation)
-    LogStream.dedupLearningEmbedArrivals(arrivals, root, out,
+    LearningGate.embed().arrivals(arrivals, root, out,
       tmp("ecomp-ck2").toString).awaitTermination()
     assert(verdicts() === v)
     assert(view() === full)
@@ -821,7 +821,7 @@ class StreamingSpec extends GraftSpec {
         s"compacted generation, got ${spans(out1)}")
     assert(spans(out1) === spans(out2), "bit-identical to the twin")
     def gramView(root: String) =
-      graft.ops.Dedup.readGramIndex(spark, root).orderBy("gram")
+      graft.ops.Dedup.readWithLearned(spark, root).orderBy("gram")
         .collect().toSeq
     assert(gramView(root1) === gramView(root2),
       "post-flip knowledge must equal the uncompacted twin's")
@@ -904,7 +904,7 @@ class StreamingSpec extends GraftSpec {
     def arrivals = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1").json(in.toString)
-    val q = LogStream.dedupLearningEmbedArrivals(arrivals, root, out,
+    val q = LearningGate.embed().arrivals(arrivals, root, out,
       tmp("elearn-ck").toString)
     q.awaitTermination()
     assert(q.lastProgress.stateOperators.isEmpty, "must hold zero state")
@@ -924,7 +924,7 @@ class StreamingSpec extends GraftSpec {
     assert(learnedIds === Set(1L),
       s"only the valid novel vector may be learned, got $learnedIds")
     // replay-exact
-    LogStream.dedupLearningEmbedArrivals(arrivals, root, out,
+    LearningGate.embed().arrivals(arrivals, root, out,
       tmp("elearn-ck2").toString).awaitTermination()
     assert(read() === v)
   }
@@ -1090,6 +1090,69 @@ class StreamingSpec extends GraftSpec {
     assert(spark.read.parquet(out).count() === 4)
   }
 
+  test("stream sinks overwrite per write: a static session conf stays " +
+      "static and earlier batch partitions survive") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val in = tmp("pow-in")
+      val root = tmp("pow-idx").resolve("index").toString
+      graft.ops.Dedup.buildCorpusIndex(
+        Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"))
+        .write.parquet(s"$root/base")
+      Files.writeString(in.resolve("b1.csv"), "1,first novel arrival words\n")
+      Files.writeString(in.resolve("b2.csv"), "2,second novel arrival text\n")
+      Files.setLastModifiedTime(in.resolve("b1.csv"),
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
+      Files.setLastModifiedTime(in.resolve("b2.csv"),
+        java.nio.file.attribute.FileTime.fromMillis(1000000002000L))
+      def arrivals = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", "1").csv(in.toString)
+      def partitions(path: String): Set[String] =
+        Files.list(java.nio.file.Paths.get(path)).toArray.toSeq
+          .map(_.toString.split('/').last).filter(_.startsWith("batch_id="))
+          .toSet
+      val both = Set("batch_id=0", "batch_id=1")
+      // a learning stream: verdict sink and learned delta
+      val learnOut = tmp("pow-learn-out").toString
+      LogStream.dedupLearningArrivals(arrivals, root, learnOut,
+        tmp("pow-learn-ck").toString).awaitTermination()
+      assert(spark.conf.get(key) === "static")
+      assert(partitions(learnOut) === both)
+      assert(partitions(s"$root/learned") === both)
+      // a static-index stream
+      val staticOut = tmp("pow-static-out").toString
+      LogStream.dedupArrivals(arrivals, s"$root/base", staticOut,
+        tmp("pow-static-ck").toString).awaitTermination()
+      assert(spark.conf.get(key) === "static")
+      assert(partitions(staticOut) === both)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("learning replay deletes its scratch root: the d24 entry leaves no " +
+      "graft_learn_* directory behind") {
+    import spark.implicits._
+    val dir = tmp("learn-replay-sf")
+    // cohorts % 10 <= 6 form the base; 7/8/9 arrive as batches 0/1/2
+    (0L until 40L).map(i => (i, s"document ${i % 13} body words"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val tmpDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratchRoots(): Set[String] = Files.list(tmpDir).toArray.toSeq
+      .map(_.toString.split('/').last).filter(_.startsWith("graft_learn_"))
+      .toSet
+    val before = scratchRoots()
+    val out = EntryOps.dedupLearningReplay(spark, dir.toString)
+    assert(scratchRoots() -- before === Set.empty[String])
+    // the verdicts outlive the root (barriered before it was deleted),
+    // including the planted copy only a learned row can catch
+    val v = out.select("batch_id", "doc_id", "verdict", "match_id")
+      .as[(Long, Long, String, Option[Long])].collect()
+    assert(v.length === 14)
+    assert(v.contains((1L, -101L, "exact", Some(-100L))), v.toSeq)
+  }
+
   test("self-learning URL dedup: a differently-messed alias of a learned " +
       "novel URL is dup; unparseable arrivals are invalid, never learned") {
     import org.apache.spark.sql.functions._
@@ -1118,7 +1181,7 @@ class StreamingSpec extends GraftSpec {
       java.nio.file.attribute.FileTime.fromMillis(1000000002000L))
     def arrivals = spark.readStream.schema("doc_id LONG, raw_url STRING")
       .option("maxFilesPerTrigger", "1").csv(in.toString)
-    val q = LogStream.dedupLearningUrlArrivals(arrivals, root, out,
+    val q = LearningGate.url.arrivals(arrivals, root, out,
       tmp("url-learn-ck").toString)
     q.awaitTermination()
     assert(q.lastProgress.stateOperators.isEmpty, "must hold zero state")
@@ -1137,7 +1200,7 @@ class StreamingSpec extends GraftSpec {
     assert(learned.filter(col("url").isNull).count() === 0)
     assert(learned.count() === 1) // exactly the one novel canonical URL
     // replay-exact: a fresh checkpoint reproduces the verdicts bitwise
-    LogStream.dedupLearningUrlArrivals(arrivals, root, out,
+    LearningGate.url.arrivals(arrivals, root, out,
       tmp("url-learn-ck2").toString).awaitTermination()
     assert(read() === v)
   }
@@ -1171,7 +1234,7 @@ class StreamingSpec extends GraftSpec {
       java.nio.file.attribute.FileTime.fromMillis(1000000002000L))
     def arrivals = spark.readStream.schema("doc_id LONG, raw_url STRING")
       .option("maxFilesPerTrigger", "1").csv(in.toString)
-    val q = LogStream.dedupLearningUrlNearArrivals(arrivals, root, out,
+    val q = LearningGate.urlNear().arrivals(arrivals, root, out,
       tmp("urlnear-learn-ck").toString)
     q.awaitTermination()
     assert(q.lastProgress.stateOperators.isEmpty, "must hold zero state")
@@ -1196,7 +1259,7 @@ class StreamingSpec extends GraftSpec {
       .select("jaccard").head().getDouble(0)
     assert(math.abs(j7 - 5.0 / 9.0) < 1e-15)
     // replay-exact: a fresh checkpoint reproduces the verdicts bitwise
-    LogStream.dedupLearningUrlNearArrivals(arrivals, root, out,
+    LearningGate.urlNear().arrivals(arrivals, root, out,
       tmp("urlnear-learn-ck2").toString).awaitTermination()
     assert(read() === v)
   }
@@ -1239,7 +1302,7 @@ class StreamingSpec extends GraftSpec {
       .option("maxFilesPerTrigger", "1").load(in.toString)
       .select(regexp_extract(col("path"), "(\\d+)\\.mp4$", 1).cast("long")
         .as("asset_id"), col("content").as("payload"))
-    val q = LogStream.dedupLearningVideoArrivals(arrivals, root, out,
+    val q = LearningGate.video().arrivals(arrivals, root, out,
       tmp("video-learn-ck").toString)
     q.awaitTermination()
     assert(q.lastProgress.stateOperators.isEmpty, "must hold zero state")
@@ -1265,13 +1328,13 @@ class StreamingSpec extends GraftSpec {
     assert(j41 === 1.0)
     // batch parity: the registered gate body over the same arrivals and
     // knowledge state gives the stream's verdicts bitwise
-    val b3 = LogStream.dedupLearningVideoBatch(
+    val b3 = LearningGate.video().batch(
       Seq((41L, payload(41L))).toDF("asset_id", "payload"), root, 3L)
       .select("doc_id", "verdict", "match_id")
       .as[(Long, String, Option[Long])].collect().toSet
     assert(b3 === Set((41L, "dup", Some(40L))))
     // replay-exact: a fresh checkpoint reproduces the verdicts bitwise
-    LogStream.dedupLearningVideoArrivals(arrivals, root, out,
+    LearningGate.video().arrivals(arrivals, root, out,
       tmp("video-learn-ck2").toString).awaitTermination()
     assert(read() === v)
   }
@@ -1309,7 +1372,7 @@ class StreamingSpec extends GraftSpec {
     def arrivals = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1").json(in.toString)
-    val q = LogStream.dedupLearningSemArrivals(arrivals, root, out,
+    val q = LearningGate.sem().arrivals(arrivals, root, out,
       tmp("slearn-ck").toString)
     q.awaitTermination()
     assert(q.lastProgress.stateOperators.isEmpty, "must hold zero state")
@@ -1327,7 +1390,7 @@ class StreamingSpec extends GraftSpec {
       .select("ex_id").as[Long].collect().toSet
     assert(learnedIds === Set(1L), s"got $learnedIds")
     // replay-exact
-    LogStream.dedupLearningSemArrivals(arrivals, root, out,
+    LearningGate.sem().arrivals(arrivals, root, out,
       tmp("slearn-ck2").toString).awaitTermination()
     assert(read() === v)
   }
@@ -1606,8 +1669,8 @@ class StreamingSpec extends GraftSpec {
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
       .option("maxFilesPerTrigger", "2").load(in.toString)
     val hash = graft.functions.PpmDHash(col("content"))
-    val q = LogStream.dedupLearningMediaArrivals(arrivals, root, out,
-      tmp("mlearn-ck").toString, hash)
+    val q = LearningGate.media(hash).arrivals(arrivals, root, out,
+      tmp("mlearn-ck").toString)
     q.awaitTermination()
     assert(q.lastProgress.stateOperators.isEmpty, "must hold zero state")
     def read() = spark.read.parquet(out).collect().map(r => {
@@ -1629,8 +1692,8 @@ class StreamingSpec extends GraftSpec {
     assert(learnedIds === Set("b1_new.pgm"),
       s"only the hashable novel asset may be learned, got $learnedIds")
     // replay-exact
-    LogStream.dedupLearningMediaArrivals(arrivals, root, out,
-      tmp("mlearn-ck2").toString, hash).awaitTermination()
+    LearningGate.media(hash).arrivals(arrivals, root, out,
+      tmp("mlearn-ck2").toString).awaitTermination()
     assert(read() === v, "replayed run must reproduce verdicts bitwise")
   }
 
@@ -1812,7 +1875,7 @@ class StreamingSpec extends GraftSpec {
     def arrivals = spark.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", "1").json(in.toString)
-    LogStream.dedupLearningBandedArrivals(arrivals, root, out,
+    LearningGate.banded().arrivals(arrivals, root, out,
       tmp("blearn-ck").toString).awaitTermination()
     val v = spark.read.parquet(out).collect()
       .map(r => (r.getAs[Long]("vec_id"),
@@ -1830,7 +1893,7 @@ class StreamingSpec extends GraftSpec {
     assert(learned.select("planes").distinct().collect()
       .map(_.getInt(0)).toSeq === Seq(5), "geometry followed from the index")
     // replay-exact: a fresh checkpoint reproduces the verdicts bitwise
-    LogStream.dedupLearningBandedArrivals(arrivals, root, out,
+    LearningGate.banded().arrivals(arrivals, root, out,
       tmp("blearn-ck2").toString).awaitTermination()
     val v2 = spark.read.parquet(out).collect()
       .map(r => (r.getAs[Long]("vec_id"),
