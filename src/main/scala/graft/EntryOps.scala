@@ -44,21 +44,33 @@ object EntryOps {
   private def docIds(spark: SparkSession, dir: String): DataFrame =
     par(Tables.documents(spark, dir).select(col("doc_id")))
 
-  /** The SERIAL id source — [[docIds]] without the fan-out, for fixtures
-    * whose per-row work is CHEAP relative to the per-task fixed cost of
-    * their huge unrolled synthesis trees (urls, the video containers, the
-    * BPE dictionary). Measured r20 (quiet-window A/B, old vs fanned-out):
-    * fanning these multiplied SUMMED TASK TIME 10–30× (e09 17 → 209
-    * task-s; d39 1.6 → 33) — every one of the 32 tasks pays the fixed
-    * expression-tree/codegen setup of a ~1 MB task binary that one task
-    * paid before, while the per-row work is microseconds — and WALL
-    * regressed too (e09 9.2 → 13.3 s, d40 2.8 → 4.0, t21 0.85 → 1.3,
-    * d32/d33/d36/d39 each +0.3–0.6 s). The heavy decoders (FLAC, MPEG,
-    * PNG, JPEG, WAV, PPM, MP4 sample/fragment walks) keep [[docIds]]:
-    * there per-row decode CPU dominates and the fan-out won 2–8×.
+  /** The SERIAL id source — [[docIds]] without the fan-out. Two callers
+    * remain, both cheap per row, where 32 tasks cost more than one:
+    *  - [[urlAssets]]: its raw URL is the SQL text it shares with the
+    *    oracle ([[urlSql]]), a CASE tree whose per-task codegen setup
+    *    dominates the microseconds of per-row work (r20 A/B, fanned out:
+    *    d32/d33 each +0.3–0.6 s wall, summed task time ×10–30);
+    *  - [[bpeHexDict]]: four md5 words per id feeding a groupBy that
+    *    shuffles anyway, so the fan-out only adds a shuffle of the ids
+    *    (r20: t21 0.85 → 1.3 s wall).
+    * Every byte-payload fixture, including the video containers built by
+    * [[graft.fixtures.Video]], runs on [[docIds]].
     */
   private def docIdsSerial(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(col("doc_id"))
+
+  /** A Scala-built fixture: `build` over the doc ids selected by `where`,
+    * as (asset_id, payload) rows. The builder is one UDF call per row, so
+    * no synthesis expression reaches the plan or whole-stage codegen. A
+    * projection, not a typed `mapPartitions`: the optimizer sizes a
+    * projection by its output row, as it sized the SQL synthesis, so every
+    * join above keeps its build side (object operators pass the 8-byte id
+    * estimate through, which flipped d37/e10 joins and added a d38 job).
+    */
+  private def videoAssets(spark: SparkSession, dir: String, where: Column,
+      build: Long => Array[Byte]): DataFrame =
+    docIds(spark, dir).filter(where)
+      .select(col("doc_id").as("asset_id"), udf(build).apply(col("doc_id")).as("payload"))
 
   // -------------------------------------------------------------------------
   // Spark-side query entries
@@ -3603,9 +3615,9 @@ object EntryOps {
         col("f.avg_bitrate_kbps"))
       .orderBy(col("asset_id"))
 
-  /** m14 fixture — spec-valid ISO-BMFF (MP4) files synthesized in-plan from
-    * doc_id: `ftyp` (brand cycling isom/mp42/avc1), `moov` holding a
-    * full-size `mvhd` (v0, or the 64-bit v1 layout when doc_id % 7 = 2;
+  /** m14 fixture — spec-valid ISO-BMFF (MP4) files built from doc_id by
+    * [[graft.fixtures.Video.mp4]]: `ftyp` (brand cycling isom/mp42/avc1),
+    * `moov` holding a full-size `mvhd` (v0, or the 64-bit v1 layout when doc_id % 7 = 2;
     * timescale 600·(doc_id % 4 + 1), duration doc_id % 9000 + 100 units)
     * and 1–3 `trak`/`mdia`/`hdlr` chains whose handlers cycle
     * vide/soun/text by (doc_id + t) % 3, plus an `mdat` of 0xAB filler the
@@ -3618,57 +3630,8 @@ object EntryOps {
     * the final 10 bytes so the last box's declared size overruns EOF;
     * % 31 = 8 sets timescale 0 (fields intact, duration_ms uncomputable).
     */
-  def mp4Assets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .withColumn("nt", (col("doc_id") % 3 + 1).cast("int"))
-      .withColumn("ts", expr(
-        "IF(doc_id % 31 = 8, 0L, 600L * (doc_id % 4 + 1))"))
-      .withColumn("dur", col("doc_id") % 9000 + 100)
-      .withColumn("v1", col("doc_id") % 7 === 2)
-      .withColumn("mdatFirst", col("doc_id") % 5 === 0)
-      .withColumn("largeMdat", col("doc_id") % 19 === 4)
-      .withColumn("fill", (col("doc_id") % 16 + 12).cast("int"))
-    def u32hex(e: String) = s"lpad(hex($e), 8, '0')"
-    def u64hex(e: String) = s"lpad(hex($e), 16, '0')"
-    val brandHex = "CASE doc_id % 3 WHEN 0 THEN '69736F6D' " +
-      "WHEN 1 THEN '6D703432' ELSE '61766331' END"
-    val ftypHex = s"IF(doc_id % 37 = 11, " +
-      "concat('00000010', '66726565', repeat('00', 8)), " + // free, not ftyp
-      s"concat('00000010', '66747970', $brandHex, '00000000'))"
-    // mvhd v0 (size 108) and v1 (size 120) both trail 80 zero bytes after
-    // the duration (rate/volume/reserved/matrix/pre_defined/next_track_id)
-    val mvhdHex = s"""IF(v1,
-        concat('00000078', '6D766864', '01000000', repeat('00', 16),
-               ${u32hex("ts")}, ${u64hex("dur")}, repeat('00', 80)),
-        concat('0000006C', '6D766864', '00000000', repeat('00', 8),
-               ${u32hex("ts")}, ${u32hex("dur")}, repeat('00', 80)))"""
-    // trak(49) > mdia(41) > hdlr(33): fullbox + pre_defined + handler +
-    // 12 reserved + empty name terminator
-    val trakHex = (0 until 3).map { t =>
-      s"""IF($t < nt, concat('00000031', '7472616B', '00000029', '6D646961',
-            '00000021', '68646C72', '00000000', '00000000',
-            CASE (doc_id + $t) % 3 WHEN 0 THEN '76696465'
-                 WHEN 1 THEN '736F756E' ELSE '74657874' END,
-            repeat('00', 12), '00'), '')"""
-    }.mkString("concat(", ", ", ")")
-    val moovHex = s"""IF(doc_id % 17 = 3,
-        concat('00000010', '66726565', repeat('00', 8)),
-        concat(${u32hex("8 + IF(v1, 120, 108) + nt * 49")}, '6D6F6F76',
-               $mvhdHex, $trakHex))"""
-    val mdatHex = s"""CASE
-        WHEN largeMdat THEN concat('00000001', '6D646174',
-          ${u64hex("16 + fill")}, repeat('AB', fill))
-        WHEN doc_id % 23 = 6 AND NOT mdatFirst AND doc_id % 13 != 5
-          THEN concat('00000000', '6D646174', repeat('AB', fill))
-        ELSE concat(${u32hex("8 + fill")}, '6D646174', repeat('AB', fill))
-        END"""
-    d.withColumn("full_hex", expr(
-        s"""concat($ftypHex, IF(mdatFirst, $mdatHex, ''), $moovHex,
-            IF(mdatFirst, '', $mdatHex))"""))
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 13 = 5, substring(full_hex, 1, CAST(length(full_hex) - 20 AS INT)), full_hex)"))
-      .select(col("doc_id").as("asset_id"), unhex(col("payload_hex")).as("payload"))
-  }
+  def mp4Assets(spark: SparkSession, dir: String): DataFrame =
+    videoAssets(spark, dir, lit(true), graft.fixtures.Video.mp4)
 
   /** m14 — ISO-BMFF box walk over [[mp4Assets]] through the native
     * `mp4_features` expression. The oracle computes every expected field
@@ -3688,9 +3651,9 @@ object EntryOps {
       .orderBy(col("asset_id"))
 
   /** m21 fixture — spec-valid ISO-BMFF files WITH full sample tables,
-    * synthesized in-plan from doc_id: `ftyp` (m14's brand cycle), `moov`
-    * holding `mvhd` plus 1–3 complete `trak`/`mdia`(`mdhd`+`hdlr`)/`minf`/
-    * `stbl` chains where, per track t (k = doc_id + t):
+    * built from doc_id by [[graft.fixtures.Video.mp4Samples]]: `ftyp`
+    * (m14's brand cycle), `moov` holding `mvhd` plus 1–3 complete
+    * `trak`/`mdia`(`mdhd`+`hdlr`)/`minf`/`stbl` chains where, per track t (k = doc_id + t):
     *  - `stsz`: ns = k%5+2 samples; constant-size branch (k even: one
     *    sample_size k%7+10, no table) vs explicit-table branch (k odd:
     *    sample j sized (k·7+j·3)%50+8);
@@ -3709,102 +3672,8 @@ object EntryOps {
     * past EOF (the bounds check).
     */
   def mp4SampleAssets(spark: SparkSession, dir: String,
-      where: Column = lit(true)): DataFrame = {
-    val d = docIds(spark, dir).filter(where)
-      .withColumn("nt", (col("doc_id") % 3 + 1).cast("int"))
-      .withColumn("fill", (col("doc_id") % 16 + 12).cast("int"))
-    def u32hex(e: String) = s"lpad(hex($e), 8, '0')"
-    def u64hex(e: String) = s"lpad(hex($e), 16, '0')"
-    val brandHex = "CASE doc_id % 3 WHEN 0 THEN '69736F6D' " +
-      "WHEN 1 THEN '6D703432' ELSE '61766331' END"
-    val ftypHex = s"IF(doc_id % 37 = 11, " +
-      "concat('00000010', '66726565', repeat('00', 8)), " +
-      s"concat('00000010', '66747970', $brandHex, '00000000'))"
-    // one trak chain per unrolled t; every box size is the exact sum of its
-    // children so the decoder's overrun checks see a well-formed tree
-    def trakHex(t: Int): String = {
-      val k = s"(doc_id + $t)"
-      val ns = s"($k % 5 + 2)"
-      val isConst = s"($k % 2 = 0)"
-      val csz = s"($k % 7 + 10)"
-      val d1 = s"($k % 4 + 100)"
-      val d2 = s"($k % 4 + 150)"
-      val mts = s"(500 * ($k % 3 + 1))"
-      val ticks = s"IF($ns >= 4, 2 * $d1 + ($ns - 2) * $d2, $ns * $d1)"
-      val contra = s"IF(doc_id % 29 = 10, 1, 0)"
-      val co64 = s"($k % 11 = 4)"
-      val handlerHex = s"CASE $k % 3 WHEN 0 THEN '76696465' " +
-        "WHEN 1 THEN '736F756E' ELSE '74657874' END"
-      val ne = s"IF($ns >= 4, 2, 1)"
-      val nsc = s"IF($ns % 2 = 0, 1, 2)"
-      val sStts = s"(16 + 8 * $ne)"
-      val sStsc = s"(16 + 12 * $nsc)"
-      val sStsz = s"(20 + IF($isConst, 0, 4 * $ns))"
-      val sSco = s"IF($co64, 32, 24)"
-      val sStbl = s"(8 + $sStts + $sStsc + $sStsz + $sSco)"
-      val sMinf = s"(8 + $sStbl)"
-      val sMdia = s"(8 + 32 + 33 + $sMinf)"
-      val sTrak = s"(8 + $sMdia)"
-      val sttsEntries = s"""IF($ns >= 4,
-          concat(${u32hex(s"2 + $contra")}, ${u32hex(d1)},
-                 ${u32hex(s"$ns - 2")}, ${u32hex(d2)}),
-          concat(${u32hex(s"$ns + $contra")}, ${u32hex(d1)}))"""
-      val stscEntries = s"""IF($ns % 2 = 0,
-          concat('00000001', ${u32hex(s"$ns div 2")}, '00000001'),
-          concat('00000001', ${u32hex(s"($ns + 1) div 2")}, '00000001',
-                 '00000002', ${u32hex(s"$ns div 2")}, '00000001'))"""
-      val stszEntries = (0 until 6).map { j =>
-        s"IF(NOT $isConst AND $j < $ns, ${u32hex(s"($k * 7 + $j * 3) % 50 + 8")}, '')"
-      }.mkString("concat(", ", ", ")")
-      val off2 = s"IF(doc_id % 41 = 7, 1000000, 96)"
-      val scoHex = s"""IF($co64,
-          concat('00000020', '636F3634', '00000000', '00000002',
-                 ${u64hex("48")}, ${u64hex(off2)}),
-          concat('00000018', '7374636F', '00000000', '00000002',
-                 ${u32hex("48")}, ${u32hex(off2)}))"""
-      s"""IF($t < nt, concat(
-          ${u32hex(sTrak)}, '7472616B',
-          ${u32hex(sMdia)}, '6D646961',
-          '00000020', '6D646864', '00000000', repeat('00', 8),
-            ${u32hex(mts)}, ${u32hex(ticks)}, repeat('00', 4),
-          '00000021', '68646C72', '00000000', '00000000', $handlerHex,
-            repeat('00', 12), '00',
-          ${u32hex(sMinf)}, '6D696E66',
-          ${u32hex(sStbl)}, '7374626C',
-          ${u32hex(sStts)}, '73747473', '00000000', ${u32hex(ne)}, $sttsEntries,
-          ${u32hex(sStsc)}, '73747363', '00000000', ${u32hex(nsc)}, $stscEntries,
-          ${u32hex(sStsz)}, '7374737A', '00000000',
-            IF($isConst, ${u32hex(csz)}, '00000000'), ${u32hex(ns)}, $stszEntries,
-          $scoHex), '')"""
-    }
-    val trakSizes = (0 until 3).map { t =>
-      val k = s"(doc_id + $t)"
-      val ns = s"($k % 5 + 2)"
-      s"""IF($t < nt, 8 + 8 + 32 + 33 + 8 + 8 +
-          (16 + 8 * IF($ns >= 4, 2, 1)) + (16 + 12 * IF($ns % 2 = 0, 1, 2)) +
-          (20 + IF($k % 2 = 0, 0, 4 * $ns)) + IF($k % 11 = 4, 32, 24), 0)"""
-    }.mkString(" + ")
-    val mvhdHex = s"concat('0000006C', '6D766864', '00000000', repeat('00', 8), " +
-      s"${u32hex("600 * (doc_id % 4 + 1)")}, ${u32hex("doc_id % 9000 + 100")}, repeat('00', 80))"
-    val moovHex = s"""IF(doc_id % 17 = 3,
-        concat('00000010', '66726565', repeat('00', 8)),
-        concat(${u32hex(s"8 + 108 + ($trakSizes)")}, '6D6F6F76', $mvhdHex,
-               ${(0 until 3).map(trakHex).mkString("concat(", ", ", ")")}))"""
-    val mdatHex = s"concat(${u32hex("8 + fill")}, '6D646174', repeat('AB', fill))"
-    val moofHex = "IF(doc_id % 43 = 9, " +
-      "concat('00000010', '6D6F6F66', repeat('00', 8)), '')"
-    // RowFence: the synthesis projection must leave whole-stage codegen —
-    // fused, it compiles to ONE method past janino's 64 KB limit (the r17
-    // m23/m24 interpreted-fallback failure) and past HotSpot's 8 KB JIT
-    // limit even when it squeaks under; row-based, concat/IF/CASE split
-    // into small JIT-able methods. The `where` parameter exists because a
-    // caller's later filter cannot reach the scan through the fence:
-    // subsetting callers (m23/m24 parity split) filter HERE, at the scan.
-    d.withColumn("payload_hex",
-        expr(s"concat($ftypHex, $moovHex, $mdatHex, $moofHex)"))
-      .select(graft.functions.RowFence(col("doc_id")).as("asset_id"),
-        unhex(col("payload_hex")).as("payload"))
-  }
+      where: Column = lit(true)): DataFrame =
+    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Samples)
 
   /** m21 — the ISO-BMFF SAMPLE-TABLE walk ([[graft.functions.Mp4SampleTables]],
     * stsz/stts/stsc/stco/co64 per trak) over [[mp4SampleAssets]], exploded
@@ -3831,14 +3700,15 @@ object EntryOps {
         col("trk.avg_sample_bytes").as("avg_sample_bytes"),
         col("trk.chunk_count").as("chunk_count"))
       // track table materialized pre-sort (range partitioning samples =
-      // executes the synthesized-fixture walk twice; the mpegL1Pcm note)
+      // executes the fixture build and walk twice; the mpegL1Pcm note)
       .barriered
       .orderBy(col("asset_id"), col("trak_idx"))
 
-  /** m22 fixture — spec-valid FRAGMENTED ISO-BMFF files synthesized
-    * in-plan from doc_id (the DASH/CMAF stream class [[mp4SampleAssets]]'
-    * files refuse): `ftyp` (m14's brand cycle), an init-segment `moov`
-    * holding `mvhd` + nt = doc_id%2+1 declaration-only `trak` chains
+  /** m22 fixture — spec-valid FRAGMENTED ISO-BMFF files built from
+    * doc_id by [[graft.fixtures.Video.mp4Fragments]] (the DASH/CMAF
+    * stream class [[mp4SampleAssets]]' files refuse): `ftyp` (m14's
+    * brand cycle), an init-segment `moov` holding `mvhd` + nt = doc_id%2+1
+    * declaration-only `trak` chains
     * (`tkhd` track_ID t+1, `mdhd` timescale 500·(k%3+1), `hdlr` — NO
     * stbl; k = doc_id + t) + `mvex` with one `trex` per track (default
     * duration k%4+100, default size k%7+10), then nf = doc_id%3+1
@@ -3861,114 +3731,8 @@ object EntryOps {
     * past EOF (the bounds check).
     */
   def mp4FragmentAssets(spark: SparkSession, dir: String,
-      where: Column = lit(true)): DataFrame = {
-    val d = docIds(spark, dir).filter(where)
-      .withColumn("nt", (col("doc_id") % 2 + 1).cast("int"))
-      .withColumn("nf", (col("doc_id") % 3 + 1).cast("int"))
-    def u32hex(e: String) = s"lpad(hex($e), 8, '0')"
-    def u64hex(e: String) = s"lpad(hex($e), 16, '0')"
-    val brandHex = "CASE doc_id % 3 WHEN 0 THEN '69736F6D' " +
-      "WHEN 1 THEN '6D703432' ELSE '61766331' END"
-    val ftypHex = s"IF(doc_id % 37 = 11, " +
-      "concat('00000010', '66726565', repeat('00', 8)), " +
-      s"concat('00000010', '66747970', $brandHex, '00000000'))"
-    def k(t: Int) = s"(doc_id + $t)"
-    // declaration-only trak: tkhd(92) + mdia(8 + mdhd 32 + hdlr 33) = 173
-    def trakHex(t: Int): String = {
-      val mts = s"(500 * (${k(t)} % 3 + 1))"
-      val handlerHex = s"CASE ${k(t)} % 3 WHEN 0 THEN '76696465' " +
-        "WHEN 1 THEN '736F756E' ELSE '74657874' END"
-      s"""IF($t < nt, concat(
-          '000000AD', '7472616B',
-          '0000005C', '746B6864', '00000000', repeat('00', 8),
-            ${u32hex(s"$t + 1")}, repeat('00', 68),
-          '00000049', '6D646961',
-          '00000020', '6D646864', '00000000', repeat('00', 8),
-            ${u32hex(mts)}, repeat('00', 8),
-          '00000021', '68646C72', '00000000', '00000000', $handlerHex,
-            repeat('00', 12), '00'), '')"""
-    }
-    def trexHex(t: Int): String =
-      s"""IF($t < nt, concat('00000020', '74726578', '00000000',
-          ${u32hex(s"$t + 1")}, '00000001', ${u32hex(s"${k(t)} % 4 + 100")},
-          ${u32hex(s"${k(t)} % 7 + 10")}, '00000000'), '')"""
-    val mvexHex = s"""IF(doc_id % 31 = 5, '',
-        concat(${u32hex("8 + 32 * nt")}, '6D766578',
-               ${trexHex(0)}, ${trexHex(1)}))"""
-    val moovSize = "(8 + 108 + 173 * nt + IF(doc_id % 31 = 5, 0, 8 + 32 * nt))"
-    val mvhdHex = s"concat('0000006C', '6D766864', '00000000', repeat('00', 8), " +
-      s"${u32hex("600 * (doc_id % 4 + 1)")}, ${u32hex("doc_id % 9000 + 100")}, repeat('00', 80))"
-    val moovHex = s"""IF(doc_id % 17 = 3,
-        concat('00000010', '66726565', repeat('00', 8)),
-        concat(${u32hex(moovSize)}, '6D6F6F76', $mvhdHex,
-               ${(0 until 2).map(trakHex).mkString("concat(", ", ", ")")}, $mvexHex))"""
-    // effective trun class: the missing-default branch forces class 0
-    def ce(t: Int, f: Int) = s"IF(doc_id % 31 = 5, 0, (${k(t)} + $f) % 3)"
-    def ns(t: Int, f: Int) = s"((${k(t)} + $f) % 4 + 1)"
-    def tfhdSize(t: Int, f: Int) =
-      s"""IF(doc_id % 23 = 6, 24, IF(doc_id % 31 = 5, 16,
-          IF(${ce(t, f)} = 1, 20, 16)))"""
-    def trunSize(t: Int, f: Int) =
-      s"""IF(doc_id % 29 = 10, 24 + 4 * ${ns(t, f)},
-          CASE ${ce(t, f)} WHEN 0 THEN 20
-               WHEN 1 THEN 20 + 4 * ${ns(t, f)}
-               ELSE 20 + 8 * ${ns(t, f)} END)"""
-    def moofSize(f: Int) = "(24 + " + (0 until 2).map { t =>
-      s"IF($t < nt, 8 + ${tfhdSize(t, f)} + ${trunSize(t, f)}, 0)"
-    }.mkString(" + ") + ")"
-    def tidHex(t: Int) = s"IF(doc_id % 41 = 7, ${u32hex("999")}, ${u32hex(s"$t + 1")})"
-    def tfhdHex(t: Int, f: Int) =
-      s"""IF(doc_id % 23 = 6,
-          concat('00000018', '74666864', '00000001', ${tidHex(t)},
-                 ${u64hex("10000000")}),
-          IF(doc_id % 31 = 5,
-            concat('00000010', '74666864', '00020000', ${tidHex(t)}),
-            CASE ${ce(t, f)}
-              WHEN 1 THEN concat('00000014', '74666864', '00020008',
-                ${tidHex(t)}, ${u32hex(s"${k(t)} % 4 + 120")})
-              ELSE concat('00000010', '74666864', '00020000', ${tidHex(t)})
-            END))"""
-    def doff(t: Int, f: Int) = s"(${moofSize(f)} + 8 + $t * 300)"
-    def trunHex(t: Int, f: Int): String = {
-      val sizes = (0 until 4).map { j =>
-        s"IF($j < ${ns(t, f)}, ${u32hex(s"(${k(t)} * 5 + $f * 3 + $j * 2) % 40 + 8")}, '')"
-      }.mkString("concat(", ", ", ")")
-      val durSizes = (0 until 4).map { j =>
-        s"""IF($j < ${ns(t, f)}, concat(${u32hex(s"${k(t)} % 4 + 100 + $j")},
-            ${u32hex(s"(${k(t)} * 3 + $j) % 30 + 10")}), '')"""
-      }.mkString("concat(", ", ", ")")
-      s"""IF(doc_id % 29 = 10,
-          concat(${u32hex(s"24 + 4 * ${ns(t, f)}")}, '7472756E', '00000405',
-                 ${u32hex(ns(t, f))}, ${u32hex(doff(t, f))}, '00000000',
-                 repeat('00000000', ${ns(t, f)})),
-          CASE ${ce(t, f)}
-            WHEN 0 THEN concat('00000014', '7472756E', '00000001',
-              ${u32hex(ns(t, f))}, ${u32hex(doff(t, f))})
-            WHEN 1 THEN concat(${u32hex(s"20 + 4 * ${ns(t, f)}")}, '7472756E',
-              '00000201', ${u32hex(ns(t, f))}, ${u32hex(doff(t, f))}, $sizes)
-            ELSE concat(${u32hex(s"20 + 8 * ${ns(t, f)}")}, '7472756E',
-              '00000301', ${u32hex(ns(t, f))}, ${u32hex(doff(t, f))}, $durSizes)
-          END)"""
-    }
-    def trafHex(t: Int, f: Int) =
-      s"""IF($t < nt, concat(
-          ${u32hex(s"8 + ${tfhdSize(t, f)} + ${trunSize(t, f)}")}, '74726166',
-          ${tfhdHex(t, f)}, ${trunHex(t, f)}), '')"""
-    val mdatHex = "concat('00000260', '6D646174', repeat('AB', 600))"
-    def fragHex(f: Int) =
-      s"""IF($f < nf, concat(
-          ${u32hex(moofSize(f))}, '6D6F6F66',
-          '00000010', '6D666864', '00000000', ${u32hex(s"$f + 1")},
-          ${trafHex(0, f)}, ${trafHex(1, f)}, $mdatHex), '')"""
-    val bodyHex = s"""IF(doc_id % 43 = 9, $mdatHex,
-        ${(0 until 3).map(fragHex).mkString("concat(", ", ", ")")})"""
-    // RowFence + `where`: same 64 KB / 8 KB method rationale and the same
-    // pushdown contract as [[mp4SampleAssets]] — this synthesis is the
-    // largest unrolled tree in the repo and was the stage janino refused.
-    d.withColumn("payload_hex", expr(s"concat($ftypHex, $moovHex, $bodyHex)"))
-      .select(graft.functions.RowFence(col("doc_id")).as("asset_id"),
-        unhex(col("payload_hex")).as("payload"))
-  }
+      where: Column = lit(true)): DataFrame =
+    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Fragments)
 
   /** m22 — the FRAGMENTED ISO-BMFF sample inventory
     * ([[graft.functions.Mp4FragmentTables]]: moof/traf/trun walk with the
@@ -4078,9 +3842,10 @@ object EntryOps {
       .orderBy(col("asset_id"))
   }
 
-  /** d36 fixture — the RE-MUX corpus: spec-valid flat ISO-BMFF files
-    * where track CONTENT and container LAYOUT derive from separate keys,
-    * so the same samples can appear under different packaging (what a
+  /** d36 fixture — the RE-MUX corpus ([[graft.fixtures.Video.mp4Remux]]):
+    * spec-valid flat ISO-BMFF files where track CONTENT and container
+    * LAYOUT derive from separate keys, so the same samples can appear
+    * under different packaging (what a
     * re-mux — ffmpeg -c copy, a different interleaver, a CDN repackage —
     * does to a crawled video: bytes differ, content doesn't).
     *
@@ -4104,108 +3869,8 @@ object EntryOps {
     * nothing.
     */
   def mp4RemuxAssets(spark: SparkSession, dir: String,
-      where: Column = lit(true)): DataFrame = {
-    val d = docIdsSerial(spark, dir).filter(where)
-      .withColumn("b", expr(
-        "CASE WHEN doc_id % 10 = 1 OR doc_id % 10 = 3 THEN doc_id - 1 ELSE doc_id END"))
-      .withColumn("nt", expr(
-        """CAST(CASE WHEN doc_id % 10 = 3
-             THEN (CASE WHEN b % 3 = 0 THEN 1 ELSE b % 3 END)
-             ELSE b % 3 + 1 END AS INT)"""))
-      .withColumn("alt", expr("doc_id % 10 = 1 OR doc_id % 6 = 2"))
-      .withColumn("fill", (col("doc_id") % 16 + 12).cast("int"))
-    def u32hex(e: String) = s"lpad(hex($e), 8, '0')"
-    val brandHex = "CASE doc_id % 3 WHEN 0 THEN '69736F6D' " +
-      "WHEN 1 THEN '6D703432' ELSE '61766331' END"
-    val ftypHex = s"IF(doc_id % 37 = 11, " +
-      "concat('00000010', '66726565', repeat('00', 8)), " +
-      s"concat('00000010', '66747970', $brandHex, '00000000'))"
-    def trakHex(t: Int): String = {
-      val k = s"(b * 4 + $t)"
-      val ns = s"($k % 5 + 2)"
-      val isConst = s"($k % 2 = 0)"
-      val csz = s"($k % 7 + 10)"
-      // HIGH-ENTROPY duration base (d36's one departure from m21's small
-      // moduli): with mod-4 durations, descriptor tokens recur every ~420
-      // in k-space and incidental inventory twins dominate the pairs
-      // (~588 of 688 at sf0.001) — at x100 the df cap would bind on the
-      // fixture's artificial token collisions, which real sample tables
-      // (genuine sizes/durations) do not exhibit. A quadratic residue mod
-      // a large prime makes each (b, t)'s token effectively unique (~7e8
-      // classes vs ~2e5 tracks at sf0.1), so the output is exactly the
-      // planted re-mux/trim pairs. Bounds: k <= ~2e5 so k*k*92821 <=
-      // 3.7e15 (BIGINT-exact in both engines); ticks <= 6*(7e8+99) < u32.
-      val d1 = s"(($k * $k * 92821) % 700000007 + 100)"
-      val d2 = s"(($k * $k * 92821) % 700000007 + 150)"
-      val mts = s"(500 * ($k % 3 + 1))"
-      val ticks = s"IF($ns >= 4, 2 * $d1 + ($ns - 2) * $d2, $ns * $d1)"
-      val handlerHex = s"CASE $k % 3 WHEN 0 THEN '76696465' " +
-        "WHEN 1 THEN '736F756E' ELSE '74657874' END"
-      val ne = s"IF($ns >= 4, 2, 1)"
-      val nsc = s"IF(alt, 1, IF($ns % 2 = 0, 1, 2))"
-      val sStts = s"(16 + 8 * $ne)"
-      val sStsc = s"(16 + 12 * $nsc)"
-      val sStsz = s"(20 + IF($isConst, 0, 4 * $ns))"
-      val sSco = "IF(alt, 20, 24)"
-      val sStbl = s"(8 + $sStts + $sStsc + $sStsz + $sSco)"
-      val sMinf = s"(8 + $sStbl)"
-      val sMdia = s"(8 + 32 + 33 + $sMinf)"
-      val sTrak = s"(8 + $sMdia)"
-      val sttsEntries = s"""IF($ns >= 4,
-          concat('00000002', ${u32hex(d1)},
-                 ${u32hex(s"$ns - 2")}, ${u32hex(d2)}),
-          concat(${u32hex(ns)}, ${u32hex(d1)}))"""
-      val stscEntries = s"""IF(alt,
-          concat('00000001', ${u32hex(ns)}, '00000001'),
-          IF($ns % 2 = 0,
-            concat('00000001', ${u32hex(s"$ns div 2")}, '00000001'),
-            concat('00000001', ${u32hex(s"($ns + 1) div 2")}, '00000001',
-                   '00000002', ${u32hex(s"$ns div 2")}, '00000001')))"""
-      val stszEntries = (0 until 6).map { j =>
-        s"IF(NOT $isConst AND $j < $ns, ${u32hex(s"($k * 7 + $j * 3) % 50 + 8")}, '')"
-      }.mkString("concat(", ", ", ")")
-      val scoHex = s"""IF(alt,
-          concat('00000014', '7374636F', '00000000', '00000001', ${u32hex("48")}),
-          concat('00000018', '7374636F', '00000000', '00000002',
-                 ${u32hex("48")}, ${u32hex("96")}))"""
-      s"""IF($t < nt, concat(
-          ${u32hex(sTrak)}, '7472616B',
-          ${u32hex(sMdia)}, '6D646961',
-          '00000020', '6D646864', '00000000', repeat('00', 8),
-            ${u32hex(mts)}, ${u32hex(ticks)}, repeat('00', 4),
-          '00000021', '68646C72', '00000000', '00000000', $handlerHex,
-            repeat('00', 12), '00',
-          ${u32hex(sMinf)}, '6D696E66',
-          ${u32hex(sStbl)}, '7374626C',
-          ${u32hex(sStts)}, '73747473', '00000000', ${u32hex(ne)}, $sttsEntries,
-          ${u32hex(sStsc)}, '73747363', '00000000', ${u32hex(nsc)}, $stscEntries,
-          ${u32hex(sStsz)}, '7374737A', '00000000',
-            IF($isConst, ${u32hex(csz)}, '00000000'), ${u32hex(ns)}, $stszEntries,
-          $scoHex), '')"""
-    }
-    val trakSizes = (0 until 3).map { t =>
-      val k = s"(b * 4 + $t)"
-      val ns = s"($k % 5 + 2)"
-      s"""IF($t < nt, 8 + 8 + 32 + 33 + 8 + 8 +
-          (16 + 8 * IF($ns >= 4, 2, 1)) +
-          (16 + 12 * IF(alt, 1, IF($ns % 2 = 0, 1, 2))) +
-          (20 + IF($k % 2 = 0, 0, 4 * $ns)) + IF(alt, 20, 24), 0)"""
-    }.mkString(" + ")
-    val mvhdHex = s"concat('0000006C', '6D766864', '00000000', repeat('00', 8), " +
-      s"${u32hex("600 * (doc_id % 4 + 1)")}, ${u32hex("doc_id % 9000 + 100")}, repeat('00', 80))"
-    val moovHex = s"""IF(doc_id % 17 = 3,
-        concat('00000010', '66726565', repeat('00', 8)),
-        concat(${u32hex(s"8 + 108 + ($trakSizes)")}, '6D6F6F76', $mvhdHex,
-               ${(0 until 3).map(trakHex).mkString("concat(", ", ", ")")}))"""
-    val mdatHex = s"concat(${u32hex("8 + fill")}, '6D646174', repeat('AB', fill))"
-    // RowFence + no downstream filters: same 64 KB / 8 KB method rationale
-    // as the sibling fixtures
-    d.withColumn("payload_hex",
-        expr(s"concat($ftypHex, IF(alt, $mdatHex, ''), $moovHex, " +
-          s"IF(alt, '', $mdatHex))"))
-      .select(graft.functions.RowFence(col("doc_id")).as("asset_id"),
-        unhex(col("payload_hex")).as("payload"))
-  }
+      where: Column = lit(true)): DataFrame =
+    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Remux)
 
   /** d36 — VIDEO near-dup from the sample-table fingerprint (r17 verdict
     * item 4 — the one modality that had no dedup operator, closed with
@@ -4240,8 +3905,7 @@ object EntryOps {
     * folds over the track array — no explode + groupBy shuffle). Refused
     * files have NULL tracks and produce no row. The Staged fence keeps
     * the tracks filter testing the PROJECTED struct instead of pushing
-    * below and re-deriving the decode (plus the inlined fixture
-    * synthesis) inside a Filter.
+    * below and re-deriving the decode inside a Filter.
     */
   private def videoDescriptorTable(spark: SparkSession, dir: String,
       where: Column = lit(true)): DataFrame =
@@ -4265,8 +3929,8 @@ object EntryOps {
           .as("vid_bytes"))
 
   /** d39 fixture — spec-valid FRAGMENTED (DASH/CMAF-delivery) ISO-BMFF
-    * files with PLANTED RE-SEGMENTATION duplicates, synthesized in-plan
-    * from doc_id: the streaming-delivery analogue of [[mp4RemuxAssets]]
+    * files with PLANTED RE-SEGMENTATION duplicates, built from doc_id by
+    * [[graft.fixtures.Video.mp4Dash]]: the streaming-delivery analogue of [[mp4RemuxAssets]]
     * (a CDN re-segmenter cuts different moof boundaries; per-track sample
     * inventory is invariant). Content derives from b (= doc_id − 1 for
     * the alias classes doc_id % 10 ∈ {1, 3}): nt = (b div 2) % 2 + 1
@@ -4289,78 +3953,8 @@ object EntryOps {
     * % 17 = 3 moov→free.
     */
   def mp4DashAssets(spark: SparkSession, dir: String,
-      where: Column = lit(true)): DataFrame = {
-    val d = docIdsSerial(spark, dir).filter(where)
-      .withColumn("b", expr(
-        "CASE WHEN doc_id % 10 = 1 OR doc_id % 10 = 3 THEN doc_id - 1 ELSE doc_id END"))
-      // nt varies on (b div 2) % 2 — the alias classes force b EVEN, so a
-      // b % 2 track count would freeze their partners at one track and the
-      // trim class would never exercise the partial-jaccard tier
-      .withColumn("nt", expr(
-        "CAST(IF(doc_id % 10 = 3, 1, (b % 4) div 2 + 1) AS INT)"))
-      .withColumn("nf", expr(
-        "CAST(IF(doc_id % 10 = 1, (b % 3 + 1) % 3 + 1, b % 3 + 1) AS INT)"))
-    def u32hex(e: String) = s"lpad(hex($e), 8, '0')"
-    val brandHex = "CASE doc_id % 3 WHEN 0 THEN '69736F6D' " +
-      "WHEN 1 THEN '6D703432' ELSE '61766331' END"
-    val ftypHex = s"IF(doc_id % 37 = 11, " +
-      "concat('00000010', '66726565', repeat('00', 8)), " +
-      s"concat('00000010', '66747970', $brandHex, '00000000'))"
-    def k(t: Int) = s"(b * 4 + $t)"
-    def mts(t: Int) = s"(500 * (${k(t)} % 3 + 1))"
-    def d1(t: Int) = s"((${k(t)} * ${k(t)} * 92821) % 700000007 + 100)"
-    def sz(t: Int) = s"(${k(t)} % 7 + 10)"
-    def nsTot(t: Int) = s"(${k(t)} % 5 + 3)"
-    def trakHex(t: Int): String = {
-      val handlerHex = s"CASE ${k(t)} % 3 WHEN 0 THEN '76696465' " +
-        "WHEN 1 THEN '736F756E' ELSE '74657874' END"
-      s"""IF($t < nt, concat(
-          '000000AD', '7472616B',
-          '0000005C', '746B6864', '00000000', repeat('00', 8),
-            ${u32hex(s"$t + 1")}, repeat('00', 68),
-          '00000049', '6D646961',
-          '00000020', '6D646864', '00000000', repeat('00', 8),
-            ${u32hex(mts(t))}, repeat('00', 8),
-          '00000021', '68646C72', '00000000', '00000000', $handlerHex,
-            repeat('00', 12), '00'), '')"""
-    }
-    def trexHex(t: Int): String =
-      s"""IF($t < nt, concat('00000020', '74726578', '00000000',
-          ${u32hex(s"$t + 1")}, '00000001', ${u32hex(d1(t))},
-          ${u32hex(sz(t))}, '00000000'), '')"""
-    val mvexHex = s"concat(${u32hex("8 + 32 * nt")}, '6D766578', " +
-      s"${trexHex(0)}, ${trexHex(1)})"
-    val moovSize = "(8 + 108 + 173 * nt + 8 + 32 * nt)"
-    val mvhdHex = s"concat('0000006C', '6D766864', '00000000', repeat('00', 8), " +
-      s"${u32hex("600 * (doc_id % 4 + 1)")}, ${u32hex("doc_id % 9000 + 100")}, repeat('00', 80))"
-    val moovHex = s"""IF(doc_id % 17 = 3,
-        concat('00000010', '66726565', repeat('00', 8)),
-        concat(${u32hex(moovSize)}, '6D6F6F76', $mvhdHex,
-               ${(0 until 2).map(trakHex).mkString("concat(", ", ", ")")}, $mvexHex))"""
-    // samples per fragment: ns_tot cut into nf near-equal contiguous runs
-    def cnt(t: Int, f: Int) =
-      s"(${nsTot(t)} div nf + IF($f < ${nsTot(t)} % nf, 1, 0))"
-    val moofSize = "(24 + 44 * nt)" // mfhd 16 + per track traf(8+tfhd 16+trun 20)
-    def doff(t: Int) = s"($moofSize + 8 + $t * 300)"
-    def trafHex(t: Int, f: Int) =
-      s"""IF($t < nt, concat(
-          '0000002C', '74726166',
-          '00000010', '74666864', '00020000', ${u32hex(s"$t + 1")},
-          '00000014', '7472756E', '00000001', ${u32hex(cnt(t, f))},
-          ${u32hex(doff(t))}), '')"""
-    val mdatHex = "concat('00000260', '6D646174', repeat('AB', 600))"
-    def fragHex(f: Int) =
-      s"""IF($f < nf, concat(
-          ${u32hex(moofSize)}, '6D6F6F66',
-          '00000010', '6D666864', '00000000', ${u32hex(s"$f + 1")},
-          ${trafHex(0, f)}, ${trafHex(1, f)}, $mdatHex), '')"""
-    val bodyHex = (0 until 3).map(fragHex).mkString("concat(", ", ", ")")
-    // RowFence + `where` at the scan: same 64 KB / 8 KB method rationale
-    // and pushdown contract as the sibling MP4 fixtures
-    d.withColumn("payload_hex", expr(s"concat($ftypHex, $moovHex, $bodyHex)"))
-      .select(graft.functions.RowFence(col("doc_id")).as("asset_id"),
-        unhex(col("payload_hex")).as("payload"))
-  }
+      where: Column = lit(true)): DataFrame =
+    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Dash)
 
   /** d39 — RE-SEGMENTATION near-dup for FRAGMENTED (DASH/CMAF) media
     * (r18 verdict stretch item 8): d36 covers flat MP4 re-muxing, but the
@@ -4391,8 +3985,8 @@ object EntryOps {
       n = 1, minJaccard = 0.4, maxDocFreq = 64)
 
   /** m25/d40 fixture — spec-valid MPEG transport streams (ISO/IEC
-    * 13818-1) with PLANTED RE-MUX duplicates, synthesized in-plan from
-    * doc_id: the broadcast/HLS analogue of [[mp4RemuxAssets]] /
+    * 13818-1) with PLANTED RE-MUX duplicates, built from doc_id by
+    * [[graft.fixtures.Video.mpegTs]]: the broadcast/HLS analogue of [[mp4RemuxAssets]] /
     * [[mp4DashAssets]]. Content shares the d39 derivation exactly
     * (b/nt/k = 4b + t; per stream np = k % 5 + 3 PES packets of
     * sz = k % 7 + 10 ES bytes at PTS step d1 = (k²·92821 mod 700000007)
@@ -4410,73 +4004,8 @@ object EntryOps {
     * sync byte, % 17 = 3 ships no PAT.
     */
   def mpegTsAssets(spark: SparkSession, dir: String,
-      where: Column = lit(true)): DataFrame = {
-    val d = docIdsSerial(spark, dir).filter(where)
-      .withColumn("b", expr(
-        "CASE WHEN doc_id % 10 = 1 OR doc_id % 10 = 3 THEN doc_id - 1 ELSE doc_id END"))
-      .withColumn("nt", expr(
-        "CAST(IF(doc_id % 10 = 3, 1, (b % 4) div 2 + 1) AS INT)"))
-      .withColumn("pmt_pid", expr("CAST(32 + doc_id % 8 AS INT)"))
-      .withColumn("rr", expr("doc_id % 10 = 1 OR doc_id % 6 = 2"))
-    def u8hex(e: String) = s"lpad(hex($e), 2, '0')"
-    def u16hex(e: String) = s"lpad(hex($e), 4, '0')"
-    def k(t: Int) = s"(b * 4 + $t)"
-    def np(t: Int) = s"(${k(t)} % 5 + 3)"
-    def sz(t: Int) = s"(${k(t)} % 7 + 10)"
-    def d1(t: Int) = s"((${k(t)} * ${k(t)} * 92821) % 700000007 + 100)"
-    def esPid(t: Int) = s"(256 * (doc_id % 5 + 1) + $t)"
-    def streamId(t: Int) = s"CASE ${k(t)} % 3 WHEN 0 THEN 'E0' " +
-      "WHEN 1 THEN 'C0' ELSE 'BD' END"
-    def streamType(t: Int) = s"CASE ${k(t)} % 3 WHEN 0 THEN '1B' " +
-      "WHEN 1 THEN '0F' ELSE '06' END"
-    // one PES in one cell: PUSI header, stuffed adaptation field, PES
-    // header with the §2.4.3.7 marker-framed PTS, sz content bytes
-    def pesHex(t: Int, j: Int): String = {
-      val pts = s"(CAST($j AS BIGINT) * ${d1(t)})"
-      s"""IF($t < nt AND $j < ${np(t)}, concat(
-          '47', ${u16hex(s"16384 + ${esPid(t)}")}, ${u8hex(s"48 + $j")},
-          ${u8hex(s"169 - ${sz(t)}")}, '00', repeat('FF', 168 - ${sz(t)}),
-          '000001', ${streamId(t)}, ${u16hex(s"8 + ${sz(t)}")},
-          '80', '80', '05',
-          ${u8hex(s"32 + ($pts div 1073741824) % 8 * 2 + 1")},
-          ${u16hex(s"($pts div 32768) % 32768 * 2 + 1")},
-          ${u16hex(s"$pts % 32768 * 2 + 1")},
-          repeat('AB', ${sz(t)})), '')"""
-    }
-    val patHex = s"""IF(doc_id % 17 = 3, '', concat(
-        '47', '4000', '10', '00',
-        '00', 'B00D', '0001', 'C1', '00', '00',
-        '0001', ${u16hex("57344 + pmt_pid")}, '00000000',
-        repeat('FF', 167)))"""
-    def pmtEntry(t: Int) =
-      s"IF($t < nt, concat(${streamType(t)}, ${u16hex(s"57344 + ${esPid(t)}")}, 'F000'), '')"
-    val pmtHex = s"""concat(
-        '47', ${u16hex("16384 + pmt_pid")}, '10', '00',
-        '02', ${u16hex("45056 + 13 + 5 * nt")}, '0001', 'C1', '00', '00',
-        ${u16hex("57344 + " + esPid(0))}, 'F000',
-        ${pmtEntry(0)}, ${pmtEntry(1)}, '00000000',
-        repeat('FF', 167 - 5 * nt))"""
-    // the two interleaves emit the SAME cell multiset in different order
-    val streamMajor = (0 until 2).map(t =>
-      (0 until 7).map(j => pesHex(t, j)).mkString("concat(", ", ", ")"))
-      .mkString("concat(", ", ", ")")
-    val roundRobin = (0 until 7).map(j =>
-      (0 until 2).map(t => pesHex(t, j)).mkString("concat(", ", ", ")"))
-      .mkString("concat(", ", ", ")")
-    // the synthesis projection carries its own fence: the sync-refusal
-    // rewrite below references payload_hex twice, so CollapseProject
-    // refuses to merge this projection into the fenced final one — an
-    // unfenced synthesis projection would re-enter whole-stage codegen as
-    // its own 64 KB method (the guard caught exactly that on m25's
-    // explode shape)
-    d.withColumn("payload_hex", graft.functions.RowFence(expr(
-        s"""concat($patHex, $pmtHex, IF(rr, $roundRobin, $streamMajor))""")))
-      // % 37 = 11: the first cell's sync byte reads 0x48 — sync lost
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 37 = 11, concat('48', substr(payload_hex, 3)), payload_hex)"))
-      .select(graft.functions.RowFence(col("doc_id")).as("asset_id"),
-        unhex(col("payload_hex")).as("payload"))
-  }
+      where: Column = lit(true)): DataFrame =
+    videoAssets(spark, dir, where, graft.fixtures.Video.mpegTs)
 
   /** m25 — MPEG-TS per-stream inventory over [[mpegTsAssets]]' real
     * packetized bytes: the broadcast/HLS packaging family joins the flat

@@ -27,6 +27,12 @@ import org.apache.spark.sql.types.DataType
   * `if`) split their children into sub-methods internally, so the same
   * tree compiles as many small JIT-able methods.
   *
+  * One caller remains: [[graft.EntryOps.urlAssets]], whose raw-URL CASE
+  * tree is SQL text shared with its oracle and compiled to a ~14 KB
+  * whole-stage method (past the JIT limit). The fixtures that first needed
+  * the fence, the MP4/MPEG-TS containers of m21–m25 and d36–d40, are now
+  * built in Scala by [[graft.fixtures.Video]] and never reach codegen.
+  *
   * Contrast [[Staged]]: Staged pins projection BOUNDARIES against the
   * optimizer (and stays codegen'd); RowFence moves one projection to the
   * row-based expression-codegen path. Only the marker itself evaluates

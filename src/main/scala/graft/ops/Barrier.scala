@@ -53,13 +53,37 @@ object Barrier {
     * frames must not depend on one another; results are positionally the
     * same as mapping [[barrier]] over the inputs (bit-identical frames,
     * only the wall-clock overlaps).
+    *
+    * Each frame runs on its own daemon thread (never a shared pool's
+    * worker), and every job of one call carries one job group. When a
+    * frame throws, the group is cancelled (with any job a sibling has yet
+    * to submit) and every sibling is awaited before the first failure is
+    * rethrown — no sibling job outlives the call.
     */
   def barrierAll(dfs: DataFrame*): Seq[DataFrame] = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = dfs.map(df => Future(barrier(df)))
-    futures.map(Await.result(_, Duration.Inf))
+    val group = s"graft-barrierAll-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newCachedThreadPool(
+      (r: Runnable) => { val t = new Thread(r, group); t.setDaemon(true); t })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val futures = dfs.map(df => Future {
+        // pool threads inherit the caller's job description
+        val sc = df.sparkSession.sparkContext
+        sc.setJobGroup(group, sc.getLocalProperty("spark.job.description"),
+          interruptOnCancel = true)
+        barrier(df)
+      })
+      // fails as soon as any frame fails
+      try Await.result(Future.sequence(futures), Duration.Inf)
+      catch {
+        case e: Throwable =>
+          dfs.head.sparkSession.sparkContext.cancelJobGroupAndFutureJobs(group)
+          futures.foreach(Await.ready(_, Duration.Inf))
+          throw e
+      }
+    } finally pool.shutdown()
   }
 
   /** `df.barriered` — the conf-routed barrier as a drop-in replacement for

@@ -8,7 +8,8 @@ import scala.collection.mutable
 /** Batch profiler (round-20 measurement harness, guide §1): run several
   * queries in ONE JVM, per rep splitting CONSTRUCTION wall (eager barrier /
   * scalar-read jobs fired while the entry function builds its DataFrame)
-  * from EXECUTION wall (the noop-sink save), and printing a per-JOB
+  * from EXECUTION wall (the noop-sink save) with the rep's job count and
+  * summed task CPU (median over reps last), and printing a per-JOB
   * breakdown of the final rep from a SparkListener — job wall, summed task
   * time, and the job group/description — so the expensive stage class is
   * named by evidence instead of guesswork.
@@ -17,7 +18,8 @@ import scala.collection.mutable
   */
 object Prof {
   final case class JobRec(id: Int, var start: Long = 0L, var end: Long = 0L,
-      var taskTimeMs: Long = 0L, var tasks: Int = 0, var desc: String = "")
+      var taskTimeMs: Long = 0L, var cpuMs: Long = 0L, var tasks: Int = 0,
+      var desc: String = "")
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
@@ -61,8 +63,10 @@ object Prof {
           jobs.synchronized {
             jobs.get(id).foreach { r =>
               r.tasks += 1
-              if (e.taskMetrics != null)
+              if (e.taskMetrics != null) {
                 r.taskTimeMs += e.taskMetrics.executorRunTime
+                r.cpuMs += e.taskMetrics.executorCpuTime / 1000000L
+              }
             }
           }
         }
@@ -84,24 +88,25 @@ object Prof {
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       println(s"==== $name ====")
-      (1 to reps).foreach { i =>
-        val last = i == reps
+      val cpus = (1 to reps).map { i =>
         // drain first: events of earlier reps still queued on the bus must
         // not land in the cleared maps once recording is on
-        if (last) {
-          org.apache.spark.sql.GraftBridge.drain(spark)
-          jobs.clear(); stageToJob.clear(); recording = true
-        }
+        org.apache.spark.sql.GraftBridge.drain(spark)
+        jobs.clear(); stageToJob.clear(); recording = true
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         val t2 = System.nanoTime()
-        if (last) { org.apache.spark.sql.GraftBridge.drain(spark); recording = false }
+        org.apache.spark.sql.GraftBridge.drain(spark); recording = false
+        val cpu = jobs.values.map(_.cpuMs).sum
         println(f"[prof] $name rep $i: construct ${(t1 - t0) / 1e9}%.2f s, " +
-          f"exec ${(t2 - t1) / 1e9}%.2f s, total ${(t2 - t0) / 1e9}%.2f s")
+          f"exec ${(t2 - t1) / 1e9}%.2f s, total ${(t2 - t0) / 1e9}%.2f s, " +
+          f"${jobs.size} jobs, task cpu ${cpu / 1e3}%.2f s")
         spark.catalog.clearCache()
+        cpu
       }
+      println(f"[prof] $name median task cpu ${cpus.sorted.apply(reps / 2) / 1e3}%.2f s")
       val rows = jobs.values.toSeq.sortBy(-_.taskTimeMs)
       val totWall = jobs.values.map(r => (r.end - r.start).max(0L)).sum
       val totTask = jobs.values.map(_.taskTimeMs).sum

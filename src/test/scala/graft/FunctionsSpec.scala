@@ -1183,11 +1183,7 @@ class FunctionsSpec extends GraftSpec {
 
   test("mp4_features walks ISO-BMFF boxes; mdat skipped by size; refusals honest") {
     import graft.functions.Mp4Features
-    def u32(x: Long) = Array((x >> 24).toByte, (x >> 16).toByte,
-      (x >> 8).toByte, x.toByte)
-    def u64(x: Long) = u32(x >>> 32) ++ u32(x & 0xffffffffL)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      u32(payload.length + 8L) ++ typ.getBytes("US-ASCII") ++ payload
+    import graft.fixtures.Bin.{box, u32, u64}
     def ftyp(brand: String) = box("ftyp", brand.getBytes("US-ASCII") ++ u32(0))
     def mvhd0(ts: Long, dur: Long) = box("mvhd",
       Array[Byte](0, 0, 0, 0) ++ u32(0) ++ u32(0) ++ u32(ts) ++ u32(dur) ++
@@ -1243,11 +1239,7 @@ class FunctionsSpec extends GraftSpec {
   test("mp4_sample_tables: hand-computed stbl decodes exactly; moof, " +
       "contradictory tables, and out-of-bounds offsets refuse") {
     import graft.functions.Mp4SampleTables
-    def u32(x: Long) = Array((x >> 24).toByte, (x >> 16).toByte,
-      (x >> 8).toByte, x.toByte)
-    def u64(x: Long) = u32(x >>> 32) ++ u32(x & 0xffffffffL)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      u32(payload.length + 8L) ++ typ.getBytes("US-ASCII") ++ payload
+    import graft.fixtures.Bin.{box, u32, u64}
     def full(typ: String, payload: Array[Byte]): Array[Byte] =
       box(typ, Array[Byte](0, 0, 0, 0) ++ payload)
     val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ u32(0))
@@ -1328,11 +1320,7 @@ class FunctionsSpec extends GraftSpec {
   test("mp4_fragment_tables: hand-computed moof/traf/trun walk with the " +
       "full default chain; contradictions and impossible inventories refuse") {
     import graft.functions.Mp4FragmentTables
-    def u32(x: Long) = Array((x >> 24).toByte, (x >> 16).toByte,
-      (x >> 8).toByte, x.toByte)
-    def u64(x: Long) = u32(x >>> 32) ++ u32(x & 0xffffffffL)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      u32(payload.length + 8L) ++ typ.getBytes("US-ASCII") ++ payload
+    import graft.fixtures.Bin.{box, u32, u64}
     def full(typ: String, payload: Array[Byte], flags: Long = 0): Array[Byte] =
       box(typ, u32(flags) ++ payload)
     val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ u32(0))
@@ -1587,16 +1575,13 @@ class FunctionsSpec extends GraftSpec {
     val validPpm = "P6\n3 2\n255\n".getBytes("US-ASCII") ++
       Array.tabulate[Byte](18)(i => (i * 13).toByte)
     val validMp4 = {
-      def u32b(x: Long) = Array((x >> 24).toByte, (x >> 16).toByte,
-        (x >> 8).toByte, x.toByte)
-      def bx(typ: String, p: Array[Byte]) =
-        u32b(p.length + 8L) ++ typ.getBytes("US-ASCII") ++ p
-      bx("ftyp", "isom".getBytes("US-ASCII") ++ u32b(0)) ++
-        bx("moov", bx("mvhd", Array[Byte](0, 0, 0, 0) ++ u32b(0) ++ u32b(0) ++
-          u32b(600) ++ u32b(1200) ++ new Array[Byte](80)) ++
-          bx("trak", bx("mdia", bx("hdlr", new Array[Byte](8) ++
+      import graft.fixtures.Bin.{box, u32}
+      box("ftyp", "isom".getBytes("US-ASCII") ++ u32(0)) ++
+        box("moov", box("mvhd", Array[Byte](0, 0, 0, 0) ++ u32(0) ++ u32(0) ++
+          u32(600) ++ u32(1200) ++ new Array[Byte](80)) ++
+          box("trak", box("mdia", box("hdlr", new Array[Byte](8) ++
             "vide".getBytes("US-ASCII") ++ new Array[Byte](13))))) ++
-        bx("mdat", Array.fill[Byte](11)(0xab.toByte))
+        box("mdat", Array.fill[Byte](11)(0xab.toByte))
     }
     val prefixes = Seq("GIF89a", "RIFF", "P6\n", "PNG", "BM")
       .map(_.getBytes("ISO-8859-1"))

@@ -1558,6 +1558,21 @@ class OpsSpec extends GraftSpec {
     assert(bb.collect().toSeq === b.collect().toSeq)
   }
 
+  test("barrierAll cancels its sibling jobs before rethrowing a frame's failure") {
+    val boom = udf((x: Long) => {
+      if (x >= 0L) throw new IllegalStateException("frame failed"); x })
+    val slow = udf((x: Long) => { Thread.sleep(120000L); x })
+    val failing = spark.range(1).select(boom(col("id")).as("id"))
+    val sleeping = spark.range(1).select(slow(col("id")).as("id"))
+    val t0 = System.nanoTime()
+    val e = intercept[Exception](graft.ops.Barrier.barrierAll(failing, sleeping))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("frame failed")))
+    org.apache.spark.sql.GraftBridge.drain(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert((System.nanoTime() - t0) / 1e9 < 60.0)
+  }
+
   test("clusterComponents converges on a long path (diameter > 2)") {
     // path 1-2-3-4-5-6: min label must walk the whole diameter
     val ds = (1L to 6L).toDF("doc_id")

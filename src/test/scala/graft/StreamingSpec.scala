@@ -496,15 +496,12 @@ class StreamingSpec extends GraftSpec {
     import spark.implicits._
     val in = tmp("media-mp4-in")
     val outDir = tmp("media-mp4-out").toString
-    val sf = "/root/testdata/sf0.001"
-    def payload(df: org.apache.spark.sql.DataFrame, id: Long): Array[Byte] =
-      df.filter(col("asset_id") === id).head().getAs[Array[Byte]]("payload")
     // one decodable per class, one mp4-refused (20 % 17 = 3 hits the flat
     // walker's refusal branch), one non-MP4 junk (48 % 37 = 11, no ftyp)
-    val flat = payload(EntryOps.mp4SampleAssets(spark, sf), 2L)
-    val frag = payload(EntryOps.mp4FragmentAssets(spark, sf), 1L)
-    val refused = payload(EntryOps.mp4SampleAssets(spark, sf), 20L)
-    val junk = payload(EntryOps.mp4SampleAssets(spark, sf), 48L)
+    val flat = graft.fixtures.Video.mp4Samples(2L)
+    val frag = graft.fixtures.Video.mp4Fragments(1L)
+    val refused = graft.fixtures.Video.mp4Samples(20L)
+    val junk = graft.fixtures.Video.mp4Samples(48L)
     Files.write(in.resolve("flat.mp4"), flat)
     Files.write(in.resolve("frag.mp4"), frag)
     Files.write(in.resolve("refused.mp4"), refused)
@@ -1271,11 +1268,8 @@ class StreamingSpec extends GraftSpec {
     val in = tmp("video-learn-in")
     val root = tmp("video-learn-idx").resolve("root").toString
     val out = tmp("video-learn-out").toString
-    val sf = "/root/testdata/sf0.001"
-    val assets = EntryOps.mp4RemuxAssets(spark, sf)
-    def payload(id: Long): Array[Byte] =
-      assets.filter(col("asset_id") === id).head().getAs[Array[Byte]]("payload")
-    def textOf(id: Long): String = assets.filter(col("asset_id") === id)
+    def payload(id: Long): Array[Byte] = graft.fixtures.Video.mp4Remux(id)
+    def textOf(id: Long): String = Seq(payload(id)).toDF("payload")
       .select(graft.functions.Staged(
         graft.functions.Mp4SampleTables(col("payload"))).as("f"))
       .select(graft.functions.F.videoDescriptorText("f.tracks"))
