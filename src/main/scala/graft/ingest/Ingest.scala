@@ -1,7 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Warehouse layout: one Parquet directory per table under a root path, fact
   * tables partitioned by `event_date` so the reports' 24-hour predicate prunes
@@ -19,15 +24,23 @@ final case class Warehouse(root: String) {
     * plus the batches past its covered horizon ([[Compaction]]). `basePath`
     * keeps the partition columns (and their pruning) intact.
     */
-  private def readFact(spark: SparkSession, table: String): DataFrame =
+  private def readFact(spark: SparkSession, table: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(spark.read.schema)
     Compaction.resolveFactPaths(spark, path(table)) match {
       case Some(paths) if paths.nonEmpty =>
-        spark.read.option("basePath", path(table)).parquet(paths: _*)
-      case _ => read(spark, table)
+        reader.option("basePath", path(table)).parquet(paths: _*)
+      case _ => reader.parquet(path(table))
     }
+  }
   def apache(spark: SparkSession): DataFrame = readFact(spark, "apache_access")
   def authfail(spark: SparkSession): DataFrame = readFact(spark, "authfail")
   def inbox(spark: SparkSession): DataFrame = readFact(spark, "inbox")
+  /** The inbox's `id` and `batch_id` under a pinned schema: unlike [[inbox]]
+    * it runs no schema-inference job (the mail ingest reads it per batch).
+    */
+  def inboxIds(spark: SparkSession): DataFrame =
+    readFact(spark, "inbox", Some(StructType.fromDDL("id BIGINT, batch_id BIGINT")))
   def contacts(spark: SparkSession): DataFrame =
     Ingest.snapshotPaths(spark, path("inbox_contacts")) match {
       case Some(paths) => spark.read.parquet(paths: _*)
@@ -213,11 +226,20 @@ object Ingest {
     * (`dead_letters/feed=<feed>/batch_id=N`): every feed numbers its
     * micro-batches from 0, so a redelivery replaces only its own feed's
     * batch, never another feed's dead letters of the same batch id.
+    *
+    * Its `isEmpty` action is for callers that do not know the count: batch
+    * callers, and a [[graft.streaming.LogStream]] feed whose observation came
+    * back empty. The feeds count their dead letters on an action they run
+    * anyway and call [[writeDeadLetters]] only when there are some.
     */
   def appendDeadLetters(df: DataFrame, warehouse: Warehouse, feed: String,
       batchId: Long = 0L): Unit =
-    if (!df.isEmpty)
-      idempotentAppend(df, warehouse, s"dead_letters/feed=$feed", batchId)
+    if (!df.isEmpty) writeDeadLetters(df, warehouse, feed, batchId)
+
+  /** [[appendDeadLetters]] for a caller that knows `df` is not empty. */
+  def writeDeadLetters(df: DataFrame, warehouse: Warehouse, feed: String,
+      batchId: Long): Unit =
+    idempotentAppend(df, warehouse, s"dead_letters/feed=$feed", batchId)
 
   /** Idempotent un-dated append (bridge tables like `inbox_tocc`):
     * overwrite-by-batchId, partitioned by `batch_id` only.
@@ -246,14 +268,21 @@ object Ingest {
   /** W2 — dimension upsert ("lookup-or-insert", maillog.py:66-78).
     *
     * Set-based MERGE semantics: new (realname, email_address) pairs absent from
-    * the stored dimension get surrogate ids `maxId + row_number()` over a
-    * deterministic order, so ids are stable across replays of the same batch
-    * (SURVEY §7.4 risk 3). Returns the full refreshed dimension.
+    * the stored dimension get surrogate ids `maxId + row_number() OVER (ORDER
+    * BY realname, email_address)`, so ids are stable across replays of the
+    * same batch (SURVEY §7.4 risk 3). A pair matches a stored pair by SQL `=`:
+    * a pair with a NULL field never matches, so it is inserted again by every
+    * upsert that carries it. Returns the full refreshed dimension.
     *
-    * Scale: the dimension is small (it's broadcast in Q3); the anti-join is a
-    * broadcast anti-join; with a transactional format this body becomes
-    * `MERGE INTO contacts USING batch ON name<=>n AND email<=>e WHEN NOT MATCHED
-    * THEN INSERT`.
+    * Scale: the dimension is DRIVER-RESIDENT — it is already the broadcast
+    * side of the inbox/tocc joins and of Q3, so the merge runs on the driver:
+    * one scan collects the committed snapshot, one distinct collects the
+    * batch's pairs, and nothing else runs unless something is new. A merge
+    * with nothing new over a versioned snapshot commits NOTHING (no claim, no
+    * write, no GC) and returns the snapshot it read — every later version is
+    * a superset of it, so its ids stay current. With a transactional format
+    * this body becomes `MERGE INTO contacts USING batch ON name=n AND
+    * email=e WHEN NOT MATCHED THEN INSERT`.
     */
   def upsertContacts(newContacts: DataFrame, warehouse: Warehouse,
       lockTimeoutMs: Long = 10 * 60 * 1000L, maxAttempts: Int = 600): DataFrame = {
@@ -264,6 +293,9 @@ object Ingest {
     // pre-versioning swap-crash healing renames directories — WRITER-only
     // (a reader doing this could rename under a committing writer's feet)
     recoverSwap(spark, path)
+    // every claim attempt merges the same batch: its pairs are read once
+    val pairs = newContacts.select(col("realname"), col("email_address"))
+      .distinct().collect()
     // Versioned-snapshot commit (the minimal core of a transactional table
     // format, object-store friendly — no directory renames anywhere):
     //  - each refresh writes a NEW immutable `v-NNNNNNNN` directory; the
@@ -292,6 +324,7 @@ object Ingest {
     // maillog.py:16, core.py:46-48.
     var attempt = 0
     var lastSeenVersion = -1L
+    var existing = Array.empty[Row]
     while (true) {
       attempt += 1
       if (attempt > maxAttempts)
@@ -300,16 +333,28 @@ object Ingest {
       val (committedVersion, existingPaths) = resolveCommitted(fs, path)
       // the attempt budget bounds time WITHOUT progress: any newly committed
       // version proves the system is live (we lost a fair race), so the
-      // clock restarts — healthy contention never exhausts the budget
+      // clock restarts — healthy contention never exhausts the budget.
+      // A committed version is immutable, so it is read once per version.
       if (committedVersion > lastSeenVersion) {
         lastSeenVersion = committedVersion
         attempt = 1
+        existing =
+          try {
+            if (existingPaths.isEmpty) Array.empty[Row]
+            else spark.read.schema(graft.model.Schemas.contacts)
+              .parquet(existingPaths: _*).collect()
+          } catch {
+            // read before any claim: GC keeps the current and the previous
+            // version, so this read outlives one later commit. If two more
+            // landed meanwhile the version is gone — start over on the newest.
+            case NonFatal(_) if resolveCommitted(fs, path)._1 > committedVersion + 1 =>
+              return upsertContacts(newContacts, warehouse, lockTimeoutMs, maxAttempts)
+          }
       }
-      val existing: DataFrame =
-        if (existingPaths.nonEmpty) spark.read.parquet(existingPaths: _*)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.model.Schemas.contacts)
+      val fresh = freshContacts(existing, pairs)
+      // version 0 (no table, or the legacy root layout) always commits, so
+      // the next upsert migrates a legacy warehouse
+      if (fresh.isEmpty && committedVersion > 0) return dimension(spark, existing)
       val next = committedVersion + 1
       val target = new org.apache.hadoop.fs.Path(path, f"v-$next%08d")
       val lock = new org.apache.hadoop.fs.Path(path, f"v-$next%08d.lock")
@@ -319,25 +364,14 @@ object Ingest {
           // holder releases its lock only after _SUCCESS): stale merge base
           fs.delete(lock, false)
         } else {
+          val merged = dimension(spark, existing ++ fresh)
           try {
-            val maxId = existing.agg(coalesce(max(col("id")), lit(0L)))
-              .collect()(0).getLong(0)
-            val newPairs = newContacts
-              .select(col("realname"), col("email_address")).distinct()
-              .join(existing.select("realname", "email_address"),
-                Seq("realname", "email_address"), "left_anti")
-            // ids via the distributed ordered indexer (no single-partition
-            // window); maxId offset keeps ids stable across replays
-            val fresh = graft.ops.OrderedIndex.withOrderedId(newPairs,
-                Seq(col("realname"), col("email_address")), "id", offset = maxId)
-              .select(col("id"), col("realname"), col("email_address"))
             // SaveMode.Overwrite reclaims a torn directory from a crashed
             // (stolen or pre-lock) earlier attempt at the same version
-            existing.unionByName(fresh)
-              .write.mode(SaveMode.Overwrite).parquet(target.toString)
+            merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(target.toString)
             gcOldSnapshots(spark, path, keepFrom = next - 1)
           } finally fs.delete(lock, false)
-          return spark.read.parquet(target.toString)
+          return merged
         }
       } else {
         // lock held by another writer: wait for its commit, or steal from a
@@ -355,6 +389,39 @@ object Ingest {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** The batch `pairs` absent from `existing`, with ids `maxId + rank` in
+    * Spark's sort order of (realname, email_address) — the ids
+    * `row_number() OVER (ORDER BY realname, email_address)` would give.
+    */
+  private def freshContacts(existing: Array[Row], pairs: Array[Row]): Array[Row] = {
+    val known = existing.iterator.map(r => (r.getString(1), r.getString(2))).toSet
+    val maxId = if (existing.isEmpty) 0L else existing.iterator.map(_.getLong(0)).max
+    pairs
+      // SQL `=`: a pair with a NULL field never matches a stored pair
+      .filter(r => r.isNullAt(0) || r.isNullAt(1) ||
+        !known((r.getString(0), r.getString(1))))
+      .sortBy(r => (Option(r.getString(0)), Option(r.getString(1))))(
+        Ordering.Tuple2(Ordering.Option(Utf8Order), Ordering.Option(Utf8Order)))
+      .zipWithIndex.map { case (r, i) =>
+        Row(maxId + i + 1, r.getString(0), r.getString(1))
+      }
+  }
+
+  /** Spark's ascending string order: unsigned UTF-8 bytes, not `String`'s
+    * UTF-16 code units (they disagree past the BMP, e.g. "😀" vs "Ａ").
+    * `Ordering.Option` puts NULL (None) first, as Spark's ascending sort does.
+    */
+  private val Utf8Order: Ordering[String] = (a: String, b: String) =>
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+
+  /** The contacts dimension as a driver-side frame. Every field is
+    * nullable, as a Parquet read of the table gives it, so the snapshot
+    * files and the inbox/tocc columns joined from it keep their schema.
+    */
+  private def dimension(spark: SparkSession, rows: Array[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(graft.model.Schemas.contacts.map(_.copy(nullable = true))))
 
   /** Atomic create-if-absent claim marker. `java.io.File.createNewFile` is
     * the atomic primitive on the local FS; elsewhere `create(overwrite=false)`

@@ -1,6 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -29,9 +33,54 @@ object LogStream {
     eachBatch(lines, checkpoint) { (batch, batchId) =>
       // batchId threads through to overwrite-by-batchId idempotent appends:
       // a redelivered micro-batch rewrites its own partitions, not duplicates
-      val res = parsed(batch)
-      Ingest.appendEvents(res.events, warehouse, table, batchId)
-      Ingest.appendDeadLetters(res.deadLetters, warehouse, feed, batchId)
+      val step = new Steps(batch.sparkSession, feed, batchId)
+      // the events write also counts the input and the events: the parsers
+      // split every line into exactly one of the two, so the difference is
+      // the dead-letter count, with no action of its own
+      val input = Observation()
+      val landed = Observation()
+      val res = parsed(batch.observe(input, count(lit(1)).as("rows")))
+      step("events")(Ingest.appendEvents(
+        res.events.observe(landed, count(lit(1)).as("rows")),
+        warehouse, table, batchId))
+      val dead = for (in <- observedRows(input); ev <- observedRows(landed))
+        yield in - ev
+      step("dead_letters")(
+        landDeadLetters(res.deadLetters, warehouse, feed, batchId, dead))
+    }
+
+  /** Describes every Spark job of one ingest step as
+    * `graft:ingest/<feed>/<step>/batch=<id>`, then restores the caller's
+    * description (inside `foreachBatch`, the stream's own).
+    */
+  private final class Steps(spark: SparkSession, feed: String, batchId: Long) {
+    def apply[A](name: String)(body: => A): A = {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty(JobDescription)
+      sc.setJobDescription(s"graft:ingest/$feed/$name/batch=$batchId")
+      try body finally sc.setLocalProperty(JobDescription, outer)
+    }
+  }
+  private val JobDescription = "spark.job.description"
+
+  /** The `rows` count an action reported through `o`. None when the
+    * optimizer dropped the collector from the plan that ran (the
+    * observation then completes empty) or no report arrived.
+    */
+  private def observedRows(o: Observation): Option[Long] =
+    Try(Await.result(o.future, 1.minute)).toOption
+      .filter(_.length > 0).map(_.getLong(0))
+
+  /** Writes a micro-batch's dead letters when `observed` counts some, and
+    * nothing when it counts none; without a count, [[Ingest
+    * .appendDeadLetters]]' `isEmpty` action decides.
+    */
+  private def landDeadLetters(dead: DataFrame, warehouse: Warehouse,
+      feed: String, batchId: Long, observed: Option[Long]): Unit =
+    observed match {
+      case Some(0L) =>
+      case Some(_) => Ingest.writeDeadLetters(dead, warehouse, feed, batchId)
+      case None => Ingest.appendDeadLetters(dead, warehouse, feed, batchId)
     }
 
   /** Apache access-log directory stream → `apache_access` table. */
@@ -48,7 +97,16 @@ object LogStream {
 
   /** Raw RFC-5322 message directory stream → contacts upsert + inbox + tocc
     * (reference maillog.py:66-104: per-address N+1 lookups and per-row inserts
-    * become one MERGE + two appends per micro-batch).
+    * become one driver-side merge + two appends per micro-batch).
+    *
+    * Job budget of a steady-state micro-batch (every address known, no
+    * malformed message), AQE on, `local[2]`: 14 Spark jobs, by step —
+    * `contacts` 4 (the parse into the cache, the batch's distinct pairs,
+    * the snapshot scan), `ids` 3 (the inbox max id, then the range sample
+    * and `zipWithIndex` of the ordered-id pass), `inbox` 4 and `tocc` 3
+    * (each write with its shuffle and contacts broadcast). A new address
+    * adds the snapshot commit, a malformed message the dead-letter write.
+    * StreamingSpec pins ≤ 16.
     */
   def maillog(spark: SparkSession, dir: String, warehouse: Warehouse,
       checkpoint: String): StreamingQuery =
@@ -522,64 +580,76 @@ object LogStream {
     * Idempotence: message ids continue from the max id of OTHER batches
     * (`batch_id != batchId`), and the inbox/tocc writes overwrite this batch's
     * own partitions — so a redelivered micro-batch reproduces the same ids and
-    * row counts instead of appending duplicates. Contacts are replay-safe via
-    * the upsert's anti-join.
+    * row counts instead of appending duplicates. Contacts are replay-safe:
+    * the upsert inserts only pairs the dimension lacks, and a redelivery
+    * whose pairs are all known commits nothing.
+    *
+    * Every job runs under a `graft:ingest/mail/<step>/batch=<id>` description
+    * (steps `contacts`, `dead_letters`, `ids`, `inbox`, `tocc`).
     */
   def ingestMailBatch(batch: DataFrame, warehouse: Warehouse,
       batchId: Long = 0L): Unit = {
     val spark = batch.sparkSession
-    // cache the ONE-parse frame: dead letters + the events pipeline below
-    // are separate actions, and without this each would re-run the RFC-5322
-    // UDF over every message
+    val step = new Steps(spark, "mail", batchId)
+    // cache the ONE-parse frame: the contacts merge, the ordered-id pass and
+    // the dead-letter write are separate actions, and without this each
+    // would re-run the RFC-5322 UDF over every message
     val raw = MailParser.parseRaw(batch).cache()
-    val res = MailParser.fromRaw(raw)
-    // reference parity: a message process_input would raise on is NOT
-    // ingested (maillog.py:159-164) — it lands in dead_letters instead
-    Ingest.appendDeadLetters(res.deadLetters, warehouse, "mail", batchId)
-    val parsed = res.events
     try {
+      // the contacts merge's first action reads every parsed message, so it
+      // also counts the dead letters
+      val dead = Observation()
+      val res = MailParser.fromRaw(
+        raw.observe(dead, count_if(col("parsed._7").isNotNull).as("rows")))
+      val parsed = res.events
       val addrs = parsed
         .select(explode(concat(
           array(struct(col("sender_name").as("_1"), col("sender_email").as("_2"))),
           col("recipients"))).as("a"))
         .select(col("a._1").as("realname"), col("a._2").as("email_address"))
-      val contacts = Ingest.upsertContacts(addrs, warehouse)
+      val contacts = step("contacts")(Ingest.upsertContacts(addrs, warehouse))
+      // reference parity: a message process_input would raise on is NOT
+      // ingested (maillog.py:159-164) — it lands in dead_letters instead
+      step("dead_letters")(landDeadLetters(res.deadLetters, warehouse, "mail",
+        batchId, observedRows(dead)))
 
-      // arrival timestamp = now() at insert (maillog.py:97)
-      val maxMsgId = if (tableExists(spark, warehouse.path("inbox")))
-        warehouse.inbox(spark).filter(col("batch_id") =!= batchId)
-          .agg(coalesce(max(col("id")), lit(0L)))
-          .collect()(0).getLong(0)
-      else 0L
+      // distributed ordered indexer — no single-partition row_number window.
+      // Cached: the inbox write fills it, the tocc write reads it back.
+      val keyed = step("ids") {
+        // a fold is one job; a global max aggregate is two under AQE (its
+        // exchange runs as a stage of its own). Message ids start at 1.
+        val maxMsgId = if (tableExists(spark, warehouse.path("inbox")))
+          warehouse.inboxIds(spark).filter(col("batch_id") =!= batchId)
+            .select(col("id")).rdd.map(_.getLong(0)).fold(0L)(math.max)
+        else 0L
+        graft.ops.OrderedIndex.withOrderedId(parsed,
+            Seq(col("modificationTime"), col("sender_email")), "id",
+            offset = maxMsgId)
+          .cache()
+      }
+      try {
+        // arrival timestamp = now() at insert (maillog.py:97)
+        val inboxRows = keyed
+          .withColumn("timestamp_now", current_timestamp())
+          .join(broadcast(contacts),
+            keyed("sender_name") === contacts("realname") &&
+              keyed("sender_email") === contacts("email_address"))
+          .select(keyed("id"), col("timestamp_now").as("timestamp"),
+            substring(keyed("subject"), 1, 2048).as("subject"),
+            contacts("id").as("sender_id"), keyed("size"), keyed("date"))
+        step("inbox")(Ingest.appendEvents(inboxRows, warehouse, "inbox", batchId))
 
-      // distributed ordered indexer — no single-partition row_number window
-      val keyed = graft.ops.OrderedIndex.withOrderedId(parsed,
-          Seq(col("modificationTime"), col("sender_email")), "id",
-          offset = maxMsgId)
-        .cache()
-      keyed.count()
-
-      val inboxRows = keyed
-        .withColumn("timestamp_now", current_timestamp())
-        .join(broadcast(contacts),
-          keyed("sender_name") === contacts("realname") &&
-            keyed("sender_email") === contacts("email_address"))
-        .select(keyed("id"), col("timestamp_now").as("timestamp"),
-          substring(keyed("subject"), 1, 2048).as("subject"),
-          contacts("id").as("sender_id"), keyed("size"), keyed("date"))
-      Ingest.appendEvents(inboxRows, warehouse, "inbox", batchId)
-
-      // per-message first-occurrence recipient dedup (maillog.py:88-94) — the
-      // contact-id identity dedup maps to distinct contact ids per message.
-      val tocc = keyed
-        .select(col("id").as("msg_id"), explode(col("recipients")).as("r"))
-        .join(broadcast(contacts),
-          col("r._1") === contacts("realname") &&
-            col("r._2") === contacts("email_address"))
-        .select(col("msg_id"), contacts("id").as("contact_id"))
-        .distinct()
-      Ingest.idempotentAppend(tocc, warehouse, "inbox_tocc", batchId)
-      keyed.unpersist()
+        // per-message first-occurrence recipient dedup (maillog.py:88-94) — the
+        // contact-id identity dedup maps to distinct contact ids per message.
+        val tocc = keyed
+          .select(col("id").as("msg_id"), explode(col("recipients")).as("r"))
+          .join(broadcast(contacts),
+            col("r._1") === contacts("realname") &&
+              col("r._2") === contacts("email_address"))
+          .select(col("msg_id"), contacts("id").as("contact_id"))
+          .distinct()
+        step("tocc")(Ingest.idempotentAppend(tocc, warehouse, "inbox_tocc", batchId))
+      } finally keyed.unpersist()
     } finally raw.unpersist()
   }
 

@@ -37,6 +37,36 @@ class IngestSpec extends GraftSpec {
     assert(c3.count() === 4)
   }
 
+  test("upsertContacts ids follow Spark's UTF-8 sort, and a pair with a " +
+      "NULL field is inserted again by every upsert") {
+    val wh = tmpWarehouse()
+    // "Ａ" (U+FF21) sorts after "😀" (a surrogate pair) in UTF-16 code
+    // units, before it in UTF-8 bytes
+    assert("😀" < "Ａ")
+    val batch = Seq(("😀", "smile@x.example"), ("Ａ", "wide@x.example"),
+      ("Ａ", "a@x.example"), ("é", "e@x.example"), ("Zed", "z@x.example"),
+      (null, "anon@x.example"), ("Zed", null))
+      .toDF("realname", "email_address")
+    def byPair(rows: Array[org.apache.spark.sql.Row]) = rows
+      .map(r => (r.getAs[String]("realname"), r.getAs[String]("email_address")) ->
+        r.getAs[Number]("id").longValue).toMap
+    val want = byPair(batch.withColumn("id", row_number().over(
+      org.apache.spark.sql.expressions.Window.orderBy("realname", "email_address")))
+      .collect())
+    assert(byPair(Ingest.upsertContacts(batch, wh).collect()) === want)
+    assert(byPair(wh.contacts(spark).collect()) === want)
+
+    // SQL `=` never matches NULL: both NULL-field pairs land again, after
+    // maxId, in the same order; the known pairs keep their ids
+    Ingest.upsertContacts(batch, wh)
+    val rows = wh.contacts(spark).collect()
+    assert(rows.length === 9)
+    val nulls = rows.filter(r => r.isNullAt(1) || r.isNullAt(2))
+      .map(r => (Option(r.getString(1)), r.getLong(0))).sortBy(_._2).toSeq
+    assert(nulls === Seq((None, want((null, "anon@x.example"))),
+      (Some("Zed"), want(("Zed", null))), (None, 8L), (Some("Zed"), 9L)))
+  }
+
   test("appendEvents partitions by event date (pruning layout)") {
     val wh = tmpWarehouse()
     val df = Seq(

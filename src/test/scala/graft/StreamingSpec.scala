@@ -101,6 +101,86 @@ class StreamingSpec extends GraftSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq === contacts1)
   }
 
+  /** The description of every Spark job `body` starts; the listener bus is
+    * drained on both sides, so no earlier job leaks in and none is missed.
+    */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.synchronized {
+          seen += Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse("")
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftBridge.drain(spark)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.sql.GraftBridge.drain(spark)
+      sc.removeSparkListener(listener)
+    }
+    seen.synchronized(seen.toSeq)
+  }
+
+  private def mailFrom(sender: String, subject: String): Array[Byte] =
+    (s"From: $sender <${sender.toLowerCase}@a.example>\n" +
+      s"To: Bob <bob@b.example>\nSubject: $subject\n" +
+      "Date: Tue, 11 Aug 2026 04:00:00 +0000\n\nbody").getBytes(UTF_8)
+
+  test("ingest job budget: a steady-state mail micro-batch runs at most 16 " +
+      "jobs and commits no contacts version, a clean apache micro-batch at " +
+      "most 2 and no dead-letter write; every job names its ingest step") {
+    val wh = Warehouse(tmp("budget-wh").toString)
+    val mailIn = tmp("budget-mail-in")
+    val mailCk = tmp("budget-mail-ck").toString
+    def mailBatch(): Unit =
+      LogStream.maillog(spark, mailIn.toString, wh, mailCk).awaitTermination()
+    Files.write(mailIn.resolve("m1.eml"), mailFrom("Alice", "first"))
+    mailBatch() // batch 0 learns both addresses
+    val versions = wh.contactsVersions(spark)
+    // batch 1: every address known, no malformed message
+    Files.write(mailIn.resolve("m2.eml"), mailFrom("Alice", "second"))
+    val mailJobs = jobDescriptions(mailBatch())
+    assert(mailJobs.size <= 16, mailJobs.mkString("\n"))
+    assert(wh.contactsVersions(spark) === versions)
+    assert(wh.inbox(spark).count() === 2)
+
+    val apacheIn = tmp("budget-apache-in")
+    val line = "2026-08-11 04:23:17 +0000|www.example.com|443|203.0.113.7|512|" +
+      """14034|2751|200|["-", "GET / HTTP/1.1", "GET", "/", "HTTP/1.1", "-", "curl/8.0"]"""
+    Files.writeString(apacheIn.resolve("access.log"), s"$line\n$line\n")
+    val apacheJobs = jobDescriptions(LogStream.apache(spark, apacheIn.toString,
+      wh, tmp("budget-apache-ck").toString).awaitTermination())
+    assert(apacheJobs.size <= 2, apacheJobs.mkString("\n"))
+    assert(wh.apache(spark).count() === 2)
+    assert(!Files.exists(java.nio.file.Paths.get(wh.path("dead_letters/feed=apache"))))
+
+    info(s"jobs: mail ${mailJobs.size}, apache ${apacheJobs.size}")
+    (mailJobs ++ apacheJobs).foreach(d =>
+      assert(d.startsWith("graft:ingest/"), s"untagged ingest job: $d"))
+    assert(mailJobs.exists(_.startsWith("graft:ingest/mail/contacts/batch=1")))
+  }
+
+  test("a mail batch whose inbox append throws leaves nothing cached") {
+    import spark.implicits._
+    val wh = Warehouse(tmp("leak-wh").toString)
+    def batch(subject: String) =
+      Seq((mailFrom("Alice", subject), new java.sql.Timestamp(1754880000000L)))
+        .toDF("content", "modificationTime")
+    LogStream.ingestMailBatch(batch("lands"), wh, batchId = 0L)
+    // a regular file where the committer stages its output: the inbox
+    // append fails, after the batch's ordered-id frame was cached
+    Files.createFile(java.nio.file.Paths.get(wh.path("inbox"), "_temporary"))
+    spark.catalog.clearCache()
+    intercept[Exception](LogStream.ingestMailBatch(batch("fails"), wh, batchId = 1L))
+    assert(wh.tocc(spark).count() === 1, "the failure must come before the tocc write")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("windowed streaming report: watermarked tumbling aggregation (§2.7 ext)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
