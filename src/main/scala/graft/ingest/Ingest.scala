@@ -13,11 +13,24 @@ import org.apache.spark.sql.types.StructType
   * partitions at any scale (SURVEY §4). Stands in for the reference's PostgreSQL
   * database (`core.py:26-33`); at cluster scale the same code targets a
   * transactional table format via the same append/merge entry points.
+  *
+  * Reads are PINNED: every table reader takes its data columns from
+  * [[graft.model.Schemas]], so no read runs a schema-inference job. The
+  * partition columns (`event_date`, `batch_id`, `feed`) are not pinned: they
+  * are still discovered from the paths, with the types discovery gives them.
+  * IngestSpec checks each pinned schema against the inferred one.
   */
 final case class Warehouse(root: String) {
+  import graft.model.Schemas
   def path(table: String): String = s"$root/$table"
-  private def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(path(table))
+  /** A table read under `schema`. `basePath` keeps the partition columns of
+    * an explicit leaf list.
+    */
+  private def pinned(spark: SparkSession, schema: StructType, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val reader = spark.read.schema(schema)
+    basePath.fold(reader)(reader.option("basePath", _)).parquet(paths: _*)
+  }
   /** Date-partitioned fact tables resolve through the compaction protocol:
     * a never-compacted table short-circuits to the plain root read; once
     * generation leaves exist, each date reads its highest MARKED generation
@@ -25,27 +38,24 @@ final case class Warehouse(root: String) {
     * keeps the partition columns (and their pruning) intact.
     */
   private def readFact(spark: SparkSession, table: String,
-      schema: Option[StructType] = None): DataFrame = {
-    val reader = schema.fold(spark.read)(spark.read.schema)
+      schema: StructType): DataFrame =
     Compaction.resolveFactPaths(spark, path(table)) match {
       case Some(paths) if paths.nonEmpty =>
-        reader.option("basePath", path(table)).parquet(paths: _*)
-      case _ => reader.parquet(path(table))
+        pinned(spark, schema, paths, Some(path(table)))
+      case _ => pinned(spark, schema, Seq(path(table)))
     }
-  }
-  def apache(spark: SparkSession): DataFrame = readFact(spark, "apache_access")
-  def authfail(spark: SparkSession): DataFrame = readFact(spark, "authfail")
-  def inbox(spark: SparkSession): DataFrame = readFact(spark, "inbox")
-  /** The inbox's `id` and `batch_id` under a pinned schema: unlike [[inbox]]
-    * it runs no schema-inference job (the mail ingest reads it per batch).
-    */
-  def inboxIds(spark: SparkSession): DataFrame =
-    readFact(spark, "inbox", Some(StructType.fromDDL("id BIGINT, batch_id BIGINT")))
+  def apache(spark: SparkSession): DataFrame =
+    readFact(spark, "apache_access", Schemas.apacheAccess)
+  def authfail(spark: SparkSession): DataFrame =
+    readFact(spark, "authfail", Schemas.authfail)
+  def inbox(spark: SparkSession): DataFrame = readFact(spark, "inbox", Schemas.inbox)
+  /** The inbox's `id` and `batch_id` (the mail ingest reads it per batch). */
+  def inboxIds(spark: SparkSession): DataFrame = inbox(spark).select("id", "batch_id")
   def contacts(spark: SparkSession): DataFrame =
-    Ingest.snapshotPaths(spark, path("inbox_contacts")) match {
-      case Some(paths) => spark.read.parquet(paths: _*)
-      case None => read(spark, "inbox_contacts") // missing table: same error as before
-    }
+    pinned(spark, Schemas.contacts,
+      // a missing table reads its root: the same error as any missing table
+      Ingest.snapshotPaths(spark, path("inbox_contacts"))
+        .getOrElse(Seq(path("inbox_contacts"))))
   /** TIME TRAVEL over the contacts dimension: read an exact committed
     * snapshot version. GC retains current + previous, so the reachable
     * window is [[contactsVersions]] — the same contract as a vacuumed
@@ -54,7 +64,7 @@ final case class Warehouse(root: String) {
     */
   def contactsAt(spark: SparkSession, version: Long): DataFrame =
     Ingest.snapshotPathAt(spark, path("inbox_contacts"), version) match {
-      case Some(p) => spark.read.parquet(p)
+      case Some(p) => pinned(spark, Schemas.contacts, Seq(p))
       case None => throw new NoSuchElementException(
         s"contacts snapshot v$version is not committed/retained; " +
           s"available: ${contactsVersions(spark).mkString(", ")}")
@@ -62,8 +72,10 @@ final case class Warehouse(root: String) {
   /** Committed, still-retained contacts snapshot versions (ascending). */
   def contactsVersions(spark: SparkSession): Seq[Long] =
     Ingest.snapshotVersions(spark, path("inbox_contacts"))
-  def tocc(spark: SparkSession): DataFrame = read(spark, "inbox_tocc")
-  def deadLetters(spark: SparkSession): DataFrame = read(spark, "dead_letters")
+  def tocc(spark: SparkSession): DataFrame =
+    pinned(spark, Schemas.inboxTocc, Seq(path("inbox_tocc")))
+  def deadLetters(spark: SparkSession): DataFrame =
+    pinned(spark, Schemas.deadLetter, Seq(path("dead_letters")))
 
   /** TIME TRAVEL over a date-partitioned fact table: the table exactly as
     * the version's compaction-run MANIFEST recorded it — a table-level

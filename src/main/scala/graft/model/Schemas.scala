@@ -6,35 +6,11 @@ import org.apache.spark.sql.types._
 
 /** Typed data model for the four stored tables (reference: `src/logsdb/core.py:11-18`
   * type vocabulary; tables at `apache_access.py:24-42`, `authfail.py:14-20`,
-  * `maillog.py:14-59`). Case classes give `Dataset[T]` encoders for the ingest path;
-  * the `StructType`s are the storage schemas.
+  * `maillog.py:14-59`). The `StructType`s are the storage schemas: the data
+  * columns in the order the engine writes them, which [[graft.ingest.Warehouse]]
+  * reads pinned. The fact tables store the parser records
+  * ([[ParsedApache]], [[ParsedAuthfail]]) without a surrogate id.
   */
-final case class ApacheEvent(
-    id: Long,
-    timestamp: Timestamp,
-    host: String,
-    port: Int,
-    src_addr: String,
-    authuser: String,
-    bytesin: Long,
-    bytesout: Long,
-    microsecs: Long,
-    status: Int,
-    reqline: String,
-    method: String,
-    path: String,
-    protocol: String,
-    referer: String,
-    user_agent: String
-)
-
-final case class AuthfailEvent(
-    id: Long,
-    timestamp: Timestamp,
-    username: String,
-    src_addr: String
-)
-
 final case class Contact(id: Long, realname: String, email_address: String)
 
 /** Inbox row. `tocc` is the idiomatic-Spark denormalization of the reference's
@@ -60,7 +36,6 @@ final case class DeadLetter(time: String, line: String, error_type: String, erro
 
 object Schemas {
   val apacheAccess: StructType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("timestamp", TimestampType),
     StructField("host", StringType),
     StructField("port", IntegerType),
@@ -79,7 +54,6 @@ object Schemas {
   ))
 
   val authfail: StructType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("timestamp", TimestampType),
     StructField("username", StringType),
     StructField("src_addr", StringType)

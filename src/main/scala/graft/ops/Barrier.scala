@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** Materialization barrier for iterative and composed plans (r9 verdict
@@ -52,38 +53,45 @@ object Barrier {
     * back to back, leaving the executor idle through each job's tail. The
     * frames must not depend on one another; results are positionally the
     * same as mapping [[barrier]] over the inputs (bit-identical frames,
-    * only the wall-clock overlaps).
-    *
-    * Each frame runs on its own daemon thread (never a shared pool's
-    * worker), and every job of one call carries one job group. When a
-    * frame throws, the group is cancelled (with any job a sibling has yet
-    * to submit) and every sibling is awaited before the first failure is
-    * rethrown — no sibling job outlives the call.
+    * only the wall-clock overlaps). Runs through [[concurrently]].
     */
-  def barrierAll(dfs: DataFrame*): Seq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val group = s"graft-barrierAll-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newCachedThreadPool(
-      (r: Runnable) => { val t = new Thread(r, group); t.setDaemon(true); t })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = dfs.map(df => Future {
-        // pool threads inherit the caller's job description
-        val sc = df.sparkSession.sparkContext
+  def barrierAll(dfs: DataFrame*): Seq[DataFrame] =
+    if (dfs.isEmpty) Seq.empty
+    else concurrently(dfs.head.sparkSession.sparkContext, "graft-barrierAll",
+      dfs.map(df => () => barrier(df)))
+
+  /** Run independent driver-side thunks, each of which may submit Spark
+    * jobs, concurrently; results are positional.
+    *
+    * Each thunk runs on its own daemon thread named after the call's job
+    * group (`<name>-<uuid>`), and every job of the call carries that group;
+    * the threads inherit the caller's job description. The first thunk to
+    * throw cancels the group (with any job a sibling has yet to submit);
+    * every thread is joined before that first failure is rethrown, so no
+    * sibling job or thread outlives the call.
+    */
+  def concurrently[T](sc: SparkContext, name: String,
+      tasks: Seq[() => T]): Seq[T] = {
+    val group = s"$name-${java.util.UUID.randomUUID()}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val results = new Array[Any](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      val t = new Thread(() => {
         sc.setJobGroup(group, sc.getLocalProperty("spark.job.description"),
           interruptOnCancel = true)
-        barrier(df)
-      })
-      // fails as soon as any frame fails
-      try Await.result(Future.sequence(futures), Duration.Inf)
-      catch {
-        case e: Throwable =>
-          dfs.head.sparkSession.sparkContext.cancelJobGroupAndFutureJobs(group)
-          futures.foreach(Await.ready(_, Duration.Inf))
-          throw e
-      }
-    } finally pool.shutdown()
+        try results(i) = task()
+        catch {
+          case e: Throwable =>
+            if (failure.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
+        }
+      }, group)
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    Option(failure.get).foreach(e => throw e)
+    results.toSeq.asInstanceOf[Seq[T]]
   }
 
   /** `df.barriered` — the conf-routed barrier as a drop-in replacement for

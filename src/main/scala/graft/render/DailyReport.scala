@@ -152,6 +152,21 @@ object DailyReport {
   /** Full pipeline over warehouse tables, mirroring get_daily_report
     * (dailyreport.py:116-142): probe sections first, then feature-gated query
     * sections in the reference's order (inbox, authfail, apache).
+    *
+    * The query sections are independent, so they are collected concurrently
+    * ([[graft.ops.Barrier.concurrently]]); each section's jobs run under
+    * `graft:report/<section>`, and a failing section cancels its siblings'
+    * jobs before its error is rethrown. The job budget, 9 in all over a
+    * compacted warehouse (DailyReportSpec pins it):
+    *  - `inbox` 5: three broadcasts (senders, local-domain contacts, the
+    *    per-message recipients), the recipients' partial aggregate, the
+    *    listing;
+    *  - `authfail` 2 and `apache` 2: a partial aggregate and the sorted
+    *    result.
+    * Warehouse reads are pinned, so no job infers a schema, and the sorts
+    * plan no range-sampling job ([[Reports]]). The apache byte totals are
+    * summed from the collected hit groups, as the reference accumulates
+    * them (apache_access.py:57-73), not by a second scan.
     */
   def build(spark: SparkSession, cfg: Config, probe: SystemProbe,
       warehouse: graft.ingest.Warehouse, localDomains: Seq[String],
@@ -164,21 +179,32 @@ object DailyReport {
     sections += Some(loadSection(probe))
     sections += Some(diskSection(probe, tags))
     sections += Some(vnstatSection(probe))
-    if (cfg.features.maillog) {
-      val listing = Reports.inboxListing(warehouse.inbox(spark),
-        warehouse.contacts(spark), warehouse.tocc(spark), localDomains, now)
-      sections += Some(inboxSection(listing.collect().toSeq))
+    val sc = spark.sparkContext
+    def section(name: String)(render: => String): () => String = () => {
+      sc.setJobDescription(s"graft:report/$name")
+      render
     }
-    if (cfg.features.authfail) {
-      val attempts = Reports.authfailAttemptsByIp(warehouse.authfail(spark), now)
-      sections += Some(authfailSection(attempts.collect().toSeq))
-    }
-    if (cfg.features.apache_access) {
-      val hits = Reports.apacheHitsByRequest(warehouse.apache(spark), now)
-      val totals = Reports.apacheTotals(warehouse.apache(spark), now).collect()(0)
-      sections += Some(apacheSection(hits.collect().toSeq,
-        totals.getLong(0), totals.getLong(1)))
-    }
+    val queries = Seq(
+      Option.when(cfg.features.maillog)(section("inbox") {
+        inboxSection(Reports.inboxListing(warehouse.inbox(spark),
+          warehouse.contacts(spark), warehouse.tocc(spark), localDomains, now)
+          .collect().toSeq)
+      }),
+      Option.when(cfg.features.authfail)(section("authfail") {
+        authfailSection(Reports.authfailAttemptsByIp(warehouse.authfail(spark), now)
+          .collect().toSeq)
+      }),
+      Option.when(cfg.features.apache_access)(section("apache") {
+        val hits = Reports.apacheHitsByRequest(warehouse.apache(spark), now)
+          .collect().toSeq
+        // (reqline, qty, sum_bytesin, sum_bytesout): a NULL group sum counts
+        // as 0, as `coalesce(sum, 0)` does; ANSI `sum` throws on overflow,
+        // and so does the total
+        def total(i: Int) = hits.foldLeft(0L)((acc, r) =>
+          if (r.isNullAt(i)) acc else Math.addExact(acc, r.getLong(i)))
+        apacheSection(hits, total(2), total(3))
+      })).flatten
+    sections ++= graft.ops.Barrier.concurrently(sc, "graft-report", queries).map(Some(_))
     compose(sections.toSeq, tags.toSet, probe.hostname, probe.nowIso)
   }
 }

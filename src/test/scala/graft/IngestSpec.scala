@@ -12,8 +12,7 @@ import graft.ingest.{Ingest, Warehouse}
 class IngestSpec extends GraftSpec {
   import spark.implicits._
 
-  private def tmpWarehouse(): Warehouse =
-    Warehouse(Files.createTempDirectory("graft-wh").toString)
+  private def tmpWarehouse(): Warehouse = Warehouse(tempDir("graft-wh").toString)
 
   test("upsertContacts assigns stable surrogate ids and never duplicates") {
     val wh = tmpWarehouse()
@@ -691,5 +690,59 @@ class IngestSpec extends GraftSpec {
       Ingest.writeZOrdered(empty, out, "a", "b")
     }
     assert(e3.getMessage.contains("'a'"))
+  }
+
+  test("every pinned warehouse schema equals the schema Spark infers from the " +
+      "files the engine wrote, before and after compaction") {
+    val wh = tmpWarehouse()
+    val apacheLine = "2026-08-11 04:23:17 +0000|www.example.com|443|203.0.113.7|" +
+      """512|14034|2751|200|["-", "GET / HTTP/1.1", "GET", "/", "HTTP/1.1", "-", "curl/8.0"]"""
+    val authLine = "2026-08-11T04:00:01+00:00 h sshd[1]: Failed password for root " +
+      "from 1.2.3.4 port 22 ssh2"
+    def mail(from: String) = (s"$from\nTo: Bob <bob@b.example>\nSubject: s\n" +
+      "Date: Tue, 11 Aug 2026 04:00:00 +0000\n\nbody").getBytes("UTF-8")
+    (0L to 2L).foreach { b =>
+      val apache = graft.parse.ApacheParser.parse(
+        Seq(apacheLine, "not parseable").toDF("value"))
+      Ingest.appendEvents(apache.events, wh, "apache_access", b)
+      Ingest.appendDeadLetters(apache.deadLetters, wh, "apache", b)
+      val auth = graft.parse.AuthfailParser.parse(
+        Seq(authLine, "not parseable").toDF("value"))
+      Ingest.appendEvents(auth.events, wh, "authfail", b)
+      Ingest.appendDeadLetters(auth.deadLetters, wh, "authfail", b)
+      // the second message has no From: it is a mail dead letter
+      graft.streaming.LogStream.ingestMailBatch(
+        Seq(mail("From: Alice <alice@a.example>"), mail("Sender: s@relay.example"))
+          .map((_, new java.sql.Timestamp(1754884800000L)))
+          .toDF("content", "modificationTime"), wh, b)
+    }
+    def check(stage: String): Unit = {
+      def fact(table: String) = {
+        val root = wh.path(table)
+        graft.ingest.Compaction.resolveFactPaths(spark, root) match {
+          case Some(paths) => spark.read.option("basePath", root).parquet(paths: _*)
+          case None => spark.read.parquet(root)
+        }
+      }
+      Seq(
+        "apache_access" -> (wh.apache(spark), fact("apache_access")),
+        "authfail" -> (wh.authfail(spark), fact("authfail")),
+        "inbox" -> (wh.inbox(spark), fact("inbox")),
+        "inbox_contacts" -> (wh.contacts(spark), spark.read.parquet(
+          Ingest.snapshotPaths(spark, wh.path("inbox_contacts")).get: _*)),
+        "inbox_tocc" -> (wh.tocc(spark), spark.read.parquet(wh.path("inbox_tocc"))),
+        "dead_letters" -> (wh.deadLetters(spark),
+          spark.read.parquet(wh.path("dead_letters")))
+      ).foreach { case (table, (pinned, inferred)) =>
+        // StructType equality: names, types, order and nullability
+        assert(pinned.schema === inferred.schema, s"$table $stage")
+        assert(pinned.count() === inferred.count(), s"$table $stage")
+      }
+    }
+    check("before compaction")
+    Seq("apache_access", "authfail", "inbox").foreach(t =>
+      graft.ingest.Compaction.compact(spark, wh, t, minLeaves = 2, keepLatest = 1))
+    assert(graft.ingest.Compaction.resolveFactPaths(spark, wh.path("inbox")).isDefined)
+    check("after compaction")
   }
 }

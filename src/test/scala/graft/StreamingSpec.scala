@@ -12,7 +12,7 @@ import graft.streaming.{LearningGate, LogStream, StreamingReports}
   */
 class StreamingSpec extends GraftSpec {
 
-  private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
+  private def tmp(prefix: String): Path = tempDir(prefix)
 
   test("apache stream: lines -> parsed table + dead letters") {
     val in = tmp("apache-in")
@@ -99,31 +99,6 @@ class StreamingSpec extends GraftSpec {
     assert(wh.tocc(spark).count() === tocc1)
     assert(wh.contacts(spark).orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq === contacts1)
-  }
-
-  /** The description of every Spark job `body` starts; the listener bus is
-    * drained on both sides, so no earlier job leaks in and none is missed.
-    */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.synchronized {
-          seen += Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
-        }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.GraftBridge.drain(spark)
-    sc.addSparkListener(listener)
-    try body
-    finally {
-      org.apache.spark.sql.GraftBridge.drain(spark)
-      sc.removeSparkListener(listener)
-    }
-    seen.synchronized(seen.toSeq)
   }
 
   private def mailFrom(sender: String, subject: String): Array[Byte] =
