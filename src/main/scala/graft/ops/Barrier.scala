@@ -64,34 +64,53 @@ object Barrier {
     * jobs, concurrently; results are positional.
     *
     * Each thunk runs on its own daemon thread named after the call's job
-    * group (`<name>-<uuid>`), and every job of the call carries that group;
-    * the threads inherit the caller's job description. The first thunk to
-    * throw cancels the group (with any job a sibling has yet to submit);
-    * every thread is joined before that first failure is rethrown, so no
-    * sibling job or thread outlives the call.
+    * tag (`<name>-<uuid>`), and every job of the call carries that tag. The
+    * threads keep everything else the caller's jobs carry: its job group,
+    * description and tags. So a caller's group still reaches the call's
+    * jobs; inside `foreachBatch` that is the stream's run id, which
+    * `query.stop()` cancels. The first thunk to throw cancels the tag's
+    * jobs. If the waiting thread is interrupted, it cancels them too. Either
+    * way every thread is joined before the error is rethrown, so no job or
+    * thread of the call outlives it; a sibling job submitted after the
+    * cancellation runs to its end before the join returns.
     */
   def concurrently[T](sc: SparkContext, name: String,
       tasks: Seq[() => T]): Seq[T] = {
-    val group = s"$name-${java.util.UUID.randomUUID()}"
+    val tag = s"$name-${java.util.UUID.randomUUID()}"
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val results = new Array[Any](tasks.size)
     val threads = tasks.zipWithIndex.map { case (task, i) =>
       val t = new Thread(() => {
-        sc.setJobGroup(group, sc.getLocalProperty("spark.job.description"),
-          interruptOnCancel = true)
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(true)
         try results(i) = task()
         catch {
           case e: Throwable =>
-            if (failure.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
+            if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
         }
-      }, group)
+      }, tag)
       t.setDaemon(true)
       t.start()
       t
     }
-    threads.foreach(_.join())
+    try threads.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        sc.cancelJobsWithTag(tag)
+        threads.foreach(joinUninterruptibly)
+        throw e
+    }
     Option(failure.get).foreach(e => throw e)
     results.toSeq.asInstanceOf[Seq[T]]
+  }
+
+  /** Join `t`, waiting on through interrupts; the interrupt is kept. */
+  private def joinUninterruptibly(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive)
+      try t.join()
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 
   /** `df.barriered` — the conf-routed barrier as a drop-in replacement for

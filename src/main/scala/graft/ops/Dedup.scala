@@ -532,14 +532,16 @@ object Dedup {
     * new; `match_id` is the minimum matching existing doc (deterministic).
     *
     * Scale: both joins are equi-joins (content hash, band key); the incoming
-    * batch is typically small relative to the corpus so AQE broadcasts its
-    * side at runtime — no hint is planted, nothing is all-pairs, and the
+    * batch is typically small relative to the corpus so its side is
+    * broadcast (at plan time when its estimate is small, else by AQE at
+    * runtime) — no hint is planted, nothing is all-pairs, and the
     * per-band fan-out is bounded by the incoming side's bucket occupancy,
-    * not corpus × corpus.
+    * not corpus × corpus. Ordered by `doc_id` (the d11 result order).
     */
   def dedupAgainst(incoming: DataFrame, existing: DataFrame,
       maxHamming: Int = 3): DataFrame =
     dedupAgainstIndex(incoming, buildCorpusIndex(existing), maxHamming)
+      .orderBy(col("doc_id"))
 
   /** Corpus-side DEDUP INDEX: one compact row per document — the md5
     * content hash for the exact path and the packed 64-bit SimHash for the
@@ -556,36 +558,47 @@ object Dedup {
 
   /** [[dedupAgainst]] against a prebuilt [[buildCorpusIndex]] table: the
     * single implementation both the batch and the per-micro-batch streaming
-    * paths run, so their verdicts cannot drift.
+    * paths run, so their verdicts cannot drift. One row per `incoming` row,
+    * in no particular order: callers that present the table sort it
+    * ([[dedupAgainst]]); the gates write it to parquet, where order is
+    * never used.
+    *
+    * Both tiers come from ONE band join, so the index is scanned once:
+    * `exact_id` is the least `ex_id` among the band candidates whose `h`
+    * equals the arrival's md5, `near_id` the least within `maxHamming`.
+    * This is exact, not an approximation, for every index
+    * [[buildCorpusIndex]] writes: equal md5 means equal text (up to an MD5
+    * collision), equal text means an equal SimHash-64, and equal
+    * fingerprints collide in all four bands, so every exact match is a band
+    * candidate. A null text has a null `h` and a null `sh` on both sides and
+    * matches nothing. An index whose `h` and `ex_sh` were hashed from
+    * different texts would break the invariant.
     */
   def dedupAgainstIndex(incoming: DataFrame, index: DataFrame,
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 4,
       "4 fixed 16-bit bands guarantee recall only for hamming <= 3")
-    val exact = incoming.select(col("doc_id"), md5(col("text")).as("h"))
-      .join(index.select(col("h"), col("ex_id")), "h")
-      .groupBy(col("doc_id")).agg(min(col("ex_id")).as("exact_id"))
     val inb = incoming
-      .select(col("doc_id"), graft.functions.SimHash64(col("text")).as("sh"))
-      .select(col("doc_id"), col("sh"),
+      .select(col("doc_id"), md5(col("text")).as("h"),
+        graft.functions.SimHash64(col("text")).as("sh"))
+      .select(col("doc_id"), col("h"), col("sh"),
         posexplode(array(band64Keys(col("sh")): _*)).as(Seq("band", "bits")))
-    val exb = index.select(col("ex_id"), col("ex_sh"))
-      .select(col("ex_id"), col("ex_sh"),
+    val exb = index.select(col("ex_id"), col("h").as("ex_h"), col("ex_sh"))
+      .select(col("ex_id"), col("ex_h"), col("ex_sh"),
         posexplode(array(band64Keys(col("ex_sh")): _*)).as(Seq("band", "bits")))
-    val near = inb.join(exb, Seq("band", "bits"))
-      .select(col("doc_id"), col("sh"), col("ex_id"), col("ex_sh"))
-      .distinct()
-      .filter(bit_count(col("sh").bitwiseXOR(col("ex_sh"))) <= maxHamming)
-      .groupBy(col("doc_id")).agg(min(col("ex_id")).as("near_id"))
+    // a pair colliding in several bands repeats; min() does not mind
+    val hits = inb.join(exb, Seq("band", "bits"))
+      .groupBy(col("doc_id")).agg(
+        min(when(col("h") === col("ex_h"), col("ex_id"))).as("exact_id"),
+        min(when(bit_count(col("sh").bitwiseXOR(col("ex_sh"))) <= maxHamming,
+          col("ex_id"))).as("near_id"))
     incoming.select(col("doc_id"))
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
+      .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("exact_id").isNotNull, "exact")
           .when(col("near_id").isNotNull, "near")
           .otherwise("new").as("verdict"),
         coalesce(col("exact_id"), col("near_id")).as("match_id"))
-      .orderBy(col("doc_id"))
   }
 
   /** [[readWithLearned]] for the text corpus index ([[buildCorpusIndex]]
@@ -606,10 +619,14 @@ object Dedup {
     * gram index stays ONE-ROW-PER-GRAM under this union
     * ([[spanCheckAgainstIndex]]'s run merging depends on it) because its
     * learning stream writes only first-seen grams.
+    *
+    * Every part is read pinned ([[readPinned]]): its data schema comes from
+    * one leaf's footer, so the read runs no schema-inference job; the live
+    * side's `batch_id` is still discovered from the paths.
     */
   def readWithLearned(spark: org.apache.spark.sql.SparkSession,
       rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val base = spark.read.parquet(s"$rootPath/base")
+    val base = readPinned(spark, s"$rootPath/base")
     // Hadoop FileSystem listing ([[IndexFs]]) so a learned-delta root on
     // hdfs://s3a:// works the same as local disk
     val fs = IndexFs.fs(spark, rootPath)
@@ -619,13 +636,13 @@ object Dedup {
     // must keep filtering inside the consolidated files (row-group stats
     // prune), and the small-file problem was the partition count
     val genSide = gen.map(g =>
-      spark.read.parquet(s"$rootPath/$LearnedGenPrefix$g")
+      readPinned(spark, s"$rootPath/$LearnedGenPrefix$g")
         .filter(col("batch_id") < beforeBatch).drop("batch_id"))
     val learned = s"$rootPath/learned"
     val hasLive = IndexFs.childNames(fs, learned)
       .exists(_.startsWith("batch_id="))
     val liveSide =
-      if (hasLive) Some(spark.read.parquet(learned)
+      if (hasLive) Some(readPinned(spark, learned)
         // > horizon: a replayed old batch's re-written partition must be
         // invisible once its rows live in the generation (same discipline
         // as readPqCodes); < beforeBatch: the replay-safety contract
@@ -634,6 +651,15 @@ object Dedup {
       else None
     (Seq(base) ++ genSide ++ liveSide).reduce(_ unionByName _)
   }
+
+  /** `spark.read.parquet(path)` with the data schema pinned from one leaf's
+    * footer ([[ParquetMeta.dataSchema]]): no schema-inference job. With no
+    * readable leaf, the inferring read, which behaves as it always did.
+    */
+  private def readPinned(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    ParquetMeta.dataSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   private val LearnedGenPrefix = "learned_g"
   private val LearnedGenMarker = "_GRAFT_LEARNED_GEN"
@@ -685,7 +711,8 @@ object Dedup {
     * superseded generations and absorbed partitions GC'd by the NEXT run
     * (one grace cycle for in-flight readers). Works on any learned root —
     * gram, content-hash, embedding, media, or the sem members subtree —
-    * because the fold never looks at the row schema.
+    * because the fold never looks at the row schema: both of its reads take
+    * theirs from the leaves' footers ([[readPinned]]), with no inference job.
     * Returns the committed generation id.
     */
   def compactLearnedDelta(spark: org.apache.spark.sql.SparkSession,
@@ -727,10 +754,10 @@ object Dedup {
       }
       val horizon = (liveBatches.filter(_ > prevHorizon) :+ prevHorizon).max
       val prevGen = gen.map(g =>
-        spark.read.parquet(s"$rootPath/$LearnedGenPrefix$g"))
+        readPinned(spark, s"$rootPath/$LearnedGenPrefix$g"))
       val fresh =
         if (horizon > prevHorizon)
-          Some(spark.read.parquet(learned)
+          Some(readPinned(spark, learned)
             .filter(col("batch_id") > prevHorizon &&
               col("batch_id") <= horizon)
             .withColumn("batch_id", col("batch_id").cast("long")))

@@ -20,7 +20,13 @@ import graft.ops.{Barrier, Dedup, IndexFs, Similarity}
   *    ([[project]]) to `<root>/<learnedDir>/batch_id=b`, and verdicts land
   *    in `<out>/batch_id=b`, both as per-write dynamic partition overwrites
   *    ([[LearningGate.writeBatch]]) — a replay rewrites its own partition,
-  *    and the session conf is never touched;
+  *    and the session conf is never touched. Neither write reads the
+  *    other, and batch b reads no knowledge of its own, so a stream
+  *    ([[arrivals]]) runs the two concurrently: a batch redelivered after
+  *    either, both or neither landed rewrites both partitions identically;
+  *  - every job of a batch is described `graft:gate/<name>/<step>/batch=b`,
+  *    with steps `judge` (knowledge read, verdict barrier), `learned` and
+  *    `verdicts`;
   *  - within one batch, arrivals only see prior knowledge: two novel
   *    copies in the same batch both read as novel (intra-batch dedup is the
   *    batch operators' job);
@@ -31,10 +37,12 @@ import graft.ops.{Barrier, Dedup, IndexFs, Similarity}
   * plus its geometry for the vector gates (read once per batch) or the
   * frozen centroids for the semantic gate.
   *
+  * @param name      the modality, in job descriptions
   * @param prepare   arrivals → judged input (decode, hash) in the scan stage
   * @param learnable the verdict whose arrivals become knowledge
   */
 final case class LearningGate[K](
+    name: String,
     knowledge: (SparkSession, String, Long) => K,
     judge: (DataFrame, K) => DataFrame,
     project: (DataFrame, DataFrame, K) => DataFrame,
@@ -47,25 +55,45 @@ final case class LearningGate[K](
     * returns.
     */
   def batch(arrivals: DataFrame, root: String, batchId: Long): DataFrame = {
-    val input = prepare(arrivals)
-    val known = knowledge(arrivals.sparkSession, root, batchId)
-    // verdicts feed two actions (the learned write and the caller's
-    // verdict write): barrier them so the index join runs once
-    val verdicts = Barrier.barrier(judge(input, known))
-    LearningGate.writeBatch(
-      project(input, verdicts.filter(col("verdict") === learnable), known),
-      batchId, s"$root/$learnedDir")
+    val (verdicts, learn) = judged(arrivals, root, batchId)
+    learn()
     verdicts
   }
 
-  /** The gate as a stream: every trigger runs [[batch]] and writes its
-    * verdicts to `outPath`, batch-partitioned.
+  /** The gate as a stream: every trigger judges its batch, then writes the
+    * learned rows and the verdicts (to `outPath`, batch-partitioned)
+    * concurrently ([[graft.ops.Barrier.concurrently]]), both from the one
+    * barriered verdict table.
     */
   def arrivals(stream: DataFrame, root: String, outPath: String,
       checkpoint: String): StreamingQuery =
     LogStream.eachBatch(stream, checkpoint) { (b, id) =>
-      LearningGate.writeBatch(batch(b, root, id), id, outPath)
+      val (verdicts, learn) = judged(b, root, id)
+      Barrier.concurrently(b.sparkSession.sparkContext, s"graft-gate-$name",
+        Seq(learn, () => steps(b.sparkSession, id)("verdicts")(
+          LearningGate.writeBatch(verdicts, id, outPath))))
     }
+
+  /** The batch's barriered verdict table, and its learned write (not yet
+    * run).
+    */
+  private def judged(arrivals: DataFrame, root: String,
+      batchId: Long): (DataFrame, () => Unit) = {
+    val step = steps(arrivals.sparkSession, batchId)
+    // verdicts feed two actions (the learned write and the verdict write):
+    // barrier them so the index join runs once
+    val (input, known, verdicts) = step("judge") {
+      val in = prepare(arrivals)
+      val k = knowledge(arrivals.sparkSession, root, batchId)
+      (in, k, Barrier.barrier(judge(in, k)))
+    }
+    (verdicts, () => step("learned")(LearningGate.writeBatch(
+      project(input, verdicts.filter(col("verdict") === learnable), known),
+      batchId, s"$root/$learnedDir")))
+  }
+
+  private def steps(spark: SparkSession, batchId: Long) =
+    new LogStream.Steps(spark, s"gate/$name", batchId)
 
   /** The registered-query form: `base` writes the ingest-built index
     * under a scratch root, then `batches` run through [[batch]] as
@@ -108,7 +136,7 @@ object LearningGate {
 
   /** Text: md5 + SimHash-64 rows ([[graft.ops.Dedup.buildCorpusIndex]]). */
   def text(maxHamming: Int = 3): LearningGate[DataFrame] =
-    LearningGate[DataFrame](Dedup.readWithLearned,
+    LearningGate[DataFrame]("text", Dedup.readWithLearned,
       Dedup.dedupAgainstIndex(_, _, maxHamming),
       (in, novel, _) => Dedup.buildCorpusIndex(joinNovel(in, novel, "doc_id")))
 
@@ -117,7 +145,8 @@ object LearningGate {
     * (unparseable) URLs are never learned.
     */
   val url: LearningGate[DataFrame] =
-    LearningGate[DataFrame](Dedup.readWithLearned, Dedup.urlDedupAgainstIndex,
+    LearningGate[DataFrame]("url", Dedup.readWithLearned,
+      Dedup.urlDedupAgainstIndex,
       (_, novel, _) => Dedup.buildUrlIndex(novel.select("doc_id", "url")))
 
   /** Near-URL: the token-bigram gram space, so a crawl that mutates one
@@ -125,7 +154,7 @@ object LearningGate {
     */
   def urlNear(minJaccard: Double = 0.4,
       maxDocFreq: Long = 64): LearningGate[DataFrame] =
-    LearningGate[DataFrame](Dedup.readWithLearned,
+    LearningGate[DataFrame]("url_near", Dedup.readWithLearned,
       Dedup.urlNearDedupAgainstIndex(_, _, minJaccard, maxDocFreq),
       (_, novel, _) => Dedup.buildUrlGramIndex(novel.select("doc_id", "url")))
 
@@ -135,7 +164,7 @@ object LearningGate {
     */
   def video(minJaccard: Double = 0.4,
       maxDocFreq: Long = 64): LearningGate[DataFrame] =
-    LearningGate[DataFrame](Dedup.readWithLearned,
+    LearningGate[DataFrame]("video", Dedup.readWithLearned,
       Dedup.videoNearDedupAgainstIndex(_, _, minJaccard, maxDocFreq),
       (_, novel, _) => Dedup.buildVideoGramIndex(novel.select("doc_id", "text")),
       prepare = _.select(col("asset_id").as("doc_id"),
@@ -151,7 +180,7 @@ object LearningGate {
     * key on arrival paths).
     */
   def media(hash: Column, maxHamming: Int = 3): LearningGate[DataFrame] =
-    LearningGate[DataFrame](Dedup.readWithLearned,
+    LearningGate[DataFrame]("media", Dedup.readWithLearned,
       Dedup.mediaDedupAgainstIndex(_, _, maxHamming),
       (in, novel, _) => joinNovel(in, novel, "asset_id")
         .filter(col("dhash").isNotNull)
@@ -175,7 +204,7 @@ object LearningGate {
 
   /** Embeddings, single-table LSH; `invalid` vectors are never learned. */
   def embed(minCosine: Double = 0.9): LearningGate[Geometric] =
-    LearningGate[Geometric](withGeometry,
+    LearningGate[Geometric]("embed", withGeometry,
       (in, k) => Dedup.embedDedupAgainstIndex(in, k._1, minCosine,
         k._2("planes"), k._2.getOrElse("dims", 64)),
       (in, novel, k) => Dedup.buildEmbedIndex(joinNovel(in, novel, "vec_id"),
@@ -187,7 +216,7 @@ object LearningGate {
     * batch instead of learning every arrival.
     */
   def banded(minCosine: Double = 0.9): LearningGate[Geometric] =
-    LearningGate[Geometric](withGeometry,
+    LearningGate[Geometric]("banded", withGeometry,
       (in, k) => Dedup.embedDedupAgainstIndexBanded(in, k._1, minCosine),
       (in, novel, k) => Dedup.buildEmbedIndexBanded(
         joinNovel(in, novel, "vec_id"), k._2("planes"), k._2("tables"),
@@ -199,7 +228,7 @@ object LearningGate {
     * change only at retrain, which is a rebuild.
     */
   def sem(minCosine: Double = 0.9): LearningGate[(DataFrame, DataFrame)] =
-    LearningGate[(DataFrame, DataFrame)](
+    LearningGate[(DataFrame, DataFrame)]("sem",
       (spark, root, b) => (spark.read.parquet(s"$root/centroids"),
         Dedup.readWithLearned(spark, s"$root/members", b)),
       (in, k) => Similarity.semDedupAgainstIndex(in, k._1, k._2, minCosine),

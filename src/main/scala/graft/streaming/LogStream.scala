@@ -33,7 +33,7 @@ object LogStream {
     eachBatch(lines, checkpoint) { (batch, batchId) =>
       // batchId threads through to overwrite-by-batchId idempotent appends:
       // a redelivered micro-batch rewrites its own partitions, not duplicates
-      val step = new Steps(batch.sparkSession, feed, batchId)
+      val step = new Steps(batch.sparkSession, s"ingest/$feed", batchId)
       // the events write also counts the input and the events: the parsers
       // split every line into exactly one of the two, so the difference is
       // the dead-letter count, with no action of its own
@@ -49,15 +49,17 @@ object LogStream {
         landDeadLetters(res.deadLetters, warehouse, feed, batchId, dead))
     }
 
-  /** Describes every Spark job of one ingest step as
-    * `graft:ingest/<feed>/<step>/batch=<id>`, then restores the caller's
-    * description (inside `foreachBatch`, the stream's own).
+  /** Describes every Spark job of one step of a micro-batch as
+    * `graft:<scope>/<step>/batch=<id>` (scope `ingest/<feed>` or
+    * `gate/<modality>`), then restores the caller's description (inside
+    * `foreachBatch`, the stream's own).
     */
-  private final class Steps(spark: SparkSession, feed: String, batchId: Long) {
+  private[streaming] final class Steps(spark: SparkSession, scope: String,
+      batchId: Long) {
     def apply[A](name: String)(body: => A): A = {
       val sc = spark.sparkContext
       val outer = sc.getLocalProperty(JobDescription)
-      sc.setJobDescription(s"graft:ingest/$feed/$name/batch=$batchId")
+      sc.setJobDescription(s"graft:$scope/$name/batch=$batchId")
       try body finally sc.setLocalProperty(JobDescription, outer)
     }
   }
@@ -590,7 +592,7 @@ object LogStream {
   def ingestMailBatch(batch: DataFrame, warehouse: Warehouse,
       batchId: Long = 0L): Unit = {
     val spark = batch.sparkSession
-    val step = new Steps(spark, "mail", batchId)
+    val step = new Steps(spark, "ingest/mail", batchId)
     // cache the ONE-parse frame: the contacts merge, the ordered-id pass and
     // the dead-letter write are separate actions, and without this each
     // would re-run the RFC-5322 UDF over every message

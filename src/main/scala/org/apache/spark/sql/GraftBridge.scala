@@ -16,6 +16,12 @@ object GraftBridge {
     */
   type AbsDataType = org.apache.spark.sql.types.AbstractDataType
 
+  /** `schema` with every field, element and value nullable
+    * (`StructType.asNullable` is `private[spark]`): the form Spark's file
+    * sources give a data schema, whatever nullability the writer recorded.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Block until every listener event posted so far has been delivered
     * (`listenerBus` is `private[spark]`), so a listener's counters include
     * every job and task that ran before the call.

@@ -1573,6 +1573,47 @@ class OpsSpec extends GraftSpec {
     assert((System.nanoTime() - t0) / 1e9 < 60.0)
   }
 
+  test("concurrently stays cancellable through the caller's job group and " +
+      "by interrupting the caller, leaving no job or thread behind") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val slow = udf((x: Long) => { Thread.sleep(120000L); x })
+    def sleeping() = spark.range(1).select(slow(col("id"))).collect().toSeq
+    /** Runs a two-thunk call under an outer job group on its own thread,
+      * waits until both thunks' jobs run, then stops it with `stop`.
+      */
+    def stopped(stop: (String, Thread) => Unit): Throwable = {
+      val group = s"outer-${java.util.UUID.randomUUID()}"
+      val outcome = new java.util.concurrent.atomic.AtomicReference[Any]()
+      val caller = new Thread(() => {
+        sc.setJobGroup(group, "outer", interruptOnCancel = true)
+        outcome.set(try graft.ops.Barrier.concurrently(sc, "graft-cancel-spec",
+          Seq(() => sleeping(), () => sleeping()))
+        catch { case e: Throwable => e })
+      })
+      val t0 = System.nanoTime()
+      caller.start()
+      while (sc.statusTracker.getJobIdsForGroup(group).length < 2 &&
+          System.nanoTime() - t0 < 60e9) Thread.sleep(50L)
+      stop(group, caller)
+      caller.join(90000L)
+      assert(!caller.isAlive, "the call must return once stopped")
+      assert((System.nanoTime() - t0) / 1e9 < 60.0)
+      org.apache.spark.sql.GraftBridge.drain(spark)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      assert(!Thread.getAllStackTraces.keySet.asScala
+        .exists(_.getName.startsWith("graft-cancel-spec")))
+      outcome.get match {
+        case e: Throwable => e
+        case r => fail(s"a stopped call must throw, returned $r")
+      }
+    }
+    val cancelled = stopped((group, _) => sc.cancelJobGroup(group))
+    assert(cancelled.isInstanceOf[org.apache.spark.SparkException], cancelled)
+    val interrupted = stopped((_, caller) => caller.interrupt())
+    assert(interrupted.isInstanceOf[InterruptedException], interrupted)
+  }
+
   test("clusterComponents converges on a long path (diameter > 2)") {
     // path 1-2-3-4-5-6: min label must walk the whole diameter
     val ds = (1L to 6L).toDF("doc_id")
@@ -1857,6 +1898,81 @@ class OpsSpec extends GraftSpec {
     assert(out(12L) === (("new", -1L)))
     assert(out(13L) === (("new", -1L)), "incoming×incoming must not match")
     assert(out(14L) === (("new", -1L)))
+  }
+
+  test("dedupAgainstIndex's one band join gives the two-join form's verdicts " +
+      "on exact, reordered, edited, null and empty texts, duplicate doc_ids " +
+      "and min(ex_id) ties") {
+    // the earlier form, kept here only as the reference: an md5 join for
+    // the exact tier, a separate band join for the near tier
+    def twoJoin(incoming: org.apache.spark.sql.DataFrame,
+        index: org.apache.spark.sql.DataFrame, maxHamming: Int = 3) = {
+      def bands(sh: org.apache.spark.sql.Column) = (0 until 4).map(k =>
+        shiftrightunsigned(sh, 48 - 16 * k).bitwiseAND(lit(0xffffL)))
+      val exact = incoming.select(col("doc_id"), md5(col("text")).as("h"))
+        .join(index.select(col("h"), col("ex_id")), "h")
+        .groupBy(col("doc_id")).agg(min(col("ex_id")).as("exact_id"))
+      val inb = incoming
+        .select(col("doc_id"), graft.functions.SimHash64(col("text")).as("sh"))
+        .select(col("doc_id"), col("sh"),
+          posexplode(array(bands(col("sh")): _*)).as(Seq("band", "bits")))
+      val exb = index.select(col("ex_id"), col("ex_sh"))
+        .select(col("ex_id"), col("ex_sh"),
+          posexplode(array(bands(col("ex_sh")): _*)).as(Seq("band", "bits")))
+      val near = inb.join(exb, Seq("band", "bits"))
+        .select(col("doc_id"), col("sh"), col("ex_id"), col("ex_sh"))
+        .distinct()
+        .filter(bit_count(col("sh").bitwiseXOR(col("ex_sh"))) <= maxHamming)
+        .groupBy(col("doc_id")).agg(min(col("ex_id")).as("near_id"))
+      incoming.select(col("doc_id"))
+        .join(exact, Seq("doc_id"), "left")
+        .join(near, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("exact_id").isNotNull, "exact")
+            .when(col("near_id").isNotNull, "near")
+            .otherwise("new").as("verdict"),
+          coalesce(col("exact_id"), col("near_id")).as("match_id"))
+    }
+    val rnd = new scala.util.Random(17)
+    def text(n: Int) = Seq.fill(n)(s"v${rnd.nextInt(300)}").mkString(" ")
+    val texts = IndexedSeq.fill(120)(text(40))
+    // duplicate texts in the index: 120 + i repeats text i, so exact
+    // matches tie and min(ex_id) must pick i
+    val corpus: Seq[(Long, String)] =
+      texts.indices.map(i => (i.toLong, texts(i))) ++
+        (0 until 10).map(i => (120L + i, texts(i))) ++
+        Seq((200L, null), (201L, ""), (202L, ""))
+    val index = Dedup.buildCorpusIndex(corpus.toDF("doc_id", "text"))
+    def edit(t: String) = {
+      val w = t.split(' ')
+      w(rnd.nextInt(w.length)) = s"x${rnd.nextInt(1000)}"
+      w.mkString(" ")
+    }
+    val incoming: Seq[(Long, String)] = (0 until 200).map { j =>
+      val t = texts(rnd.nextInt(texts.size))
+      (1000L + j, j % 5 match {
+        case 0 => t
+        case 1 => rnd.shuffle(t.split(' ').toSeq).mkString(" ")
+        case 2 => edit(t)
+        case 3 => edit(edit(edit(t)))
+        case _ => text(40)
+      })
+    } ++ Seq((2000L, null), (2001L, ""), (2002L, texts(3)),
+      // one doc_id, two texts: both forms judge the id over both
+      (2003L, texts(5)), (2003L, text(40)), (2004L, text(40)), (2004L, edit(texts(7))))
+    val in = incoming.toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "verdict", "match_id").as[(Long, String, Option[Long])]
+        .collect().toSeq.sortBy(_.toString)
+    val want = rows(twoJoin(in, index))
+    val got = rows(Dedup.dedupAgainstIndex(in, index))
+    assert(got === want)
+    assert(got.size === incoming.size, "one row per arrival row")
+    val tiers = want.groupBy(_._2).map { case (v, rs) => v -> rs.size }
+    assert(Seq("exact", "near", "new").forall(tiers.getOrElse(_, 0) > 0), tiers)
+    assert(want.contains((2002L, "exact", Some(3L))), "min(ex_id) of a tie")
+    assert(want.contains((2000L, "new", None)))
+    assert(want.contains((2001L, "exact", Some(201L))), "empty text")
   }
 
   test("chunk: fixed windows with overlap, contained-tail drop, full coverage") {

@@ -2088,4 +2088,170 @@ class StreamingSpec extends GraftSpec {
     spark.readStream
       .schema("doc_id LONG, text STRING, embedding ARRAY<FLOAT>")
       .json(in.toString)
+
+  /** A 16-word text drawn from a 2000-word vocabulary by `seed`. */
+  private def gateDoc(seed: Long): String = {
+    val r = new scala.util.Random(seed)
+    Seq.fill(16)(s"w${r.nextInt(2000)}").mkString(" ")
+  }
+
+  /** Text-gate batch `b`: base copies, reordered base copies, copies of
+    * batch b-1's novel documents, and novel documents.
+    */
+  private def gateBatch(b: Int): Seq[(Long, String)] = (0 until 20).map { j =>
+    val id = 1000L * (b + 1) + j
+    id -> (j % 4 match {
+      case 0 => gateDoc(j + 1L)
+      case 1 => gateDoc(j + 1L).split(' ').reverse.mkString(" ")
+      case 2 if b > 0 => gateDoc(1000L * b + j + 1)
+      case _ => gateDoc(id)
+    })
+  }
+
+  /** Lands `docs` as text-gate arrival file `b`, ordered after b-1. */
+  private def landText(in: Path, b: Int, docs: Seq[(Long, String)]): Path = {
+    val f = in.resolve(s"b$b.csv")
+    Files.writeString(f, docs.map { case (id, t) => s"$id,$t" }
+      .mkString("", "\n", "\n"))
+    Files.setLastModifiedTime(f,
+      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 2000L))
+    f
+  }
+
+  private def textArrivals(in: Path) =
+    spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", "1").csv(in.toString)
+
+  /** A text-gate index root whose base holds `gateDoc(1..50)`. */
+  private def textRoot(prefix: String): String = {
+    import spark.implicits._
+    val root = tmp(prefix).resolve("index").toString
+    graft.ops.Dedup.buildCorpusIndex((1L to 50L).map(i => (i, gateDoc(i)))
+      .toDF("doc_id", "text")).write.parquet(s"$root/base")
+    root
+  }
+
+  test("gate job budget: a steady-state text-gate micro-batch over a base " +
+      "and two learned batches runs at most 8 jobs, each described " +
+      "graft:gate/text/<step>") {
+    val in = tmp("gbudget-in")
+    val root = textRoot("gbudget-idx")
+    val out = tmp("gbudget-out").toString
+    val ck = tmp("gbudget-ck").toString
+    def run(): Unit = LogStream.dedupLearningArrivals(textArrivals(in), root,
+      out, ck).awaitTermination()
+    landText(in, 0, gateBatch(0)); run()
+    landText(in, 1, gateBatch(1)); run()
+    landText(in, 2, gateBatch(2))
+    val jobs = jobDescriptions(run())
+    info(s"jobs: ${jobs.size} (${jobs.groupBy(identity).map { case (d, n) =>
+      s"$d ${n.size}" }.toSeq.sorted.mkString(", ")})")
+    assert(jobs.size <= 8, jobs.mkString("\n"))
+    jobs.foreach(d =>
+      assert(d.startsWith("graft:gate/text/"), s"untagged gate job: $d"))
+    Seq("judge", "learned", "verdicts").foreach(step => assert(
+      jobs.exists(_.startsWith(s"graft:gate/text/$step/batch=2")), step))
+    val v = spark.read.parquet(s"$out/batch_id=2").groupBy("verdict").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(v.values.sum === 20L)
+    assert(v.keySet === Set("exact", "near", "new"), s"every tier: $v")
+  }
+
+  test("a gate batch whose verdict write failed is redelivered: the restart " +
+      "reproduces a clean run's verdicts bitwise and its learned rows") {
+    def verdicts(out: String) = spark.read.parquet(out)
+      .select("batch_id", "doc_id", "verdict", "match_id").collect()
+      .map(_.toString).sorted.toSeq
+    def learned(root: String) = spark.read.parquet(s"$root/learned")
+      .collect().map(_.toString).sorted.toSeq
+    // the clean twin
+    val cleanIn = tmp("redeliver-clean-in")
+    val cleanRoot = textRoot("redeliver-clean-idx")
+    val cleanOut = tmp("redeliver-clean-out").toString
+    landText(cleanIn, 0, gateBatch(0)); landText(cleanIn, 1, gateBatch(1))
+    LogStream.dedupLearningArrivals(textArrivals(cleanIn), cleanRoot, cleanOut,
+      tmp("redeliver-clean-ck").toString).awaitTermination()
+    // batch 0 commits; batch 1's verdict write meets a regular file where
+    // its sink directory should be
+    val in = tmp("redeliver-in")
+    val root = textRoot("redeliver-idx")
+    val out = tmp("redeliver-out").resolve("verdicts")
+    val ck = tmp("redeliver-ck").toString
+    def run(): Unit = LogStream.dedupLearningArrivals(textArrivals(in), root,
+      out.toString, ck).awaitTermination()
+    landText(in, 0, gateBatch(0)); run()
+    val b1 = landText(in, 1, gateBatch(1))
+    val saved = out.resolveSibling("verdicts-saved")
+    Files.move(out, saved)
+    Files.createFile(out)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    // the learned write may have been cancelled with the failing verdict
+    // write; land it, so the restart meets the state a crash between the
+    // two writes leaves: batch 1's knowledge written, its verdicts not
+    LearningGate.text().batch(spark.read.schema("doc_id LONG, text STRING")
+      .csv(b1.toString), root, 1L)
+    assert(Files.exists(java.nio.file.Paths.get(s"$root/learned/batch_id=1")))
+    Files.delete(out)
+    Files.move(saved, out)
+    run() // the same checkpoint: batch 1 is redelivered
+    assert(verdicts(out.toString) === verdicts(cleanOut))
+    assert(learned(root) === learned(cleanRoot))
+  }
+
+  test("index reads pin their schemas from the footers: on the text, media " +
+      "and banded roots, base, learned/ and learned_g1 read the inferred " +
+      "schema and rows") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    /** Batches 0 and 1 learn, compaction folds them into learned_g1, and
+      * batch 2 learns into learned/ again.
+      */
+    def grow(root: String, batch: Int => org.apache.spark.sql.DataFrame): Unit = {
+      (0 to 1).foreach(b => batch(b))
+      assert(graft.ops.Dedup.compactLearnedDelta(spark, root) === 1L)
+      batch(2)
+    }
+    def check(root: String): Unit =
+      Seq("base", "learned", "learned_g1").foreach { part =>
+        val path = s"$root/$part"
+        val inferred = spark.read.parquet(path)
+        val pinned = graft.ops.ParquetMeta.dataSchema(spark, path)
+        // names, types, order and nullability; `batch_id` is a partition
+        // column of learned/ and a data column of learned_g1
+        assert(pinned.contains(StructType(inferred.schema.filterNot(f =>
+          part == "learned" && f.name == "batch_id"))), path)
+        val read = spark.read.schema(pinned.get).parquet(path)
+        assert(read.schema === inferred.schema, path)
+        val rows = read.collect().map(_.toString).sorted.toSeq
+        assert(rows.nonEmpty, path)
+        assert(rows === inferred.collect().map(_.toString).sorted.toSeq, path)
+      }
+    val text = textRoot("pinned-text")
+    grow(text, b => LearningGate.text().batch(gateBatch(b).toDF("doc_id", "text"),
+      text, b.toLong))
+    check(text)
+    // media: string ex_id, learned rows keyed on arrival paths
+    def pgm(seed: Int): Array[Byte] =
+      "P5\n16 8\n255\n".getBytes("US-ASCII") ++
+        Array.tabulate[Byte](128)(j => (((seed + j) * (seed + j) * 5
+          + (seed + j) * 3 + seed) % 256).toByte)
+    val media = tmp("pinned-media").resolve("index").toString
+    graft.ops.Dedup.buildMediaIndex(Seq(("100", pgm(7))).toDF("asset_id", "payload"),
+      graft.functions.PpmDHash(col("payload"))).write.parquet(s"$media/base")
+    grow(media, b => LearningGate.media(graft.functions.PpmDHash(col("content")))
+      .batch(Seq((s"/in/b$b.pgm", pgm(40 + 50 * b))).toDF("path", "content"),
+        media, b.toLong))
+    check(media)
+    // banded: the geometry columns ride in every row
+    def vec(f: Int => Double): Array[Float] = Array.tabulate(64)(i => f(i).toFloat)
+    val banded = tmp("pinned-banded").resolve("index").toString
+    graft.ops.Dedup.buildEmbedIndexBanded(
+      Seq((100L, vec(i => math.sin(i * 0.7) + 0.1))).toDF("vec_id", "embedding"),
+      planes = 5, tables = 4).write.parquet(s"$banded/base")
+    grow(banded, b => LearningGate.banded().batch(
+      Seq((b + 1L, vec(i => math.cos(i * (1.3 + b)) - 0.2 * b)))
+        .toDF("vec_id", "embedding"), banded, b.toLong))
+    check(banded)
+  }
 }
