@@ -465,8 +465,8 @@ object EntryOps {
     * item 3: the pre-r15 `corpus.count()` spent a full scan to derive one
     * integer; a sizing knob needs only the catalog statistic). When `dir`
     * carries a pre-built index (`sem_centroids/sem_members.parquet` — the
-    * Bench/ScaleProbe overlays build one UNTIMED with the same formula
-    * over the same corpus), the entry prices pure query-time cost —
+    * Bench overlay builds one UNTIMED with the same formula over the same
+    * corpus), the entry prices pure query-time cost —
     * broadcast-assign + within-cell equi-join, the per-batch cost a
     * deployment pays between retrains; otherwise (the Verify path) the
     * index builds in-plan. The oracle derives K from the identical
@@ -627,11 +627,12 @@ object EntryOps {
     * [[graft.ops.Dedup.embedDedupAgainstIndexBanded]]): d25's plane
     * growth bounds cost but lowers single-table recall (collision
     * probability (1 − θ/π)^p per table — measured 0.52 → 0.16 at cosine
-    * 0.9 from p=4 to p=12, RecallAudit); T = 4 independent tables of p
+    * 0.9 from p=4 to p=12, docs/BENCH_NOTES.md r14); T = 4 independent
+    * tables of p
     * grown planes each (p = smallest ≥ 4 with 2^p · 48 ≥ N) recover
     * 1 − (1 − r)⁴ of it for a 4× join cost — measured AT the iid
-    * prediction since the r14 distinct-plane fix (RecallAudit /
-    * docs/BENCH_NOTES.md r14) — the d03/SimHash banding discipline
+    * prediction since the r14 distinct-plane fix (docs/BENCH_NOTES.md
+    * r14) — the d03/SimHash banding discipline
     * applied to vectors. Corpus = vec_id % 10 ≠ 0 plus the planted base vector
     * −50 ([[plantedLearnVec]]); arrivals = % 10 = 0, the d17 refusal
     * pair, and the planted near arrival −100 ([[plantedBandedNear]],
@@ -710,7 +711,7 @@ object EntryOps {
     Similarity.topkSq8(emb(spark, dir), pqQueryPred, k = 10)
 
   /** The s18 root fixture, shared verbatim by the entry's scratch path and
-    * the Bench/ScaleProbe untimed overlays so the benched row prices the
+    * the Bench untimed overlay so the benched row prices the
     * same bytes the oracle checks: quantizer trained on the 9/10 ingest
     * cohort (`vec_id % 10 ≠ 0`) at GROWN planes (footer rule over the FULL
     * table — the index serves all N once the append lands), committed as
@@ -807,7 +808,7 @@ object EntryOps {
   /** s09 — the r10 PQ index SPLIT demonstrated as a registered query: the
     * same ADC top-k as s07, but through [[Similarity.buildPqIndex]] +
     * [[Similarity.topkPqAgainstIndex]]. When `dir` carries a persisted
-    * index (`pq_codebooks.parquet`/`pq_codes.parquet` — the ScaleProbe
+    * index (`pq_codebooks.parquet`/`pq_codes.parquet` — the Bench overlay
     * pre-builds one UNTIMED, so its s09 row prices query-time cost alone,
     * the cost a production user pays per query between index rebuilds) it
     * is read from parquet; otherwise the index builds in-plan (the
@@ -819,8 +820,8 @@ object EntryOps {
     * r14; s09+ since r11): a FIXED id bound on top of the modulus. Every
     * real testdata SF has vec_id < 2000, so results are identical to the
     * unbounded form there (the oracles carry the same bound) — but under
-    * the ScaleProbe's ×R corpus replication the bound pins the query set
-    * to a CONSTANT 50 queries, so the probe rows measure per-query cost
+    * a ×R corpus replication (the scale probes in docs/BENCH_NOTES.md)
+    * the bound pins the query set to a CONSTANT 50 queries, so the probe rows measure per-query cost
     * against corpus growth (the production question: what one query
     * batch costs between index rebuilds), not the Q×N compounding a
     * modulus-only predicate measures — r14's first ×100 run of the
@@ -890,8 +891,8 @@ object EntryOps {
     * re-resolution that lets a drift rebuild flip live readers — with
     * codes served by [[Similarity.readPqCodes]] (base + compacted
     * generations + appended delta). When `dir` carries a pre-committed
-    * container at `pq_roots/` (the Bench/ScaleProbe overlays build one
-    * UNTIMED), the entry prices pure query-time cost: resolve + read +
+    * container at `pq_roots/` (the Bench overlay builds one UNTIMED), the
+    * entry prices pure query-time cost: resolve + read +
     * ADC top-k. Otherwise (the Verify path) it commits v1 into a scratch
     * container and queries through the same resolver — build cost
     * in-plan, the s09 fallback pattern. Every lifecycle step is
@@ -963,8 +964,8 @@ object EntryOps {
   /** The s11/s12 train/append SPLIT: codebooks train on 3/4 of the corpus
     * (`vec_id % 4 != 0` — deterministic, SF-independent), the remaining
     * 1/4 plays the vectors that ARRIVED after the last index rebuild.
-    * Both cohorts are non-empty at every real testdata SF and under the
-    * ScaleProbe's replicated ids.
+    * Both cohorts are non-empty at every real testdata SF and under ×R
+    * id replication.
     */
   private val pqTrainPred: Column = col("vec_id") % 4 =!= 0
 
@@ -2881,9 +2882,9 @@ object EntryOps {
     * (asset_id % 10 ≠ 0, the d17 split convention) land as persisted
     * tables (`img/`, `aud/`), each payload decoded exactly once, at
     * ingest cadence (untimed in probes — a rebuild is maintenance, priced
-    * by its own lifecycle, not per query). The ScaleProbe overlay
-    * prebuilds this at `$dir/media_features`; the entry scratch-builds
-    * otherwise, byte-identically.
+    * by its own lifecycle, not per query). A caller may prebuild this at
+    * `$dir/media_features`; the entry scratch-builds otherwise,
+    * byte-identically.
     */
   def mediaFeatureRootFixture(spark: SparkSession, dir: String,
       path: String): Unit = {
@@ -8489,8 +8490,8 @@ object EntryOps {
     * query predicate additionally bounds `vec_id < 2000` (see
     * [[topkPqIndexed]] — every real testdata SF satisfies it, so the
     * results are identical to s07/s08's there; the bound only bites under
-    * the ScaleProbe's replicated corpus, where it pins the query count so
-    * the probe isolates per-query cost from corpus growth). The
+    * a replicated corpus (the scale probes in docs/BENCH_NOTES.md), where
+    * it pins the query count so the probe isolates per-query cost from corpus growth). The
     * replacement is asserted to have matched — a silently unmodified
     * oracle would hash-mismatch the bounded Spark side on replicated data
     * while PASSING on testdata, the worst kind of latent drift.

@@ -897,11 +897,13 @@ object Dedup {
     * SINGLE grown-plane table opens: collision probability for a pair at
     * cosine c is (1 − θ/π)^p per table, so growing p with the corpus
     * (constant bucket size — the cost fix) drives single-table recall down
-    * (measured: 0.52 → 0.16 at cos 0.9 from p=4 to p=12, RecallAudit);
+    * (measured: 0.52 → 0.16 at cos 0.9 from p=4 to p=12, docs/BENCH_NOTES.md
+    * r14);
     * `tables` INDEPENDENT tables of p planes each recover 1 − (1 − r)^T
     * of it for a T× index/join cost — MEASURED to match that iid
     * prediction at every geometry since the r14 distinct-plane
-    * coefficient fix (RecallAudit: banded 0.48 vs iid 0.48 at cos 0.9
+    * coefficient fix (docs/BENCH_NOTES.md r14: banded 0.48 vs iid 0.48 at
+    * cos 0.9
     * p=12; 0.26 vs 0.26 at p=17, where the pre-r14 family's four tables
     * were bit-identical). Table t keys on plane indices [t·p, (t+1)·p)
     * of the same deterministic coefficient family (the native's `offset`
@@ -987,7 +989,7 @@ object Dedup {
     * (constant expected bucket size — bounded join) and `tables`
     * independent tables recover the recall the growth sheds (measured at
     * the iid 1 − (1 − r)^T prediction since the r14 distinct-plane fix,
-    * RecallAudit). Candidates are same-(band, key) pairs under the
+    * docs/BENCH_NOTES.md r14). Candidates are same-(band, key) pairs under the
     * per-key df cap (mega-buckets from degenerate regions drop, the
     * [[embedDedupAgainstIndexBanded]] discipline), band multiplicity
     * collapses through a distinct on the deterministic (id1, id2,

@@ -1,122 +1,118 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
+import java.io.{File, PrintWriter}
+
 import org.apache.spark.sql.SparkSession
 
-import scala.collection.mutable
+import graft.obs.JobLedger
 
-/** Batch profiler (round-20 measurement harness, guide §1): run several
-  * queries in ONE JVM, per rep splitting CONSTRUCTION wall (eager barrier /
-  * scalar-read jobs fired while the entry function builds its DataFrame)
-  * from EXECUTION wall (the noop-sink save) with the rep's job count and
-  * summed task CPU (median over reps last), and printing a per-JOB
-  * breakdown of the final rep from a SparkListener — job wall, summed task
-  * time, and the job group/description — so the expensive stage class is
-  * named by evidence instead of guesswork.
+/** Batch profiler over registered queries, all in ONE JVM and one session.
   *
-  * Usage: runMain graft.tools.Prof <q1,q2,...> [sfDir] [reps]
+  * `jobs` runs each query `reps` times through the noop sink. Per rep it
+  * splits CONSTRUCTION wall (eager barrier / scalar-read jobs fired while
+  * the entry function builds its DataFrame) from EXECUTION wall (the save)
+  * and prints the rep's job count and summed task CPU, plus every stage
+  * that ran over 500 ms of task time; then the median task CPU over reps
+  * and a per-JOB breakdown of the final rep (job wall, summed task time,
+  * tasks, description), so the expensive stage class is named by evidence
+  * instead of guesswork. Every figure comes from [[JobLedger]].
+  *
+  * `plans` writes `.explain("formatted")` of each query to
+  * `<outDir>/<query>_<suffix>.txt`, headed by one noop-sink rep's wall —
+  * the plans/rNN evidence artifacts.
+  *
+  * Usage:
+  * {{{
+  * runMain graft.tools.Prof jobs <q1,q2,...> [sfDir] [reps]
+  * runMain graft.tools.Prof plans <outDir> <suffix> <q1,q2,...> [sfDir]
+  * }}}
   */
 object Prof {
-  final case class JobRec(id: Int, var start: Long = 0L, var end: Long = 0L,
-      var taskTimeMs: Long = 0L, var cpuMs: Long = 0L, var tasks: Int = 0,
-      var desc: String = "")
+  private val defaultSf = "/root/testdata/sf0.1"
 
-  def main(args: Array[String]): Unit = {
-    val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def main(args: Array[String]): Unit = args.toList match {
+    case "jobs" :: names :: rest =>
+      withSession(profile(_, split(names),
+        rest.headOption.getOrElse(defaultSf), rest.lift(1).fold(3)(_.toInt)))
+    case "plans" :: outDir :: suffix :: names :: rest =>
+      withSession(dumpPlans(_, outDir, suffix, split(names),
+        rest.headOption.getOrElse(defaultSf)))
+    case _ =>
+      System.err.println("usage: Prof jobs <q,...> [sfDir] [reps]\n" +
+        "       Prof plans <outDir> <suffix> <q,...> [sfDir]")
+      sys.exit(2)
+  }
+
+  private def split(names: String): Seq[String] =
+    names.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  private def withSession(run: SparkSession => Unit): Unit = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("PROF_PAR_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("PROF_ADVISORY", "64m"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark) finally spark.stop()
+  }
 
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
-    val stageToJob = mutable.HashMap.empty[Int, Int]
-    // written by the main thread, read by the listener-bus thread
-    @volatile var recording = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
-        val r = JobRec(e.jobId, start = e.time)
-        r.desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.synchronized { jobs(e.jobId) = r }
-        e.stageIds.foreach(s => stageToJob.synchronized { stageToJob(s) = e.jobId })
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (recording) {
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (recording) {
-        val j = stageToJob.synchronized { stageToJob.get(e.stageId) }
-        j.foreach { id =>
-          jobs.synchronized {
-            jobs.get(id).foreach { r =>
-              r.tasks += 1
-              if (e.taskMetrics != null) {
-                r.taskTimeMs += e.taskMetrics.executorRunTime
-                r.cpuMs += e.taskMetrics.executorCpuTime / 1000000L
-              }
-            }
-          }
-        }
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (recording) {
-          val i = e.stageInfo
-          val t = Option(i.taskMetrics).map(_.executorRunTime).getOrElse(0L)
-          val gc = Option(i.taskMetrics).map(_.jvmGCTime).getOrElse(0L)
-          val cpu = Option(i.taskMetrics).map(_.executorCpuTime / 1000000L)
-            .getOrElse(0L)
-          if (t > 500L)
-            println(f"[prof]   stage ${i.stageId}%4d task ${t / 1e3}%7.2f s " +
-              f"cpu ${cpu / 1e3}%7.2f s gc ${gc / 1e3}%5.2f s " +
-              f"tasks ${i.numTasks}%4d  ${i.name.take(100)}")
-        }
-    })
-
+  private def profile(spark: SparkSession, names: Seq[String], sfDir: String,
+      reps: Int): Unit =
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       println(s"==== $name ====")
-      val cpus = (1 to reps).map { i =>
-        // drain first: events of earlier reps still queued on the bus must
-        // not land in the cleared maps once recording is on
-        org.apache.spark.sql.GraftBridge.drain(spark)
-        jobs.clear(); stageToJob.clear(); recording = true
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        val t2 = System.nanoTime()
-        org.apache.spark.sql.GraftBridge.drain(spark); recording = false
-        val cpu = jobs.values.map(_.cpuMs).sum
-        println(f"[prof] $name rep $i: construct ${(t1 - t0) / 1e9}%.2f s, " +
-          f"exec ${(t2 - t1) / 1e9}%.2f s, total ${(t2 - t0) / 1e9}%.2f s, " +
-          f"${jobs.size} jobs, task cpu ${cpu / 1e3}%.2f s")
+      val recorded = (1 to reps).map { i =>
+        val ((construct, exec), jobs) = JobLedger.record(spark) {
+          val t0 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          df.write.mode("overwrite").format("noop").save()
+          (t1 - t0, System.nanoTime() - t1)
+        }
+        for (j <- jobs; s <- j.stages if s.runMs > 500L)
+          println(f"[prof]   stage ${s.id}%4d task ${s.runMs / 1e3}%7.2f s " +
+            f"cpu ${s.cpuNs / 1e9}%7.2f s gc ${s.gcMs / 1e3}%5.2f s " +
+            f"tasks ${s.tasks}%4d  ${s.name.take(100)}")
+        println(f"[prof] $name rep $i: construct ${construct / 1e9}%.2f s, " +
+          f"exec ${exec / 1e9}%.2f s, total ${(construct + exec) / 1e9}%.2f s, " +
+          f"${jobs.size} jobs, task cpu ${jobs.map(_.cpuNs).sum / 1e9}%.2f s")
         spark.catalog.clearCache()
-        cpu
+        jobs
       }
-      println(f"[prof] $name median task cpu ${cpus.sorted.apply(reps / 2) / 1e3}%.2f s")
-      val rows = jobs.values.toSeq.sortBy(-_.taskTimeMs)
-      val totWall = jobs.values.map(r => (r.end - r.start).max(0L)).sum
-      val totTask = jobs.values.map(_.taskTimeMs).sum
-      println(f"[prof] $name last rep: ${jobs.size} jobs, " +
-        f"sum job wall ${totWall / 1e3}%.2f s, sum task time ${totTask / 1e3}%.2f s")
-      rows.take(18).foreach { r =>
-        println(f"[prof]   job ${r.id}%4d wall ${(r.end - r.start).max(0L) / 1e3}%6.2f s " +
-          f"task ${r.taskTimeMs / 1e3}%7.2f s tasks ${r.tasks}%4d  ${r.desc.take(90)}")
+      val cpu = recorded.map(_.map(_.cpuNs).sum).sorted.apply(reps / 2)
+      println(f"[prof] $name median task cpu ${cpu / 1e9}%.2f s")
+      val last = recorded.last
+      println(f"[prof] $name last rep: ${last.size} jobs, " +
+        f"sum job wall ${last.map(_.wallMs).sum / 1e3}%.2f s, " +
+        f"sum task time ${last.map(_.runMs).sum / 1e3}%.2f s")
+      last.sortBy(-_.runMs).take(18).foreach { j =>
+        println(f"[prof]   job ${j.id}%4d wall ${j.wallMs / 1e3}%6.2f s " +
+          f"task ${j.runMs / 1e3}%7.2f s tasks ${j.tasks}%4d  " +
+          j.description.take(90))
       }
     }
-    spark.stop()
+
+  private def dumpPlans(spark: SparkSession, outDir: String, suffix: String,
+      names: Seq[String], sfDir: String): Unit = {
+    new File(outDir).mkdirs()
+    for (name <- names) {
+      val fn = graft.SparkEntry.queries(name)
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      val sec = (System.nanoTime() - t0) / 1e9
+      val w = new PrintWriter(new File(outDir, s"${name}_$suffix.txt"))
+      try {
+        w.println(f"[plandump] $name $suffix: noop-sink rep $sec%.2f s (sfDir=$sfDir, local[$cpus])")
+        w.println(plan)
+      } finally w.close()
+      println(f"[plandump] $name $suffix done ($sec%.2f s)")
+    }
   }
 }

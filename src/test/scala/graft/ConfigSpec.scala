@@ -94,24 +94,17 @@ class OverrideHistorySpec extends GraftSpec {
   }
 
   test("round-trips through the history file; zero streaks are dropped; torn/missing files read empty") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ohist")
+    val dir = tempDir("graft_ohist")
     val p = dir.resolve("sub").resolve("override_history.json")
-    try {
-      assert(OverrideHistory.read(p) === Map.empty, "missing file reads empty")
-      OverrideHistory.write(p, Map("a" -> 2, "b" -> 0, "c" -> 1))
-      assert(java.nio.file.Files.readString(p).startsWith("{\"a\":2"))
-      assert(OverrideHistory.read(p) === Map("a" -> 2, "c" -> 1),
-        "zero entries carry no information")
-      java.nio.file.Files.writeString(p, "{\"a\":2,\"c\"")
-      assert(OverrideHistory.read(p) === Map("a" -> 2),
-        "a torn file yields its intact prefix, never a crash")
-      java.nio.file.Files.writeString(p, "not json at all")
-      assert(OverrideHistory.read(p) === Map.empty)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    assert(OverrideHistory.read(p) === Map.empty, "missing file reads empty")
+    OverrideHistory.write(p, Map("a" -> 2, "b" -> 0, "c" -> 1))
+    assert(java.nio.file.Files.readString(p).startsWith("{\"a\":2"))
+    assert(OverrideHistory.read(p) === Map("a" -> 2, "c" -> 1),
+      "zero entries carry no information")
+    java.nio.file.Files.writeString(p, "{\"a\":2,\"c\"")
+    assert(OverrideHistory.read(p) === Map("a" -> 2),
+      "a torn file yields its intact prefix, never a crash")
+    java.nio.file.Files.writeString(p, "not json at all")
+    assert(OverrideHistory.read(p) === Map.empty)
   }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.{Compaction, Ingest, Warehouse}
 import graft.model.{Config, DailyReportCfg, DatabaseDetails, Features, ParsedApache, ParsedAuthfail}
+import graft.obs.JobLedger
 import graft.render.DailyReport
 
 /** `DailyReport.build` over a warehouse written through the engine's own
@@ -74,8 +75,8 @@ class DailyReportSpec extends GraftSpec {
     val wh = engineWarehouse()
     val first = build(wh).body
     build(wh)
-    var body = ""
-    val jobs = jobDescriptions { body = build(wh).body }
+    val (body, ledger) = JobLedger.record(spark)(build(wh).body)
+    val jobs = ledger.map(_.description)
     info(s"jobs: ${jobs.size} (${jobs.groupBy(identity).map { case (d, n) =>
       s"$d ${n.size}" }.toSeq.sorted.mkString(", ")})")
     assert(jobs.size <= 9, jobs.mkString("\n"))

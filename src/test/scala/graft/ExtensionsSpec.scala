@@ -115,8 +115,7 @@ class ExtensionsSpec extends GraftSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     GraftExtensions.registerAll(spark)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_bpe_sql").resolve("root").toString
+    val root = tempDir("graft_bpe_sql").resolve("root").toString
     val dict = Seq(("abab", 10L), ("abc", 5L), ("bc", 3L))
       .toDF("w", "freq")
     graft.ops.Bpe.buildBpeModelRoot(spark, dict, numMerges = 3, root)

@@ -304,7 +304,7 @@ class IngestSpec extends GraftSpec {
 
   test("bucketed tables join and aggregate with zero shuffle exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val dir = Files.createTempDirectory("graft-bkt")
+    val dir = tempDir("graft-bkt")
     val facts = (1L to 400L).map(i => (i % 40, i, s"t${i % 5}"))
       .toDF("user_id", "event_id", "event_type")
     val dim = (0L until 40L).map(i => (i, s"user$i")).toDF("user_id", "name")
@@ -648,11 +648,11 @@ class IngestSpec extends GraftSpec {
     // measure of what parquet min/max stats can skip.
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey").cast("long"), col("l_partkey").cast("long"))
-    val oneDim = Files.createTempDirectory("zorder-1d").toString
+    val oneDim = tempDir("zorder-1d").toString
     li.repartitionByRange(8, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")
       .write.mode("overwrite").parquet(oneDim)
-    val zDir = Files.createTempDirectory("zorder-2d").toString
+    val zDir = tempDir("zorder-2d").toString
     Ingest.writeZOrdered(li, zDir, "l_orderkey", "l_partkey")
     def meanPartkeySpan(path: String): Double = {
       val spans = spark.read.parquet(path)
@@ -671,7 +671,7 @@ class IngestSpec extends GraftSpec {
 
   test("writeZOrdered refuses unusable z-order columns with the column named") {
     import spark.implicits._
-    val out = Files.createTempDirectory("zorder-bad").toString
+    val out = tempDir("zorder-bad").toString
     // alphabetic column: cast -> long is null for every row
     val alpha = Seq(("alice", 1L), ("bob", 2L)).toDF("username", "ts")
     val e1 = intercept[IllegalArgumentException] {

@@ -213,7 +213,7 @@ class OpsSpec extends GraftSpec {
     // tamper proof: a corpus dir with its own feature root, one base
     // survivor's persisted img_width bumped — a plan that re-decoded the
     // base would overwrite the tamper with the true decode
-    val tmp = java.nio.file.Files.createTempDirectory("graft_e09")
+    val tmp = tempDir("graft_e09")
     java.nio.file.Files.createSymbolicLink(tmp.resolve("documents.parquet"),
       java.nio.file.Paths.get(sf, "documents.parquet"))
     val root = tmp.resolve("media_features").toString
@@ -283,8 +283,7 @@ class OpsSpec extends GraftSpec {
     // tokens carry ex_id 10; the index holds 2 + 1 distinct grams
     assert(idx.collect().map(_.getLong(1)).toSet === Set(10L, 20L))
     assert(idx.count() === 3)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vididx_tamper").resolve("index").toString
+    val root = tempDir("graft_vididx_tamper").resolve("index").toString
     idx.write.parquet(root)
     // arrival 100 re-muxes 10's inventory, 101 trims one track (J = 1/2),
     // 102 refused decode (NULL text)
@@ -302,8 +301,7 @@ class OpsSpec extends GraftSpec {
     // tamper: drop ex 10's rows from the persisted table — the SAME
     // arrivals must now read new (a plan that re-derived the corpus side
     // would still find 10)
-    val tampered = java.nio.file.Files
-      .createTempDirectory("graft_vididx_tamper2").resolve("index").toString
+    val tampered = tempDir("graft_vididx_tamper2").resolve("index").toString
     spark.read.parquet(root).filter(col("ex_id") =!= 10L).write.parquet(tampered)
     assert(verdicts(tampered) === Set((100L, "new", None),
       (101L, "new", None), (102L, "invalid", None)))
@@ -380,8 +378,7 @@ class OpsSpec extends GraftSpec {
     import graft.ops.Bpe
     val dict = Seq(("abab", 10L), ("abcabc", 5L), ("bca", 3L), ("cab", 2L))
       .toDF("w", "freq")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_bpe_root").resolve("root").toString
+    val root = tempDir("graft_bpe_root").resolve("root").toString
     val builtId = Bpe.buildBpeModelRoot(spark, dict, numMerges = 4, root)
     // a loaded model and a retrained model must be the same model
     val (loadedId, loaded) = Bpe.loadBpeModel(spark, root)
@@ -397,8 +394,7 @@ class OpsSpec extends GraftSpec {
     // TAMPER: rewrite one merge's left symbol in place — schema-valid,
     // rank-valid, but the content hash no longer matches the stamped
     // model_id; applying it would tokenize subtly differently forever
-    val tampered = java.nio.file.Files
-      .createTempDirectory("graft_bpe_tamper").resolve("root").toString
+    val tampered = tempDir("graft_bpe_tamper").resolve("root").toString
     val rows = spark.read.parquet(s"$root/merges")
     rows.withColumn("left_sym",
         when(col("merge_rank") === 2L, lit("zz")).otherwise(col("left_sym")))
@@ -410,8 +406,7 @@ class OpsSpec extends GraftSpec {
     assert(e1.getMessage.contains("content hash"))
     // FOREIGN FAMILY: a root trained under different replay semantics
     // must refuse before any token is produced
-    val foreign = java.nio.file.Files
-      .createTempDirectory("graft_bpe_family").resolve("root").toString
+    val foreign = tempDir("graft_bpe_family").resolve("root").toString
     rows.write.parquet(s"$foreign/merges")
     spark.read.parquet(s"$root/model")
       .withColumn("bpe_family", lit(99))
@@ -421,8 +416,7 @@ class OpsSpec extends GraftSpec {
     }
     assert(e2.getMessage.contains("family"))
     // TORN: manifest declares more merges than the table holds
-    val torn = java.nio.file.Files
-      .createTempDirectory("graft_bpe_torn").resolve("root").toString
+    val torn = tempDir("graft_bpe_torn").resolve("root").toString
     rows.filter(col("merge_rank") < 2L).write.parquet(s"$torn/merges")
     spark.read.parquet(s"$root/model").write.parquet(s"$torn/model")
     val e3 = intercept[IllegalArgumentException] {
@@ -556,8 +550,7 @@ class OpsSpec extends GraftSpec {
     // so the clone pair is the scale-independent witness (the d30 pattern)
     val vecs = base.updated(39, (39L, base(5)._2.clone()))
     val df = vecs.toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sq8_spec").resolve("container").toString
+    val root = tempDir("graft_sq8_spec").resolve("container").toString
     // build on <30 only; the quantizer freezes at commit
     assert(Similarity.commitSq8Root(spark,
       df.filter(col("vec_id") < 30), root, planes = 4) === Some(1L))
@@ -864,47 +857,40 @@ class OpsSpec extends GraftSpec {
     // the result — same discipline as the StreamingSpec batch-parity tests.
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val pred = col("vec_id") % 40 === 0
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_idx")
-    try {
-      val (cb, codes) = Similarity.buildPqIndex(emb)
-      cb.write.parquet(tmp.resolve("pq_codebooks.parquet").toString)
-      codes.write.parquet(tmp.resolve("pq_codes.parquet").toString)
-      val cbR = spark.read.parquet(tmp.resolve("pq_codebooks.parquet").toString)
-      val codesR = spark.read.parquet(tmp.resolve("pq_codes.parquet").toString)
-      val direct = Similarity.topkPq(emb, pred, k = 3).collect().toSeq
-      val indexed = Similarity.topkPqAgainstIndex(emb.filter(pred),
-        cbR, codesR, k = 3).collect().toSeq
-      assert(indexed === direct, "PQ persisted-index result diverged")
-      // geometry guard: a reader with mismatched sub-space slicing must be
-      // refused loudly, not allowed to score garbage (planes-guard class)
-      val e = intercept[IllegalArgumentException] {
-        Similarity.topkPqAgainstIndex(emb.filter(pred), cbR, codesR, k = 3,
-          subspaces = 8, dims = 64).collect()
-      }
-      assert(e.getMessage.contains("subspaces"))
-
-      val (ict, icb, icodes) = Similarity.buildIvfPqIndex(emb)
-      ict.write.parquet(tmp.resolve("ivfpq_centroids.parquet").toString)
-      icb.write.parquet(tmp.resolve("ivfpq_codebooks.parquet").toString)
-      icodes.write.parquet(tmp.resolve("ivfpq_codes.parquet").toString)
-      val ictR = spark.read.parquet(tmp.resolve("ivfpq_centroids.parquet").toString)
-      val icbR = spark.read.parquet(tmp.resolve("ivfpq_codebooks.parquet").toString)
-      val icodesR = spark.read.parquet(tmp.resolve("ivfpq_codes.parquet").toString)
-      val direct2 = Similarity.topkIvfPq(emb, pred, k = 3).collect().toSeq
-      val indexed2 = Similarity.topkIvfPqAgainstIndex(emb.filter(pred), emb,
-        ictR, icbR, icodesR, k = 3).collect().toSeq
-      assert(indexed2 === direct2, "IVF-PQ persisted-index result diverged")
-      val e2 = intercept[IllegalArgumentException] {
-        Similarity.topkIvfPqAgainstIndex(emb.filter(pred), emb,
-          ictR, icbR, icodesR, k = 3, nCells = 4).collect()
-      }
-      assert(e2.getMessage.contains("nCells"))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    val tmp = tempDir("graft_pq_idx")
+    val (cb, codes) = Similarity.buildPqIndex(emb)
+    cb.write.parquet(tmp.resolve("pq_codebooks.parquet").toString)
+    codes.write.parquet(tmp.resolve("pq_codes.parquet").toString)
+    val cbR = spark.read.parquet(tmp.resolve("pq_codebooks.parquet").toString)
+    val codesR = spark.read.parquet(tmp.resolve("pq_codes.parquet").toString)
+    val direct = Similarity.topkPq(emb, pred, k = 3).collect().toSeq
+    val indexed = Similarity.topkPqAgainstIndex(emb.filter(pred),
+      cbR, codesR, k = 3).collect().toSeq
+    assert(indexed === direct, "PQ persisted-index result diverged")
+    // geometry guard: a reader with mismatched sub-space slicing must be
+    // refused loudly, not allowed to score garbage (planes-guard class)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.topkPqAgainstIndex(emb.filter(pred), cbR, codesR, k = 3,
+        subspaces = 8, dims = 64).collect()
     }
+    assert(e.getMessage.contains("subspaces"))
+
+    val (ict, icb, icodes) = Similarity.buildIvfPqIndex(emb)
+    ict.write.parquet(tmp.resolve("ivfpq_centroids.parquet").toString)
+    icb.write.parquet(tmp.resolve("ivfpq_codebooks.parquet").toString)
+    icodes.write.parquet(tmp.resolve("ivfpq_codes.parquet").toString)
+    val ictR = spark.read.parquet(tmp.resolve("ivfpq_centroids.parquet").toString)
+    val icbR = spark.read.parquet(tmp.resolve("ivfpq_codebooks.parquet").toString)
+    val icodesR = spark.read.parquet(tmp.resolve("ivfpq_codes.parquet").toString)
+    val direct2 = Similarity.topkIvfPq(emb, pred, k = 3).collect().toSeq
+    val indexed2 = Similarity.topkIvfPqAgainstIndex(emb.filter(pred), emb,
+      ictR, icbR, icodesR, k = 3).collect().toSeq
+    assert(indexed2 === direct2, "IVF-PQ persisted-index result diverged")
+    val e2 = intercept[IllegalArgumentException] {
+      Similarity.topkIvfPqAgainstIndex(emb.filter(pred), emb,
+        ictR, icbR, icodesR, k = 3, nCells = 4).collect()
+    }
+    assert(e2.getMessage.contains("nCells"))
   }
 
   test("PQ append/drift: appending codes bitwise like the build; drift " +
@@ -971,111 +957,95 @@ class OpsSpec extends GraftSpec {
   test("PQ codes compaction: marker-committed generations, torn run " +
       "invisible, GC after one grace cycle") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_compact")
+    val idx = tempDir("graft_pq_compact")
       .resolve("index").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("vec_id")).collect().toSeq
-    try {
-      // build on a third of the corpus, append two "batches" of the rest
-      val base = emb.filter(col("vec_id") % 3 === 0)
-      val (cb, codes) = Similarity.buildPqIndex(base)
-      cb.write.parquet(s"$idx/codebooks")
-      codes.write.parquet(s"$idx/codes")
-      def appendBatch(b: Long, pred: org.apache.spark.sql.Column): Unit = {
-        val batch = Similarity.appendToPqIndex(emb.filter(pred), cb)
-        assert(batch.count() > 0, s"test batch $b must be non-empty")
-        batch.withColumn("batch_id", lit(b))
-          .write.partitionBy("batch_id").mode("append")
-          .parquet(s"$idx/codes_appended")
-      }
-      appendBatch(0, col("vec_id") % 3 === 1)
-      appendBatch(1, col("vec_id") % 3 === 2)
-      val before = rows(Similarity.readPqCodes(spark, idx))
-      assert(before.size === emb.count())
-      // torn compaction: a generation dir WITHOUT its marker is invisible
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$idx/codes_g99"))
-      assert(rows(Similarity.readPqCodes(spark, idx)) === before)
-      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$idx/codes_g99"))
-      // compact 1: absorbs batches 0-1; content identical; delta retained
-      // for in-flight readers (GC happens NEXT run)
-      val g1 = Similarity.compactPqIndex(spark, idx)
-      assert(g1 === 1L)
-      assert(rows(Similarity.readPqCodes(spark, idx)) === before)
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=1")))
-      // a post-compaction batch stays live in the delta
-      appendBatch(2, col("vec_id") === 0) // re-coding vec 0 as a new row
-      assert(rows(Similarity.readPqCodes(spark, idx)).size
-        === before.size + 1)
-      // compact 2: absorbs batch 2, GCs gen-0 leftovers = batches <= 1
-      val g2 = Similarity.compactPqIndex(spark, idx)
-      assert(g2 === 2L)
-      assert(rows(Similarity.readPqCodes(spark, idx)).size
-        === before.size + 1)
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=0")))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=1")))
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_g1")),
-        "previous generation survives one grace cycle")
-      // compact 3 (no new batches): content stable, gen1 now GC'd
-      Similarity.compactPqIndex(spark, idx)
-      assert(rows(Similarity.readPqCodes(spark, idx)).size
-        === before.size + 1)
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_g1")))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(idx).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    // build on a third of the corpus, append two "batches" of the rest
+    val base = emb.filter(col("vec_id") % 3 === 0)
+    val (cb, codes) = Similarity.buildPqIndex(base)
+    cb.write.parquet(s"$idx/codebooks")
+    codes.write.parquet(s"$idx/codes")
+    def appendBatch(b: Long, pred: org.apache.spark.sql.Column): Unit = {
+      val batch = Similarity.appendToPqIndex(emb.filter(pred), cb)
+      assert(batch.count() > 0, s"test batch $b must be non-empty")
+      batch.withColumn("batch_id", lit(b))
+        .write.partitionBy("batch_id").mode("append")
+        .parquet(s"$idx/codes_appended")
     }
+    appendBatch(0, col("vec_id") % 3 === 1)
+    appendBatch(1, col("vec_id") % 3 === 2)
+    val before = rows(Similarity.readPqCodes(spark, idx))
+    assert(before.size === emb.count())
+    // torn compaction: a generation dir WITHOUT its marker is invisible
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$idx/codes_g99"))
+    assert(rows(Similarity.readPqCodes(spark, idx)) === before)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$idx/codes_g99"))
+    // compact 1: absorbs batches 0-1; content identical; delta retained
+    // for in-flight readers (GC happens NEXT run)
+    val g1 = Similarity.compactPqIndex(spark, idx)
+    assert(g1 === 1L)
+    assert(rows(Similarity.readPqCodes(spark, idx)) === before)
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=1")))
+    // a post-compaction batch stays live in the delta
+    appendBatch(2, col("vec_id") === 0) // re-coding vec 0 as a new row
+    assert(rows(Similarity.readPqCodes(spark, idx)).size
+      === before.size + 1)
+    // compact 2: absorbs batch 2, GCs gen-0 leftovers = batches <= 1
+    val g2 = Similarity.compactPqIndex(spark, idx)
+    assert(g2 === 2L)
+    assert(rows(Similarity.readPqCodes(spark, idx)).size
+      === before.size + 1)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=0")))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=1")))
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_g1")),
+      "previous generation survives one grace cycle")
+    // compact 3 (no new batches): content stable, gen1 now GC'd
+    Similarity.compactPqIndex(spark, idx)
+    assert(rows(Similarity.readPqCodes(spark, idx)).size
+      === before.size + 1)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_g1")))
   }
 
   test("PQ compaction claim-lock: a held lock no-ops the loser, a stale " +
       "lock with no progress is stolen") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_lock")
+    val idx = tempDir("graft_pq_lock")
       .resolve("index").toString
-    try {
-      val (cb, codes) = Similarity.buildPqIndex(
-        emb.filter(col("vec_id") % 2 === 0))
-      cb.write.parquet(s"$idx/codebooks")
-      codes.write.parquet(s"$idx/codes")
-      Similarity.appendToPqIndex(emb.filter(col("vec_id") % 2 === 1), cb)
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$idx/codes_appended")
-      // a LIVE concurrent compactor holds the lock: this run must no-op —
-      // no new generation, delta untouched, current gen (0 = base) returned
-      val lock = java.nio.file.Paths.get(s"$idx/_GRAFT_PQ_COMPACT.lock")
-      java.nio.file.Files.createFile(lock)
-      assert(Similarity.compactPqIndex(spark, idx) === 0L)
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_g1")),
-        "loser must not write a generation")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=0")))
-      // a STALE lock (crashed holder — old mtime, no marked progress) is
-      // stolen and the chain continues intact
-      java.nio.file.Files.setLastModifiedTime(lock,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 3600 * 1000L))
-      assert(Similarity.compactPqIndex(spark, idx) === 1L)
-      assert(!java.nio.file.Files.exists(lock), "lock released after commit")
-      assert(Similarity.readPqCodes(spark, idx)
-        .select("vec_id").distinct().count() === emb.count())
-      // sequential runs still chain normally after the steal
-      assert(Similarity.compactPqIndex(spark, idx) === 2L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(idx).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    val (cb, codes) = Similarity.buildPqIndex(
+      emb.filter(col("vec_id") % 2 === 0))
+    cb.write.parquet(s"$idx/codebooks")
+    codes.write.parquet(s"$idx/codes")
+    Similarity.appendToPqIndex(emb.filter(col("vec_id") % 2 === 1), cb)
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$idx/codes_appended")
+    // a LIVE concurrent compactor holds the lock: this run must no-op —
+    // no new generation, delta untouched, current gen (0 = base) returned
+    val lock = java.nio.file.Paths.get(s"$idx/_GRAFT_PQ_COMPACT.lock")
+    java.nio.file.Files.createFile(lock)
+    assert(Similarity.compactPqIndex(spark, idx) === 0L)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_g1")),
+      "loser must not write a generation")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=0")))
+    // a STALE lock (crashed holder — old mtime, no marked progress) is
+    // stolen and the chain continues intact
+    java.nio.file.Files.setLastModifiedTime(lock,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 3600 * 1000L))
+    assert(Similarity.compactPqIndex(spark, idx) === 1L)
+    assert(!java.nio.file.Files.exists(lock), "lock released after commit")
+    assert(Similarity.readPqCodes(spark, idx)
+      .select("vec_id").distinct().count() === emb.count())
+    // sequential runs still chain normally after the steal
+    assert(Similarity.compactPqIndex(spark, idx) === 2L)
   }
 
   test("minhashLsh band-frequency cap bounds a degenerate hot band") {
@@ -1097,114 +1067,98 @@ class OpsSpec extends GraftSpec {
       "readers flip to a root bit-identical to a cold build") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
-    val roots = java.nio.file.Files.createTempDirectory("graft_pq_roots")
+    val roots = tempDir("graft_pq_roots")
       .resolve("container").toString
-    try {
-      // cold start: a container with no committed version builds v1
-      assert(Similarity.rebuildPqRootIfDrifted(spark, emb, roots)
-        === Some(1L))
-      val v1 = Similarity.resolvePqIndexPath(spark, roots)
-      assert(v1.endsWith("v-00000001"))
-      // arrivals from a DIFFERENT distribution (scaled + shifted) append
-      // under v1's frozen codebooks — the index serves them, badly
-      val drifted = emb.filter(col("vec_id") < 200)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x * 10.0 + 5.0 AS FLOAT))")
-            .as("embedding"))
-      val cb1 = spark.read.parquet(s"$v1/codebooks")
-      Similarity.appendToPqIndex(drifted, cb1)
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
-      val corpus = emb.unionByName(drifted)
-      // the monitor sees the appended cohort's error blow past trained ×1.25
-      val d = Similarity.pqRootDrift(spark, corpus, v1).collect()
-        .map(r => r.getString(0) -> r.getDouble(2)).toMap
-      assert(d("appended") > d("trained") * 1.25,
-        s"drift fixture must trip: $d")
-      // ... so the maintenance entry rebuilds into v2 and flips readers
-      assert(Similarity.rebuildPqRootIfDrifted(spark, corpus, roots)
-        === Some(2L))
-      val v2 = Similarity.resolvePqIndexPath(spark, roots)
-      assert(v2.endsWith("v-00000002"))
-      // the flipped root is BIT-IDENTICAL to a cold build on the corpus
-      val (coldCb, coldCodes) = Similarity.buildPqIndex(corpus)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("vec_id")).collect().toSeq
-      assert(rows(spark.read.parquet(s"$v2/codes")) === rows(coldCodes))
-      // ... and queries against it reproduce the cold build's neighbors
-      val q = corpus.filter(col("vec_id") % 40 === 0 && col("vec_id") < 2000)
-      assert(rows(Similarity.topkPqAgainstIndex(q,
-          spark.read.parquet(s"$v2/codebooks"),
-          Similarity.readPqCodes(spark, v2), k = 3))
-        === rows(Similarity.topkPqAgainstIndex(q, coldCb, coldCodes, k = 3)))
-      // fresh appends now measure against v2's training snapshot: no trip
-      assert(Similarity.rebuildPqRootIfDrifted(spark, corpus, roots) === None)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(roots).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    // cold start: a container with no committed version builds v1
+    assert(Similarity.rebuildPqRootIfDrifted(spark, emb, roots)
+      === Some(1L))
+    val v1 = Similarity.resolvePqIndexPath(spark, roots)
+    assert(v1.endsWith("v-00000001"))
+    // arrivals from a DIFFERENT distribution (scaled + shifted) append
+    // under v1's frozen codebooks — the index serves them, badly
+    val drifted = emb.filter(col("vec_id") < 200)
+      .select((col("vec_id") + 100000).as("vec_id"),
+        expr("transform(embedding, x -> CAST(x * 10.0 + 5.0 AS FLOAT))")
+          .as("embedding"))
+    val cb1 = spark.read.parquet(s"$v1/codebooks")
+    Similarity.appendToPqIndex(drifted, cb1)
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
+    val corpus = emb.unionByName(drifted)
+    // the monitor sees the appended cohort's error blow past trained ×1.25
+    val d = Similarity.pqRootDrift(spark, corpus, v1).collect()
+      .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    assert(d("appended") > d("trained") * 1.25,
+      s"drift fixture must trip: $d")
+    // ... so the maintenance entry rebuilds into v2 and flips readers
+    assert(Similarity.rebuildPqRootIfDrifted(spark, corpus, roots)
+      === Some(2L))
+    val v2 = Similarity.resolvePqIndexPath(spark, roots)
+    assert(v2.endsWith("v-00000002"))
+    // the flipped root is BIT-IDENTICAL to a cold build on the corpus
+    val (coldCb, coldCodes) = Similarity.buildPqIndex(corpus)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("vec_id")).collect().toSeq
+    assert(rows(spark.read.parquet(s"$v2/codes")) === rows(coldCodes))
+    // ... and queries against it reproduce the cold build's neighbors
+    val q = corpus.filter(col("vec_id") % 40 === 0 && col("vec_id") < 2000)
+    assert(rows(Similarity.topkPqAgainstIndex(q,
+        spark.read.parquet(s"$v2/codebooks"),
+        Similarity.readPqCodes(spark, v2), k = 3))
+      === rows(Similarity.topkPqAgainstIndex(q, coldCb, coldCodes, k = 3)))
+    // fresh appends now measure against v2's training snapshot: no trip
+    assert(Similarity.rebuildPqRootIfDrifted(spark, corpus, roots) === None)
   }
 
   test("IVF-PQ drift-triggered rebuild grows the coarse quantizer with " +
       "the corpus and flips readers") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
-    val roots = java.nio.file.Files.createTempDirectory("graft_ivfpq_roots")
+    val roots = tempDir("graft_ivfpq_roots")
       .resolve("container").toString
-    try {
-      assert(Similarity.rebuildIvfPqRootIfDrifted(spark, emb, roots)
-        === Some(1L))
-      val v1 = Similarity.resolvePqIndexPath(spark, roots)
-      val drifted = emb.filter(col("vec_id") < 200)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x * 10.0 + 5.0 AS FLOAT))")
-            .as("embedding"))
-      Similarity.appendToIvfPqIndex(drifted,
-          spark.read.parquet(s"$v1/centroids"),
-          spark.read.parquet(s"$v1/codebooks"))
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
-      val corpus = emb.unionByName(drifted)
-      assert(Similarity.rebuildIvfPqRootIfDrifted(spark, corpus, roots)
-        === Some(2L))
-      val v2 = Similarity.resolvePqIndexPath(spark, roots)
-      assert(v2.endsWith("v-00000002"))
-      // the coarse quantizer GREW: v1 trained 500 vecs in 8 cells
-      // (cell size 62); 700 vecs rebuild to ceil(700/62) = 12 cells
-      val g2 = spark.read.parquet(s"$v2/centroids")
-        .select("n_cells").head().getInt(0)
-      assert(g2 === 12, s"n_cells must grow with the corpus, got $g2")
-      // bit-identical to a cold build at the same grown geometry
-      val (coldCt, coldCb, coldCodes) =
-        Similarity.buildIvfPqIndex(corpus, nCells = g2)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("vec_id")).collect().toSeq
-      assert(rows(spark.read.parquet(s"$v2/codes")) === rows(coldCodes))
-      val q = corpus.filter(col("vec_id") % 40 === 0 && col("vec_id") < 2000)
-      def qrows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("query_id"), col("rank")).collect().toSeq
-      assert(qrows(Similarity.topkIvfPqAgainstIndex(q, corpus,
-          spark.read.parquet(s"$v2/centroids"),
-          spark.read.parquet(s"$v2/codebooks"),
-          Similarity.readPqCodes(spark, v2), k = 3, nCells = g2))
-        === qrows(Similarity.topkIvfPqAgainstIndex(q, corpus,
-          coldCt, coldCb, coldCodes, k = 3, nCells = g2)))
-      assert(Similarity.rebuildIvfPqRootIfDrifted(spark, corpus, roots)
-        === None)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(roots).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    assert(Similarity.rebuildIvfPqRootIfDrifted(spark, emb, roots)
+      === Some(1L))
+    val v1 = Similarity.resolvePqIndexPath(spark, roots)
+    val drifted = emb.filter(col("vec_id") < 200)
+      .select((col("vec_id") + 100000).as("vec_id"),
+        expr("transform(embedding, x -> CAST(x * 10.0 + 5.0 AS FLOAT))")
+          .as("embedding"))
+    Similarity.appendToIvfPqIndex(drifted,
+        spark.read.parquet(s"$v1/centroids"),
+        spark.read.parquet(s"$v1/codebooks"))
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
+    val corpus = emb.unionByName(drifted)
+    assert(Similarity.rebuildIvfPqRootIfDrifted(spark, corpus, roots)
+      === Some(2L))
+    val v2 = Similarity.resolvePqIndexPath(spark, roots)
+    assert(v2.endsWith("v-00000002"))
+    // the coarse quantizer GREW: v1 trained 500 vecs in 8 cells
+    // (cell size 62); 700 vecs rebuild to ceil(700/62) = 12 cells
+    val g2 = spark.read.parquet(s"$v2/centroids")
+      .select("n_cells").head().getInt(0)
+    assert(g2 === 12, s"n_cells must grow with the corpus, got $g2")
+    // bit-identical to a cold build at the same grown geometry
+    val (coldCt, coldCb, coldCodes) =
+      Similarity.buildIvfPqIndex(corpus, nCells = g2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("vec_id")).collect().toSeq
+    assert(rows(spark.read.parquet(s"$v2/codes")) === rows(coldCodes))
+    val q = corpus.filter(col("vec_id") % 40 === 0 && col("vec_id") < 2000)
+    def qrows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("query_id"), col("rank")).collect().toSeq
+    assert(qrows(Similarity.topkIvfPqAgainstIndex(q, corpus,
+        spark.read.parquet(s"$v2/centroids"),
+        spark.read.parquet(s"$v2/codebooks"),
+        Similarity.readPqCodes(spark, v2), k = 3, nCells = g2))
+      === qrows(Similarity.topkIvfPqAgainstIndex(q, corpus,
+        coldCt, coldCb, coldCodes, k = 3, nCells = g2)))
+    assert(Similarity.rebuildIvfPqRootIfDrifted(spark, corpus, roots)
+      === None)
   }
 
   test("indexed registry entries read a persisted index dir, following its geometry") {
-    // the exact path ScaleProbe/Bench exercise: a dir carrying symlinked
+    // the exact path the Bench overlay exercises: a dir carrying symlinked
     // data tables plus pq_*/ivfpq_* parquet indexes. The IVF-PQ index is
     // deliberately built with NON-default geometry (nCells=4) to prove the
     // reader follows the index's persisted columns, not a hardcoded default
@@ -1212,42 +1166,35 @@ class OpsSpec extends GraftSpec {
     val sfDir = "/root/testdata/sf0.001"
     val emb = Tables.embeddings(spark, sfDir)
     val pred = col("vec_id") % 40 === 0 && col("vec_id") < 2000
-    val tmp = java.nio.file.Files.createTempDirectory("graft_idx_dir")
-    try {
-      for (t <- Seq("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"))
-        java.nio.file.Files.createSymbolicLink(tmp.resolve(s"$t.parquet"),
-          java.nio.file.Paths.get(sfDir, s"$t.parquet"))
-      val (cb, codes) = Similarity.buildPqIndex(emb)
-      cb.write.parquet(tmp.resolve("pq_codebooks.parquet").toString)
-      codes.write.parquet(tmp.resolve("pq_codes.parquet").toString)
-      val (ict, icb, icodes) = Similarity.buildIvfPqIndex(emb, nCells = 4)
-      ict.write.parquet(tmp.resolve("ivfpq_centroids.parquet").toString)
-      icb.write.parquet(tmp.resolve("ivfpq_codebooks.parquet").toString)
-      icodes.write.parquet(tmp.resolve("ivfpq_codes.parquet").toString)
+    val tmp = tempDir("graft_idx_dir")
+    for (t <- Seq("region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings"))
+      java.nio.file.Files.createSymbolicLink(tmp.resolve(s"$t.parquet"),
+        java.nio.file.Paths.get(sfDir, s"$t.parquet"))
+    val (cb, codes) = Similarity.buildPqIndex(emb)
+    cb.write.parquet(tmp.resolve("pq_codebooks.parquet").toString)
+    codes.write.parquet(tmp.resolve("pq_codes.parquet").toString)
+    val (ict, icb, icodes) = Similarity.buildIvfPqIndex(emb, nCells = 4)
+    ict.write.parquet(tmp.resolve("ivfpq_centroids.parquet").toString)
+    icb.write.parquet(tmp.resolve("ivfpq_codebooks.parquet").toString)
+    icodes.write.parquet(tmp.resolve("ivfpq_codes.parquet").toString)
 
-      val viaDir = graft.EntryOps.topkPqIndexed(spark, tmp.toString)
-        .collect().toSeq
-      val direct = Similarity.topkPq(emb, pred, k = 3).collect().toSeq
-      assert(viaDir === direct, "dir-read PQ path diverged from direct")
+    val viaDir = graft.EntryOps.topkPqIndexed(spark, tmp.toString)
+      .collect().toSeq
+    val direct = Similarity.topkPq(emb, pred, k = 3).collect().toSeq
+    assert(viaDir === direct, "dir-read PQ path diverged from direct")
 
-      val viaDir2 = graft.EntryOps.topkIvfPqIndexed(spark, tmp.toString)
-        .collect().toSeq
-      val direct2 = Similarity.topkIvfPqAgainstIndex(emb.filter(pred), emb,
-        ict, icb, icodes, k = 3, nCells = 4).collect().toSeq
-      assert(viaDir2 === direct2,
-        "dir-read IVF-PQ path must follow the index's nCells=4 geometry")
-      // and the geometry really differed from the default build
-      val default2 = Similarity.topkIvfPq(emb, pred, k = 3).collect().toSeq
-      assert(viaDir2 !== default2,
-        "nCells=4 index should produce a different probe set than nCells=8" +
-          " — if equal, the geometry read is untested")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    val viaDir2 = graft.EntryOps.topkIvfPqIndexed(spark, tmp.toString)
+      .collect().toSeq
+    val direct2 = Similarity.topkIvfPqAgainstIndex(emb.filter(pred), emb,
+      ict, icb, icodes, k = 3, nCells = 4).collect().toSeq
+    assert(viaDir2 === direct2,
+      "dir-read IVF-PQ path must follow the index's nCells=4 geometry")
+    // and the geometry really differed from the default build
+    val default2 = Similarity.topkIvfPq(emb, pred, k = 3).collect().toSeq
+    assert(viaDir2 !== default2,
+      "nCells=4 index should produce a different probe set than nCells=8" +
+        " — if equal, the geometry read is untested")
   }
 
   test("reliable barrier mode: storage-backed checkpoints, bit-identical results") {
@@ -1259,7 +1206,7 @@ class OpsSpec extends GraftSpec {
     val edges = Dedup.simhashNearDup64(d, maxHamming = 3)
       .select(col("doc1"), col("doc2"))
     val local = Dedup.clusterComponents(d, edges).collect().toSeq
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck")
+    val ckDir = tempDir("graft_ck")
     val prevCk = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(ckDir.toString)
     spark.conf.set(graft.ops.Barrier.ConfKey, "true")
@@ -1275,10 +1222,6 @@ class OpsSpec extends GraftSpec {
     } finally {
       spark.conf.unset(graft.ops.Barrier.ConfKey)
       prevCk.foreach(spark.sparkContext.setCheckpointDir)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ckDir).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
     }
   }
 
@@ -2115,11 +2058,11 @@ class OpsSpec extends GraftSpec {
     // garbage neighbors. These floors pin recall@3 vs exact brute force on
     // the deterministic sf0.001 fixture (queries vec_id % 40 == 0) just
     // below the measured values. Measured (r14, after the distinct-plane
-    // coefficient fix re-drew the hyperplane family — RecallAudit
-    // regenerates these): s02 .128, s03 .077, s04 .154, s05 .513,
+    // coefficient fix re-drew the hyperplane family; docs/BENCH_NOTES.md
+    // r14): s02 .128, s03 .077, s04 .154, s05 .513,
     // s06 .410, s07 .436, s08 .513. The s03/s04 deltas vs r8's .128/.256
     // are draw noise on this 39-pair fixture (3 vs 5 of 39 hits), not a
-    // quality change: the synthetic-pair collision rates in RecallAudit
+    // quality change: the synthetic-pair collision rates in BENCH_NOTES r14
     // are the statistically meaningful recall measure, and there the new
     // family's banded rate MATCHES the iid 1-(1-r)^T prediction the old
     // shared-plane family silently violated. The knob sensitivity curve
@@ -2190,429 +2133,368 @@ class OpsSpec extends GraftSpec {
       "the flip, re-coded under the new quantizer, idempotently") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
-    val roots = java.nio.file.Files.createTempDirectory("graft_carry")
+    val roots = tempDir("graft_carry")
       .resolve("container").toString
-    try {
-      assert(Similarity.commitPqRoot(spark, emb, roots) === Some(1L))
-      val v1 = Similarity.resolvePqIndexPath(spark, roots)
-      // LATE arrivals: appended to v1's delta AFTER the rebuild snapshot
-      // was taken (the in-flight window the r11 advice flagged) — their
-      // embeddings land in the live corpus table as usual, but the
-      // rebuild's training snapshot missed them
-      val late = emb.filter(col("vec_id") < 30)
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      Similarity.appendToPqIndex(late,
-          spark.read.parquet(s"$v1/codebooks"))
-        .withColumn("batch_id", lit(7L))
-        .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
-      // snapshot-built v2 (misses `late` by construction)
-      assert(Similarity.commitPqRoot(spark, emb, roots) === Some(2L))
-      val v2 = Similarity.resolvePqIndexPath(spark, roots)
-      assert(Similarity.readPqCodes(spark, v2)
-        .filter(col("vec_id") >= 500000).count() === 0L,
-        "fixture: the rebuild must have missed the in-flight appends")
-      // carry-over from the LIVE corpus view closes the window
-      val corpusAll = emb.unionByName(late)
-      Similarity.carryOverAppended(spark, corpusAll, v1, v2)
-      val served = Similarity.readPqCodes(spark, v2)
-      assert(served.filter(col("vec_id") >= 500000).count() === late.count())
-      // original batch id preserved — the replay contract's key
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
-        s"$v2/codes_appended/batch_id=7")))
-      // codes are the NEW quantizer's assignment, bit-for-bit
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("vec_id")).collect().toSeq
-      assert(rows(served.filter(col("vec_id") >= 500000))
-        === rows(Similarity.appendToPqIndex(late,
-          spark.read.parquet(s"$v2/codebooks"))))
-      // a second carry pass is a no-op (anti-join against what v2 SERVES)
-      Similarity.carryOverAppended(spark, corpusAll, v1, v2)
-      assert(Similarity.readPqCodes(spark, v2)
-        .filter(col("vec_id") >= 500000).count() === late.count())
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(roots).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    assert(Similarity.commitPqRoot(spark, emb, roots) === Some(1L))
+    val v1 = Similarity.resolvePqIndexPath(spark, roots)
+    // LATE arrivals: appended to v1's delta AFTER the rebuild snapshot
+    // was taken (the in-flight window the r11 advice flagged) — their
+    // embeddings land in the live corpus table as usual, but the
+    // rebuild's training snapshot missed them
+    val late = emb.filter(col("vec_id") < 30)
+      .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
+    Similarity.appendToPqIndex(late,
+        spark.read.parquet(s"$v1/codebooks"))
+      .withColumn("batch_id", lit(7L))
+      .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
+    // snapshot-built v2 (misses `late` by construction)
+    assert(Similarity.commitPqRoot(spark, emb, roots) === Some(2L))
+    val v2 = Similarity.resolvePqIndexPath(spark, roots)
+    assert(Similarity.readPqCodes(spark, v2)
+      .filter(col("vec_id") >= 500000).count() === 0L,
+      "fixture: the rebuild must have missed the in-flight appends")
+    // carry-over from the LIVE corpus view closes the window
+    val corpusAll = emb.unionByName(late)
+    Similarity.carryOverAppended(spark, corpusAll, v1, v2)
+    val served = Similarity.readPqCodes(spark, v2)
+    assert(served.filter(col("vec_id") >= 500000).count() === late.count())
+    // original batch id preserved — the replay contract's key
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+      s"$v2/codes_appended/batch_id=7")))
+    // codes are the NEW quantizer's assignment, bit-for-bit
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("vec_id")).collect().toSeq
+    assert(rows(served.filter(col("vec_id") >= 500000))
+      === rows(Similarity.appendToPqIndex(late,
+        spark.read.parquet(s"$v2/codebooks"))))
+    // a second carry pass is a no-op (anti-join against what v2 SERVES)
+    Similarity.carryOverAppended(spark, corpusAll, v1, v2)
+    assert(Similarity.readPqCodes(spark, v2)
+      .filter(col("vec_id") >= 500000).count() === late.count())
   }
 
   test("rebuild carry-over on an IVF-PQ root: missed appends re-coded " +
       "with coarse re-assignment under the new quantizer") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
-    val roots = java.nio.file.Files.createTempDirectory("graft_carry_ivf")
+    val roots = tempDir("graft_carry_ivf")
       .resolve("container").toString
-    try {
-      assert(Similarity.commitIvfPqRoot(spark, emb, roots) === Some(1L))
-      val v1 = Similarity.resolvePqIndexPath(spark, roots)
-      val late = emb.filter(col("vec_id") < 30)
-        .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-      Similarity.appendToIvfPqIndex(late,
-          spark.read.parquet(s"$v1/centroids"),
-          spark.read.parquet(s"$v1/codebooks"))
-        .withColumn("batch_id", lit(3L))
-        .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
-      assert(Similarity.commitIvfPqRoot(spark, emb, roots) === Some(2L))
-      val v2 = Similarity.resolvePqIndexPath(spark, roots)
-      Similarity.carryOverAppended(spark, emb.unionByName(late), v1, v2)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("vec_id")).collect().toSeq
-      // bucket column rides the carried rows (the IVF detection branch),
-      // and the assignment is the NEW quantizer's, bit-for-bit
-      assert(rows(Similarity.readPqCodes(spark, v2)
-          .filter(col("vec_id") >= 500000)
-          .select(col("vec_id"), col("bucket"), col("codes")))
-        === rows(Similarity.appendToIvfPqIndex(late,
-          spark.read.parquet(s"$v2/centroids"),
-          spark.read.parquet(s"$v2/codebooks"))))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(roots).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    assert(Similarity.commitIvfPqRoot(spark, emb, roots) === Some(1L))
+    val v1 = Similarity.resolvePqIndexPath(spark, roots)
+    val late = emb.filter(col("vec_id") < 30)
+      .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
+    Similarity.appendToIvfPqIndex(late,
+        spark.read.parquet(s"$v1/centroids"),
+        spark.read.parquet(s"$v1/codebooks"))
+      .withColumn("batch_id", lit(3L))
+      .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
+    assert(Similarity.commitIvfPqRoot(spark, emb, roots) === Some(2L))
+    val v2 = Similarity.resolvePqIndexPath(spark, roots)
+    Similarity.carryOverAppended(spark, emb.unionByName(late), v1, v2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("vec_id")).collect().toSeq
+    // bucket column rides the carried rows (the IVF detection branch),
+    // and the assignment is the NEW quantizer's, bit-for-bit
+    assert(rows(Similarity.readPqCodes(spark, v2)
+        .filter(col("vec_id") >= 500000)
+        .select(col("vec_id"), col("bucket"), col("codes")))
+      === rows(Similarity.appendToIvfPqIndex(late,
+        spark.read.parquet(s"$v2/centroids"),
+        spark.read.parquet(s"$v2/codebooks"))))
   }
 
   test("compaction claim race: concurrent maintainers with a zero stale " +
       "timeout commit exactly one clean generation (token verify)") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_race")
+    val idx = tempDir("graft_pq_race")
       .resolve("index").toString
-    try {
-      val (cb, codes) = Similarity.buildPqIndex(
-        emb.filter(col("vec_id") % 2 === 0))
-      cb.write.parquet(s"$idx/codebooks")
-      codes.write.parquet(s"$idx/codes")
-      Similarity.appendToPqIndex(emb.filter(col("vec_id") % 2 === 1), cb)
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$idx/codes_appended")
-      // lockTimeoutMs = 0: every contender classifies any held lock stale
-      // and steals — the worst case the holder-token protocol must survive.
-      // Pre-token, this interleaving could commit MIXED parquet; now the
-      // loser's commit-time ownership verify aborts it.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      // guaranteed invariants under arbitrary interleaving (the schedule
-      // itself is nondeterministic — a steal can land before or after the
-      // first holder's commit, so 1 or 2 generations may exist; and under
-      // a ZERO timeout two LIVE contenders can mutually steal and BOTH
-      // abort a round — the r13 late ownership re-checks choose safety
-      // over per-round progress, so progress is EVENTUAL, as at the next
-      // maintenance fire):
-      //  - a contention cadence eventually commits;
-      //  - every row of the corpus is served exactly once (no loss from a
-      //    mid-commit steal, no mixed/duplicated files in any generation);
-      //  - no token-suffixed staging dirs leak.
-      var round = 0
-      var lastMax = 0L
-      while (lastMax < 1L && round < 10) {
-        round += 1
-        val attempts = Await.result(
-          Future.sequence(Seq(
-            Future(Similarity.compactPqIndex(spark, idx, lockTimeoutMs = 0L)),
-            Future(Similarity.compactPqIndex(spark, idx, lockTimeoutMs = 0L)))),
-          5.minutes)
-        lastMax = attempts.max
-      }
-      assert(lastMax >= 1L,
-        "a maintenance cadence must eventually commit (10 rounds, all mutual aborts)")
-      val names = java.nio.file.Files.list(java.nio.file.Paths.get(idx))
-        .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
-      assert(!names.exists(_.contains("__")),
-        s"staging dirs must be cleaned up: $names")
-      val served = Similarity.readPqCodes(spark, idx)
-      assert(served.count() === emb.count(), "no duplicated rows")
-      assert(served.select("vec_id").distinct().count() === emb.count(),
-        "no lost rows")
-      // the chain continues normally afterwards
-      val g = Similarity.compactPqIndex(spark, idx)
-      assert(g === lastMax + 1,
-        s"chain continues from the committed generation ($lastMax -> $g)")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(idx).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    val (cb, codes) = Similarity.buildPqIndex(
+      emb.filter(col("vec_id") % 2 === 0))
+    cb.write.parquet(s"$idx/codebooks")
+    codes.write.parquet(s"$idx/codes")
+    Similarity.appendToPqIndex(emb.filter(col("vec_id") % 2 === 1), cb)
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$idx/codes_appended")
+    // lockTimeoutMs = 0: every contender classifies any held lock stale
+    // and steals — the worst case the holder-token protocol must survive.
+    // Pre-token, this interleaving could commit MIXED parquet; now the
+    // loser's commit-time ownership verify aborts it.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // guaranteed invariants under arbitrary interleaving (the schedule
+    // itself is nondeterministic — a steal can land before or after the
+    // first holder's commit, so 1 or 2 generations may exist; and under
+    // a ZERO timeout two LIVE contenders can mutually steal and BOTH
+    // abort a round — the r13 late ownership re-checks choose safety
+    // over per-round progress, so progress is EVENTUAL, as at the next
+    // maintenance fire):
+    //  - a contention cadence eventually commits;
+    //  - every row of the corpus is served exactly once (no loss from a
+    //    mid-commit steal, no mixed/duplicated files in any generation);
+    //  - no token-suffixed staging dirs leak.
+    var round = 0
+    var lastMax = 0L
+    while (lastMax < 1L && round < 10) {
+      round += 1
+      val attempts = Await.result(
+        Future.sequence(Seq(
+          Future(Similarity.compactPqIndex(spark, idx, lockTimeoutMs = 0L)),
+          Future(Similarity.compactPqIndex(spark, idx, lockTimeoutMs = 0L)))),
+        5.minutes)
+      lastMax = attempts.max
     }
+    assert(lastMax >= 1L,
+      "a maintenance cadence must eventually commit (10 rounds, all mutual aborts)")
+    val names = java.nio.file.Files.list(java.nio.file.Paths.get(idx))
+      .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
+    assert(!names.exists(_.contains("__")),
+      s"staging dirs must be cleaned up: $names")
+    val served = Similarity.readPqCodes(spark, idx)
+    assert(served.count() === emb.count(), "no duplicated rows")
+    assert(served.select("vec_id").distinct().count() === emb.count(),
+      "no lost rows")
+    // the chain continues normally afterwards
+    val g = Similarity.compactPqIndex(spark, idx)
+    assert(g === lastMax + 1,
+      s"chain continues from the committed generation ($lastMax -> $g)")
   }
 
   test("s15/s16 overlay path: a pre-committed versioned container serves " +
       "rows identical to the scratch-committed path") {
     // the registry entries take the resolver path when $dir/pq_roots /
-    // $dir/ivfpq_roots carry a committed version (the Bench/ScaleProbe
+    // $dir/ivfpq_roots carry a committed version (the Bench
     // overlay shape) and self-commit a scratch container otherwise (the
     // Verify path the oracle hash-checks); both must be bit-identical
     val sfDir = "/root/testdata/sf0.001"
-    val ovl = java.nio.file.Files.createTempDirectory("graft_s15_ovl")
-    try {
-      java.nio.file.Files.createSymbolicLink(
-        ovl.resolve("embeddings.parquet"),
-        java.nio.file.Paths.get(sfDir, "embeddings.parquet"))
-      val e = Tables.embeddings(spark, ovl.toString)
-      assert(Similarity.commitPqRoot(spark, e,
-        ovl.resolve("pq_roots").toString) === Some(1L))
-      assert(Similarity.commitIvfPqRoot(spark, e,
-        ovl.resolve("ivfpq_roots").toString) === Some(1L))
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-      assert(rows(EntryOps.topkPqRooted(spark, ovl.toString))
-        === rows(EntryOps.topkPqRooted(spark, sfDir)))
-      assert(rows(EntryOps.topkIvfPqRooted(spark, ovl.toString))
-        === rows(EntryOps.topkIvfPqRooted(spark, sfDir)))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ovl).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    val ovl = tempDir("graft_s15_ovl")
+    java.nio.file.Files.createSymbolicLink(
+      ovl.resolve("embeddings.parquet"),
+      java.nio.file.Paths.get(sfDir, "embeddings.parquet"))
+    val e = Tables.embeddings(spark, ovl.toString)
+    assert(Similarity.commitPqRoot(spark, e,
+      ovl.resolve("pq_roots").toString) === Some(1L))
+    assert(Similarity.commitIvfPqRoot(spark, e,
+      ovl.resolve("ivfpq_roots").toString) === Some(1L))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    assert(rows(EntryOps.topkPqRooted(spark, ovl.toString))
+      === rows(EntryOps.topkPqRooted(spark, sfDir)))
+    assert(rows(EntryOps.topkIvfPqRooted(spark, ovl.toString))
+      === rows(EntryOps.topkIvfPqRooted(spark, sfDir)))
   }
 
   test("versioned-root commit race: concurrent committers with a zero " +
       "stale timeout publish whole versions only") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
-    val roots = java.nio.file.Files.createTempDirectory("graft_root_race")
+    val roots = tempDir("graft_root_race")
       .resolve("container").toString
-    try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      // under arbitrary steal interleavings 1 or 2 versions may commit per
-      // round, a loser returns None, and under the ZERO timeout two LIVE
-      // contenders can mutually steal and BOTH abort a round (the r13
-      // late ownership re-checks — safety over per-round progress); the
-      // invariants are: a contention cadence eventually commits, every
-      // committed version is WHOLE (codebooks + codes + marker), the
-      // resolver sees the highest one, and no staging dirs leak
-      var round = 0
-      val committedVs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (committedVs.isEmpty && round < 10) {
-        round += 1
-        val attempts = Await.result(
-          Future.sequence(Seq(
-            Future(Similarity.commitPqRoot(spark, emb, roots,
-              lockTimeoutMs = 0L)),
-            Future(Similarity.commitPqRoot(spark, emb, roots,
-              lockTimeoutMs = 0L)))),
-          5.minutes)
-        committedVs ++= attempts.flatten
-      }
-      assert(committedVs.nonEmpty,
-        "a commit cadence must eventually publish (10 rounds, all mutual aborts)")
-      val names = java.nio.file.Files.list(java.nio.file.Paths.get(roots))
-        .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
-      assert(!names.exists(_.contains("__")),
-        s"staging dirs must be cleaned up: $names")
-      val resolved = Similarity.resolvePqIndexPath(spark, roots)
-      val top = committedVs.max
-      assert(resolved.endsWith(f"v-$top%08d"))
-      for (n <- names if n.matches("v-\\d{8}")) {
-        val vdir = s"$roots/$n"
-        assert(java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$vdir/_GRAFT_PQ_ROOT")),
-          s"$n must be marker-committed (torn versions were stolen+GC'd)")
-        assert(spark.read.parquet(s"$vdir/codes").count() === emb.count(),
-          s"$n must be a WHOLE version")
-      }
-      // queries through the resolved root reproduce a cold build exactly
-      val (coldCb, coldCodes) = Similarity.buildPqIndex(emb)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("vec_id")).collect().toSeq
-      assert(rows(Similarity.readPqCodes(spark, resolved)) === rows(coldCodes))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(roots).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // under arbitrary steal interleavings 1 or 2 versions may commit per
+    // round, a loser returns None, and under the ZERO timeout two LIVE
+    // contenders can mutually steal and BOTH abort a round (the r13
+    // late ownership re-checks — safety over per-round progress); the
+    // invariants are: a contention cadence eventually commits, every
+    // committed version is WHOLE (codebooks + codes + marker), the
+    // resolver sees the highest one, and no staging dirs leak
+    var round = 0
+    val committedVs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    while (committedVs.isEmpty && round < 10) {
+      round += 1
+      val attempts = Await.result(
+        Future.sequence(Seq(
+          Future(Similarity.commitPqRoot(spark, emb, roots,
+            lockTimeoutMs = 0L)),
+          Future(Similarity.commitPqRoot(spark, emb, roots,
+            lockTimeoutMs = 0L)))),
+        5.minutes)
+      committedVs ++= attempts.flatten
     }
+    assert(committedVs.nonEmpty,
+      "a commit cadence must eventually publish (10 rounds, all mutual aborts)")
+    val names = java.nio.file.Files.list(java.nio.file.Paths.get(roots))
+      .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
+    assert(!names.exists(_.contains("__")),
+      s"staging dirs must be cleaned up: $names")
+    val resolved = Similarity.resolvePqIndexPath(spark, roots)
+    val top = committedVs.max
+    assert(resolved.endsWith(f"v-$top%08d"))
+    for (n <- names if n.matches("v-\\d{8}")) {
+      val vdir = s"$roots/$n"
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$vdir/_GRAFT_PQ_ROOT")),
+        s"$n must be marker-committed (torn versions were stolen+GC'd)")
+      assert(spark.read.parquet(s"$vdir/codes").count() === emb.count(),
+        s"$n must be a WHOLE version")
+    }
+    // queries through the resolved root reproduce a cold build exactly
+    val (coldCb, coldCodes) = Similarity.buildPqIndex(emb)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("vec_id")).collect().toSeq
+    assert(rows(Similarity.readPqCodes(spark, resolved)) === rows(coldCodes))
   }
 
   test("learned-delta compaction race: concurrent maintainers with a zero " +
       "stale timeout serve every learned row exactly once") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_learn_race")
+    val root = tempDir("graft_learn_race")
       .resolve("index").toString
-    try {
-      graft.ops.Dedup.buildGramIndex(
-        Seq((100L, "alpha beta gamma delta epsilon zeta"))
-          .toDF("doc_id", "text"), n = 3).write.parquet(s"$root/base")
-      // two learned batch partitions, disjoint grams
-      graft.ops.Dedup.buildGramIndex(
-          Seq((1L, "m1 m2 m3 m4 m5 m6")).toDF("doc_id", "text"), n = 3)
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$root/learned")
-      graft.ops.Dedup.buildGramIndex(
-          Seq((2L, "p1 p2 p3 p4 p5 p6")).toDF("doc_id", "text"), n = 3)
-        .withColumn("batch_id", lit(1L))
-        .write.partitionBy("batch_id").mode("append")
-        .parquet(s"$root/learned")
-      val full = graft.ops.Dedup.readWithLearned(spark, root)
-        .orderBy("gram").collect().toSeq
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration._
-      // Under a ZERO stale timeout two LIVE contenders can steal each
-      // other mid-publish and BOTH abort a round (the r13 late ownership
-      // re-checks abort a holder whose claim was taken between its rmTree
-      // and marker — safety over progress; a sane timeout only steals
-      // from crashed holders, so production never mutually aborts).
-      // Progress is EVENTUAL, not per-round: retry the contention round
-      // until a generation commits, exactly as the next maintenance fire
-      // would.
-      var round = 0
-      var committed = 0L
-      while (committed < 1L && round < 10) {
-        round += 1
-        val attempts = Await.result(
-          Future.sequence(Seq(
-            Future(graft.ops.Dedup.compactLearnedDelta(spark, root,
-              lockTimeoutMs = 0L)),
-            Future(graft.ops.Dedup.compactLearnedDelta(spark, root,
-              lockTimeoutMs = 0L)))),
-          5.minutes)
-        committed = attempts.max
-      }
-      assert(committed >= 1L,
-        s"a maintenance cadence must eventually commit (10 rounds, all mutual aborts)")
-      val names = java.nio.file.Files.list(java.nio.file.Paths.get(root))
-        .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
-      assert(!names.exists(_.contains("__")),
-        s"staging dirs must be cleaned up: $names")
-      assert(graft.ops.Dedup.readWithLearned(spark, root)
-        .orderBy("gram").collect().toSeq === full,
-        "no lost or duplicated learned rows across the race")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(root).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    graft.ops.Dedup.buildGramIndex(
+      Seq((100L, "alpha beta gamma delta epsilon zeta"))
+        .toDF("doc_id", "text"), n = 3).write.parquet(s"$root/base")
+    // two learned batch partitions, disjoint grams
+    graft.ops.Dedup.buildGramIndex(
+        Seq((1L, "m1 m2 m3 m4 m5 m6")).toDF("doc_id", "text"), n = 3)
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$root/learned")
+    graft.ops.Dedup.buildGramIndex(
+        Seq((2L, "p1 p2 p3 p4 p5 p6")).toDF("doc_id", "text"), n = 3)
+      .withColumn("batch_id", lit(1L))
+      .write.partitionBy("batch_id").mode("append")
+      .parquet(s"$root/learned")
+    val full = graft.ops.Dedup.readWithLearned(spark, root)
+      .orderBy("gram").collect().toSeq
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // Under a ZERO stale timeout two LIVE contenders can steal each
+    // other mid-publish and BOTH abort a round (the r13 late ownership
+    // re-checks abort a holder whose claim was taken between its rmTree
+    // and marker — safety over progress; a sane timeout only steals
+    // from crashed holders, so production never mutually aborts).
+    // Progress is EVENTUAL, not per-round: retry the contention round
+    // until a generation commits, exactly as the next maintenance fire
+    // would.
+    var round = 0
+    var committed = 0L
+    while (committed < 1L && round < 10) {
+      round += 1
+      val attempts = Await.result(
+        Future.sequence(Seq(
+          Future(graft.ops.Dedup.compactLearnedDelta(spark, root,
+            lockTimeoutMs = 0L)),
+          Future(graft.ops.Dedup.compactLearnedDelta(spark, root,
+            lockTimeoutMs = 0L)))),
+        5.minutes)
+      committed = attempts.max
     }
+    assert(committed >= 1L,
+      s"a maintenance cadence must eventually commit (10 rounds, all mutual aborts)")
+    val names = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      .map[String](_.getFileName.toString).toArray.map(_.toString).toSeq
+    assert(!names.exists(_.contains("__")),
+      s"staging dirs must be cleaned up: $names")
+    assert(graft.ops.Dedup.readWithLearned(spark, root)
+      .orderBy("gram").collect().toSeq === full,
+      "no lost or duplicated learned rows across the race")
   }
 
   test("claim-token primitives: ownership verify, steal leaves the " +
       "zombie unable to release, heartbeat refreshes the lock mtime") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_claim").toString
+    val dir = tempDir("graft_claim").toString
     val fs = graft.ops.IndexFs.fs(spark, dir)
     val lock = s"$dir/x.lock"
-    try {
-      assert(graft.ops.IndexFs.tryClaim(fs, lock, "tokA"))
-      assert(graft.ops.IndexFs.ownsClaim(fs, lock, "tokA"))
-      assert(!graft.ops.IndexFs.tryClaim(fs, lock, "tokB"), "held lock")
-      // simulated steal (what a concurrent maintainer does to a stale
-      // lock): the zombie's ownership verify now fails, and its
-      // release-if-owner must NOT delete the stealer's lock
-      graft.ops.IndexFs.release(fs, lock)
-      assert(graft.ops.IndexFs.tryClaim(fs, lock, "tokB"))
-      assert(!graft.ops.IndexFs.ownsClaim(fs, lock, "tokA"))
-      graft.ops.IndexFs.releaseIfOwner(fs, lock, "tokA")
-      assert(graft.ops.IndexFs.claimHolder(fs, lock) === Some("tokB"),
-        "zombie release must be a no-op on a stolen lock")
-      // heartbeat: the holder's daemon touch advances mtime, so a LIVE
-      // holder is never classified stale however long its build runs
-      val m0 = graft.ops.IndexFs.mtime(fs, lock).get
-      // sleep > 1 s so the assertion survives second-granularity mtimes
-      graft.ops.IndexFs.withHeartbeat(fs, lock, "tokB", intervalMs = 100L) {
-        Thread.sleep(1200L)
-      }
-      assert(graft.ops.IndexFs.mtime(fs, lock).get > m0,
-        "heartbeat must refresh the lock mtime")
-      // atomic marker publish + tolerant parse round-trip
-      graft.ops.IndexFs.commitSmallString(fs, s"$dir/_M", "42\n")
-      assert(graft.ops.IndexFs.readMarkerLong(fs, s"$dir/_M") === Some(42L))
-      graft.ops.IndexFs.writeSmallString(fs, s"$dir/_M", "torn garb")
-      assert(graft.ops.IndexFs.readMarkerLong(fs, s"$dir/_M") === None)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    assert(graft.ops.IndexFs.tryClaim(fs, lock, "tokA"))
+    assert(graft.ops.IndexFs.ownsClaim(fs, lock, "tokA"))
+    assert(!graft.ops.IndexFs.tryClaim(fs, lock, "tokB"), "held lock")
+    // simulated steal (what a concurrent maintainer does to a stale
+    // lock): the zombie's ownership verify now fails, and its
+    // release-if-owner must NOT delete the stealer's lock
+    graft.ops.IndexFs.release(fs, lock)
+    assert(graft.ops.IndexFs.tryClaim(fs, lock, "tokB"))
+    assert(!graft.ops.IndexFs.ownsClaim(fs, lock, "tokA"))
+    graft.ops.IndexFs.releaseIfOwner(fs, lock, "tokA")
+    assert(graft.ops.IndexFs.claimHolder(fs, lock) === Some("tokB"),
+      "zombie release must be a no-op on a stolen lock")
+    // heartbeat: the holder's daemon touch advances mtime, so a LIVE
+    // holder is never classified stale however long its build runs
+    val m0 = graft.ops.IndexFs.mtime(fs, lock).get
+    // sleep > 1 s so the assertion survives second-granularity mtimes
+    graft.ops.IndexFs.withHeartbeat(fs, lock, "tokB", intervalMs = 100L) {
+      Thread.sleep(1200L)
     }
+    assert(graft.ops.IndexFs.mtime(fs, lock).get > m0,
+      "heartbeat must refresh the lock mtime")
+    // atomic marker publish + tolerant parse round-trip
+    graft.ops.IndexFs.commitSmallString(fs, s"$dir/_M", "42\n")
+    assert(graft.ops.IndexFs.readMarkerLong(fs, s"$dir/_M") === Some(42L))
+    graft.ops.IndexFs.writeSmallString(fs, s"$dir/_M", "torn garb")
+    assert(graft.ops.IndexFs.readMarkerLong(fs, s"$dir/_M") === None)
   }
 
   test("CLI maintenance verbs dispatch to the claim-locked lifecycle ops") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
-    val base = java.nio.file.Files.createTempDirectory("graft_cli_maint")
-    try {
-      // rebuild-if-drifted on an empty container cold-starts v1, and a
-      // second run reports the no-drift no-op
-      val roots = base.resolve("roots").toString
-      emb.write.parquet(base.resolve("emb.parquet").toString)
-      val embPath = base.resolve("emb.parquet").toString
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("rebuild-if-drifted", "pq", embPath, roots))
-        .exists(_.contains("committed v1")))
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("rebuild-if-drifted", "pq", embPath, roots))
-        .exists(_.contains("no-op")))
-      // compact-index accepts the CONTAINER path and resolves the current
-      // version (a plain index root passes through unchanged)
-      val v1 = Similarity.resolvePqIndexPath(spark, roots)
-      Similarity.appendToPqIndex(emb.limit(10),
-          spark.read.parquet(s"$v1/codebooks"))
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("compact-index", roots))
-        .exists(s => s.contains("generation 1") && s.contains(v1)))
-      // drift-tripped rebuild through the CLI: drifted arrivals appended
-      // under v1's frozen codebooks + present in the emb table → the verb
-      // rebuilds into v2 and runs the post-flip carry pass (idempotent
-      // no-op here — v2's base covers everything the fresh read holds)
-      val drifted = emb.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 900000).as("vec_id"),
-          expr("transform(embedding, x -> CAST(x * 10.0 + 5.0 AS FLOAT))")
-            .as("embedding"))
-      Similarity.appendToPqIndex(drifted,
-          spark.read.parquet(s"$v1/codebooks"))
-        .withColumn("batch_id", lit(9L))
-        .write.partitionBy("batch_id").mode("append")
-        .parquet(s"$v1/codes_appended")
-      emb.unionByName(drifted).write.mode("overwrite")
-        .parquet(base.resolve("emb2.parquet").toString)
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("rebuild-if-drifted", "pq",
-          base.resolve("emb2.parquet").toString, roots))
-        .exists(_.contains("committed v2")))
-      assert(Similarity.resolvePqIndexPath(spark, roots)
-        .endsWith("v-00000002"))
-      // version GC: keep=2 retains v1 (grace) + v2 after the rebuild's
-      // auto-GC; forcing keep=1 removes the grace predecessor, and an
-      // unmarked (torn) dir is never touched
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$roots/v-00000001")),
-        "auto-GC keeps one grace predecessor")
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$roots/v-00000007")) // torn, unmarked
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("gc-roots", roots, "1")).exists(_.contains("removed 1")))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$roots/v-00000001")))
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$roots/v-00000007")),
-        "unmarked dirs belong to the claim protocol, GC must not touch them")
-      assert(Similarity.resolvePqIndexPath(spark, roots)
-        .endsWith("v-00000002"), "resolver unaffected by GC")
-      // unknown verbs fall through to usage (None)
-      assert(graft.cli.Main.runMaintenance(spark, List("bogus")).isEmpty)
-      // malformed NUMERIC args fall through to usage instead of an
-      // uncaught NumberFormatException (r12 advice)
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("gc-roots", roots, "two")).isEmpty)
-      assert(graft.cli.Main.runMaintenance(spark,
-        List("rebuild-if-drifted", "pq", embPath, roots, "fast")).isEmpty)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    val base = tempDir("graft_cli_maint")
+    // rebuild-if-drifted on an empty container cold-starts v1, and a
+    // second run reports the no-drift no-op
+    val roots = base.resolve("roots").toString
+    emb.write.parquet(base.resolve("emb.parquet").toString)
+    val embPath = base.resolve("emb.parquet").toString
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("rebuild-if-drifted", "pq", embPath, roots))
+      .exists(_.contains("committed v1")))
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("rebuild-if-drifted", "pq", embPath, roots))
+      .exists(_.contains("no-op")))
+    // compact-index accepts the CONTAINER path and resolves the current
+    // version (a plain index root passes through unchanged)
+    val v1 = Similarity.resolvePqIndexPath(spark, roots)
+    Similarity.appendToPqIndex(emb.limit(10),
+        spark.read.parquet(s"$v1/codebooks"))
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("compact-index", roots))
+      .exists(s => s.contains("generation 1") && s.contains(v1)))
+    // drift-tripped rebuild through the CLI: drifted arrivals appended
+    // under v1's frozen codebooks + present in the emb table → the verb
+    // rebuilds into v2 and runs the post-flip carry pass (idempotent
+    // no-op here — v2's base covers everything the fresh read holds)
+    val drifted = emb.filter(col("vec_id") < 100)
+      .select((col("vec_id") + 900000).as("vec_id"),
+        expr("transform(embedding, x -> CAST(x * 10.0 + 5.0 AS FLOAT))")
+          .as("embedding"))
+    Similarity.appendToPqIndex(drifted,
+        spark.read.parquet(s"$v1/codebooks"))
+      .withColumn("batch_id", lit(9L))
+      .write.partitionBy("batch_id").mode("append")
+      .parquet(s"$v1/codes_appended")
+    emb.unionByName(drifted).write.mode("overwrite")
+      .parquet(base.resolve("emb2.parquet").toString)
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("rebuild-if-drifted", "pq",
+        base.resolve("emb2.parquet").toString, roots))
+      .exists(_.contains("committed v2")))
+    assert(Similarity.resolvePqIndexPath(spark, roots)
+      .endsWith("v-00000002"))
+    // version GC: keep=2 retains v1 (grace) + v2 after the rebuild's
+    // auto-GC; forcing keep=1 removes the grace predecessor, and an
+    // unmarked (torn) dir is never touched
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$roots/v-00000001")),
+      "auto-GC keeps one grace predecessor")
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$roots/v-00000007")) // torn, unmarked
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("gc-roots", roots, "1")).exists(_.contains("removed 1")))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$roots/v-00000001")))
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$roots/v-00000007")),
+      "unmarked dirs belong to the claim protocol, GC must not touch them")
+    assert(Similarity.resolvePqIndexPath(spark, roots)
+      .endsWith("v-00000002"), "resolver unaffected by GC")
+    // unknown verbs fall through to usage (None)
+    assert(graft.cli.Main.runMaintenance(spark, List("bogus")).isEmpty)
+    // malformed NUMERIC args fall through to usage instead of an
+    // uncaught NumberFormatException (r12 advice)
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("gc-roots", roots, "two")).isEmpty)
+    assert(graft.cli.Main.runMaintenance(spark,
+      List("rebuild-if-drifted", "pq", embPath, roots, "fast")).isEmpty)
   }
 
   test("CLI maintain: one idempotent pass discovers and services every " +
@@ -2620,136 +2502,114 @@ class OpsSpec extends GraftSpec {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding"))
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val base = java.nio.file.Files.createTempDirectory("graft_maintain")
+    val base = tempDir("graft_maintain")
     val wh = base.resolve("warehouse").toString
-    try {
-      // 1. versioned container with an appended delta on its current version
-      val container = s"$wh/ann_container"
-      assert(Similarity.commitPqRoot(spark, emb, container) === Some(1L))
-      val v1 = Similarity.resolvePqIndexPath(spark, container)
-      Similarity.appendToPqIndex(emb.limit(10),
-          spark.read.parquet(s"$v1/codebooks"))
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
-      // 2. self-learning text root with a live learned delta
-      val learnRoot = s"$wh/text_dedup_idx"
-      graft.ops.Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 10 =!= 0))
-        .write.parquet(s"$learnRoot/base")
-      graft.ops.Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 10 === 0))
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$learnRoot/learned")
-      // 3. sem root: members/ subtree carries the learned delta
-      val semRoot = s"$wh/sem_idx"
-      val (ct, members) = Similarity.buildSemIndex(
-        emb.filter(col("vec_id") % 10 =!= 0))
-      ct.write.parquet(s"$semRoot/centroids")
-      members.write.parquet(s"$semRoot/members/base")
-      members.limit(5).withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$semRoot/members/learned")
-      // 4. plain (un-versioned) PQ index root with an appended delta
-      val plain = s"$wh/plain_idx"
-      val (cb, codes) = Similarity.buildPqIndex(emb)
-      cb.write.parquet(s"$plain/codebooks")
-      codes.write.parquet(s"$plain/codes")
-      Similarity.appendToPqIndex(emb.limit(5), cb)
-        .withColumn("batch_id", lit(0L))
-        .write.partitionBy("batch_id").parquet(s"$plain/codes_appended")
-      val summary = graft.cli.Main.runMaintenance(spark, List("maintain", wh))
-      assert(summary.exists(_.contains("4 roots")), s"got $summary")
-      assert(summary.exists(s => s.contains("ann_container: container") &&
-        s.contains("text_dedup_idx: learned root") &&
-        s.contains("sem_idx/members: learned root") &&
-        s.contains("plain_idx: index root")), s"got $summary")
-      // the pass actually serviced them: compacted generations exist and
-      // serve the same rows
-      assert(graft.ops.IndexFs.exists(graft.ops.IndexFs.fs(spark, wh),
-        s"$v1/codes_g1"))
-      assert(graft.ops.IndexFs.exists(graft.ops.IndexFs.fs(spark, wh),
-        s"$learnRoot/learned_g1"))
-      assert(Similarity.readPqCodes(spark, v1).count()
-        === codes.count() + 10L)
-      // idempotent second pass: same discovery, claim-locked no-ops inside
-      val again = graft.cli.Main.runMaintenance(spark, List("maintain", wh))
-      assert(again.exists(_.contains("4 roots")), s"got $again")
-      assert(Similarity.readPqCodes(spark, v1).count()
-        === codes.count() + 10L)
-      // empty warehouse: honest no-op summary
-      val none = graft.cli.Main.runMaintenance(spark,
-        List("maintain", base.resolve("empty").toString))
-      assert(none.exists(_.contains("no index roots")), s"got $none")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    // 1. versioned container with an appended delta on its current version
+    val container = s"$wh/ann_container"
+    assert(Similarity.commitPqRoot(spark, emb, container) === Some(1L))
+    val v1 = Similarity.resolvePqIndexPath(spark, container)
+    Similarity.appendToPqIndex(emb.limit(10),
+        spark.read.parquet(s"$v1/codebooks"))
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$v1/codes_appended")
+    // 2. self-learning text root with a live learned delta
+    val learnRoot = s"$wh/text_dedup_idx"
+    graft.ops.Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 10 =!= 0))
+      .write.parquet(s"$learnRoot/base")
+    graft.ops.Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 10 === 0))
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$learnRoot/learned")
+    // 3. sem root: members/ subtree carries the learned delta
+    val semRoot = s"$wh/sem_idx"
+    val (ct, members) = Similarity.buildSemIndex(
+      emb.filter(col("vec_id") % 10 =!= 0))
+    ct.write.parquet(s"$semRoot/centroids")
+    members.write.parquet(s"$semRoot/members/base")
+    members.limit(5).withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$semRoot/members/learned")
+    // 4. plain (un-versioned) PQ index root with an appended delta
+    val plain = s"$wh/plain_idx"
+    val (cb, codes) = Similarity.buildPqIndex(emb)
+    cb.write.parquet(s"$plain/codebooks")
+    codes.write.parquet(s"$plain/codes")
+    Similarity.appendToPqIndex(emb.limit(5), cb)
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(s"$plain/codes_appended")
+    val summary = graft.cli.Main.runMaintenance(spark, List("maintain", wh))
+    assert(summary.exists(_.contains("4 roots")), s"got $summary")
+    assert(summary.exists(s => s.contains("ann_container: container") &&
+      s.contains("text_dedup_idx: learned root") &&
+      s.contains("sem_idx/members: learned root") &&
+      s.contains("plain_idx: index root")), s"got $summary")
+    // the pass actually serviced them: compacted generations exist and
+    // serve the same rows
+    assert(graft.ops.IndexFs.exists(graft.ops.IndexFs.fs(spark, wh),
+      s"$v1/codes_g1"))
+    assert(graft.ops.IndexFs.exists(graft.ops.IndexFs.fs(spark, wh),
+      s"$learnRoot/learned_g1"))
+    assert(Similarity.readPqCodes(spark, v1).count()
+      === codes.count() + 10L)
+    // idempotent second pass: same discovery, claim-locked no-ops inside
+    val again = graft.cli.Main.runMaintenance(spark, List("maintain", wh))
+    assert(again.exists(_.contains("4 roots")), s"got $again")
+    assert(Similarity.readPqCodes(spark, v1).count()
+      === codes.count() + 10L)
+    // empty warehouse: honest no-op summary
+    val none = graft.cli.Main.runMaintenance(spark,
+      List("maintain", base.resolve("empty").toString))
+    assert(none.exists(_.contains("no index roots")), s"got $none")
   }
 
   test("conditional-create capability probe: local atomic by scheme, an " +
       "object store follows its advertised path capability, probe failure " +
       "reads as advisory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cap").toString
-    try {
-      val local = graft.ops.IndexFs.fs(spark, dir)
-      assert(graft.ops.IndexFs.atomicClaimSupported(local, dir),
-        "local FS create-if-absent is O_EXCL-atomic")
-      class FakeStore(caps: Set[String])
-          extends org.apache.hadoop.fs.RawLocalFileSystem {
-        override def getScheme: String = "mocks3"
-        override def hasPathCapability(p: org.apache.hadoop.fs.Path,
-            c: String): Boolean = caps.contains(c)
-      }
-      assert(!graft.ops.IndexFs.atomicClaimSupported(
-        new FakeStore(Set.empty), dir),
-        "no conditional-create capability -> the claim stays advisory")
-      assert(graft.ops.IndexFs.atomicClaimSupported(
-        new FakeStore(graft.ops.IndexFs.ConditionalCreateCapabilities.toSet), dir),
-        "advertised conditional create upgrades the claim to atomic")
-      val throwing = new FakeStore(Set.empty) {
-        override def hasPathCapability(p: org.apache.hadoop.fs.Path,
-            c: String): Boolean =
-          throw new UnsupportedOperationException("pre-PathCapabilities store")
-      }
-      assert(!graft.ops.IndexFs.atomicClaimSupported(throwing, dir),
-        "a probe failure must degrade to advisory, never crash maintenance")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
+    val dir = tempDir("graft_cap").toString
+    val local = graft.ops.IndexFs.fs(spark, dir)
+    assert(graft.ops.IndexFs.atomicClaimSupported(local, dir),
+      "local FS create-if-absent is O_EXCL-atomic")
+    class FakeStore(caps: Set[String])
+        extends org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getScheme: String = "mocks3"
+      override def hasPathCapability(p: org.apache.hadoop.fs.Path,
+          c: String): Boolean = caps.contains(c)
     }
+    assert(!graft.ops.IndexFs.atomicClaimSupported(
+      new FakeStore(Set.empty), dir),
+      "no conditional-create capability -> the claim stays advisory")
+    assert(graft.ops.IndexFs.atomicClaimSupported(
+      new FakeStore(graft.ops.IndexFs.ConditionalCreateCapabilities.toSet), dir),
+      "advertised conditional create upgrades the claim to atomic")
+    val throwing = new FakeStore(Set.empty) {
+      override def hasPathCapability(p: org.apache.hadoop.fs.Path,
+          c: String): Boolean =
+        throw new UnsupportedOperationException("pre-PathCapabilities store")
+    }
+    assert(!graft.ops.IndexFs.atomicClaimSupported(throwing, dir),
+      "a probe failure must degrade to advisory, never crash maintenance")
   }
 
   test("torn generation marker: unparseable content reads as uncommitted, " +
       "never as a reader crash") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_torn")
+    val idx = tempDir("graft_pq_torn")
       .resolve("index").toString
-    try {
-      val (cb, codes) = Similarity.buildPqIndex(
-        emb.filter(col("vec_id") % 2 === 0))
-      cb.write.parquet(s"$idx/codebooks")
-      codes.write.parquet(s"$idx/codes")
-      val before = Similarity.readPqCodes(spark, idx).count()
-      // a generation whose marker is EMPTY or GARBLED (the torn
-      // create+write+close window on stores without atomic create) must
-      // stay invisible — the pre-r12 read path threw NumberFormatException
-      // on the query hot path
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$idx/codes_g1"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$idx/codes_g1/_GRAFT_PQ_GEN"), "")
-      assert(Similarity.readPqCodes(spark, idx).count() === before)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$idx/codes_g1/_GRAFT_PQ_GEN"), "garb le")
-      assert(Similarity.readPqCodes(spark, idx).count() === before)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val r = java.nio.file.Paths.get(idx).getParent
-      java.nio.file.Files.walk(r).sorted(
-        java.util.Comparator.reverseOrder()).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-    }
+    val (cb, codes) = Similarity.buildPqIndex(
+      emb.filter(col("vec_id") % 2 === 0))
+    cb.write.parquet(s"$idx/codebooks")
+    codes.write.parquet(s"$idx/codes")
+    val before = Similarity.readPqCodes(spark, idx).count()
+    // a generation whose marker is EMPTY or GARBLED (the torn
+    // create+write+close window on stores without atomic create) must
+    // stay invisible — the pre-r12 read path threw NumberFormatException
+    // on the query hot path
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$idx/codes_g1"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$idx/codes_g1/_GRAFT_PQ_GEN"), "")
+    assert(Similarity.readPqCodes(spark, idx).count() === before)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$idx/codes_g1/_GRAFT_PQ_GEN"), "garb le")
+    assert(Similarity.readPqCodes(spark, idx).count() === before)
   }
   test("banded embed dedup: 4x4 tables catch the planted cos-0.926 pair a " +
       "single 16-plane table misses; refusals invalid; geometry follows " +

@@ -38,39 +38,6 @@ class PlanSnapshotSpec extends GraftSpec {
     sb.toString
   }
 
-  /** CONSTRUCTION-TIME job counter (r15 verdict item 5 — the floor-
-    * staleness blind spot): a query's cost is its plan PLUS every Spark
-    * job its construction runs before the plan executes (geometry scalar
-    * reads, family-gate reads, fixture index builds). The r15 family gate
-    * added one such job to five queries without moving their plan shape,
-    * leaving their recorded floors ~0.1 s unreachable while
-    * `gen_floors.py --check` read green. The fingerprint therefore
-    * records `prequery_jobs` — the number of jobs the build triggers —
-    * as its last line: an aux-job change now flips the fingerprint hash,
-    * and the floor-staleness check names the affected floors mechanically.
-    * Counted via a SparkListener; the listener bus is drained (reflective
-    * `waitUntilEmpty` — private[spark], public at bytecode level) around
-    * each build so asynchronous event delivery cannot race the count.
-    * Suites run sequentially in the forked test JVM (sbt's
-    * testForkedParallel default), so no concurrent jobs pollute it.
-    */
-  private val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-  private lazy val jobListener: Unit = spark.sparkContext.addSparkListener(
-    new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    })
-  private def drainListenerBus(): Unit = try {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-      .invoke(sc)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .foreach(_.invoke(bus))
-  } catch { case _: Throwable => Thread.sleep(500L) }
-
   /** Two-column diff window around the first divergence — enough context to
     * read the structural change without dumping two 100-line trees.
     */
@@ -107,16 +74,26 @@ class PlanSnapshotSpec extends GraftSpec {
           // a query's OWN .cache() marks still register during its build
           spark.catalog.clearCache()
           EntryOps.clearSessionModelRoots()
-          jobListener
-          drainListenerBus()
-          jobCount.set(0)
-          val plan = build(spark, sfDir).queryExecution.executedPlan
-          drainListenerBus()
+          // CONSTRUCTION-TIME job count (r15 verdict item 5 — the floor-
+          // staleness blind spot): a query's cost is its plan PLUS every
+          // Spark job its construction runs before the plan executes
+          // (geometry scalar reads, family-gate reads, fixture index
+          // builds). The r15 family gate added one such job to five
+          // queries without moving their plan shape, leaving their recorded
+          // floors ~0.1 s unreachable while `gen_floors.py --check` read
+          // green. The fingerprint therefore records `prequery_jobs` — the
+          // number of jobs the build triggers — as its last line: an
+          // aux-job change flips the fingerprint hash, and the floor-
+          // staleness check names the affected floors mechanically. Suites
+          // run sequentially in the forked test JVM (sbt's
+          // testForkedParallel default), so no concurrent jobs pollute it.
+          val (plan, jobs) = graft.obs.JobLedger.record(spark)(
+            build(spark, sfDir).queryExecution.executedPlan)
           // the job count must be read BEFORE the codegen guard: compiling
           // a stage whose expressions embed scalar subqueries (the
           // geometry gates) EXECUTES those subqueries — guard-induced
           // jobs are not construction cost
-          val fp = fingerprint(plan) + s"prequery_jobs: ${jobCount.get()}\n"
+          val fp = fingerprint(plan) + s"prequery_jobs: ${jobs.size}\n"
           // CODEGEN GUARD (r17 verdict item 1): eagerly compile every
           // whole-stage subtree — a janino refusal (method > 64 KB) is a
           // silent interpreted fall-back in production, with NO plan-shape

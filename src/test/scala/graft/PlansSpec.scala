@@ -134,7 +134,7 @@ class PlansSpec extends GraftSpec {
     // contain the parse expressions themselves.
     // file-backed source: a LocalRelation would be constant-folded, Filter
     // and all, before the pushdown behavior under test even exists
-    val dir = java.nio.file.Files.createTempDirectory("fence-spec")
+    val dir = tempDir("fence-spec")
     java.nio.file.Files.writeString(dir.resolve("in.log"), "x|y\n")
     val lines = spark.read.text(dir.toString)
     val events = graft.parse.ApacheParser.parse(lines).events

@@ -57,7 +57,7 @@ class SessionizeSpec extends GraftSpec {
   }
 
   test("stateful sessionizer emits a quiesced session on event-time timeout") {
-    val in = Files.createTempDirectory("sess-to-in")
+    val in = tempDir("sess-to-in")
     // batch 1: two events for user 9 (session 1); batch 2: a much-later event
     // for a DIFFERENT user advances the watermark past user 9's last_us + gap;
     // batch 3 (another user-8 event) then runs with that watermark, so user 9's
@@ -86,7 +86,7 @@ class SessionizeSpec extends GraftSpec {
       .as[SessEvent]
     val q = Sessionize.statefulSessions(stream)
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("sess-to-ck").toString)
+      .option("checkpointLocation", tempDir("sess-to-ck").toString)
       .outputMode("append")
       .format("memory")
       .queryName("sessions_timeout_out")
@@ -107,7 +107,7 @@ class SessionizeSpec extends GraftSpec {
   }
 
   test("stateful sessionizer carries open sessions across micro-batches") {
-    val in = Files.createTempDirectory("sess-in")
+    val in = tempDir("sess-in")
     // batch 1: open a session for user 7; batch 2: an event past the gap
     // closes it — emitted in the SECOND micro-batch via persisted GroupState
     // events sit at ts >= 1 h, not 0: the watermark late-filter drops rows with
@@ -124,7 +124,7 @@ class SessionizeSpec extends GraftSpec {
       .as[SessEvent]
     val q = Sessionize.statefulSessions(stream)
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("sess-ck").toString)
+      .option("checkpointLocation", tempDir("sess-ck").toString)
       .outputMode("append")
       .format("memory")
       .queryName("sessions_out")

@@ -14,7 +14,7 @@ class SourcesSpec extends GraftSpec {
   }
 
   test("nonEmptyFiles lists only files with bytes (S7, dailyreport.py:17-26)") {
-    val dir = Files.createTempDirectory("errlogs")
+    val dir = tempDir("errlogs")
     Files.writeString(dir.resolve("a.err"), "boom")
     Files.writeString(dir.resolve("empty.err"), "")
     Files.writeString(dir.resolve("b.err"), "x")

@@ -26,31 +26,6 @@ abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  /** The description of every Spark job `body` starts; the listener bus is
-    * drained on both sides, so no earlier job leaks in and none is missed.
-    */
-  def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.synchronized {
-          seen += Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
-        }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.GraftBridge.drain(spark)
-    sc.addSparkListener(listener)
-    try body
-    finally {
-      org.apache.spark.sql.GraftBridge.drain(spark)
-      sc.removeSparkListener(listener)
-    }
-    seen.synchronized(seen.toSeq)
-  }
-
   private val tempDirs = mutable.ArrayBuffer[Path]()
 
   /** A fresh temporary directory, deleted with its contents after the

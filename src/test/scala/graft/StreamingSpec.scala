@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.ingest.Warehouse
+import graft.obs.JobLedger
 import graft.streaming.{LearningGate, LogStream, StreamingReports}
 
 /** End-to-end Structured Streaming ingest (reference §2.7: continuous per-line
@@ -119,7 +120,7 @@ class StreamingSpec extends GraftSpec {
     val versions = wh.contactsVersions(spark)
     // batch 1: every address known, no malformed message
     Files.write(mailIn.resolve("m2.eml"), mailFrom("Alice", "second"))
-    val mailJobs = jobDescriptions(mailBatch())
+    val mailJobs = JobLedger.record(spark)(mailBatch())._2.map(_.description)
     assert(mailJobs.size <= 16, mailJobs.mkString("\n"))
     assert(wh.contactsVersions(spark) === versions)
     assert(wh.inbox(spark).count() === 2)
@@ -128,8 +129,9 @@ class StreamingSpec extends GraftSpec {
     val line = "2026-08-11 04:23:17 +0000|www.example.com|443|203.0.113.7|512|" +
       """14034|2751|200|["-", "GET / HTTP/1.1", "GET", "/", "HTTP/1.1", "-", "curl/8.0"]"""
     Files.writeString(apacheIn.resolve("access.log"), s"$line\n$line\n")
-    val apacheJobs = jobDescriptions(LogStream.apache(spark, apacheIn.toString,
-      wh, tmp("budget-apache-ck").toString).awaitTermination())
+    val apacheJobs = JobLedger.record(spark)(LogStream.apache(spark,
+      apacheIn.toString, wh, tmp("budget-apache-ck").toString)
+      .awaitTermination())._2.map(_.description)
     assert(apacheJobs.size <= 2, apacheJobs.mkString("\n"))
     assert(wh.apache(spark).count() === 2)
     assert(!Files.exists(java.nio.file.Paths.get(wh.path("dead_letters/feed=apache"))))
@@ -2143,7 +2145,7 @@ class StreamingSpec extends GraftSpec {
     landText(in, 0, gateBatch(0)); run()
     landText(in, 1, gateBatch(1)); run()
     landText(in, 2, gateBatch(2))
-    val jobs = jobDescriptions(run())
+    val jobs = JobLedger.record(spark)(run())._2.map(_.description)
     info(s"jobs: ${jobs.size} (${jobs.groupBy(identity).map { case (d, n) =>
       s"$d ${n.size}" }.toSeq.sorted.mkString(", ")})")
     assert(jobs.size <= 8, jobs.mkString("\n"))
