@@ -177,8 +177,8 @@ object Bench {
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, benchDir)
-        .write.mode("overwrite").format("noop").save()
+      try SparkEntry.run(spark, name, benchDir)(
+        _.write.mode("overwrite").format("noop").save())
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
         return -1.0

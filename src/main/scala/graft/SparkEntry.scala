@@ -341,6 +341,16 @@ object SparkEntry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = coreQueries ++ EntryOps.entries
 
+  /** Builds the registered query `name` over `dir` and hands it to `sink`,
+    * every Spark job of both described as `graft:query/<name>`; the
+    * caller's description is restored after. Construction-time jobs (eager
+    * barriers, scalar reads) are named too.
+    */
+  def run[T](spark: SparkSession, name: String, dir: String)(
+      sink: DataFrame => T): T =
+    graft.obs.JobLedger.described(spark, s"graft:query/$name")(
+      sink(queries(name)(spark, dir)))
+
   def oracleSql: Map[String, String] =
     coreOracles ++ EntryOps.oracles ++ EntryOps.indexSplitOracles ++
       EntryOps.aggregatedOracles

@@ -30,6 +30,14 @@ object F {
     */
   def reencode(c: Column): Column = Reencode(c)
 
+  /** Spark's ascending string order, for sorts on the driver: unsigned UTF-8
+    * bytes, not `String`'s UTF-16 code units (they disagree past the BMP,
+    * e.g. "😀" vs "Ａ"). `Ordering.Option(utf8Order)` orders a nullable
+    * column: None (NULL) first, as Spark's ascending sort puts it.
+    */
+  val utf8Order: Ordering[String] = (a: String, b: String) =>
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+
   // --------------------------------------------------------------------------
   // P11 — digit grouping ("longint", reference core.py:51-57): 1234567 -> "1 234 567".
   // Builtin-only: format_number gives comma groups; swap for spaces.

@@ -1,12 +1,12 @@
 package graft.ingest
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.functions.F
 
 /** Warehouse layout: one Parquet directory per table under a root path, fact
   * tables partitioned by `event_date` so the reports' 24-hour predicate prunes
@@ -286,28 +286,47 @@ object Ingest {
     * a pair with a NULL field never matches, so it is inserted again by every
     * upsert that carries it. Returns the full refreshed dimension.
     *
-    * Scale: the dimension is DRIVER-RESIDENT — it is already the broadcast
-    * side of the inbox/tocc joins and of Q3, so the merge runs on the driver:
-    * one scan collects the committed snapshot, one distinct collects the
-    * batch's pairs, and nothing else runs unless something is new. A merge
-    * with nothing new over a versioned snapshot commits NOTHING (no claim, no
-    * write, no GC) and returns the snapshot it read — every later version is
-    * a superset of it, so its ids stay current. With a transactional format
-    * this body becomes `MERGE INTO contacts USING batch ON name=n AND
-    * email=e WHEN NOT MATCHED THEN INSERT`.
+    * Scale: the dimension is DRIVER-RESIDENT — it is already the lookup side
+    * of the mail ingest and the broadcast side of Q3, so the merge runs on
+    * the driver: this form collects the batch's distinct pairs (one job) and
+    * merges them with the row form below.
     */
   def upsertContacts(newContacts: DataFrame, warehouse: Warehouse,
-      lockTimeoutMs: Long = 10 * 60 * 1000L, maxAttempts: Int = 600): DataFrame = {
+      lockTimeoutMs: Long = ContactsLockTimeoutMs,
+      maxAttempts: Int = ContactsMaxAttempts): DataFrame = {
     val spark = newContacts.sparkSession
+    dimension(spark, upsertContacts(spark,
+      newContacts.select(col("realname"), col("email_address")).distinct()
+        .collect().toSeq,
+      warehouse, lockTimeoutMs, maxAttempts))
+  }
+
+  /** [[upsertContacts]]' lease on a claim lock, and its budget of claim
+    * attempts without progress.
+    */
+  val ContactsLockTimeoutMs: Long = 10 * 60 * 1000L
+  val ContactsMaxAttempts: Int = 600
+
+  /** [[upsertContacts]] over `pairs` (realname, email_address) already on
+    * the driver; returns the refreshed dimension's rows (id, realname,
+    * email_address). One scan collects the committed snapshot, and nothing
+    * else runs unless a pair is new. A merge with nothing new over a
+    * versioned snapshot commits NOTHING (no claim, no write, no GC) and
+    * returns the snapshot it read — every later version is a superset of
+    * it, so its ids stay current. With a transactional format this body
+    * becomes `MERGE INTO contacts USING batch ON name=n AND email=e WHEN NOT
+    * MATCHED THEN INSERT`.
+    */
+  def upsertContacts(spark: SparkSession, pairs: Seq[Row], warehouse: Warehouse,
+      lockTimeoutMs: Long, maxAttempts: Int): Seq[Row] = {
     val path = warehouse.path("inbox_contacts")
     val basePath = new org.apache.hadoop.fs.Path(path)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // pre-versioning swap-crash healing renames directories — WRITER-only
     // (a reader doing this could rename under a committing writer's feet)
     recoverSwap(spark, path)
-    // every claim attempt merges the same batch: its pairs are read once
-    val pairs = newContacts.select(col("realname"), col("email_address"))
-      .distinct().collect()
+    // a pair given twice must not get two ids
+    val batch = pairs.distinct.toArray
     // Versioned-snapshot commit (the minimal core of a transactional table
     // format, object-store friendly — no directory renames anywhere):
     //  - each refresh writes a NEW immutable `v-NNNNNNNN` directory; the
@@ -360,13 +379,13 @@ object Ingest {
             // version, so this read outlives one later commit. If two more
             // landed meanwhile the version is gone — start over on the newest.
             case NonFatal(_) if resolveCommitted(fs, path)._1 > committedVersion + 1 =>
-              return upsertContacts(newContacts, warehouse, lockTimeoutMs, maxAttempts)
+              return upsertContacts(spark, pairs, warehouse, lockTimeoutMs, maxAttempts)
           }
       }
-      val fresh = freshContacts(existing, pairs)
+      val fresh = freshContacts(existing, batch)
       // version 0 (no table, or the legacy root layout) always commits, so
       // the next upsert migrates a legacy warehouse
-      if (fresh.isEmpty && committedVersion > 0) return dimension(spark, existing)
+      if (fresh.isEmpty && committedVersion > 0) return existing.toSeq
       val next = committedVersion + 1
       val target = new org.apache.hadoop.fs.Path(path, f"v-$next%08d")
       val lock = new org.apache.hadoop.fs.Path(path, f"v-$next%08d.lock")
@@ -376,11 +395,12 @@ object Ingest {
           // holder releases its lock only after _SUCCESS): stale merge base
           fs.delete(lock, false)
         } else {
-          val merged = dimension(spark, existing ++ fresh)
+          val merged = (existing ++ fresh).toSeq
           try {
             // SaveMode.Overwrite reclaims a torn directory from a crashed
             // (stolen or pre-lock) earlier attempt at the same version
-            merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(target.toString)
+            dimension(spark, merged).coalesce(1).write.mode(SaveMode.Overwrite)
+              .parquet(target.toString)
             gcOldSnapshots(spark, path, keepFrom = next - 1)
           } finally fs.delete(lock, false)
           return merged
@@ -414,24 +434,18 @@ object Ingest {
       .filter(r => r.isNullAt(0) || r.isNullAt(1) ||
         !known((r.getString(0), r.getString(1))))
       .sortBy(r => (Option(r.getString(0)), Option(r.getString(1))))(
-        Ordering.Tuple2(Ordering.Option(Utf8Order), Ordering.Option(Utf8Order)))
+        Ordering.Tuple2(Ordering.Option(F.utf8Order), Ordering.Option(F.utf8Order)))
       .zipWithIndex.map { case (r, i) =>
         Row(maxId + i + 1, r.getString(0), r.getString(1))
       }
   }
 
-  /** Spark's ascending string order: unsigned UTF-8 bytes, not `String`'s
-    * UTF-16 code units (they disagree past the BMP, e.g. "😀" vs "Ａ").
-    * `Ordering.Option` puts NULL (None) first, as Spark's ascending sort does.
-    */
-  private val Utf8Order: Ordering[String] = (a: String, b: String) =>
-    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
-
   /** The contacts dimension as a driver-side frame. Every field is
     * nullable, as a Parquet read of the table gives it, so the snapshot
-    * files and the inbox/tocc columns joined from it keep their schema.
+    * files keep their schema and the frame [[upsertContacts]] returns has
+    * the schema of a read.
     */
-  private def dimension(spark: SparkSession, rows: Array[Row]): DataFrame =
+  private def dimension(spark: SparkSession, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(graft.model.Schemas.contacts.map(_.copy(nullable = true))))
 

@@ -20,7 +20,7 @@ final class JobLedger private () extends SparkListener {
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val description = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description")))
+      .flatMap(p => Option(p.getProperty(JobDescription)))
       .getOrElse("")
     jobs(e.jobId) = Job(e.jobId, description, e.time, 0L, Vector.empty)
     e.stageIds.foreach(stageJob.getOrElseUpdate(_, e.jobId))
@@ -48,6 +48,8 @@ final class JobLedger private () extends SparkListener {
 }
 
 object JobLedger {
+
+  private val JobDescription = "spark.job.description"
 
   /** One completed stage attempt; times in milliseconds, CPU in nanoseconds. */
   final case class Stage(id: Int, name: String, tasks: Int, runMs: Long,
@@ -79,5 +81,16 @@ object JobLedger {
       try body
       finally try GraftBridge.drain(spark) finally sc.removeSparkListener(ledger)
     (result, ledger.recorded)
+  }
+
+  /** Runs `body` with every Spark job it starts on this thread described as
+    * `description`, then restores the caller's description (inside
+    * `foreachBatch`, the stream's own).
+    */
+  def described[T](spark: SparkSession, description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(description)
+    try body finally sc.setLocalProperty(JobDescription, outer)
   }
 }

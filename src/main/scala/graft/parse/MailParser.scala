@@ -5,7 +5,7 @@ import java.time.ZonedDateTime
 import java.time.format.DateTimeFormatter
 import java.util.Base64
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Minimal RFC-5322 message parser (reference: `src/logsdb/maillog.py:141-156` —
@@ -231,13 +231,13 @@ object MailParser {
     */
   def parse(messages: DataFrame): ParseResult = fromRaw(parseRaw(messages))
 
-  /** The one-UDF-evaluation frame: input columns plus the `parsed` struct.
-    * The Staged fence stops the optimizer re-deriving the UDF per filter
-    * conjunct WITHIN a plan, but [[fromRaw]]'s two branches are two plans —
-    * a caller that materializes both (the streaming ingest writes dead
-    * letters AND events every micro-batch) should `cache()` THIS frame so
-    * the expensive RFC-5322 parse runs once per message, not once per
-    * branch.
+  /** The one-UDF-evaluation frame: input columns plus the `parsed` struct
+    * (`_1`..`_6` the event fields in [[fromRaw]]'s order, `_7` the error
+    * type, NULL for a message that parsed). The Staged fence stops the
+    * optimizer re-deriving the UDF per filter conjunct WITHIN a plan, but
+    * [[fromRaw]]'s two branches are two plans, so a caller that writes both
+    * parses every message twice. The streaming mail ingest instead collects
+    * one projection of this frame and splits it on the driver.
     */
   def parseRaw(messages: DataFrame): DataFrame =
     messages.withColumn("parsed",
@@ -256,16 +256,24 @@ object MailParser {
         col("parsed._4").as("date"),
         col("parsed._5").as("recipients"),
         col("parsed._6").as("size")): _*)
-    // "Error processing e-mail" is the reference's message (maillog.py:162);
-    // the line column carries the leading header bytes as the description its
-    // TODO asks for
     val dead = withParsed
       .filter(col("parsed._7").isNotNull)
-      .select(
-        graft.functions.F.iso8601Z(current_timestamp()).as("time"),
-        substring(col("content").cast("string"), 1, 120).as("line"),
-        col("parsed._7").as("error_type"),
-        lit("Error processing e-mail").as("error"))
-    ParseResult(mails, dead)
+      .select(deadLine.as("line"), col("parsed._7").as("error_type"))
+    ParseResult(mails, deadLetters(dead))
   }
+
+  /** A dead letter's `line`: the leading bytes of the message's `content`,
+    * as the description the reference's TODO asks for.
+    */
+  val deadLine: Column = substring(col("content").cast("string"), 1, 120)
+
+  /** Dead-letter rows (schema `graft.model.Schemas.deadLetter`) from
+    * (line, error_type) rows; "Error processing e-mail" is the reference's
+    * message (maillog.py:162).
+    */
+  def deadLetters(lines: DataFrame): DataFrame =
+    lines.select(
+      graft.functions.F.iso8601Z(current_timestamp()).as("time"),
+      col("line"), col("error_type"),
+      lit("Error processing e-mail").as("error"))
 }

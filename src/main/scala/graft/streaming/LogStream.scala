@@ -4,11 +4,13 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.{Ingest, Warehouse}
+import graft.obs.JobLedger
 import graft.parse.{ApacheParser, AuthfailParser, MailParser, ParseResult}
 
 /** Structured Streaming ingest (reference §2.7: continuous per-line stdin pipes,
@@ -56,14 +58,9 @@ object LogStream {
     */
   private[streaming] final class Steps(spark: SparkSession, scope: String,
       batchId: Long) {
-    def apply[A](name: String)(body: => A): A = {
-      val sc = spark.sparkContext
-      val outer = sc.getLocalProperty(JobDescription)
-      sc.setJobDescription(s"graft:$scope/$name/batch=$batchId")
-      try body finally sc.setLocalProperty(JobDescription, outer)
-    }
+    def apply[A](name: String)(body: => A): A =
+      JobLedger.described(spark, s"graft:$scope/$name/batch=$batchId")(body)
   }
-  private val JobDescription = "spark.job.description"
 
   /** The `rows` count an action reported through `o`. None when the
     * optimizer dropped the collector from the plan that ran (the
@@ -102,13 +99,12 @@ object LogStream {
     * become one driver-side merge + two appends per micro-batch).
     *
     * Job budget of a steady-state micro-batch (every address known, no
-    * malformed message), AQE on, `local[2]`: 14 Spark jobs, by step —
-    * `contacts` 4 (the parse into the cache, the batch's distinct pairs,
-    * the snapshot scan), `ids` 3 (the inbox max id, then the range sample
-    * and `zipWithIndex` of the ordered-id pass), `inbox` 4 and `tocc` 3
-    * (each write with its shuffle and contacts broadcast). A new address
-    * adds the snapshot commit, a malformed message the dead-letter write.
-    * StreamingSpec pins ≤ 16.
+    * malformed message), AQE on, `local[2]`: 6 Spark jobs, by step —
+    * `parse` 1 (the one collect of [[ingestMailBatch]]), `contacts` 1 (the
+    * snapshot scan), `ids` 1 (the inbox max id), `inbox` 2 (the write's
+    * shuffle, then the write) and `tocc` 1. A new address adds the snapshot
+    * commit, a malformed message the dead-letter write. StreamingSpec pins
+    * ≤ 6, and ≤ 7 with one dead letter.
     */
   def maillog(spark: SparkSession, dir: String, warehouse: Warehouse,
       checkpoint: String): StreamingQuery =
@@ -579,6 +575,19 @@ object LogStream {
   /** Batch-shared maillog ingest body. `batch` needs columns
     * (content binary, modificationTime timestamp).
     *
+    * One action reads the batch: a projection of [[MailParser.parseRaw]]
+    * collects each message's parsed headers (and, for a dead letter, its
+    * leading bytes) to the driver; the bodies stay on the executors. Every
+    * row of the batch is built on the driver from there, as the contacts
+    * dimension already is: a mail micro-batch has one row per file, and the
+    * file-stream source already lists every file of it on the driver.
+    *
+    * Ids: message ids are `maxMsgId + rank` over the batch's parsed
+    * messages in Spark's ascending order of (modificationTime,
+    * sender_email), ties broken by the md5 of the raw message, so a
+    * redelivery gives every message the same id. The sender and each
+    * recipient map to contact ids by SQL `=` on (realname, email_address).
+    *
     * Idempotence: message ids continue from the max id of OTHER batches
     * (`batch_id != batchId`), and the inbox/tocc writes overwrite this batch's
     * own partitions — so a redelivered micro-batch reproduces the same ids and
@@ -587,73 +596,84 @@ object LogStream {
     * whose pairs are all known commits nothing.
     *
     * Every job runs under a `graft:ingest/mail/<step>/batch=<id>` description
-    * (steps `contacts`, `dead_letters`, `ids`, `inbox`, `tocc`).
+    * (steps `parse`, `contacts`, `dead_letters`, `ids`, `inbox`, `tocc`).
     */
   def ingestMailBatch(batch: DataFrame, warehouse: Warehouse,
       batchId: Long = 0L): Unit = {
     val spark = batch.sparkSession
     val step = new Steps(spark, "ingest/mail", batchId)
-    // cache the ONE-parse frame: the contacts merge, the ordered-id pass and
-    // the dead-letter write are separate actions, and without this each
-    // would re-run the RFC-5322 UDF over every message
-    val raw = MailParser.parseRaw(batch).cache()
-    try {
-      // the contacts merge's first action reads every parsed message, so it
-      // also counts the dead letters
-      val dead = Observation()
-      val res = MailParser.fromRaw(
-        raw.observe(dead, count_if(col("parsed._7").isNotNull).as("rows")))
-      val parsed = res.events
-      val addrs = parsed
-        .select(explode(concat(
-          array(struct(col("sender_name").as("_1"), col("sender_email").as("_2"))),
-          col("recipients"))).as("a"))
-        .select(col("a._1").as("realname"), col("a._2").as("email_address"))
-      val contacts = step("contacts")(Ingest.upsertContacts(addrs, warehouse))
-      // reference parity: a message process_input would raise on is NOT
-      // ingested (maillog.py:159-164) — it lands in dead_letters instead
-      step("dead_letters")(landDeadLetters(res.deadLetters, warehouse, "mail",
-        batchId, observedRows(dead)))
+    val messages = step("parse")(MailParser.parseRaw(batch).select(
+      unix_micros(col("modificationTime")), col("parsed"), md5(col("content")),
+      when(col("parsed._7").isNotNull, MailParser.deadLine)).collect())
+    val (dead, parsed) = messages.partition(!_.getStruct(1).isNullAt(6))
 
-      // distributed ordered indexer — no single-partition row_number window.
-      // Cached: the inbox write fills it, the tocc write reads it back.
-      val keyed = step("ids") {
-        // a fold is one job; a global max aggregate is two under AQE (its
-        // exchange runs as a stage of its own). Message ids start at 1.
-        val maxMsgId = if (tableExists(spark, warehouse.path("inbox")))
-          warehouse.inboxIds(spark).filter(col("batch_id") =!= batchId)
-            .select(col("id")).rdd.map(_.getLong(0)).fold(0L)(math.max)
-        else 0L
-        graft.ops.OrderedIndex.withOrderedId(parsed,
-            Seq(col("modificationTime"), col("sender_email")), "id",
-            offset = maxMsgId)
-          .cache()
-      }
-      try {
-        // arrival timestamp = now() at insert (maillog.py:97)
-        val inboxRows = keyed
-          .withColumn("timestamp_now", current_timestamp())
-          .join(broadcast(contacts),
-            keyed("sender_name") === contacts("realname") &&
-              keyed("sender_email") === contacts("email_address"))
-          .select(keyed("id"), col("timestamp_now").as("timestamp"),
-            substring(keyed("subject"), 1, 2048).as("subject"),
-            contacts("id").as("sender_id"), keyed("size"), keyed("date"))
-        step("inbox")(Ingest.appendEvents(inboxRows, warehouse, "inbox", batchId))
+    // reference parity: a message process_input would raise on is NOT
+    // ingested (maillog.py:159-164) — it lands in dead_letters instead
+    if (dead.nonEmpty) step("dead_letters")(Ingest.writeDeadLetters(
+      MailParser.deadLetters(rows(spark,
+        dead.map(m => Row(m.getString(3), m.getStruct(1).getString(6))),
+        "line STRING, error_type STRING")),
+      warehouse, "mail", batchId))
 
-        // per-message first-occurrence recipient dedup (maillog.py:88-94) — the
-        // contact-id identity dedup maps to distinct contact ids per message.
-        val tocc = keyed
-          .select(col("id").as("msg_id"), explode(col("recipients")).as("r"))
-          .join(broadcast(contacts),
-            col("r._1") === contacts("realname") &&
-              col("r._2") === contacts("email_address"))
-          .select(col("msg_id"), contacts("id").as("contact_id"))
-          .distinct()
-        step("tocc")(Ingest.idempotentAppend(tocc, warehouse, "inbox_tocc", batchId))
-      } finally keyed.unpersist()
-    } finally raw.unpersist()
+    // parsed struct: _1 subject, _2 sender_name, _3 sender_email, _4 date,
+    // _5 recipients as (realname, email) structs, _6 size
+    val pairs = parsed.map(_.getStruct(1)).flatMap(m =>
+      Row(m.getString(1), m.getString(2)) +:
+        m.getSeq[Row](4).map(r => Row(r.getString(0), r.getString(1))))
+    val contacts = step("contacts")(Ingest.upsertContacts(spark, pairs.toSeq,
+      warehouse, Ingest.ContactsLockTimeoutMs, Ingest.ContactsMaxAttempts))
+    // SQL `=`: a stored pair with a NULL field matches nothing, and a NULL
+    // lookup key finds no entry here
+    val contactId = contacts.collect {
+      case c if !c.isNullAt(1) && !c.isNullAt(2) =>
+        (c.getString(1), c.getString(2)) -> c.getLong(0)
+    }.toMap
+
+    val maxMsgId = step("ids") {
+      // a fold is one job; a global max aggregate is two under AQE (its
+      // exchange runs as a stage of its own). Message ids start at 1.
+      if (tableExists(spark, warehouse.path("inbox")))
+        warehouse.inboxIds(spark).filter(col("batch_id") =!= batchId)
+          .select(col("id")).rdd.map(_.getLong(0)).fold(0L)(math.max)
+      else 0L
+    }
+    // Spark's ascending order, NULLs first, of (mtime, sender_email, md5)
+    val str = Ordering.Option(graft.functions.F.utf8Order)
+    val ranked = parsed
+      .sortBy(m => (Option(m.getAs[java.lang.Long](0)).map(_.longValue),
+        Option(m.getStruct(1).getString(2)), Option(m.getString(2))))(
+        Ordering.Tuple3(Ordering.Option(Ordering.Long), str, str))
+      .map(_.getStruct(1)).zipWithIndex
+      .map { case (m, i) => (maxMsgId + i + 1, m) }
+
+    // arrival timestamp = now() at insert (maillog.py:97)
+    val inbox = ranked.flatMap { case (id, m) =>
+      contactId.get((m.getString(1), m.getString(2))).map(sender =>
+        Row(id, m.getString(0), sender, m.getLong(5), m.get(3)))
+    }
+    step("inbox")(Ingest.appendEvents(
+      rows(spark, inbox, "id BIGINT NOT NULL, subject STRING, " +
+        "sender_id BIGINT, size BIGINT, date TIMESTAMP")
+        .select(col("id"), current_timestamp().as("timestamp"),
+          substring(col("subject"), 1, 2048).as("subject"), col("sender_id"),
+          col("size"), col("date")),
+      warehouse, "inbox", batchId))
+
+    // per-message first-occurrence recipient dedup (maillog.py:88-94) — the
+    // contact-id identity dedup maps to distinct contact ids per message.
+    val tocc = ranked.flatMap { case (id, m) =>
+      m.getSeq[Row](4).flatMap(r => contactId.get((r.getString(0), r.getString(1))))
+        .distinct.map(Row(id, _))
+    }
+    // one file per batch: a driver-side frame has a partition per core
+    step("tocc")(Ingest.idempotentAppend(
+      rows(spark, tocc, "msg_id BIGINT NOT NULL, contact_id BIGINT").coalesce(1),
+      warehouse, "inbox_tocc", batchId))
   }
+
+  /** A driver-side frame of `data` under the schema `ddl`. */
+  private def rows(spark: SparkSession, data: Array[Row], ddl: String): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(data: _*), StructType.fromDDL(ddl))
 
   private def tableExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

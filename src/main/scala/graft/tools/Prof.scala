@@ -64,15 +64,15 @@ object Prof {
   private def profile(spark: SparkSession, names: Seq[String], sfDir: String,
       reps: Int): Unit =
     for (name <- names) {
-      val fn = graft.SparkEntry.queries(name)
       println(s"==== $name ====")
       val recorded = (1 to reps).map { i =>
         val ((construct, exec), jobs) = JobLedger.record(spark) {
           val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val t1 = System.nanoTime()
-          df.write.mode("overwrite").format("noop").save()
-          (t1 - t0, System.nanoTime() - t1)
+          graft.SparkEntry.run(spark, name, sfDir) { df =>
+            val t1 = System.nanoTime()
+            df.write.mode("overwrite").format("noop").save()
+            (t1 - t0, System.nanoTime() - t1)
+          }
         }
         for (j <- jobs; s <- j.stages if s.runMs > 500L)
           println(f"[prof]   stage ${s.id}%4d task ${s.runMs / 1e3}%7.2f s " +
@@ -101,11 +101,11 @@ object Prof {
       names: Seq[String], sfDir: String): Unit = {
     new File(outDir).mkdirs()
     for (name <- names) {
-      val fn = graft.SparkEntry.queries(name)
-      val plan = fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = graft.SparkEntry.run(spark, name, sfDir)(_.queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      graft.SparkEntry.run(spark, name, sfDir)(
+        _.write.mode("overwrite").format("noop").save())
       val sec = (System.nanoTime() - t0) / 1e9
       val w = new PrintWriter(new File(outDir, s"${name}_$suffix.txt"))
       try {

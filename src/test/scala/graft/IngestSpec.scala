@@ -243,6 +243,38 @@ class IngestSpec extends GraftSpec {
       "the released lock must not linger")
   }
 
+  test("an upsert whose snapshot is collected by two later commits during " +
+      "its read restarts on the newest snapshot") {
+    // the two commits: v2 and v3 of a plain-file warehouse with the same ids
+    val staged = tmpWarehouse()
+    Seq("Alice", "Bob", "Carol").foreach(n => Ingest.upsertContacts(
+      Seq((n, s"${n.toLowerCase}@a.example")).toDF("realname", "email_address"),
+      staged))
+    assert(staged.contactsVersions(spark) === Seq(2L, 3L))
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.gcrace.impl", classOf[GcRaceFileSystem].getName)
+    try {
+      val root = tempDir("graft-gcrace")
+      val wh = Warehouse(s"gcrace://$root")
+      Ingest.upsertContacts(
+        Seq(("Alice", "alice@a.example")).toDF("realname", "email_address"), wh)
+      val table = root.resolve("inbox_contacts")
+      // when the upsert opens v1, v2 and v3 commit and v3's GC deletes v1
+      GcRaceFileSystem.arm(table.resolve("v-00000001").toString) {
+        Seq("v-00000002", "v-00000003").foreach(v =>
+          org.apache.commons.io.FileUtils.copyDirectory(
+            new java.io.File(staged.path("inbox_contacts"), v), table.resolve(v).toFile))
+        org.apache.commons.io.FileUtils.deleteDirectory(table.resolve("v-00000001").toFile)
+      }
+      val merged = Ingest.upsertContacts(
+        Seq(("Dave", "dave@a.example")).toDF("realname", "email_address"), wh)
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(!GcRaceFileSystem.armed, "the upsert never opened v1")
+      assert(merged === Seq((1L, "Alice"), (2L, "Bob"), (3L, "Carol"), (4L, "Dave")))
+      assert(wh.contactsVersions(spark) === Seq(3L, 4L))
+    } finally conf.unset("fs.gcrace.impl")
+  }
+
   test("appendEvents bounds files per (date, batch) leaf at the salt width") {
     val wh = tmpWarehouse()
     // 8 input partitions spanning 2 dates: without the pre-write repartition
@@ -744,5 +776,30 @@ class IngestSpec extends GraftSpec {
       graft.ingest.Compaction.compact(spark, wh, t, minLeaves = 2, keepLatest = 1))
     assert(graft.ingest.Compaction.resolveFactPaths(spark, wh.path("inbox")).isDefined)
     check("after compaction")
+  }
+}
+
+/** The local file system under the scheme `gcrace`: the first `open` of a
+  * file under the armed directory runs the armed action before it opens.
+  */
+class GcRaceFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("gcrace:///")
+  override def getScheme: String = "gcrace"
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    GcRaceFileSystem.fire(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+}
+
+object GcRaceFileSystem {
+  private val pending =
+    new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]()
+  def arm(dir: String)(action: => Unit): Unit = pending.set((dir, () => action))
+  def armed: Boolean = pending.get != null
+  private def fire(path: String): Unit = {
+    val p = pending.get
+    if (p != null && path.startsWith(p._1 + "/") && pending.compareAndSet(p, null))
+      p._2()
   }
 }

@@ -107,39 +107,113 @@ class StreamingSpec extends GraftSpec {
       s"To: Bob <bob@b.example>\nSubject: $subject\n" +
       "Date: Tue, 11 Aug 2026 04:00:00 +0000\n\nbody").getBytes(UTF_8)
 
-  test("ingest job budget: a steady-state mail micro-batch runs at most 16 " +
-      "jobs and commits no contacts version, a clean apache micro-batch at " +
-      "most 2 and no dead-letter write; every job names its ingest step") {
+  test("ingest job budget: a steady-state mail micro-batch runs at most 6 " +
+      "jobs and commits no contacts version, one with a dead letter at most " +
+      "7, clean apache and authfail micro-batches at most 2 and no " +
+      "dead-letter write; every job names its ingest step") {
     val wh = Warehouse(tmp("budget-wh").toString)
     val mailIn = tmp("budget-mail-in")
     val mailCk = tmp("budget-mail-ck").toString
-    def mailBatch(): Unit =
+    def mailBatch(): Seq[String] = JobLedger.record(spark)(
       LogStream.maillog(spark, mailIn.toString, wh, mailCk).awaitTermination()
+    )._2.map(_.description)
     Files.write(mailIn.resolve("m1.eml"), mailFrom("Alice", "first"))
     mailBatch() // batch 0 learns both addresses
     val versions = wh.contactsVersions(spark)
     // batch 1: every address known, no malformed message
     Files.write(mailIn.resolve("m2.eml"), mailFrom("Alice", "second"))
-    val mailJobs = JobLedger.record(spark)(mailBatch())._2.map(_.description)
-    assert(mailJobs.size <= 16, mailJobs.mkString("\n"))
+    val mailJobs = mailBatch()
+    assert(mailJobs.size <= 6, mailJobs.mkString("\n"))
     assert(wh.contactsVersions(spark) === versions)
     assert(wh.inbox(spark).count() === 2)
+    // batch 2: one more message, and one without a From header
+    Files.write(mailIn.resolve("m3.eml"), mailFrom("Alice", "third"))
+    Files.write(mailIn.resolve("m4.eml"), ("To: Bob <bob@b.example>\n" +
+      "Subject: no from\nDate: Tue, 11 Aug 2026 04:00:00 +0000\n\nbody")
+      .getBytes(UTF_8))
+    val deadJobs = mailBatch()
+    assert(deadJobs.size <= 7, deadJobs.mkString("\n"))
+    assert(deadJobs.count(_.startsWith("graft:ingest/mail/dead_letters/batch=2")) === 1,
+      deadJobs.mkString("\n"))
+    assert(wh.inbox(spark).count() === 3)
+    assert(wh.deadLetters(spark).count() === 1)
 
-    val apacheIn = tmp("budget-apache-in")
     val line = "2026-08-11 04:23:17 +0000|www.example.com|443|203.0.113.7|512|" +
       """14034|2751|200|["-", "GET / HTTP/1.1", "GET", "/", "HTTP/1.1", "-", "curl/8.0"]"""
-    Files.writeString(apacheIn.resolve("access.log"), s"$line\n$line\n")
-    val apacheJobs = JobLedger.record(spark)(LogStream.apache(spark,
-      apacheIn.toString, wh, tmp("budget-apache-ck").toString)
-      .awaitTermination())._2.map(_.description)
-    assert(apacheJobs.size <= 2, apacheJobs.mkString("\n"))
+    val auth = "2026-08-11T04:00:01+00:00 h sshd[1]: Failed password for root " +
+      "from 1.2.3.4 port 22 ssh2"
+    def textBatch(feed: String, lines: String)(
+        stream: (String, String) => org.apache.spark.sql.streaming.StreamingQuery) = {
+      val in = tmp(s"budget-$feed-in")
+      Files.writeString(in.resolve(s"$feed.log"), lines)
+      val jobs = JobLedger.record(spark)(stream(in.toString,
+        tmp(s"budget-$feed-ck").toString).awaitTermination())._2.map(_.description)
+      assert(jobs.size <= 2, jobs.mkString("\n"))
+      assert(!Files.exists(java.nio.file.Paths.get(wh.path(s"dead_letters/feed=$feed"))))
+      jobs
+    }
+    val apacheJobs = textBatch("apache", s"$line\n$line\n")(
+      LogStream.apache(spark, _, wh, _))
     assert(wh.apache(spark).count() === 2)
-    assert(!Files.exists(java.nio.file.Paths.get(wh.path("dead_letters/feed=apache"))))
+    val authJobs = textBatch("authfail", s"$auth\n$auth\n")(
+      LogStream.authfail(spark, _, wh, _))
+    assert(wh.authfail(spark).count() === 2)
 
-    info(s"jobs: mail ${mailJobs.size}, apache ${apacheJobs.size}")
-    (mailJobs ++ apacheJobs).foreach(d =>
+    info(s"jobs: mail ${mailJobs.size}, mail with a dead letter ${deadJobs.size}, " +
+      s"apache ${apacheJobs.size}, authfail ${authJobs.size}")
+    (mailJobs ++ deadJobs ++ apacheJobs ++ authJobs).foreach(d =>
       assert(d.startsWith("graft:ingest/"), s"untagged ingest job: $d"))
     assert(mailJobs.exists(_.startsWith("graft:ingest/mail/contacts/batch=1")))
+  }
+
+  test("mail ids follow Spark's order of (mtime, sender_email), as " +
+      "OrderedIndex assigns them, and messages tied on both keep their ids " +
+      "and tocc rows on redelivery") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val wh = Warehouse(tmp("order-wh").toString)
+    def mail(sender: String, email: String, subject: String, to: String) =
+      (s"From: $sender <$email>\nTo: $to\nSubject: $subject\n" +
+        "Date: Tue, 11 Aug 2026 04:00:00 +0000\n\nbody").getBytes(UTF_8)
+    def at(ms: Long) = new java.sql.Timestamp(ms)
+    // unique (mtime, sender_email) keys; at t=2000 the fullwidth "Ａ" sorts
+    // before the emoji in UTF-8 bytes but after it in UTF-16 code units
+    val unique = Seq(
+      (mail("Zed", "zed@a.example", "z1", "Bob <bob@b.example>"), at(1000L)),
+      (mail("Emoji", "\uD83D\uDE00@a.example", "emoji", "Bob <bob@b.example>"), at(2000L)),
+      (mail("Wide", "\uFF21@a.example", "wide", "Bob <bob@b.example>"), at(2000L)),
+      (mail("Amy", "amy@a.example", "amy", "Carol <carol@c.example>"), at(2000L)),
+      (mail("Amy", "amy@a.example", "amy late", "Bob <bob@b.example>"), at(3000L)),
+      (mail("Bea", "bea@a.example", "bea", "Bob <bob@b.example>"), at(500L))
+    ).toDF("content", "modificationTime")
+    LogStream.ingestMailBatch(unique, wh, batchId = 0L)
+    def idsBySubject(batch: Long) = wh.inbox(spark).filter(col("batch_id") === batch)
+      .select("subject", "id").as[(String, Long)].collect().toMap
+    val reference = graft.ops.OrderedIndex.withOrderedId(
+        graft.parse.MailParser.parse(unique).events,
+        Seq(col("modificationTime"), col("sender_email")), "id")
+      .select("subject", "id").as[(String, Long)].collect().toMap
+    assert(idsBySubject(0L) === reference)
+    assert(reference("wide") < reference("emoji"))
+
+    // every mail of a perfbench tick shares one mtime: ties on both keys
+    val tied = Seq(
+      (mail("Amy", "amy@a.example", "tie one", "Bob <bob@b.example>"), at(4000L)),
+      (mail("Amy", "amy@a.example", "tie two", "Carol <carol@c.example>, " +
+        "Bob <bob@b.example>"), at(4000L)))
+    def toccBySubject = wh.tocc(spark).filter(col("batch_id") === 1L)
+      .join(wh.inbox(spark).filter(col("batch_id") === 1L),
+        col("msg_id") === col("id"))
+      .select("subject", "contact_id").as[(String, Long)].collect().toSet
+    LogStream.ingestMailBatch(tied.toDF("content", "modificationTime"), wh, 1L)
+    val ids = idsBySubject(1L)
+    val tocc = toccBySubject
+    assert(ids.values.toSeq.sorted === Seq(7L, 8L))
+    assert(tocc.size === 3)
+    // the redelivered batch lists its files in the other order
+    LogStream.ingestMailBatch(tied.reverse.toDF("content", "modificationTime"), wh, 1L)
+    assert(idsBySubject(1L) === ids)
+    assert(toccBySubject === tocc)
   }
 
   test("a mail batch whose inbox append throws leaves nothing cached") {
@@ -150,7 +224,7 @@ class StreamingSpec extends GraftSpec {
         .toDF("content", "modificationTime")
     LogStream.ingestMailBatch(batch("lands"), wh, batchId = 0L)
     // a regular file where the committer stages its output: the inbox
-    // append fails, after the batch's ordered-id frame was cached
+    // append fails
     Files.createFile(java.nio.file.Paths.get(wh.path("inbox"), "_temporary"))
     spark.catalog.clearCache()
     intercept[Exception](LogStream.ingestMailBatch(batch("fails"), wh, batchId = 1L))

@@ -49,4 +49,25 @@ class JobLedgerSpec extends GraftSpec {
     assert(e.getMessage === "body failed")
     assert(ledgers.isEmpty)
   }
+
+  test("every job of a registered query run through SparkEntry.run is " +
+      "described graft:query/<id>, and the caller's description comes back") {
+    import spark.implicits._
+    val sf = tempDir("ledger-sf")
+    Seq(("view", 1.5, java.sql.Timestamp.valueOf("2026-08-11 04:00:00")),
+      ("click", 2.25, java.sql.Timestamp.valueOf("2026-08-11 05:00:00")))
+      .toDF("event_type", "value", "ts").write.parquet(s"$sf/events.parquet")
+    val sc = spark.sparkContext
+    sc.setJobDescription("ledger-spec/outer")
+    val ((rows, jobs), after) =
+      try (JobLedger.record(spark)(graft.SparkEntry.run(spark,
+        "q01_hits_by_type", sf.toString)(_.collect())),
+        sc.getLocalProperty("spark.job.description"))
+      finally sc.setJobDescription(null)
+    assert(after === "ledger-spec/outer")
+    assert(rows.length === 2)
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.description == "graft:query/q01_hits_by_type"),
+      jobs.map(_.description).mkString("\n"))
+  }
 }
