@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fixtures.{Audio, Image, Video}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.ops.Barrier.BarrierOps
 import graft.streaming.LearningGate
@@ -34,11 +35,11 @@ object EntryOps {
     par(Tables.embeddings(spark, dir))
 
   /** The media fixtures' id source, through the same [[par]] fan-out as
-    * [[docs]]/[[emb]] (r20): every `*Assets` synthesis + its decoder run as
-    * scan-stage projections over this frame, and the single-file test
-    * tables made that ONE task — the whole m/e media family was serial on a
-    * 32-core session (measured: m19's entire 5.9 s in one task). Only the
-    * 8-byte ids shuffle; payload synthesis and decode happen above, spread
+    * [[docs]]/[[emb]]: every `*Assets` builder ([[fixtureAssets]]) and its
+    * decoder run as scan-stage projections over this frame, and the
+    * single-file test tables would make that ONE task (measured before the
+    * fan-out: m19's entire 5.9 s in one task of a 32-core session). Only the
+    * 8-byte ids shuffle; payload building and decode happen above, spread
     * across the session's shuffle parallelism.
     */
   private def docIds(spark: SparkSession, dir: String): DataFrame =
@@ -53,22 +54,22 @@ object EntryOps {
     *  - [[bpeHexDict]]: four md5 words per id feeding a groupBy that
     *    shuffles anyway, so the fan-out only adds a shuffle of the ids
     *    (r20: t21 0.85 → 1.3 s wall).
-    * Every byte-payload fixture, including the video containers built by
-    * [[graft.fixtures.Video]], runs on [[docIds]].
+    * Every byte-payload fixture ([[graft.fixtures.Image]],
+    * [[graft.fixtures.Audio]], [[graft.fixtures.Video]]) runs on [[docIds]].
     */
   private def docIdsSerial(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(col("doc_id"))
 
-  /** A Scala-built fixture: `build` over the doc ids selected by `where`,
-    * as (asset_id, payload) rows. The builder is one UDF call per row, so
-    * no synthesis expression reaches the plan or whole-stage codegen. A
-    * projection, not a typed `mapPartitions`: the optimizer sizes a
-    * projection by its output row, as it sized the SQL synthesis, so every
-    * join above keeps its build side (object operators pass the 8-byte id
-    * estimate through, which flipped d37/e10 joins and added a d38 job).
+  /** A binary fixture from [[graft.fixtures]]: `build` over the doc ids
+    * selected by `where`, as (asset_id, payload) rows. The builder is one
+    * UDF call per row, so no fixture expression reaches the plan or
+    * whole-stage codegen. A projection, not a typed `mapPartitions`: the
+    * optimizer sizes a projection by its output row, so every join above
+    * keeps its build side (object operators pass the 8-byte id estimate
+    * through, which flipped d37/e10 joins and added a d38 job).
     */
-  private def videoAssets(spark: SparkSession, dir: String, where: Column,
-      build: Long => Array[Byte]): DataFrame =
+  private def fixtureAssets(spark: SparkSession, dir: String,
+      build: Long => Array[Byte], where: Column = lit(true)): DataFrame =
     docIds(spark, dir).filter(where)
       .select(col("doc_id").as("asset_id"), udf(build).apply(col("doc_id")).as("payload"))
 
@@ -499,33 +500,12 @@ object EntryOps {
       minCosine = 0.3)
   }
 
-  /** The d27 planted recording — a complete RIFF/WAVE payload (the corpus
-    * synthesis's exact 32768 Hz 8-bit-mono layout, f = 130 samples) whose
-    * samples come from a DIFFERENT deterministic formula,
-    * `p(j) = (31·j² + 17·j + 5) mod 256`: the corpus's energy-gradient
-    * dhash depends only on `seed mod 256` (every term of its sample
-    * formula is mod-256), so the base index covers ALL 256 possible
-    * corpus hashes at any realistic scale and no corpus-formula asset can
-    * ever be novel — this payload's dhash measures Hamming ≥ 18 from all
-    * 256 (scale-INDEPENDENT novelty). Rendered once as a hex literal;
-    * the oracle re-derives its dhash from the same p(j) arithmetic.
-    */
-  private val plantedWavHex: String = {
-    def p(j: Int): Int = (j * j * 31 + j * 17 + 5) % 256
-    def le16(v: Int) = f"${v % 256}%02X${v / 256}%02X"
-    def le32(v: Int) = le16(v % 65536) + le16(v / 65536)
-    val f = 130
-    "52494646" + le32(36 + f) + "57415645" + "666D7420" + "10000000" +
-      "0100" + "0100" + le32(32768) + le32(32768) + "0100" + "0800" +
-      "64617461" + le32(f) + (0 until f).map(j => f"${p(j)}%02X").mkString
-  }
-
   /** d27's planted asset ids: above any corpus doc_id at every driver
     * scale (≤ ~5·10⁵ at the ×100 probe) and clear of the `% 17 = 3`
     * truncation class (mod-17 residues 14/15). The oracle carries them
     * through the knowledge chain but keeps them OUT of the corpus-formula
     * hash CTE (their seed² would overflow int64 there — their hash comes
-    * from the [[plantedWavHex]] derivation instead).
+    * from the [[graft.fixtures.Audio.plantedWav]] derivation instead).
     */
   private val plantedMediaIds: (Long, Long) = (9000001L, 9000002L)
 
@@ -540,9 +520,10 @@ object EntryOps {
     * batches 0/1/2. Batch b's verdicts read base + learned strictly below
     * b; `new` hashable assets learn their row; truncated payloads
     * (`% 17 = 3`) surface `unhashable` and are never learned. The planted
-    * pair ([[plantedWavHex]] under ids [[plantedMediaIds]]) proves the
-    * loop with scale-independent novelty (the corpus's mod-256 hash space
-    * is fully covered by the base — see [[plantedWavHex]]): the custom
+    * pair ([[graft.fixtures.Audio.plantedWav]] under ids [[plantedMediaIds]])
+    * proves the loop with scale-independent novelty (the corpus's mod-256
+    * hash space is fully covered by the base — see
+    * [[graft.fixtures.Audio.plantedWav]]): the custom
     * recording in batch 0 must come back `new` and be learned, and its
     * byte-identical re-upload in batch 1 must come back `exact` with
     * match_id 9000001 — knowledge only a learned row can supply.
@@ -557,8 +538,8 @@ object EntryOps {
     val ids = docIds(spark, dir)
     def hashOf(c: Column): Column = graft.functions.Staged(coalesce(
       graft.functions.WavDHash(c), graft.functions.FlacDHash(c)))
-    def planted(id: Long): DataFrame = spark.sql(
-      s"SELECT CAST($id AS STRING) AS path, unhex('$plantedWavHex') AS content")
+    def planted(id: Long): DataFrame = spark.sql(s"SELECT CAST($id AS STRING) AS path")
+      .select(col("path"), lit(Audio.plantedWav).as("content"))
     LearningGate.media(hashOf(col("content"))).replay(
       root => Dedup.buildMediaIndex(
         audioCorpusAssetsOf(ids.filter(col("doc_id") % 10 <= 6))
@@ -1276,40 +1257,58 @@ object EntryOps {
       .orderBy(col("w"))
   }
 
-  /** The t23/q38 PERSISTED 256-merge model root (the e09 exists-else-
-    * scratch discipline): a pre-provisioned `$dir/bpe_model_256` is used
-    * as-is; otherwise the root is trained ONCE per JVM into a scratch dir
-    * and cached — consumers in the same session (t23's plan build, q38,
-    * repeated constructions) LOAD it, they never retrain. The cache key
-    * is the data dir, so different scale factors never share a model.
+  /** The session-cached scratch roots, by the pre-provisioned path they
+    * stand in for: the temporary directory each was built in. Every reader
+    * materializes what it reads from a root before its entry returns (the
+    * BPE model loads collect, e09's feature reads are barriered), so a
+    * dropped root breaks no plan already built.
     */
-  private val bpeRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mediaRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val scratchRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+  sys.addShutdownHook(clearSessionModelRoots())
 
-  /** Test hook (PlanSnapshotSpec): drop session-cached model roots so a
-    * query's golden `prequery_jobs` always records the COLD construction
-    * (train + persist + load), independent of which suite ran first in
-    * the shared test JVM.
+  /** `$dir/$name` when it holds every one of `parts`; otherwise a scratch
+    * root built ONCE per JVM by `build` and cached, so consumers in the
+    * same session (a plan build, repeated constructions) load it and never
+    * rebuild. The key includes the data dir, so different scale factors
+    * never share a root.
     */
-  private[graft] def clearSessionModelRoots(): Unit = {
-    bpeRootCache.clear()
-    bpeNatRootCache.clear()
-    mediaRootCache.clear()
-  }
-  private def bpeModelRoot(spark: SparkSession, dir: String): String = {
-    val pre = s"$dir/bpe_model_256"
+  private def sessionRoot(spark: SparkSession, dir: String, name: String,
+      parts: String*)(build: String => Unit): String = {
+    val pre = s"$dir/$name"
     val fs = graft.ops.IndexFs.fs(spark, dir)
-    if (graft.ops.IndexFs.exists(fs, s"$pre/model")) pre
-    else bpeRootCache.computeIfAbsent(dir, _ => {
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_bpe_model").resolve("root").toString
-      graft.ops.Bpe.buildBpeModelRoot(spark, bpeHexDict(spark, dir),
-        numMerges = 256, rootPath = scratch)
-      scratch
-    })
+    if (parts.forall(p => graft.ops.IndexFs.exists(fs, s"$pre/$p"))) pre
+    else scratchRoots.computeIfAbsent(pre, _ => {
+      val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name")
+      try build(tmp.resolve("root").toString)
+      catch { case e: Throwable =>
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile); throw e }
+      tmp
+    }).resolve("root").toString
   }
+
+  /** Drops every session-cached scratch root and deletes its directory.
+    * PlanSnapshotSpec calls it so a query's golden `prequery_jobs` always
+    * records the COLD construction (train + persist + load), independent
+    * of which suite ran first in the shared test JVM; a shutdown hook
+    * calls it at JVM exit.
+    */
+  private[graft] def clearSessionModelRoots(): Unit =
+    scratchRoots.keySet.forEach { k =>
+      Option(scratchRoots.remove(k))
+        .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    }
+
+  /** The t23/q38 PERSISTED 256-merge model root ([[sessionRoot]]): a
+    * pre-provisioned `$dir/bpe_model_256` is used as-is; otherwise the
+    * root is trained once per JVM — consumers in the same session (t23's
+    * plan build, q38, repeated constructions) LOAD it, they never retrain.
+    */
+  private def bpeModelRoot(spark: SparkSession, dir: String): String =
+    sessionRoot(spark, dir, "bpe_model_256", "model") { root =>
+      graft.ops.Bpe.buildBpeModelRoot(spark, bpeHexDict(spark, dir),
+        numMerges = 256, rootPath = root)
+    }
 
   /** q38's NAMED model root — the 12-merge model over the NATURAL word
     * dict (t19's training corpus; distinct from [[bpeModelRoot]]'s
@@ -1320,21 +1319,11 @@ object EntryOps {
     * trainer (r18 verdict item 5: the production shape is "sample under
     * model v3", and loaded ≡ retrained is the t23-proven invariant).
     */
-  private val bpeNatRootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def bpeNatModelRoot(spark: SparkSession, dir: String): String = {
-    val pre = s"$dir/bpe_model_nat12"
-    val fs = graft.ops.IndexFs.fs(spark, dir)
-    if (graft.ops.IndexFs.exists(fs, s"$pre/model")) pre
-    else bpeNatRootCache.computeIfAbsent(dir, _ => {
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_bpe_nat12").resolve("root").toString
-      graft.ops.Bpe.buildBpeModelRoot(spark,
-        graft.ops.Bpe.wordDict(docs(spark, dir)),
-        numMerges = 12, rootPath = scratch)
-      scratch
-    })
-  }
+  private def bpeNatModelRoot(spark: SparkSession, dir: String): String =
+    sessionRoot(spark, dir, "bpe_model_nat12", "model") { root =>
+      graft.ops.Bpe.buildBpeModelRoot(spark, graft.ops.Bpe.wordDict(docs(spark, dir)),
+        numMerges = 12, rootPath = root)
+    }
 
   /** t23 — tokenization under a LOADED model version (r17 verdict item
     * 2, the missing third of the BPE lifecycle after t21-train and
@@ -1964,17 +1953,7 @@ object EntryOps {
   def frameSample(spark: SparkSession, dir: String): DataFrame =
     Multimodal.frameSample(Multimodal.asAssets(Tables.documents(spark, dir)))
 
-  /** m04 — REAL container-header decode: synthesize payloads carrying valid
-    * PNG / GIF89a / BMP / JPEG(APP0+SOF0) headers with doc_id-derived
-    * dimensions (plus a headerless branch), then sniff them back with the
-    * native [[graft.functions.MediaDims]] expression. The oracle computes
-    * the expected (format, width, height) DIRECTLY from doc_id — it never
-    * sees the bytes — so any defect in either the documented header layout
-    * or the byte parsing breaks the hash match. (Real-bytes fixtures incl.
-    * JPEG fill bytes, SOF2, and a top-down BMP are spec-checked in
-    * FunctionsSpec.)
-    */
-  /** m05 — REAL pixel decode: synthesized binary netpbm payloads (P6 RGB for
+  /** m05 — REAL pixel decode: binary netpbm payloads (P6 RGB for
     * doc_id % 3 != 0, P5 gray otherwise; every 7th carries a `#` header
     * comment) whose pixel bytes cycle `(doc_id + j) % 256`. The native
     * `ppm_features` expression parses header AND raster from the actual
@@ -1982,24 +1961,8 @@ object EntryOps {
     * directly, so a construct/parse inverse bug cannot cancel out
     * (real-bytes fixtures are additionally spec-checked in FunctionsSpec).
     */
-  def ppmPixels(spark: SparkSession, dir: String): DataFrame = {
-    val w = col("doc_id") % 8 + 2
-    val h = (col("doc_id") * 3) % 8 + 2
-    val isP6 = col("doc_id") % 3 =!= 0
-    val chans = when(isP6, lit(3L)).otherwise(lit(1L))
-    val start = col("doc_id") % 256
-    val header = concat(
-      when(isP6, lit("P6")).otherwise(lit("P5")), lit("\n"),
-      when(col("doc_id") % 7 === 0, lit("# synthetic fixture\n")).otherwise(lit("")),
-      w.cast("string"), lit(" "), h.cast("string"), lit("\n255\n"))
-    val pixHex = array_join(
-      transform(sequence(lit(0L), w * h * chans - 1),
-        j => lpad(hex((start + j) % 256), 2, "0")), "")
-    val assets = docIds(spark, dir).select(
-      col("doc_id").as("asset_id"),
-      concat(header.cast("binary"), unhex(pixHex)).as("payload"))
-    Multimodal.ppmFeatures(assets)
-  }
+  def ppmPixels(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.ppmFeatures(fixtureAssets(spark, dir, Image.ppm))
 
   /** m12/d13 fixture — netpbm payloads whose PIXEL CONTENT is a NONLINEAR
     * function of a pattern seed (quadratic in (seed + byte index) mod 256):
@@ -2011,25 +1974,8 @@ object EntryOps {
     * the seed of doc_id − 1 — those are the planted visual duplicates d13
     * must find (different doc, same rendered content).
     */
-  def dhashAssets(spark: SparkSession, dir: String): DataFrame = {
-    val dec = expr("doc_id div 10")
-    val w = dec % 8 + 2
-    val h = (dec * 3) % 8 + 2
-    val chans = when(dec % 3 =!= 0, lit(3L)).otherwise(lit(1L))
-    val seed = expr(
-      "IF(doc_id % 10 = 1, doc_id - 1, doc_id) * 131")
-    val header = concat(
-      when(chans === 3, lit("P6")).otherwise(lit("P5")), lit("\n"),
-      w.cast("string"), lit(" "), h.cast("string"), lit("\n255\n"))
-    val pixHex = array_join(
-      transform(sequence(lit(0L), w * h * chans - 1),
-        jj => lpad(hex(
-          ((seed + jj) * (seed + jj) * 13 + (seed + jj) * 7 + seed) % 256),
-          2, "0")), "")
-    docIds(spark, dir).select(
-      col("doc_id").as("asset_id"),
-      concat(header.cast("binary"), unhex(pixHex)).as("payload"))
-  }
+  def dhashAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.dhash)
 
   /** m12 — perceptual image hash over REAL decoded netpbm rasters: the
     * native `ppm_dhash` expression against [[dhashAssets]]; the oracle
@@ -2069,20 +2015,17 @@ object EntryOps {
     // per-PAIR Hamming is codegen'd bit_count(xor) — a 64-iteration
     // substring lambda here ran interpreted per candidate and was the
     // whole cost of the query at sf0.1 (measured 12-19 s → sub-second)
-    // localCheckpoint the hash table: it is tiny (one 64-char string + 2
-    // longs per asset) and its upstream — payload decode, or at bench
-    // scale payload SYNTHESIS — would otherwise re-execute for the
-    // frequency count and BOTH sides of the candidate join. A cache()
-    // dedups the execution but keeps the decode's full expression tree in
-    // the logical plan, where the keep/a/b branches re-ANALYZE it per
-    // action — for the fixture-synthesized corpora (e06) that driver-side
-    // cost was the bulk of the query; truncating the lineage removes it
-    // (the clusterComponents discipline).
+    // barrier the hash table: it is tiny (one 64-char string + 2 longs
+    // per asset) and its upstream payload decode would otherwise
+    // re-execute for the frequency count and BOTH sides of the candidate
+    // join. A cache() dedups the execution but keeps the decode's plan in
+    // the lineage, where the keep/a/b branches re-ANALYZE it per action;
+    // truncating the lineage removes that (the clusterComponents
+    // discipline).
     // the Staged fence pins the hash to ONE evaluation: without it,
-    // CollapseProject inlines the decode (and at bench scale the payload
-    // synthesis) into dhash AND hi AND lo AND the not-null filter — four
-    // per-row evaluations of the heaviest expression in the plan
-    // (measured: e06's candidate stage 22 s → 2.5 s at sf0.001)
+    // CollapseProject inlines the decode into dhash AND hi AND lo AND the
+    // not-null filter — four per-row decodes, the heaviest expression in
+    // the plan
     val hashed = hashes
       .select(col("asset_id"), graft.functions.Staged(col("dhash")).as("dhash"))
       .filter(col("dhash").isNotNull)
@@ -2115,86 +2058,20 @@ object EntryOps {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** m06 fixture — VALID PNG payloads synthesized in-plan from doc_id:
-    * width/height/color cycle like m05's netpbm fixture, raw samples are
-    * `(doc_id + j) % 256` in scanline order, and each scanline y is encoded
-    * with filter type `y % 5` — so every one of the five PNG filters
-    * (None/Sub/Up/Average/Paeth) is exercised in the oracle-checked path
-    * (the FORWARD filter arithmetic runs here in SQL; the decoder must
-    * invert it). The zlib stream uses a stored (uncompressed) DEFLATE block
-    * with the REAL adler32 computed by SQL aggregation, and every chunk
-    * carries its REAL CRC via Spark's builtin `crc32` — the payloads are
-    * spec-valid PNGs end to end (FunctionsSpec cross-checks fixture bytes
-    * against the JDK's own ImageIO decoder), so a construct/parse inverse
-    * bug cannot cancel out.
+  /** m06 fixture — VALID PNG payloads built from doc_id
+    * ([[graft.fixtures.Image.png]]): width/height/color cycle like m05's
+    * netpbm fixture, raw samples are `(doc_id + j) % 256` in scanline order,
+    * and each scanline y is encoded with filter type `y % 5` — so every one
+    * of the five PNG filters (None/Sub/Up/Average/Paeth) is exercised in the
+    * oracle-checked path (the builder runs the FORWARD filter arithmetic; the
+    * decoder must invert it). The zlib stream uses a stored (uncompressed)
+    * DEFLATE block with the REAL adler32, and every chunk carries its REAL
+    * CRC — the payloads are spec-valid PNGs end to end (FunctionsSpec
+    * cross-checks fixture bytes against the JDK's own ImageIO decoder), so a
+    * construct/parse inverse bug cannot cancel out.
     */
-  def pngAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        (col("doc_id") % 8 + 2).as("w"),
-        ((col("doc_id") * 3) % 8 + 2).as("h"),
-        (col("doc_id") % 256).as("start"),
-        when(col("doc_id") % 3 =!= 0, lit(3L)).otherwise(lit(1L)).as("bpp"))
-      .withColumn("stride", col("w") * col("bpp"))
-      .withColumn("len", col("h") * (col("stride") + 1))
-    // filtered raster: index k over h·(stride+1) bytes; the first byte of a
-    // row is its filter type (y % 5), the rest is the forward-filtered
-    // sample. SQL lambdas have no let-bindings, so raw/left/up/upleft —
-    // each closed-form from (start + y·stride + x) % 256 — are inlined by
-    // string substitution here; the decoder must invert the arithmetic.
-    val y = "(k div (stride + 1))"
-    val x = "(k % (stride + 1) - 1)"
-    def rawAt(yy: String, xx: String) = s"((start + $yy * stride + $xx) % 256)"
-    val raw = rawAt(y, x)
-    val lf = s"IF($x >= bpp, ${rawAt(y, s"($x - bpp)")}, 0L)"
-    val up = s"IF($y > 0, ${rawAt(s"($y - 1)", x)}, 0L)"
-    val ul = s"IF($x >= bpp AND $y > 0, ${rawAt(s"($y - 1)", s"($x - bpp)")}, 0L)"
-    val p = s"($lf + $up - $ul)"
-    val pred = s"""CASE
-        WHEN $y % 5 = 0 THEN 0L
-        WHEN $y % 5 = 1 THEN $lf
-        WHEN $y % 5 = 2 THEN $up
-        WHEN $y % 5 = 3 THEN ($lf + $up) div 2
-        WHEN abs($p - $lf) <= abs($p - $up) AND abs($p - $lf) <= abs($p - $ul) THEN $lf
-        WHEN abs($p - $up) <= abs($p - $ul) THEN $up
-        ELSE $ul END"""
-    val fdata = expr(
-      s"""transform(sequence(0L, len - 1), k ->
-            IF(k % (stride + 1) = 0, $y % 5, pmod($raw - $pred, 256)))""")
-    val withData = d.withColumn("fdata", fdata)
-      .withColumn("data_hex",
-        expr("array_join(transform(fdata, v -> lpad(hex(v), 2, '0')), '')"))
-      // adler32 over the raster in ONE aggregate pass (the textbook
-      // recurrence A += v; B += A, no mod needed until the end: with
-      // len ≤ 720 the accumulators stay < 2^28) — replaces the previous
-      // transform + two aggregates, the dominant cost of this fixture
-      .withColumn("adler", expr(
-        """aggregate(fdata, named_struct('a', 1L, 'b', 0L),
-             (acc, v) -> named_struct('a', acc.a + v, 'b', acc.b + acc.a + v))"""))
-      .withColumn("adler_a", expr("adler.a % 65521"))
-      .withColumn("adler_b", expr("adler.b % 65521"))
-    def be32hex(c: Column): Column = lpad(hex(c), 8, "0")
-    def le16hex(e: String): Column =
-      expr(s"concat(lpad(hex(($e) % 256), 2, '0'), lpad(hex(($e) div 256), 2, '0'))")
-    val zlibHex = concat(
-      lit("780101"), // CMF/FLG (5C=30721, %31==0) + final stored block
-      le16hex("len"), le16hex("65535 - len"), // LEN, NLEN (one's complement)
-      col("data_hex"),
-      be32hex(col("adler_b") * 65536 + col("adler_a")))
-    val ihdrBody = concat(
-      be32hex(col("w")), be32hex(col("h")), lit("08"), // 8-bit
-      when(col("bpp") === 3, lit("02")).otherwise(lit("00")), // RGB / gray
-      lit("000000")) // compression 0, filter 0, no interlace
-    def chunkHex(typeHex: Column, bodyHex: Column): Column = concat(
-      be32hex((length(bodyHex) / 2).cast("long")), typeHex, bodyHex,
-      be32hex(crc32(unhex(concat(typeHex, bodyHex)))))
-    val payloadHex = concat(
-      lit("89504E470D0A1A0A"),
-      chunkHex(lit("49484452"), ihdrBody), // IHDR
-      chunkHex(lit("49444154"), zlibHex), // IDAT
-      lit("0000000049454E44AE426082")) // IEND (constant CRC)
-    withData.select(col("doc_id").as("asset_id"), unhex(payloadHex).as("payload"))
-  }
+  def pngAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.png)
 
   /** m06 — REAL pixel decode of a COMPRESSED format: [[pngAssets]] payloads
     * through the native `png_features` expression (chunk walk + JDK-zlib
@@ -2204,54 +2081,21 @@ object EntryOps {
   def pngPixels(spark: SparkSession, dir: String): DataFrame =
     Multimodal.pngFeatures(pngAssets(spark, dir))
 
-  /** m07 fixture — VALID RIFF/WAVE PCM payloads synthesized in-plan from
-    * doc_id: channels = doc_id%2+1, width is 16-bit signed LE for
-    * doc_id%3 != 0 and 8-bit unsigned otherwise, rate = 8000+(doc_id%5)·2000,
-    * doc_id%12+4 frames; interleaved sample j carries byte
-    * `(doc_id·5 + j·7) % 256` (8-bit) or LE word `(doc_id·11 + j·13) % 65536`
-    * (16-bit). Every 7th payload interposes a LIST chunk with an ODD body
-    * size before `fmt ` so the decoder's chunk-skip + word-alignment padding
-    * is on the oracle-checked path, and an odd-sized 8-bit data chunk gets
-    * its trailing pad byte — the payloads are spec-valid WAVs end to end
+  /** m07 fixture — VALID RIFF/WAVE PCM payloads built from doc_id
+    * ([[graft.fixtures.Audio.wav]]): channels = doc_id%2+1, width is 16-bit
+    * signed LE for doc_id%3 != 0 and 8-bit unsigned otherwise, rate =
+    * 8000+(doc_id%5)·2000, doc_id%12+4 frames; interleaved sample j carries
+    * byte `(doc_id·5 + j·7) % 256` (8-bit) or LE word `(doc_id·11 + j·13) %
+    * 65536` (16-bit). Every 7th payload interposes a LIST chunk with an ODD
+    * body size before `fmt ` so the decoder's chunk-skip + word-alignment
+    * padding is on the oracle-checked path, and an odd-sized 8-bit data chunk
+    * gets its trailing pad byte — the payloads are spec-valid WAVs end to end
     * (FunctionsSpec cross-checks fixture bytes against the JDK's own
     * `javax.sound.sampled` decoder), so a construct/parse inverse bug cannot
     * cancel out.
     */
-  def wavAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        (col("doc_id") % 2 + 1).as("c"),
-        when(col("doc_id") % 3 =!= 0, lit(16L)).otherwise(lit(8L)).as("bits"),
-        (col("doc_id") % 5 * 2000 + 8000).as("rate"),
-        (col("doc_id") % 12 + 4).as("f"))
-      .withColumn("block", expr("c * bits div 8"))
-      .withColumn("dsize", col("f") * col("block"))
-    def le16hex(e: String): Column =
-      expr(s"concat(lpad(hex(($e) % 256), 2, '0'), lpad(hex(($e) div 256), 2, '0'))")
-    def le32hex(e: String): Column =
-      concat(le16hex(s"($e) % 65536"), le16hex(s"($e) div 65536"))
-    val samplesHex = expr(
-      """array_join(transform(sequence(0L, f * c - 1), j ->
-           IF(bits = 8,
-              lpad(hex((doc_id * 5 + j * 7) % 256), 2, '0'),
-              concat(lpad(hex((doc_id * 11 + j * 13) % 65536 % 256), 2, '0'),
-                     lpad(hex((doc_id * 11 + j * 13) % 65536 div 256), 2, '0')))), '')""")
-    // LIST chunk with a 5-byte INFO body ("INFOX") — odd size, so a real
-    // writer emits a pad byte after it; exercises the skip-and-align path
-    val listHex = when(col("doc_id") % 7 === 0,
-      lit("4C495354" + "05000000" + "494E464F58" + "00")).otherwise(lit(""))
-    val fmtHex = concat(lit("666D7420" + "10000000" + "0100"), // PCM
-      le16hex("c"), le32hex("rate"), le32hex("rate * block"),
-      le16hex("block"), le16hex("bits"))
-    val dataHex = concat(lit("64617461"), le32hex("dsize"), samplesHex,
-      when(col("dsize") % 2 === 1, lit("00")).otherwise(lit("")))
-    val bodyHex = concat(lit("57415645"), listHex, fmtHex, dataHex)
-    val payloadHex = concat(lit("52494646"),
-      le32hex("length(bodyHex) div 2"), col("bodyHex"))
-    d.withColumn("bodyHex", bodyHex)
-      .withColumn("payloadHex", payloadHex)
-      .select(col("doc_id").as("asset_id"), unhex(col("payloadHex")).as("payload"))
-  }
+  def wavAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Audio.wav)
 
   /** m07 — REAL sample decode of PCM audio: [[wavAssets]] payloads through
     * the native `wav_features` expression (RIFF chunk walk + interleaved
@@ -2261,114 +2105,34 @@ object EntryOps {
   def wavPcm(spark: SparkSession, dir: String): DataFrame =
     Multimodal.wavFeatures(wavAssets(spark, dir))
 
-  /** m15 fixture — VALID baseline JPEGs synthesized in-plan from doc_id,
-    * Huffman entropy stream and all. Four variants by `doc_id % 4`:
-    * 0 = grayscale (quant 8), 1 = YCbCr 4:4:4 (luma table 0 = 8s, chroma
-    * table 1 = 16s — exercises two-table DQT + per-component Tq),
-    * 2 = YCbCr 4:2:0 (2×2 luma sampling: 4 Y blocks per MCU in the spec's
-    * left-right/top-bottom order, partial-MCU cropping on non-16-multiple
-    * dims), 3 = grayscale with quant 4 (same pixels via a different
-    * dequant path). Every 8×8 block holds the CONSTANT value
+  /** m15 fixture — VALID baseline JPEGs built from doc_id
+    * ([[graft.fixtures.Image.jpeg]]), Huffman entropy stream and all. Four
+    * variants by `doc_id % 4`: 0 = grayscale (quant 8), 1 = YCbCr 4:4:4 (luma
+    * table 0 = 8s, chroma table 1 = 16s — exercises two-table DQT +
+    * per-component Tq), 2 = YCbCr 4:2:0 (2×2 luma sampling: 4 Y blocks per
+    * MCU in the spec's left-right/top-bottom order, partial-MCU cropping on
+    * non-16-multiple dims), 3 = grayscale with quant 4 (same pixels via a
+    * different dequant path). Every 8×8 block holds the CONSTANT value
     * `(doc_id·7 + bx·13 + by·29) % 256`: a flat block round-trips the
     * DCT/quant/IDCT chain bit-exactly (only the DC coefficient is nonzero,
-    * and 8·(v−128) is divisible by every quant step used), so the oracle
-    * can predict the decoded sums in closed form while the decoder still
-    * runs REAL Huffman/dequant/IDCT arithmetic on real entropy-coded bytes.
-    * Chroma planes are the constant 128 (zero chroma), which also makes the
-    * sums invariant to the decoder's upsampling filter — R=G=B=Y exactly.
-    * The DC Huffman table is a spec-valid canonical table with all twelve
-    * categories at code length 4 (code = the category in 4 bits); the AC
-    * table holds the single symbol EOB at length 1 — the SQL encoder stays
-    * closed-form, while ImageIO-written JPEGs in FunctionsSpec cover the
-    * standard multi-length tables, AC coefficients and restart markers.
-    * Refusal branches ride in-plan: every 13th doc is marked progressive
-    * (SOF2) and every 17th truncates the entropy stream — both must yield
-    * header dims with null sums, never a misread. Amplitude bits follow
-    * F.2.2.1: positives verbatim, negatives offset by 2^cat − 1; the byte
-    * stream is padded with 1-bits and 0xFF bytes are stuffed with 0x00.
+    * and 8·(v−128) is divisible by every quant step used), so the oracle can
+    * predict the decoded sums in closed form while the decoder still runs
+    * REAL Huffman/dequant/IDCT arithmetic on real entropy-coded bytes. Chroma
+    * planes are the constant 128 (zero chroma), which also makes the sums
+    * invariant to the decoder's upsampling filter — R=G=B=Y exactly. The DC
+    * Huffman table is a spec-valid canonical table with all twelve categories
+    * at code length 4 (code = the category in 4 bits); the AC table holds the
+    * single symbol EOB at length 1 — the encoder stays closed-form, while
+    * ImageIO-written JPEGs in FunctionsSpec cover the standard multi-length
+    * tables, AC coefficients and restart markers. Refusal branches ride
+    * along: every 13th doc is marked progressive (SOF2) and every 17th
+    * truncates the entropy stream — both must yield header dims with null
+    * sums, never a misread. Amplitude bits follow F.2.2.1: positives
+    * verbatim, negatives offset by 2^cat − 1; the byte stream is padded with
+    * 1-bits and 0xFF bytes are stuffed with 0x00.
     */
-  def jpegAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        (col("doc_id") % 4).as("mode"),
-        (col("doc_id") % 21 + 4).as("w"),
-        ((col("doc_id") * 5) % 19 + 4).as("h"),
-        (col("doc_id") % 13 === 5).as("prog"),
-        (col("doc_id") % 17 === 3).as("trunc"))
-      .withColumn("wb", expr("(w + 7) div 8"))
-      .withColumn("hb", expr("(h + 7) div 8"))
-      .withColumn("wb2", expr("(w + 15) div 16"))
-      .withColumn("hb2", expr("(h + 15) div 16"))
-      .withColumn("scale", expr("IF(mode = 3, 2L, 1L)"))
-      // scan units: one per Y block (chroma blocks are a constant suffix)
-      .withColumn("n_units", expr("IF(mode = 2, wb2 * hb2 * 4, wb * hb)"))
-    // Closed-form block coordinates for scan-order unit k. 4:2:0 MCUs carry
-    // four Y blocks (k div 4 = MCU, k % 4 = position: left-right then
-    // top-bottom); the 8-grid modes are plain row-major.
-    def bx(k: String) =
-      s"IF(mode = 2, 2 * ((($k) div 4) % wb2) + ($k) % 4 % 2, ($k) % wb)"
-    def by(k: String) =
-      s"IF(mode = 2, 2 * ((($k) div 4) div wb2) + ($k) % 4 div 2, ($k) div wb)"
-    // quantized DC of unit k: (v − 128) · (8 / quantStep)
-    def dval(k: String) =
-      s"(((doc_id * 7 + (${bx(k)}) * 13 + (${by(k)}) * 29) % 256 - 128) * scale)"
-    val withBits = d
-      .withColumn("dvals", expr(s"transform(sequence(0L, n_units - 1), k -> ${dval("k")})"))
-      .withColumn("diffs", expr(
-        """transform(sequence(0L, n_units - 1), k ->
-             element_at(dvals, CAST(k AS INT) + 1)
-               - IF(k = 0, 0L, element_at(dvals, CAST(k AS INT))))"""))
-      .withColumn("cats", expr(
-        "transform(diffs, d -> IF(d = 0, 0L, CAST(length(conv(abs(d), 10, 2)) AS BIGINT)))"))
-      // per-unit bits: DC code (category in 4 bits) + amplitude + EOB('0')
-      // + the constant chroma suffix (two blocks of cat-0 + EOB = '00000')
-      // after every 4:4:4 MCU / every 4th 4:2:0 Y block
-      .withColumn("ubits", expr(
-        """transform(sequence(0L, n_units - 1), k ->
-             concat(
-               lpad(conv(element_at(cats, CAST(k AS INT) + 1), 10, 2), 4, '0'),
-               IF(element_at(diffs, CAST(k AS INT) + 1) = 0, '',
-                  lpad(conv(IF(element_at(diffs, CAST(k AS INT) + 1) > 0,
-                               element_at(diffs, CAST(k AS INT) + 1),
-                               element_at(diffs, CAST(k AS INT) + 1)
-                                 + shiftleft(1L, CAST(element_at(cats, CAST(k AS INT) + 1) AS INT)) - 1),
-                            10, 2),
-                       CAST(element_at(cats, CAST(k AS INT) + 1) AS INT), '0')),
-               '0',
-               CASE WHEN mode = 1 OR (mode = 2 AND k % 4 = 3)
-                    THEN '0000000000' ELSE '' END))"""))
-      .withColumn("allbits", expr("array_join(ubits, '')"))
-      .withColumn("padbits", expr(
-        "concat(allbits, repeat('1', (8 - length(allbits) % 8) % 8))"))
-      .withColumn("entropy_hex", expr(
-        """array_join(transform(sequence(0L, length(padbits) div 8 - 1), i ->
-             CASE WHEN substring(padbits, CAST(i * 8 + 1 AS INT), 8) = '11111111'
-                  THEN 'FF00'
-                  ELSE lpad(conv(substring(padbits, CAST(i * 8 + 1 AS INT), 8), 2, 16), 2, '0') END),
-           '')"""))
-    val dqtHex = concat(lit("FFDB004300"),
-      expr("IF(mode = 3, repeat('04', 64), repeat('08', 64))"),
-      when(col("mode") === 1, lit("FFDB004301" + "10" * 64)).otherwise(lit("")))
-    val sofMarker = when(col("prog"), lit("FFC2")).otherwise(lit("FFC0"))
-    val dimsHex = concat(lpad(hex(col("h")), 4, "0"), lpad(hex(col("w")), 4, "0"))
-    val sofHex = when(col("mode") % 3 === 0, // grayscale modes 0 and 3
-        concat(sofMarker, lit("000B08"), dimsHex, lit("0101"), lit("1100")))
-      .otherwise(concat(sofMarker, lit("001108"), dimsHex, lit("03"),
-        lit("01"), when(col("mode") === 2, lit("22")).otherwise(lit("11")), lit("00"),
-        lit("0211"), when(col("mode") === 1, lit("01")).otherwise(lit("00")),
-        lit("0311"), when(col("mode") === 1, lit("01")).otherwise(lit("00"))))
-    val dhtHex = lit("FFC40031" +
-      "00" + "0000000C" + "00" * 12 + "000102030405060708090A0B" + // DC: 12 cats at len 4
-      "10" + "01" + "00" * 15 + "00") // AC: EOB alone at len 1
-    val sosHex = when(col("mode") % 3 === 0, lit("FFDA0008010100003F00"))
-      .otherwise(lit("FFDA000C03010002000300003F00"))
-    val payloadHex = concat(
-      lit("FFD8"), lit("FFE000104A46494600010100000100010000"), // SOI + JFIF APP0
-      dqtHex, sofHex, dhtHex, sosHex,
-      when(col("trunc"), lit("")).otherwise(col("entropy_hex")),
-      lit("FFD9"))
-    withBits.select(col("doc_id").as("asset_id"), unhex(payloadHex).as("payload"))
-  }
+  def jpegAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.jpeg)
 
   /** m15 — REAL entropy-coded pixel decode: [[jpegAssets]] payloads through
     * the native `jpeg_features` expression (T.81 baseline: Huffman + DC
@@ -2396,8 +2160,9 @@ object EntryOps {
         graft.functions.JpegDHash(col("payload")).as("dhash"))
       .orderBy(col("asset_id"))
 
-  /** m17 fixture — VALID PROGRESSIVE (SOF2) JPEGs synthesized in-plan from
-    * doc_id, with a real Annex G three-scan script:
+  /** m17 fixture — VALID PROGRESSIVE (SOF2) JPEGs built from doc_id
+    * ([[graft.fixtures.Image.jpegProgressive]]), with a real Annex G
+    * three-scan script:
     *   scan 1 = DC first (Ss=0, Se=0, Ah=0, Al=1): diff-coded point-
     *     transformed DC values `D >> 1` through the same 4-bit-category
     *     canonical DC table as [[jpegAssets]];
@@ -2411,88 +2176,14 @@ object EntryOps {
     * with doubled coefficients — same pixels). Every 8×8 block holds the
     * same constant `(doc_id·7 + bx·13 + by·29) % 256` as [[jpegAssets]],
     * so the oracle's closed-form crop-summed pixel formula carries over
-    * verbatim. Refusal branches ride in-plan: every 13th doc swaps SOF2
+    * verbatim. Refusal branches ride along: every 13th doc swaps SOF2
     * for SOF10 (arithmetic progressive — no arithmetic decoder) and every
     * 17th omits the AC scan entirely (an incomplete scan script, refused
     * by the coverage mask at EOI) — both must yield header dims with null
     * sums, never a partial decode.
     */
-  def jpegProgressiveAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        (col("doc_id") % 2).as("mode"),
-        (col("doc_id") % 21 + 4).as("w"),
-        ((col("doc_id") * 5) % 19 + 4).as("h"),
-        (col("doc_id") % 13 === 5).as("arith"),
-        (col("doc_id") % 17 === 3).as("trunc"))
-      .withColumn("wb", expr("(w + 7) div 8"))
-      .withColumn("hb", expr("(h + 7) div 8"))
-      .withColumn("scale", expr("IF(mode = 1, 2L, 1L)"))
-      .withColumn("n_units", expr("wb * hb"))
-    // quantized DC of block k (row-major): (v − 128) · (8 / quantStep)
-    def dval(k: String) =
-      s"(((doc_id * 7 + (($k) % wb) * 13 + (($k) div wb) * 29) % 256 - 128) * scale)"
-    // bit-plane split per G.1.2.1: first scan codes D >> 1 (arithmetic
-    // shift = the spec's point transform), refinement sends D & 1
-    val withBits = d
-      .withColumn("dvals", expr(
-        s"""transform(sequence(0L, n_units - 1), k -> ${dval("k")})"""))
-      .withColumn("d1vals", expr("transform(dvals, v -> shiftright(v, 1))"))
-      .withColumn("diffs", expr(
-        """transform(sequence(0L, n_units - 1), k ->
-             element_at(d1vals, CAST(k AS INT) + 1)
-               - IF(k = 0, 0L, element_at(d1vals, CAST(k AS INT)))"""
-          + ")"))
-      .withColumn("cats", expr(
-        "transform(diffs, d -> IF(d = 0, 0L, CAST(length(conv(abs(d), 10, 2)) AS BIGINT)))"))
-      .withColumn("s1bits", expr(
-        """array_join(transform(sequence(0L, n_units - 1), k ->
-             concat(
-               lpad(conv(element_at(cats, CAST(k AS INT) + 1), 10, 2), 4, '0'),
-               IF(element_at(diffs, CAST(k AS INT) + 1) = 0, '',
-                  lpad(conv(IF(element_at(diffs, CAST(k AS INT) + 1) > 0,
-                               element_at(diffs, CAST(k AS INT) + 1),
-                               element_at(diffs, CAST(k AS INT) + 1)
-                                 + shiftleft(1L, CAST(element_at(cats, CAST(k AS INT) + 1) AS INT)) - 1),
-                            10, 2),
-                       CAST(element_at(cats, CAST(k AS INT) + 1) AS INT), '0')))), '')"""))
-      .withColumn("s2bits", expr(
-        "array_join(transform(dvals, v -> CAST(pmod(v, 2) AS STRING)), '')"))
-      .withColumn("s3bits", expr("repeat('0', CAST(n_units AS INT))"))
-    // per-scan byte stream: pad with 1-bits, stuff 0xFF with 0x00
-    def pad(bits: String) =
-      s"concat($bits, repeat('1', (8 - length($bits) % 8) % 8))"
-    def entropyHex(pb: String) =
-      s"""array_join(transform(sequence(0L, length($pb) div 8 - 1), i ->
-           CASE WHEN substring($pb, CAST(i * 8 + 1 AS INT), 8) = '11111111'
-                THEN 'FF00'
-                ELSE lpad(conv(substring($pb, CAST(i * 8 + 1 AS INT), 8), 2, 16), 2, '0') END),
-         '')"""
-    val withHex = withBits
-      .withColumn("p1", expr(pad("s1bits")))
-      .withColumn("p2", expr(pad("s2bits")))
-      .withColumn("p3", expr(pad("s3bits")))
-      .withColumn("e1", expr(entropyHex("p1")))
-      .withColumn("e2", expr(entropyHex("p2")))
-      .withColumn("e3", expr(entropyHex("p3")))
-    val dqtHex = concat(lit("FFDB004300"),
-      expr("IF(mode = 1, repeat('04', 64), repeat('08', 64))"))
-    val sofMarker = when(col("arith"), lit("FFCA")).otherwise(lit("FFC2"))
-    val dimsHex = concat(lpad(hex(col("h")), 4, "0"), lpad(hex(col("w")), 4, "0"))
-    val sofHex = concat(sofMarker, lit("000B08"), dimsHex, lit("0101"), lit("1100"))
-    val dhtHex = lit("FFC40031" +
-      "00" + "0000000C" + "00" * 12 + "000102030405060708090A0B" + // DC: 12 cats at len 4
-      "10" + "01" + "00" * 15 + "00") // AC: EOB alone at len 1
-    val payloadHex = concat(
-      lit("FFD8"), lit("FFE000104A46494600010100000100010000"), // SOI + JFIF APP0
-      dqtHex, sofHex, dhtHex,
-      lit("FFDA0008010100000001"), col("e1"), // DC first,  Ah=0 Al=1
-      lit("FFDA0008010100000010"), col("e2"), // DC refine, Ah=1 Al=0
-      when(col("trunc"), lit(""))
-        .otherwise(concat(lit("FFDA0008010100013F00"), col("e3"))), // AC 1..63
-      lit("FFD9"))
-    withHex.select(col("doc_id").as("asset_id"), unhex(payloadHex).as("payload"))
-  }
+  def jpegProgressiveAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.jpegProgressive)
 
   /** m17 — REAL multi-scan PROGRESSIVE pixel decode: [[jpegProgressiveAssets]]
     * payloads through the native `jpeg_features` expression (T.81 Annex G:
@@ -2506,7 +2197,8 @@ object EntryOps {
   def jpegProgressivePixels(spark: SparkSession, dir: String): DataFrame =
     Multimodal.jpegFeatures(jpegProgressiveAssets(spark, dir))
 
-  /** e06 fixture — a JPEG corpus where the SAME grayscale content ships
+  /** e06 fixture ([[graft.fixtures.Image.jpegCorpus]]) — a JPEG corpus
+    * where the SAME grayscale content ships
     * under BOTH entropy codings the decoder family supports: baseline
     * (SOF0, single scan) for `doc_id % 3 != 2`, PROGRESSIVE (SOF2,
     * [[jpegProgressiveAssets]]'s three-scan script at quant 8) otherwise.
@@ -2520,89 +2212,8 @@ object EntryOps {
     * refusal) and must be QUARANTINED by the composed pipeline, never
     * clustered and never decorated.
     */
-  def jpegCorpusAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        expr("IF(doc_id % 10 = 1, doc_id - 1, doc_id)").as("sd"),
-        (col("doc_id") % 3 === 2).as("prog"),
-        (col("doc_id") % 17 === 3).as("trunc"))
-      .withColumn("w", expr("sd % 21 + 4"))
-      .withColumn("h", expr("(sd * 5) % 19 + 4"))
-      .withColumn("wb", expr("(w + 7) div 8"))
-      .withColumn("hb", expr("(h + 7) div 8"))
-      .withColumn("n_units", expr("wb * hb"))
-    // quantized DC of block k at quant 8: v − 128 (scale 1)
-    def dval(k: String) =
-      s"((sd * 7 + (($k) % wb) * 13 + (($k) div wb) * 29) % 256 - 128)"
-    def catAmp(diffArr: String, k: String) =
-      s"""concat(
-            lpad(conv(IF(element_at($diffArr, CAST($k AS INT) + 1) = 0, 0L,
-                 CAST(length(conv(abs(element_at($diffArr, CAST($k AS INT) + 1)), 10, 2)) AS BIGINT)),
-              10, 2), 4, '0'),
-            IF(element_at($diffArr, CAST($k AS INT) + 1) = 0, '',
-               lpad(conv(IF(element_at($diffArr, CAST($k AS INT) + 1) > 0,
-                            element_at($diffArr, CAST($k AS INT) + 1),
-                            element_at($diffArr, CAST($k AS INT) + 1)
-                              + shiftleft(1L, CAST(length(conv(abs(element_at($diffArr, CAST($k AS INT) + 1)), 10, 2)) AS INT)) - 1),
-                         10, 2),
-                    CAST(length(conv(abs(element_at($diffArr, CAST($k AS INT) + 1)), 10, 2)) AS INT), '0')))"""
-    def pad(bits: String) =
-      s"concat($bits, repeat('1', (8 - length($bits) % 8) % 8))"
-    def entropyHex(pb: String) =
-      s"""array_join(transform(sequence(0L, length($pb) div 8 - 1), i ->
-           CASE WHEN substring($pb, CAST(i * 8 + 1 AS INT), 8) = '11111111'
-                THEN 'FF00'
-                ELSE lpad(conv(substring($pb, CAST(i * 8 + 1 AS INT), 8), 2, 16), 2, '0') END),
-         '')"""
-    val withBits = d
-      .withColumn("dvals", expr(
-        s"""transform(sequence(0L, n_units - 1), k -> ${dval("k")})"""))
-      // baseline: diff chain over D; one unit = cat+amp+EOB
-      .withColumn("bdiffs", expr(
-        """transform(sequence(0L, n_units - 1), k ->
-             element_at(dvals, CAST(k AS INT) + 1)
-               - IF(k = 0, 0L, element_at(dvals, CAST(k AS INT))))"""))
-      .withColumn("bbits", expr(
-        s"""array_join(transform(sequence(0L, n_units - 1), k ->
-              concat(${catAmp("bdiffs", "k")}, '0')), '')"""))
-      // progressive: diff chain over D >> 1 (scan 1), low bits (scan 2),
-      // EOB-per-block AC scan (scan 3)
-      .withColumn("d1vals", expr("transform(dvals, v -> shiftright(v, 1))"))
-      .withColumn("pdiffs", expr(
-        """transform(sequence(0L, n_units - 1), k ->
-             element_at(d1vals, CAST(k AS INT) + 1)
-               - IF(k = 0, 0L, element_at(d1vals, CAST(k AS INT))))"""))
-      .withColumn("s1bits", expr(
-        s"""array_join(transform(sequence(0L, n_units - 1), k ->
-              ${catAmp("pdiffs", "k")}), '')"""))
-      .withColumn("s2bits", expr(
-        "array_join(transform(dvals, v -> CAST(pmod(v, 2) AS STRING)), '')"))
-      .withColumn("s3bits", expr("repeat('0', CAST(n_units AS INT))"))
-      .withColumn("be", expr(entropyHex(pad("bbits"))))
-      .withColumn("e1", expr(entropyHex(pad("s1bits"))))
-      .withColumn("e2", expr(entropyHex(pad("s2bits"))))
-      .withColumn("e3", expr(entropyHex(pad("s3bits"))))
-    val dimsHex = concat(lpad(hex(col("h")), 4, "0"), lpad(hex(col("w")), 4, "0"))
-    val dhtHex = lit("FFC40031" +
-      "00" + "0000000C" + "00" * 12 + "000102030405060708090A0B" +
-      "10" + "01" + "00" * 15 + "00")
-    val common = concat(
-      lit("FFD8"), lit("FFE000104A46494600010100000100010000"),
-      lit("FFDB004300" + "08" * 64))
-    val basePayload = concat(common,
-      lit("FFC0000B08"), dimsHex, lit("01011100"), dhtHex,
-      lit("FFDA0008010100003F00"),
-      when(col("trunc"), lit("")).otherwise(col("be")), lit("FFD9"))
-    val progPayload = concat(common,
-      lit("FFC2000B08"), dimsHex, lit("01011100"), dhtHex,
-      lit("FFDA0008010100000001"), col("e1"),
-      lit("FFDA0008010100000010"), col("e2"),
-      when(col("trunc"), lit(""))
-        .otherwise(concat(lit("FFDA0008010100013F00"), col("e3"))),
-      lit("FFD9"))
-    withBits.select(col("doc_id").as("asset_id"),
-      unhex(when(col("prog"), progPayload).otherwise(basePayload)).as("payload"))
-  }
+  def jpegCorpusAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.jpegCorpus)
 
   /** e06 — the COMPOSED JPEG corpus: the round-8/9 entropy-coded decoders
     * doing end-to-end training-data work rather than isolated feature
@@ -2625,23 +2236,14 @@ object EntryOps {
     * banded equi-join, components iterate on the active vertex set, and
     * the final assembly is 1:1 equi-joins on doc_id.
     */
-  /** Dev probe surface: e06's candidate-pair stage alone. */
-  def jpegCorpusPairsProbe(spark: SparkSession, dir: String): DataFrame =
-    perceptualNearDup(jpegCorpusAssets(spark, dir)
-      .select(col("asset_id"), graft.functions.JpegDHash(col("payload")).as("dhash")))
-
   def jpegCorpus(spark: SparkSession, dir: String): DataFrame = {
-    // Staged fence: the decode (and the in-plan payload synthesis beneath
-    // it) must stay a single projection stage — unfenced, the not-null
-    // quarantine filter below inlines the whole tree into its predicate
-    // and the driver spends ~15 s per action re-deriving it (measured;
-    // data-size independent). Same fence perceptualNearDup applies
-    // internally.
-    // ONE synthesis+decode pass (r19): the hash for the near-dup machinery
-    // and the feature columns project from the SAME payload evaluation,
-    // barriered — previously the pairs branch, the valid-id branch, and
-    // the feature branch each re-synthesized and re-decoded the corpus
-    // (three full passes for one query).
+    // Staged fences: each decoder stays a single projection stage —
+    // unfenced, the not-null quarantine filter below inlines the decode
+    // into its predicate. Same fence perceptualNearDup applies internally.
+    // ONE decode pass: the hash for the near-dup machinery and the feature
+    // columns project from the SAME payload evaluation, barriered, so the
+    // pairs branch, the valid-id branch and the feature branch do not each
+    // decode the corpus again.
     val media = jpegCorpusAssets(spark, dir)
       .select(col("asset_id"),
         graft.functions.Staged(
@@ -2667,8 +2269,7 @@ object EntryOps {
       .filter(col("cluster_id") === col("doc_id"))
       .join(feats, Seq("doc_id"))
       // survivors materialized pre-sort (range partitioning samples =
-      // executes the child twice; here that re-runs the feature decode
-      // over the synthesized corpus)
+      // executes the child twice)
       .barriered
       .orderBy(col("doc_id"))
   }
@@ -2682,29 +2283,8 @@ object EntryOps {
     * match because the sub-window tail is excluded by construction, which
     * is itself a property under test.
     */
-  def wavDhashAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .withColumn("seed", expr(
-        "IF(doc_id % 10 = 1, doc_id - 1, doc_id) * 173"))
-      .withColumn("f", expr("130 + doc_id % 7"))
-    def le16hex(e: String): Column =
-      expr(s"concat(lpad(hex(($e) % 256), 2, '0'), lpad(hex(($e) div 256), 2, '0'))")
-    def le32hex(e: String): Column =
-      concat(le16hex(s"($e) % 65536"), le16hex(s"($e) div 65536"))
-    val samplesHex = expr(
-      """array_join(transform(sequence(0L, f - 1), j ->
-           lpad(hex(((seed + j) * (seed + j) * 7 + (seed + j) * 11 + seed) % 256),
-             2, '0')), '')""")
-    val fmtHex = concat(lit("666D7420" + "10000000" + "0100" + "0100"), // PCM mono
-      le32hex("8000"), le32hex("8000"), lit("0100" + "0800")) // 8-bit
-    val dataHex = concat(lit("64617461"), le32hex("f"), samplesHex,
-      when(col("f") % 2 === 1, lit("00")).otherwise(lit("")))
-    val bodyHex = concat(lit("57415645"), fmtHex, dataHex)
-    d.withColumn("bodyHex", bodyHex)
-      .select(col("doc_id").as("asset_id"),
-        unhex(concat(lit("52494646"),
-          le32hex("length(bodyHex) div 2"), col("bodyHex"))).as("payload"))
-  }
+  def wavDhashAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Audio.wavDhash)
 
   /** m13 — perceptual audio hash over REAL decoded PCM: the native
     * `wav_dhash` expression against [[wavDhashAssets]]; the oracle derives
@@ -2737,7 +2317,7 @@ object EntryOps {
     val pairs = imageNearDup(spark, dir)
       .select(col("id1").as("doc1"), col("id2").as("doc2"))
     // the asset universe is documents 1:1 — listing ids through
-    // dhashAssets would re-synthesize every payload just to drop it
+    // dhashAssets would build every payload just to drop it
     val ids = Tables.documents(spark, dir).select(col("doc_id"))
     graft.ops.Dedup.clusterComponents(ids, pairs)
       .select(col("doc_id").as("asset_id"), col("cluster_id"),
@@ -2777,24 +2357,11 @@ object EntryOps {
     * active vertex set; the final assembly is 1:1 equi-joins on doc_id.
     */
   def multimodalCorpus(spark: SparkSession, dir: String): DataFrame = {
-    // ONE components run over BOTH modality graphs: audio vertices are
-    // offset into a disjoint id namespace, the union graph converges in
-    // max(rounds_img, rounds_aud) iterations instead of their SUM, and the
-    // per-round fixed cost (join + min-agg + fixpoint check) is paid once.
-    // Audio components contain only offset vertices, so their min-label
-    // cluster ids are `min doc_id + OFF` — subtracting OFF restores exactly
-    // what a standalone audio run would emit; the output is value-identical
-    // to two separate clusterComponents calls (the oracle is unchanged).
-    val OFF = 1L << 40
-    val VOFF = 1L << 41
-    // ONE synthesis+decode pass PER MODALITY (r19): each modality's
-    // perceptual hash and its feature columns project from the SAME
-    // payload evaluation, barriered — previously the near-dup branch and
-    // the feature branch each re-synthesized and re-decoded every payload
-    // (six full passes for three modalities; now three). The decode still
-    // happens per EXECUTION — e05 remains the decode-everything contrast
-    // to e09's persisted feature root; it just no longer decodes each
-    // payload twice per execution.
+    // ONE decode pass PER MODALITY: each modality's perceptual hash and
+    // its feature columns project from the SAME payload evaluation,
+    // barriered, so the near-dup branch and the feature branch share it.
+    // The decode still happens per EXECUTION — e05 is the decode-everything
+    // contrast to e09's persisted feature root.
     val imgRaw = dhashAssets(spark, dir)
       .select(col("asset_id"),
         graft.functions.Staged(
@@ -2821,12 +2388,125 @@ object EntryOps {
     // tail while the other two modalities waited.
     val Seq(img, aud, vid) = graft.ops.Barrier.barrierAll(
       imgRaw, audRaw, videoDescriptorTable(spark, dir))
+    multimodalCompose(spark, dir, img, aud, vid)
+  }
+
+  /** The e09 media FEATURE index build — the decode-once half of the
+    * lifecycle: perceptual hashes AND feature columns for the BASE cohort
+    * (asset_id % 10 ≠ 0, the d17 split convention) land as persisted
+    * tables (`img/`, `aud/`), each payload decoded exactly once, at
+    * ingest cadence (untimed in probes — a rebuild is maintenance, priced
+    * by its own lifecycle, not per query). A caller may prebuild this at
+    * `$dir/media_features`; the entry scratch-builds otherwise,
+    * byte-identically.
+    */
+  def mediaFeatureRootFixture(spark: SparkSession, dir: String,
+      path: String): Unit = {
+    val base = col("asset_id") % 10 =!= 0
+    imageFeatureRows(dhashAssets(spark, dir).filter(base))
+      .write.mode("overwrite").parquet(s"$path/img")
+    audioFeatureRows(wavDhashAssets(spark, dir).filter(base))
+      .write.mode("overwrite").parquet(s"$path/aud")
+    // r18: the VIDEO descriptor table joins the root — per-asset sorted
+    // token text (the d36 near-dup key space) + transcode-sizing columns,
+    // decoded once at ingest cadence like the other two modalities
+    videoDescriptorTable(spark, dir, col("doc_id") % 10 =!= 0)
+      .write.mode("overwrite").parquet(s"$path/vid")
+  }
+
+  /** e09's image rows over netpbm `assets`: (asset_id, dhash, img_format,
+    * img_width, img_height), the `img/` table of the feature root.
+    */
+  private def imageFeatureRows(assets: DataFrame): DataFrame =
+    assets
+      .select(col("asset_id"),
+        graft.functions.PpmDHash(col("payload")).as("dhash"),
+        graft.functions.PpmFeatures(col("payload")).as("f"))
+      .select(col("asset_id"), col("dhash"),
+        col("f.format").as("img_format"),
+        col("f.width").as("img_width"), col("f.height").as("img_height"))
+
+  /** e09's audio rows over WAV `assets`: (asset_id, dhash, aud_sample_rate,
+    * aud_n_frames), the `aud/` table of the feature root.
+    */
+  private def audioFeatureRows(assets: DataFrame): DataFrame =
+    assets
+      .select(col("asset_id"),
+        graft.functions.WavDHash(col("payload")).as("dhash"),
+        graft.functions.WavFeatures(col("payload")).as("f"))
+      .select(col("asset_id"), col("dhash"),
+        col("f.sample_rate").as("aud_sample_rate"),
+        col("f.n_frames").as("aud_n_frames"))
+
+  /** e09 — e05's corpus from a PERSISTED feature table + ARRIVALS-ONLY
+    * decode (r16 verdict item 8 — the index-root pattern applied to
+    * decoders): e05 re-runs every decoder per execution, but a real
+    * pipeline lands decoded features once and composes incrementally.
+    * Here the base cohort's hashes and features come from
+    * [[mediaFeatureRootFixture]]'s persisted tables (a parquet read — no
+    * decoder anywhere over 9/10 of the corpus), only the arrival cohort
+    * (asset_id % 10 = 0) decodes in-plan, and the e05 composition —
+    * banded perceptual near-dup per modality, ONE unified components run,
+    * both-canonical survivors, feature + provenance joins — runs over the
+    * union. The output is VALUE-IDENTICAL to e05 (hashes and features
+    * don't care when they were decoded), so the oracle is e05's verbatim;
+    * OpsSpec proves the persisted path is genuinely read (a tampered
+    * persisted feature row flows through to the output — a re-decode
+    * would overwrite it).
+    */
+  def multimodalCorpusIncremental(spark: SparkSession, dir: String): DataFrame = {
+    // a feature root is built at ingest cadence, so repeat constructions
+    // in one session — bench triples, repeated plans — pay the parquet
+    // read, never a rebuild
+    val root = sessionRoot(spark, dir, "media_features", "img", "vid")(
+      mediaFeatureRootFixture(spark, dir, _))
+    val arr = col("asset_id") % 10 === 0
+    val arrImg = imageFeatureRows(dhashAssets(spark, dir).filter(arr))
+    val arrAud = audioFeatureRows(wavDhashAssets(spark, dir).filter(arr))
+    // r18: the arrival tenth's VIDEOS decode in-plan; the base cohort's
+    // descriptors are a parquet read of the root, like the other two
+    val arrVid = videoDescriptorTable(spark, dir, col("doc_id") % 10 === 0)
+    // barriered (r19): each union feeds TWO consumers — the near-dup pair
+    // branch and the feature join — and each consumer re-ran the arrival
+    // tenth's in-plan decode (and the root's parquet read). One
+    // materialized (id, hash, features) table per modality instead;
+    // overlapped (r20, guide §2.6) — the three modality materializations
+    // are independent and ran back to back.
+    val Seq(img, aud, vid) = graft.ops.Barrier.barrierAll(
+      spark.read.parquet(s"$root/img").unionByName(arrImg),
+      spark.read.parquet(s"$root/aud").unionByName(arrAud),
+      spark.read.parquet(s"$root/vid").unionByName(arrVid))
+    // the re-mux class's video pairs span the cohorts by construction
+    // (class doc_id % 10 = 1 lives in the persisted base, its partner
+    // % 10 = 0 is the arrival tenth), so THAT class exercises the
+    // incremental banding: persisted tokens vs in-plan decode. The trim
+    // class (% 10 = 3, partner % 10 = 2) pairs entirely within the base.
+    multimodalCompose(spark, dir, img, aud, vid)
+  }
+
+  /** The e05/e09 composition over one (id, hash, features) table per
+    * modality: banded perceptual near-dup pairs for images and audio,
+    * n-gram Jaccard pairs over the video descriptors, ONE components run
+    * over the three graphs, survivors that are canonical in all three, and
+    * the feature and provenance joins.
+    */
+  private def multimodalCompose(spark: SparkSession, dir: String,
+      img: DataFrame, aud: DataFrame, vid: DataFrame): DataFrame = {
+    // ONE components run over all three modality graphs: audio and video
+    // vertices are offset into disjoint id namespaces, the union graph
+    // converges in the max of the per-modality rounds instead of their SUM,
+    // and the per-round fixed cost (join + min-agg + fixpoint check) is
+    // paid once. An offset component contains only offset vertices, so its
+    // min-label cluster id is `min doc_id + OFF` — subtracting OFF restores
+    // exactly what a standalone run would emit; the output is
+    // value-identical to separate clusterComponents calls.
+    val OFF = 1L << 40
+    val VOFF = 1L << 41
     val imgPairs = perceptualNearDup(img.select(col("asset_id"), col("dhash")))
       .select(col("id1").as("doc1"), col("id2").as("doc2"))
     val audPairs = perceptualNearDup(aud.select(col("asset_id"), col("dhash")))
       .select((col("id1") + OFF).as("doc1"), (col("id2") + OFF).as("doc2"))
-    // r18: VIDEO is the third modality graph — d36's re-mux pairs join
-    // the SAME unified components run in their own id namespace
+    // d36's re-mux pairs
     val vidPairs = graft.ops.Dedup.ngramJaccard(
       vid.select(col("doc_id"), col("text")), n = 1, minJaccard = 0.4,
       maxDocFreq = 64)
@@ -2856,158 +2536,6 @@ object EntryOps {
     // inner join: a video that REFUSES to decode has no descriptor row
     // and drops out of the product corpus — unadmittable media is not
     // silently shipped with NULL sizing columns
-    val vidF = vid
-      .select(col("doc_id"), col("vid_tracks"), col("vid_samples"),
-        col("vid_duration_ms"), col("vid_bytes"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"))
-      .join(imgCl, Seq("doc_id"))
-      .join(audCl, Seq("doc_id"))
-      .join(vidCl, Seq("doc_id"))
-      .filter(col("img_cluster_id") === col("doc_id") &&
-        col("aud_cluster_id") === col("doc_id") &&
-        col("vid_cluster_id") === col("doc_id"))
-      .join(imgF, Seq("doc_id"))
-      .join(audF, Seq("doc_id"))
-      .join(vidF, Seq("doc_id"))
-      // survivors materialized pre-sort (range partitioning samples =
-      // executes the child twice; here that re-runs ALL THREE modality
-      // feature decoders over the synthesized corpus)
-      .barriered
-      .orderBy(col("doc_id"))
-  }
-
-  /** The e09 media FEATURE index build — the decode-once half of the
-    * lifecycle: perceptual hashes AND feature columns for the BASE cohort
-    * (asset_id % 10 ≠ 0, the d17 split convention) land as persisted
-    * tables (`img/`, `aud/`), each payload decoded exactly once, at
-    * ingest cadence (untimed in probes — a rebuild is maintenance, priced
-    * by its own lifecycle, not per query). A caller may prebuild this at
-    * `$dir/media_features`; the entry scratch-builds otherwise,
-    * byte-identically.
-    */
-  def mediaFeatureRootFixture(spark: SparkSession, dir: String,
-      path: String): Unit = {
-    dhashAssets(spark, dir).filter(col("asset_id") % 10 =!= 0)
-      .select(col("asset_id"),
-        graft.functions.PpmDHash(col("payload")).as("dhash"),
-        graft.functions.PpmFeatures(col("payload")).as("f"))
-      .select(col("asset_id"), col("dhash"),
-        col("f.format").as("img_format"),
-        col("f.width").as("img_width"), col("f.height").as("img_height"))
-      .write.mode("overwrite").parquet(s"$path/img")
-    wavDhashAssets(spark, dir).filter(col("asset_id") % 10 =!= 0)
-      .select(col("asset_id"),
-        graft.functions.WavDHash(col("payload")).as("dhash"),
-        graft.functions.WavFeatures(col("payload")).as("f"))
-      .select(col("asset_id"), col("dhash"),
-        col("f.sample_rate").as("aud_sample_rate"),
-        col("f.n_frames").as("aud_n_frames"))
-      .write.mode("overwrite").parquet(s"$path/aud")
-    // r18: the VIDEO descriptor table joins the root — per-asset sorted
-    // token text (the d36 near-dup key space) + transcode-sizing columns,
-    // decoded once at ingest cadence like the other two modalities
-    videoDescriptorTable(spark, dir, col("doc_id") % 10 =!= 0)
-      .write.mode("overwrite").parquet(s"$path/vid")
-  }
-
-  /** e09 — e05's corpus from a PERSISTED feature table + ARRIVALS-ONLY
-    * decode (r16 verdict item 8 — the index-root pattern applied to
-    * decoders): e05 re-runs every decoder per execution, but a real
-    * pipeline lands decoded features once and composes incrementally.
-    * Here the base cohort's hashes and features come from
-    * [[mediaFeatureRootFixture]]'s persisted tables (a parquet read — no
-    * decoder anywhere over 9/10 of the corpus), only the arrival cohort
-    * (asset_id % 10 = 0) decodes in-plan, and the e05 composition —
-    * banded perceptual near-dup per modality, ONE unified components run,
-    * both-canonical survivors, feature + provenance joins — runs over the
-    * union. The output is VALUE-IDENTICAL to e05 (hashes and features
-    * don't care when they were decoded), so the oracle is e05's verbatim;
-    * OpsSpec proves the persisted path is genuinely read (a tampered
-    * persisted feature row flows through to the output — a re-decode
-    * would overwrite it).
-    */
-  def multimodalCorpusIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val pre = s"$dir/media_features"
-    val fs = graft.ops.IndexFs.fs(spark, dir)
-    // the scratch root is SESSION-CACHED per data dir (the t23 model-root
-    // discipline): a feature root is built at ingest cadence, so repeat
-    // constructions in one session — bench triples, repeated plans — pay
-    // the parquet read, never a rebuild
-    val root =
-      if (graft.ops.IndexFs.exists(fs, s"$pre/img") &&
-          graft.ops.IndexFs.exists(fs, s"$pre/vid")) pre
-      else mediaRootCache.computeIfAbsent(dir, _ => {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_media_feat").resolve("root").toString
-        mediaFeatureRootFixture(spark, dir, scratch)
-        scratch
-      })
-    val arr = col("asset_id") % 10 === 0
-    val arrImg = dhashAssets(spark, dir).filter(arr)
-      .select(col("asset_id"),
-        graft.functions.PpmDHash(col("payload")).as("dhash"),
-        graft.functions.PpmFeatures(col("payload")).as("f"))
-      .select(col("asset_id"), col("dhash"),
-        col("f.format").as("img_format"),
-        col("f.width").as("img_width"), col("f.height").as("img_height"))
-    val arrAud = wavDhashAssets(spark, dir).filter(arr)
-      .select(col("asset_id"),
-        graft.functions.WavDHash(col("payload")).as("dhash"),
-        graft.functions.WavFeatures(col("payload")).as("f"))
-      .select(col("asset_id"), col("dhash"),
-        col("f.sample_rate").as("aud_sample_rate"),
-        col("f.n_frames").as("aud_n_frames"))
-    // r18: the arrival tenth's VIDEOS decode in-plan; the base cohort's
-    // descriptors are a parquet read of the root, like the other two
-    val arrVid = videoDescriptorTable(spark, dir, col("doc_id") % 10 === 0)
-    // barriered (r19): each union feeds TWO consumers — the near-dup pair
-    // branch and the feature join — and each consumer re-ran the arrival
-    // tenth's in-plan decode (and the root's parquet read). One
-    // materialized (id, hash, features) table per modality instead;
-    // overlapped (r20, guide §2.6) — the three modality materializations
-    // are independent and ran back to back.
-    val Seq(img, aud, vid) = graft.ops.Barrier.barrierAll(
-      spark.read.parquet(s"$root/img").unionByName(arrImg),
-      spark.read.parquet(s"$root/aud").unionByName(arrAud),
-      spark.read.parquet(s"$root/vid").unionByName(arrVid))
-    val OFF = 1L << 40
-    val VOFF = 1L << 41
-    val imgPairs = perceptualNearDup(img.select(col("asset_id"), col("dhash")))
-      .select(col("id1").as("doc1"), col("id2").as("doc2"))
-    val audPairs = perceptualNearDup(aud.select(col("asset_id"), col("dhash")))
-      .select((col("id1") + OFF).as("doc1"), (col("id2") + OFF).as("doc2"))
-    // the re-mux class's pairs span the cohorts by construction (class
-    // doc_id % 10 = 1 lives in the persisted base, its partner % 10 = 0
-    // is the arrival tenth), so THAT class exercises the incremental
-    // banding: persisted tokens vs in-plan decode. The trim class
-    // (% 10 = 3, partner % 10 = 2) pairs entirely within the base cohort.
-    val vidPairs = graft.ops.Dedup.ngramJaccard(
-      vid.select(col("doc_id"), col("text")), n = 1, minJaccard = 0.4,
-      maxDocFreq = 64)
-      .select((col("doc1") + VOFF).as("doc1"), (col("doc2") + VOFF).as("doc2"))
-    val ids = Tables.documents(spark, dir).select(col("doc_id"))
-    val both = graft.ops.Dedup.clusterComponents(
-      ids.union(ids.select((col("doc_id") + OFF).as("doc_id")))
-        .union(ids.select((col("doc_id") + VOFF).as("doc_id"))),
-      imgPairs.union(audPairs).union(vidPairs))
-    val imgCl = both.filter(col("doc_id") < OFF)
-      .select(col("doc_id"),
-        col("cluster_id").as("img_cluster_id"),
-        col("cluster_size").as("img_cluster_size"))
-    val audCl = both.filter(col("doc_id") >= OFF && col("doc_id") < VOFF)
-      .select((col("doc_id") - OFF).as("doc_id"),
-        (col("cluster_id") - OFF).as("aud_cluster_id"),
-        col("cluster_size").as("aud_cluster_size"))
-    val vidCl = both.filter(col("doc_id") >= VOFF)
-      .select((col("doc_id") - VOFF).as("doc_id"),
-        (col("cluster_id") - VOFF).as("vid_cluster_id"),
-        col("cluster_size").as("vid_cluster_size"))
-    val imgF = img.select(col("asset_id").as("doc_id"), col("img_format"),
-      col("img_width"), col("img_height"))
-    val audF = aud.select(col("asset_id").as("doc_id"),
-      col("aud_sample_rate"), col("aud_n_frames"),
-      expr("aud_n_frames * 1000L div aud_sample_rate").as("aud_duration_ms"))
     val vidF = vid.select(col("doc_id"), col("vid_tracks"),
       col("vid_samples"), col("vid_duration_ms"), col("vid_bytes"))
     Tables.documents(spark, dir)
@@ -3021,169 +2549,47 @@ object EntryOps {
       .join(imgF, Seq("doc_id"))
       .join(audF, Seq("doc_id"))
       .join(vidF, Seq("doc_id"))
+      // survivors materialized pre-sort (range partitioning samples =
+      // executes the child twice, and with it the feature joins)
       .barriered
       .orderBy(col("doc_id"))
   }
 
-  /** m11 fixture — spec-valid MPEG audio streams synthesized in-plan from
-    * doc_id: version cycles MPEG-1/2/2.5 (doc_id % 3), sample-rate index
-    * `(doc_id div 3) % 3`, Layer III bitrate index `doc_id % 14 + 1`,
-    * 2–5 frames with per-frame padding bits `(doc_id + j) % 2`, mono or
-    * joint stereo by parity. Refusal branches are planted in-plan too:
+  /** m11 fixture — spec-valid MPEG audio streams built from doc_id
+    * ([[graft.fixtures.Audio.mpeg]]): version cycles MPEG-1/2/2.5 (doc_id %
+    * 3), sample-rate index `(doc_id div 3) % 3`, Layer III bitrate index
+    * `doc_id % 14 + 1`, 2–5 frames with per-frame padding bits `(doc_id + j)
+    * % 2`, mono or joint stereo by parity. Refusal branches are planted too:
     * doc_id % 17 == 3 makes the first frame FREE FORMAT (bitrate index 0),
-    * doc_id % 13 == 5 truncates the final frame by 3 bytes; doc_id % 11 ==
-    * 7 prepends an ID3v2 tag whose body is stuffed with byte sequences
-    * that parse as valid frame headers (so a walker that hunts instead of
-    * honoring the syncsafe size locks onto garbage and fails the hash);
-    * doc_id % 29 == 9 appends the 128-byte ID3v1 'TAG' trailer the walk
-    * must tolerate. Frame payloads are 0xAB filler — the walker must hop
-    * by the SPEC's computed frame length, never by scanning.
+    * doc_id % 13 == 5 truncates the final frame by 3 bytes; doc_id % 11 == 7
+    * prepends an ID3v2 tag whose body is stuffed with byte sequences that
+    * parse as valid frame headers (so a walker that hunts instead of honoring
+    * the syncsafe size locks onto garbage and fails the hash); doc_id % 29 ==
+    * 9 appends the 128-byte ID3v1 'TAG' trailer the walk must tolerate. Frame
+    * payloads are 0xAB filler — the walker must hop by the SPEC's computed
+    * frame length, never by scanning.
     */
-  def mpegAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .withColumn("ver", col("doc_id") % 3) // 0 = V1, 1 = V2, 2 = V2.5
-      .withColumn("srx", expr("(doc_id div 3) % 3"))
-      .withColumn("brx", col("doc_id") % 14 + 1)
-      .withColumn("nf", col("doc_id") % 4 + 2)
-      .withColumn("freef", col("doc_id") % 17 === 3)
-      .withColumn("rate", expr(
-        """CASE ver WHEN 0 THEN element_at(array(44100, 48000, 32000), CAST(srx + 1 AS INT))
-                    WHEN 1 THEN element_at(array(22050, 24000, 16000), CAST(srx + 1 AS INT))
-                    ELSE element_at(array(11025, 12000, 8000), CAST(srx + 1 AS INT)) END"""))
-      .withColumn("br", expr(
-        """CASE WHEN ver = 0
-           THEN element_at(array(32,40,48,56,64,80,96,112,128,160,192,224,256,320), CAST(brx AS INT))
-           ELSE element_at(array(8,16,24,32,40,48,56,64,80,96,112,128,144,160), CAST(brx AS INT)) END"""))
-      .withColumn("flen_base",
-        expr("(CASE WHEN ver = 0 THEN 144000 ELSE 72000 END) * br div rate"))
-      .withColumn("b1", expr(
-        "CASE ver WHEN 0 THEN 'fb' WHEN 1 THEN 'f3' ELSE 'e3' END"))
-      .withColumn("b3", expr("IF(doc_id % 2 = 1, 'c4', '44')"))
-    val framesHex = (0 until 5).map { j =>
-      s"""IF($j < nf, concat('ff', b1,
-            lpad(hex((CASE WHEN freef AND $j = 0 THEN 0 ELSE brx END) * 16
-                     + srx * 4 + ((doc_id + $j) % 2) * 2), 2, '0'),
-            b3, repeat('ab', CAST(flen_base + (doc_id + $j) % 2 - 4 AS INT))), '')"""
-    }.mkString("concat(", ", ", ")")
-    val id3Hex =
-      """IF(doc_id % 11 = 7,
-           concat('494433', '0400', '00', '000000',
-             lpad(hex(doc_id % 50 + 8), 2, '0'),
-             substring(repeat('fffb92c4', CAST((doc_id % 50 + 8) div 4 + 1 AS INT)),
-               1, CAST((doc_id % 50 + 8) * 2 AS INT))), '')"""
-    val tagHex = "IF(doc_id % 29 = 9, concat('544147', repeat('00', 125)), '')"
-    d.withColumn("full_hex", expr(s"concat($id3Hex, $framesHex, $tagHex)"))
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 13 = 5, substring(full_hex, 1, CAST(length(full_hex) - 6 AS INT)), full_hex)"))
-      .select(col("doc_id").as("asset_id"), unhex(col("payload_hex")).as("payload"))
-  }
+  def mpegAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Audio.mpeg)
 
-  /** m18 fixture — VALID MPEG-1 Audio LAYER I frames synthesized in-plan
-    * from doc_id with REAL entropy content: bit allocation (subbands 0-3
-    * allocated at 2-4 bits, the rest silent), scalefactor indices (always
-    * multiples of 3, so the Table 3-B.1 value is an exact power of two and
-    * the oracle's double arithmetic reproduces the decoder's bit-exactly),
-    * and 12 granules of quantized subband sample codes per frame, padded
-    * with 0xAB filler to the spec's computed frame length — a decoder that
-    * hops by anything but the spec length desyncs. Even docs are mono at
-    * 64 kbps (96-byte frames), odd docs stereo at 96 kbps (144-byte
-    * frames), 1-3 frames each, all at 32 kHz. Refusal branches ride
-    * in-plan: doc_id % 13 == 5 swaps the payload for a Layer II frame (the
+  /** m18 fixture — VALID MPEG-1 Audio LAYER I frames built from doc_id
+    * ([[graft.fixtures.Audio.mpegL1]]) with REAL entropy content: bit
+    * allocation (subbands 0-3 allocated at 2-4 bits, the rest silent),
+    * scalefactor indices (always multiples of 3, so the Table 3-B.1 value is
+    * an exact power of two and the oracle's double arithmetic reproduces the
+    * decoder's bit-exactly), and 12 granules of quantized subband sample
+    * codes per frame, padded with 0xAB filler to the spec's computed frame
+    * length — a decoder that hops by anything but the spec length desyncs.
+    * Even docs are mono at 64 kbps (96-byte frames), odd docs stereo at 96
+    * kbps (144-byte frames), 1-3 frames each, all at 32 kHz. Refusal branches
+    * ride along: doc_id % 13 == 5 swaps the payload for a Layer II frame (the
     * honest tabulated-allocation refusal), doc_id % 17 == 3 plants the
     * forbidden allocation code 15 in subband 0, doc_id % 29 == 9 truncates
     * the final frame by 3 bytes — each must yield the first header's facts
     * with null counts and sums, never a partial decode.
     */
-  def mpegL1Assets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .withColumn("nch", expr("IF(doc_id % 2 = 1, 2, 1)"))
-      .withColumn("nf", expr("doc_id % 3 + 1"))
-    // per-(sb,ch) formulas shared by fixture and oracle: allocation code
-    // 1..3 -> nb 2..4; scalefactor index = 3*((doc_id + 2 sb + ch) % 21)
-    def nbExpr(sb: String, ch: String) =
-      s"IF(($sb) = 0 AND ($ch) = 0 AND doc_id % 17 = 3, 16, (doc_id + ($sb) + ($ch)) % 3 + 2)"
-    def allocBits(nch: Int) = {
-      val items = for (sb <- 0 until 32; ch <- 0 until nch) yield
-        if (sb >= 4) "'0000'"
-        else s"lpad(conv(${nbExpr(sb.toString, ch.toString)} - 1, 10, 2), 4, '0')"
-      items.mkString("concat(", ", ", ")")
-    }
-    def sfBits(nch: Int) = {
-      val items = for (sb <- 0 until 4; ch <- 0 until nch) yield
-        s"lpad(conv(3 * ((doc_id + ${2 * sb} + $ch) % 21), 10, 2), 6, '0')"
-      items.mkString("concat(", ", ", ")")
-    }
-    // granule-major sample codes, matching the spec's s { sb { ch } } order;
-    // code = (doc_id + 7f + 5g + 11sb + 13ch) % (2^nb − 1), never all-ones.
-    // All of one granule's codes PACK into a single BIGINT (≤ 44 bits even
-    // with the 16-bit plant) so the lambda runs one conv/lpad per GRANULE,
-    // not per code — higher-order-function lambdas evaluate interpreted,
-    // and the per-code string build made this fixture the most expensive
-    // scan in the bench (measured 8× reduction).
-    def sampleBits(nch: Int, f: Int) = {
-      val pairs = for (sb <- 0 until 4; ch <- 0 until nch) yield (sb, ch)
-      def nbE(sb: Int, ch: Int) =
-        if (sb == 0 && ch == 0) "IF(doc_id % 17 = 3, 16, doc_id % 3 + 2)"
-        else s"((doc_id + ${sb + ch}) % 3 + 2)"
-      val acc = pairs.foldLeft("CAST(0 AS BIGINT)") { case (a, (sb, ch)) =>
-        val nb = nbE(sb, ch)
-        val code = s"((doc_id + ${7 * f} + 5 * k + ${11 * sb + 13 * ch})" +
-          s" % (shiftleft(1L, CAST($nb AS INT)) - 1))"
-        s"(($a) * shiftleft(1L, CAST($nb AS INT)) + $code)"
-      }
-      val width = pairs.map(p => s"(${nbE(p._1, p._2)})").mkString(" + ")
-      s"""array_join(transform(sequence(0L, 11), k ->
-            lpad(conv($acc, 10, 2), CAST($width AS INT), '0')), '')"""
-    }
-    def toHex(pb: String) =
-      s"""array_join(transform(sequence(0L, length($pb) div 8 - 1), i ->
-            lpad(conv(substring($pb, CAST(i * 8 + 1 AS INT), 8), 2, 16), 2, '0')), '')"""
-    // header: FFFF = MPEG-1 Layer I no-CRC; mono 64 kbps / stereo 96 kbps
-    // at 32 kHz -> frame lengths 96 / 144 bytes per §2.4.3.1.
-    // Assembly is STAGED through fenced columns (the perceptualNearDup
-    // discipline), and the staging here is load-bearing twice over: the
-    // allocation+scalefactor area is frame-invariant (`asf` computes once
-    // per row, not once per frame), and each frame's BIT STRING must be a
-    // materialized column BEFORE the hex transform walks it — a lambda
-    // body re-evaluates its free sub-expressions per element, so an
-    // inlined generator tree would re-run once per output byte (the whole
-    // fixture cost at bench scale: measured ~100× on this scan).
-    def fbitsCol(f: Int): Column = {
-      def body(nch: Int) = {
-        val bits = s"concat(asf, ${sampleBits(nch, f)})"
-        s"concat($bits, repeat('1', (8 - length($bits) % 8) % 8))"
-      }
-      val inner = s"IF(nch = 1, ${body(1)}, ${body(2)})"
-      graft.functions.Staged(
-        expr(if (f == 0) inner else s"IF(nf > $f, $inner, '')"))
-    }
-    def frameCol(f: Int): Column = {
-      def hx(nch: Int) = {
-        val hdr = if (nch == 1) "'FFFF28C0'" else "'FFFF3800'"
-        s"concat($hdr, rpad(${toHex(s"fb$f")}, ${((if (nch == 1) 96 else 144) - 4) * 2}, 'ab'))"
-      }
-      val inner = s"IF(nch = 1, ${hx(1)}, ${hx(2)})"
-      graft.functions.Staged(
-        expr(if (f == 0) inner else s"IF(nf > $f, $inner, '')"))
-    }
-    // Layer II plant: header FFFD (layer bits 10) + filler; refused on the
-    // header alone, so the body need not be a full frame
-    val l2Hex = "concat('FFFD28C0', repeat('ab', 16))"
-    d.withColumn("asf", graft.functions.Staged(expr(
-        s"""IF(nch = 1, concat(${allocBits(1)}, ${sfBits(1)}),
-            concat(${allocBits(2)}, ${sfBits(2)}))""")))
-      .withColumn("fb0", fbitsCol(0))
-      .withColumn("fb1", fbitsCol(1))
-      .withColumn("fb2", fbitsCol(2))
-      .withColumn("fr0", frameCol(0))
-      .withColumn("fr1", frameCol(1))
-      .withColumn("fr2", frameCol(2))
-      .withColumn("full_hex", expr(
-        s"IF(doc_id % 13 = 5, $l2Hex, concat(fr0, fr1, fr2))"))
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 29 = 9, substring(full_hex, 1, CAST(length(full_hex) - 6 AS INT)), full_hex)"))
-      .select(col("doc_id").as("asset_id"), unhex(col("payload_hex")).as("payload"))
-  }
+  def mpegL1Assets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Audio.mpegL1)
 
   /** m18 — REAL compressed-audio SAMPLE decode: [[mpegL1Assets]] payloads
     * through the native `mpeg_l1_samples` expression (ISO 11172-3 Layer I:
@@ -3205,119 +2611,28 @@ object EntryOps {
         col("f.n_samples"), col("f.sum_q24"))
       // materialize the small stats table before the presentation sort:
       // range partitioning SAMPLES its child, i.e. executes it twice —
-      // a 2× multiplier on the synthesized-fixture scan above
+      // a second Layer I decode of every payload
       .barriered
       .orderBy(col("asset_id"))
 
-  /** m19 fixture — spec-valid FLAC streams (RFC 9639) synthesized in-plan
-    * from doc_id with REAL entropy content: one fixed-blocking frame of
-    * `bs = 68 + doc_id % 40` 16-bit samples at 32 kHz. Even docs are MONO
-    * with a FIXED order-1 subframe whose residuals are genuinely
-    * Rice-coded (k = 4, zigzag, unary quotients — a decoder that does not
-    * implement Annex-free Rice partitions desyncs immediately); odd docs
-    * are MID/SIDE STEREO: the mid channel fixed order-1 Rice k = 5, the
-    * side channel a 17-bit VERBATIM subframe (the +1 side bit), so the
+  /** m19 fixture — spec-valid FLAC streams (RFC 9639) built from doc_id
+    * ([[graft.fixtures.Audio.flac]]) with REAL entropy content: one
+    * fixed-blocking frame of `bs = 68 + doc_id % 40` 16-bit samples at 32
+    * kHz. Even docs are MONO with a FIXED order-1 subframe whose residuals
+    * are genuinely Rice-coded (k = 4, zigzag, unary quotients — a decoder
+    * that does not implement Annex-free Rice partitions desyncs immediately);
+    * odd docs are MID/SIDE STEREO: the mid channel fixed order-1 Rice k = 5,
+    * the side channel a 17-bit VERBATIM subframe (the +1 side bit), so the
     * decorrelation arithmetic (m = mid·2 | side&1; L,R = (m ± side)/2) is
-    * exercised with bit-exact expectations. Refusal branches ride in-plan:
+    * exercised with bit-exact expectations. Refusal branches ride along:
     * doc_id % 23 = 7 declares THREE channels in STREAMINFO (the > 2-slot
-    * contract refusal), % 13 = 5 sets the variable-blocking bit the
-    * decoder honestly refuses, % 17 = 3 truncates the final 2 bytes so
-    * the decoded total cannot match STREAMINFO — each must yield the
-    * header facts with null stats, never a partial decode.
+    * contract refusal), % 13 = 5 sets the variable-blocking bit the decoder
+    * honestly refuses, % 17 = 3 truncates the final 2 bytes so the decoded
+    * total cannot match STREAMINFO — each must yield the header facts with
+    * null stats, never a partial decode.
     */
-  /** Literal lookup table (ONE pre-built `Literal` via `typedlit` — a SQL
-    * `array('…', …)` of 511 strings is NOT reliably constant-folded
-    * inside a lambda body, where it would be rebuilt per element) of Rice
-    * codes (spec zigzag → unary quotient + k remainder bits) for
-    * residuals −255..255. A fixture's per-residual encode becomes a table
-    * lookup instead of an interpreted per-sample string build — HOF
-    * lambdas run interpreted, and the string build was the dominant scan
-    * cost of the m19/e07 bench entries.
-    */
-  private def riceLit(k: Int): Column =
-    typedlit((-255 to 255).map { r =>
-      val u = if (r >= 0) 2L * r else -2L * r - 1
-      val q = (u >> k).toInt
-      val low = {
-        val s = (u & ((1L << k) - 1)).toBinaryString
-        "0" * (k - s.length) + s
-      }
-      "0" * q + "1" + low
-    })
-
-  /** Literal table of n-bit two's-complement strings for −255..255. */
-  private def tcLit(n: Int): Column =
-    typedlit((-255 to 255).map { v =>
-      val s = java.lang.Long.toBinaryString(
-        ((v.toLong % (1L << n)) + (1L << n)) % (1L << n))
-      "0" * (n - s.length) + s
-    })
-
-  def flacAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .withColumn("nch", expr("IF(doc_id % 2 = 1, 2, 1)"))
-      .withColumn("bs", expr("68 + doc_id % 40"))
-      .withColumn("rice4", riceLit(4))
-      .withColumn("rice5", riceLit(5))
-      .withColumn("tc17", tcLit(17))
-    // sample formulas shared with the oracle (l doubles as the mono signal)
-    def lS(i: String) = s"(((doc_id * 13 + ($i) * 7) % 256) - 128)"
-    def rS(i: String) = s"(((doc_id * 11 + ($i) * 5) % 200) - 100)"
-    def midS(i: String) = s"shiftright(${lS(i)} + ${rS(i)}, 1)"
-    def sideS(i: String) = s"(${lS(i)} - ${rS(i)})"
-    // two's-complement binary at width n
-    def tc(e: String, n: Int) = s"lpad(conv(pmod($e, ${1L << n}), 10, 2), $n, '0')"
-    // Per-residual Rice encode runs as ONE element_at against a
-    // constant-folded literal code table (residual range is bounded by
-    // the sample formula): an interpreted per-sample string build here
-    // was the single most expensive scan of the sf0.1 bench (12 s).
-    def riceAt(e: String, table: String) =
-      s"element_at($table, CAST(($e) + 256 AS INT))"
-    // FIXED order-1 subframe over sample expr f(i): header, warmup,
-    // method 00 + partition order 0 + parameter, Rice residuals
-    def fixed1(f: String => String, k: Int, table: String) =
-      s"""concat('00010010', ${tc(f("0"), 16)}, '000000',
-            lpad(conv($k, 10, 2), 4, '0'),
-            array_join(transform(sequence(1L, bs - 1), i ->
-              ${riceAt(s"${f("i")} - ${f("(i - 1)")}", table)}), ''))"""
-    val monoBits = expr(fixed1(lS, 4, "rice4"))
-    val sideBits = expr(
-      s"""concat('00000010', array_join(transform(sequence(0L, bs - 1), i ->
-            element_at(tc17, CAST(${sideS("i")} + 256 AS INT))), ''))""")
-    val stereoBits = concat(expr(fixed1(midS, 5, "rice5")), sideBits)
-    def toHex(pb: String) =
-      s"""array_join(transform(sequence(0L, length($pb) div 8 - 1), i ->
-            lpad(conv(substring($pb, CAST(i * 8 + 1 AS INT), 8), 2, 16), 2, '0')), '')"""
-    // the bit string is FENCED before the hex transform walks it — a
-    // lambda body re-evaluates its free sub-expressions per element, so an
-    // inlined Rice-coder tree would re-run once per output byte (the m18
-    // lesson)
-    val withBits = d
-      .withColumn("sub_bits", graft.functions.Staged(
-        when(col("nch") === 1, monoBits).otherwise(stereoBits)))
-      .withColumn("frame_bits", graft.functions.Staged(expr(
-        // byte-align the subframes, then the (unverified) 16-bit CRC word
-        """concat(sub_bits, repeat('0', (8 - length(sub_bits) % 8) % 8),
-           repeat('0', 16))""")))
-    // STREAMINFO: min/max block, unknown frame sizes, then the packed
-    // rate(20) | channels-1(3) | bps-1(5) | total(36) word; md5 zeros
-    val infoHex = expr(
-      """concat('664C6143', '80', '000022',
-         lpad(hex(bs), 4, '0'), lpad(hex(bs), 4, '0'), '000000000000',
-         lpad(hex(shiftleft(32000L, 44)
-                  + shiftleft(IF(doc_id % 23 = 7, 3L, nch) - 1, 41)
-                  + shiftleft(15L, 36) + bs), 16, '0'),
-         repeat('00', 16))""")
-    val frameHex = expr(
-      s"""concat(IF(doc_id % 13 = 5, 'FFF9', 'FFF8'), '60',
-          IF(nch = 1, '00', 'A0'), '00', lpad(hex(bs - 1), 2, '0'), '00',
-          ${toHex("frame_bits")})""")
-    withBits
-      .withColumn("full_hex", concat(infoHex, frameHex))
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 17 = 3, substring(full_hex, 1, CAST(length(full_hex) - 4 AS INT)), full_hex)"))
-      .select(col("doc_id").as("asset_id"), unhex(col("payload_hex")).as("payload"))
-  }
+  def flacAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Audio.flac)
 
   /** m19 — REAL compressed-audio LOSSLESS decode: [[flacAssets]] payloads
     * through the native `flac_features` expression (RFC 9639: STREAMINFO
@@ -3339,11 +2654,12 @@ object EntryOps {
         col("f.n_samples"), col("f.sum_ch0"), col("f.sum_ch1"),
         col("f.peak_abs"))
       // stats table materialized pre-sort (range partitioning samples =
-      // executes the child twice; the mpegL1Pcm note)
+      // executes the child twice, a second FLAC decode; the mpegL1Pcm note)
       .barriered
       .orderBy(col("asset_id"))
 
-  /** e07 fixture — a cross-CODEC audio corpus: the SAME recording ships as
+  /** e07 fixture ([[graft.fixtures.Audio.audioCorpus]]) — a cross-CODEC
+    * audio corpus: the SAME recording ships as
     * RIFF/WAVE PCM (`doc_id % 3 != 2`) or FLAC (`doc_id % 3 = 2`, 8-bit
     * mono, one fixed-order-1 frame with genuinely Rice-coded residuals).
     * Sample content is [[wavDhashAssets]]' quadratic formula over a seed
@@ -3360,72 +2676,15 @@ object EntryOps {
   def audioCorpusAssets(spark: SparkSession, dir: String): DataFrame =
     audioCorpusAssetsOf(docIds(spark, dir))
 
-  /** [[audioCorpusAssets]] over an arbitrary doc_id frame — the synthesis
-    * body, parameterized so a replay fixture (d27) can inject PLANTED
-    * recordings beyond the corpus: every formula below is a pure function
-    * of doc_id, so an injected id yields a well-formed payload whose
-    * expected hash the oracle derives from the same arithmetic. Injected
-    * ids must keep `seed² · 7` inside int64 (id ≲ 6.6e6) — the sample
-    * formula squares the seed.
+  /** [[audioCorpusAssets]] over an arbitrary doc_id frame, so a replay
+    * fixture (d27) can pick its cohorts: every byte is a pure function of
+    * doc_id, so any id yields a well-formed payload whose expected hash the
+    * oracle derives from the same arithmetic. Ids must keep `seed² · 7`
+    * inside int64 (id ≲ 6.6e6) — the sample formula squares the seed.
     */
-  def audioCorpusAssetsOf(ids: DataFrame): DataFrame = {
-    val d = ids
-      .withColumn("seed", expr(
-        "IF(doc_id % 10 = 1, doc_id - 1, doc_id) * 173"))
-      .withColumn("f", expr("130 + doc_id % 7"))
-      .withColumn("rice6", riceLit(6))
-      .withColumn("hx2", typedlit((0 until 256).map(b => f"$b%02x")))
-    def fw(j: String) =
-      s"(((seed + ($j)) * (seed + ($j)) * 7 + (seed + ($j)) * 11 + seed) % 256)"
-    // --- WAV branch: wavDhashAssets' layout at 32768 Hz, 8-bit mono PCM
-    def le16hex(e: String) =
-      s"concat(lpad(hex(($e) % 256), 2, '0'), lpad(hex(($e) div 256), 2, '0'))"
-    def le32hex(e: String) =
-      s"concat(${le16hex(s"($e) % 65536")}, ${le16hex(s"($e) div 65536")})"
-    val wavHex =
-      s"""concat('52494646', ${le32hex("36 + f + f % 2")}, '57415645',
-          '666D7420', '10000000', '0100', '0100',
-          ${le32hex("32768")}, ${le32hex("32768")}, '0100', '0800',
-          '64617461', ${le32hex("f")},
-          array_join(transform(sequence(0L, f - 1), j ->
-            element_at(hx2, CAST(${fw("j")} + 1 AS INT))), ''),
-          IF(f % 2 = 1, '00', ''))"""
-    // --- FLAC branch: STREAMINFO (rate 32768, mono, bps 8, total f) + one
-    // fixed-blocking frame, FIXED order-1 subframe, Rice k = 6 residuals
-    def tc(e: String, n: Int) =
-      s"lpad(conv(pmod($e, ${1L << n}), 10, 2), $n, '0')"
-    def s8(j: String) = s"(${fw(j)} - 128)"
-    // per-residual Rice encode = one element_at against the rice6 code
-    // table (constant-folded literal; the m19 discipline)
-    val subBits =
-      s"""concat('00010010', ${tc(s8("0"), 8)}, '000000', '0110',
-          array_join(transform(sequence(1L, f - 1), i ->
-            element_at(rice6, CAST((${s8("i")} - ${s8("(i - 1)")}) + 256 AS INT))), ''))"""
-    def toHex(pb: String) =
-      s"""array_join(transform(sequence(0L, length($pb) div 8 - 1), i ->
-            lpad(conv(substring($pb, CAST(i * 8 + 1 AS INT), 8), 2, 16), 2, '0')), '')"""
-    val flacInfoHex =
-      """concat('664C6143', '80', '000022',
-         lpad(hex(f), 4, '0'), lpad(hex(f), 4, '0'), '000000000000',
-         lpad(hex(shiftleft(32768L, 44) + shiftleft(7L, 36) + f), 16, '0'),
-         repeat('00', 16))"""
-    val staged = d
-      // fenced: the hex transform must walk a materialized column, never
-      // an inlined Rice-coder tree (the m18 lesson)
-      .withColumn("fbits", graft.functions.Staged(expr(
-        s"""concat($subBits,
-            repeat('0', (8 - length($subBits) % 8) % 8), repeat('0', 16))""")))
-      .withColumn("flac_hex", expr(
-        s"""concat($flacInfoHex, 'FFF8', '60', '00', '00',
-            lpad(hex(f - 1), 2, '0'), '00', ${toHex("fbits")})"""))
-    staged
-      .withColumn("full_hex", expr(
-        s"IF(doc_id % 3 = 2, flac_hex, $wavHex)"))
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 17 = 3, substring(full_hex, 1, CAST(length(full_hex) - 4 AS INT)), full_hex)"))
-      .select(col("doc_id").as("asset_id"),
-        graft.functions.Staged(unhex(col("payload_hex"))).as("payload"))
-  }
+  def audioCorpusAssetsOf(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id").as("asset_id"),
+      udf(Audio.audioCorpus _).apply(col("doc_id")).as("payload"))
 
   /** e07 — the CROSS-CODEC audio corpus: [[audioCorpusAssets]] composed
     * exactly like [[jpegCorpus]] composes the two JPEG entropy codings.
@@ -3447,11 +2706,10 @@ object EntryOps {
     * active-vertex components, 1:1 equi-join assembly.
     */
   def audioCorpus(spark: SparkSession, dir: String): DataFrame = {
-    // ONE synthesis+decode pass (r19): the cross-codec hash AND the
-    // unified feature columns project from the SAME payload evaluation,
-    // barriered — previously the pairs branch, the valid-id branch, and
-    // the feature branch each re-synthesized the corpus (three full
-    // passes, two of them re-running both decoders).
+    // ONE decode pass: the cross-codec hash AND the unified feature
+    // columns project from the SAME payload evaluation, barriered, so the
+    // pairs branch, the valid-id branch and the feature branch do not each
+    // run both decoders again.
     val media = audioCorpusAssets(spark, dir)
       .select(col("asset_id"),
         graft.functions.Staged(coalesce(
@@ -3482,74 +2740,21 @@ object EntryOps {
       .filter(col("cluster_id") === col("doc_id"))
       .join(feats, Seq("doc_id"))
       // survivors materialized pre-sort (range partitioning samples =
-      // executes the child twice; the mpegL1Pcm note — here the child
-      // re-runs both decoders over the synthesized corpus)
+      // executes the child twice; the mpegL1Pcm note)
       .barriered
       .orderBy(col("doc_id"))
   }
 
-  /** m20 fixture — spec-valid uncompressed BMPs synthesized in-plan from
-    * doc_id: even docs 24-bit BGR with per-channel formulas, odd docs
-    * 8-bit indices into a 16-entry BGRA color table, rows padded to
-    * 4-byte boundaries, `doc_id % 11 = 4` declaring the NEGATIVE
-    * (top-down) height the decoder must accept. Refusal branches ride
-    * in-plan: % 17 = 3 declares RLE8 compression, % 13 = 5 truncates the
-    * pixel array — header dims kept, stats null, never a partial sum.
+  /** m20 fixture — spec-valid uncompressed BMPs built from doc_id
+    * ([[graft.fixtures.Image.bmp]]): even docs 24-bit BGR with per-channel
+    * formulas, odd docs 8-bit indices into a 16-entry BGRA color table, rows
+    * padded to 4-byte boundaries, `doc_id % 11 = 4` declaring the NEGATIVE
+    * (top-down) height the decoder must accept. Refusal branches ride along:
+    * % 17 = 3 declares RLE8 compression, % 13 = 5 truncates the pixel array —
+    * header dims kept, stats null, never a partial sum.
     */
-  def bmpAssets(spark: SparkSession, dir: String): DataFrame = {
-    val d = docIds(spark, dir)
-      .withColumn("w", expr("doc_id % 9 + 2"))
-      .withColumn("h", expr("(doc_id * 3) % 7 + 2"))
-      .withColumn("pal", expr("doc_id % 2 = 1"))
-      .withColumn("hx2", typedlit((0 until 256).map(b => f"$b%02x")))
-    def le32h(e: String) =
-      s"""concat(element_at(hx2, CAST(($e) % 256 + 1 AS INT)),
-          element_at(hx2, CAST(($e) div 256 % 256 + 1 AS INT)),
-          element_at(hx2, CAST(($e) div 65536 % 256 + 1 AS INT)),
-          element_at(hx2, CAST(($e) div 16777216 % 256 + 1 AS INT)))"""
-    def hx(e: String) = s"element_at(hx2, CAST(($e) + 1 AS INT))"
-    // image-coordinate channel formulas (storage row order cannot change
-    // a sum, so rows are written 0..h-1 regardless of the top-down flag)
-    def rC(p: String) = s"((doc_id * 7 + ($p) * 3) % 256)"
-    def gC(p: String) = s"((doc_id + ($p) * 2) % 256)"
-    def bC(p: String) = s"((doc_id * 5 + ($p)) % 256)"
-    val rgbRows = expr(
-      s"""array_join(transform(sequence(0L, h - 1), y -> concat(
-            array_join(transform(sequence(0L, w - 1), x ->
-              concat(${hx(bC("y * w + x"))}, ${hx(gC("y * w + x"))},
-                ${hx(rC("y * w + x"))})), ''),
-            repeat('00', CAST((4 - (w * 3) % 4) % 4 AS INT)))), '')""")
-    val palHex = expr(
-      """array_join(transform(sequence(0L, 15), c -> concat(
-           element_at(hx2, CAST((c * 5) % 256 + 1 AS INT)),
-           element_at(hx2, CAST((c * 7) % 256 + 1 AS INT)),
-           element_at(hx2, CAST((c * 11) % 256 + 1 AS INT)), '00')), '')""")
-    val idxRows = expr(
-      s"""array_join(transform(sequence(0L, h - 1), y -> concat(
-            array_join(transform(sequence(0L, w - 1), x ->
-              ${hx("(doc_id + x + 3 * y) % 16")}), ''),
-            repeat('00', CAST((4 - w % 4) % 4 AS INT)))), '')""")
-    val staged = d
-      .withColumn("pix_hex", graft.functions.Staged(
-        when(col("pal"), idxRows).otherwise(rgbRows)))
-      .withColumn("row_bytes", expr(
-        "IF(pal, (w + 3) div 4 * 4, (w * 3 + 3) div 4 * 4)"))
-      .withColumn("pix_off", expr("IF(pal, 118, 54)"))
-    val hdr = expr(
-      s"""concat('424D', ${le32h("pix_off + row_bytes * h")}, '00000000',
-          ${le32h("pix_off")}, '28000000', ${le32h("w")},
-          ${le32h("IF(doc_id % 11 = 4, 4294967296 - h, h)")},
-          '0100', IF(pal, '0800', '1800'),
-          ${le32h("IF(doc_id % 17 = 3, 1, 0)")},
-          '000000000000000000000000',
-          ${le32h("IF(pal, 16, 0)")}, '00000000')""")
-    staged
-      .withColumn("full_hex", concat(hdr,
-        when(col("pal"), palHex).otherwise(lit("")), col("pix_hex")))
-      .withColumn("payload_hex", expr(
-        "IF(doc_id % 13 = 5, substring(full_hex, 1, CAST(length(full_hex) - 4 AS INT)), full_hex)"))
-      .select(col("doc_id").as("asset_id"), unhex(col("payload_hex")).as("payload"))
-  }
+  def bmpAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.bmp)
 
   /** m20 — REAL pixel decode for uncompressed BMP: [[bmpAssets]] payloads
     * through the native `bmp_features` expression (file + info header
@@ -3589,10 +2794,10 @@ object EntryOps {
       graft.functions.FlacDHash(col("payload"))))
     val arrivals = assets.filter(col("asset_id") % 10 === 1)
       .select(col("asset_id"), hash.as("dhash"))
-    // barriered (r19): the dedup join consumes the index side twice (the
+    // barriered: the dedup join consumes the index side twice (the
     // band-frequency cap aggregation + the capped join itself), and here —
     // unlike the persisted-index streams — the index is built IN-PLAN, so
-    // each consumer re-synthesized and re-hashed 9/10 of the corpus. One
+    // each consumer would decode and hash 9/10 of the corpus again. One
     // materialized (ex_id, dhash) table instead.
     val index = graft.ops.Dedup.buildMediaIndex(
       assets.filter(col("asset_id") % 10 =!= 1), hash).barriered
@@ -3632,7 +2837,7 @@ object EntryOps {
     * % 31 = 8 sets timescale 0 (fields intact, duration_ms uncomputable).
     */
   def mp4Assets(spark: SparkSession, dir: String): DataFrame =
-    videoAssets(spark, dir, lit(true), graft.fixtures.Video.mp4)
+    fixtureAssets(spark, dir, Video.mp4)
 
   /** m14 — ISO-BMFF box walk over [[mp4Assets]] through the native
     * `mp4_features` expression. The oracle computes every expected field
@@ -3674,7 +2879,7 @@ object EntryOps {
     */
   def mp4SampleAssets(spark: SparkSession, dir: String,
       where: Column = lit(true)): DataFrame =
-    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Samples)
+    fixtureAssets(spark, dir, Video.mp4Samples, where)
 
   /** m21 — the ISO-BMFF SAMPLE-TABLE walk ([[graft.functions.Mp4SampleTables]],
     * stsz/stts/stsc/stco/co64 per trak) over [[mp4SampleAssets]], exploded
@@ -3733,7 +2938,7 @@ object EntryOps {
     */
   def mp4FragmentAssets(spark: SparkSession, dir: String,
       where: Column = lit(true)): DataFrame =
-    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Fragments)
+    fixtureAssets(spark, dir, Video.mp4Fragments, where)
 
   /** m22 — the FRAGMENTED ISO-BMFF sample inventory
     * ([[graft.functions.Mp4FragmentTables]]: moof/traf/trun walk with the
@@ -3837,8 +3042,8 @@ object EntryOps {
       .select(col("asset_id"), col("format"), col("stream_class"),
         col("mp4_tracks"), col("mp4_samples"), col("mp4_duration_ms"),
         col("mp4_bytes"))
-      // pre-sort barrier: the mpegL1Pcm note (seven decoders per payload
-      // in the decoration projection — the heaviest double-exec in the family)
+      // pre-sort barrier (the mpegL1Pcm note): sampling would re-run the
+      // decoration projection's seven decoders per payload
       .barriered
       .orderBy(col("asset_id"))
   }
@@ -3871,7 +3076,7 @@ object EntryOps {
     */
   def mp4RemuxAssets(spark: SparkSession, dir: String,
       where: Column = lit(true)): DataFrame =
-    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Remux)
+    fixtureAssets(spark, dir, Video.mp4Remux, where)
 
   /** d36 — VIDEO near-dup from the sample-table fingerprint (r17 verdict
     * item 4 — the one modality that had no dedup operator, closed with
@@ -3955,7 +3160,7 @@ object EntryOps {
     */
   def mp4DashAssets(spark: SparkSession, dir: String,
       where: Column = lit(true)): DataFrame =
-    videoAssets(spark, dir, where, graft.fixtures.Video.mp4Dash)
+    fixtureAssets(spark, dir, Video.mp4Dash, where)
 
   /** d39 — RE-SEGMENTATION near-dup for FRAGMENTED (DASH/CMAF) media
     * (r18 verdict stretch item 8): d36 covers flat MP4 re-muxing, but the
@@ -4006,7 +3211,7 @@ object EntryOps {
     */
   def mpegTsAssets(spark: SparkSession, dir: String,
       where: Column = lit(true)): DataFrame =
-    videoAssets(spark, dir, where, graft.fixtures.Video.mpegTs)
+    fixtureAssets(spark, dir, Video.mpegTs, where)
 
   /** m25 — MPEG-TS per-stream inventory over [[mpegTsAssets]]' real
     * packetized bytes: the broadcast/HLS packaging family joins the flat
@@ -4123,8 +3328,8 @@ object EntryOps {
       .write.parquet(idxPath)
     // barriered (r19): arr feeds the near-dup verdict (via its text) AND
     // the final admission decoration join — without the barrier each
-    // consumer re-decoded (and at bench scale re-synthesized) every
-    // arrival container. Batch-sized (id + text + four sizing columns).
+    // consumer re-decoded every arrival container. Batch-sized (id + text
+    // + four sizing columns).
     val arr = videoArrivalDecorated(spark, dir,
       (col("doc_id") % 10).isin(1, 3, 9)).barriered
     val v = graft.ops.Dedup.videoNearDedupAgainstIndex(
@@ -4341,44 +3546,22 @@ object EntryOps {
         .filter(col("text").isNotNull),
       n = 2, minJaccard = 0.4, maxDocFreq = 64)
 
-  /** m08 fixture — VALID GIF89a payloads synthesized in-plan from doc_id:
-    * a 128-color global palette (entry i = (i, 5i%256, 11i%256) — a Scala
-    * constant embedded as hex), w/h cycling like m05/m06, pixel j carrying
+  /** m08 fixture — VALID GIF89a payloads built from doc_id
+    * ([[graft.fixtures.Image.gif]]): a 128-color global palette (entry i =
+    * (i, 5i%256, 11i%256)), w/h cycling like m05/m06, pixel j carrying
     * palette index `(doc_id + j) % 128`. The LZW stream uses the classic
     * "uncompressed GIF" encoding: minimum code size 7 ⇒ 8-bit codes, one
-    * leading CLEAR (0x80), every pixel emitted as its literal code, then
-    * END (0x81) — with ≤ 81 pixels the dictionary stays below 256 entries
-    * so the code width never grows and every code is byte-aligned,
-    * making the stream expressible as plain SQL hex. It is nonetheless a
-    * REAL LZW stream: the decoder runs its full variable-width machinery
-    * (and FunctionsSpec feeds it genuinely COMPRESSED streams written by
-    * the JDK's own ImageIO GIF encoder, cross-checking the sums). The
-    * oracle computes expected sums from the doc_id/palette formulas — it
-    * never sees a GIF byte.
+    * leading CLEAR (0x80), every pixel emitted as its literal code, then END
+    * (0x81) — with ≤ 81 pixels the dictionary stays below 256 entries so the
+    * code width never grows and every code is byte-aligned. It is nonetheless
+    * a REAL LZW stream: the decoder runs its full variable-width machinery
+    * (and FunctionsSpec feeds it genuinely COMPRESSED streams written by the
+    * JDK's own ImageIO GIF encoder, cross-checking the sums). The oracle
+    * computes expected sums from the doc_id/palette formulas — it never sees
+    * a GIF byte.
     */
-  def gifAssets(spark: SparkSession, dir: String): DataFrame = {
-    val paletteHex = (0 until 128)
-      .map(i => f"$i%02X${i * 5 % 256}%02X${i * 11 % 256}%02X").mkString
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        (col("doc_id") % 8 + 2).as("w"),
-        ((col("doc_id") * 3) % 8 + 2).as("h"))
-    def le16hex(e: String): Column =
-      expr(s"concat(lpad(hex(($e) % 256), 2, '0'), lpad(hex(($e) div 256), 2, '0'))")
-    val pixelsHex = expr(
-      """array_join(transform(sequence(0L, w * h - 1), j ->
-           lpad(hex((doc_id + j) % 128), 2, '0')), '')""")
-    val payloadHex = concat(
-      lit("474946383961"), le16hex("w"), le16hex("h"),
-      // packed: GCT present, colour resolution 7, size 2^(6+1)=128; bg; aspect
-      lit("F6" + "00" + "00" + paletteHex),
-      lit("2C" + "00000000"), le16hex("w"), le16hex("h"), lit("00"), // full frame
-      lit("07"), // LZW minimum code size
-      expr("lpad(hex(w * h + 2), 2, '0')"), // one sub-block: clear+pixels+end
-      lit("80"), pixelsHex, lit("81"),
-      lit("00" + "3B")) // sub-block terminator + trailer
-    d.select(col("doc_id").as("asset_id"), unhex(payloadHex).as("payload"))
-  }
+  def gifAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.gif)
 
   /** m08 — REAL pixel decode of an LZW-compressed format: [[gifAssets]]
     * payloads through the native `gif_features` expression (block walk +
@@ -4388,50 +3571,19 @@ object EntryOps {
   def gifPixels(spark: SparkSession, dir: String): DataFrame =
     Multimodal.gifFeatures(gifAssets(spark, dir))
 
-  /** m09 fixture — VALID ANIMATED GIFs synthesized in-plan from doc_id:
-    * doc_id%4+1 frames over the m08 palette; frame 0 paints the full
-    * screen, later frames paint the partial rectangle (left=1, width w−1 —
-    * the standard animation delta shape); pixel j of frame f carries
-    * palette index `(doc_id + 31·f + j) % 128`; every 3rd payload
-    * interposes a Graphic Control Extension before frames so the
-    * extension-skip path is oracle-checked. Same byte-aligned literal-code
-    * LZW per frame as [[gifAssets]] (FunctionsSpec feeds ImageIO-written
-    * compressed ANIMATIONS for the multi-frame + dictionary-growth path).
+  /** m09 fixture — VALID ANIMATED GIFs built from doc_id
+    * ([[graft.fixtures.Image.gifAnim]]): doc_id%4+1 frames over the m08
+    * palette; frame 0 paints the full screen, later frames paint the partial
+    * rectangle (left=1, width w−1 — the standard animation delta shape);
+    * pixel j of frame f carries palette index `(doc_id + 31·f + j) % 128`;
+    * every 3rd payload interposes a Graphic Control Extension before frames
+    * so the extension-skip path is oracle-checked. Same byte-aligned
+    * literal-code LZW per frame as [[gifAssets]] (FunctionsSpec feeds
+    * ImageIO-written compressed ANIMATIONS for the multi-frame +
+    * dictionary-growth path).
     */
-  def gifAnimAssets(spark: SparkSession, dir: String): DataFrame = {
-    val paletteHex = (0 until 128)
-      .map(i => f"$i%02X${i * 5 % 256}%02X${i * 11 % 256}%02X").mkString
-    val d = docIds(spark, dir)
-      .select(col("doc_id"),
-        (col("doc_id") % 8 + 2).as("w"),
-        ((col("doc_id") * 3) % 8 + 2).as("h"),
-        (col("doc_id") % 4 + 1).as("nf"))
-    // per-frame image block: descriptor (frame 0 full, later frames at
-    // left=1 with width w−1), 8-bit literal-code LZW stream; w,h ≤ 9 so
-    // every le16 is one significant byte + 00
-    val framesHex = expr(
-      """array_join(transform(sequence(0L, nf - 1), f -> concat(
-           '2C',
-           IF(f = 0, '00000000', '01000000'),
-           lpad(hex(IF(f = 0, w, w - 1)), 2, '0'), '00',
-           lpad(hex(h), 2, '0'), '00',
-           '00', '07',
-           lpad(hex(IF(f = 0, w, w - 1) * h + 2), 2, '0'),
-           '80',
-           array_join(transform(sequence(0L, IF(f = 0, w, w - 1) * h - 1),
-             j -> lpad(hex((doc_id + 31 * f + j) % 128), 2, '0')), ''),
-           '81', '00')), '')""")
-    val gceHex = when(col("doc_id") % 3 === 0,
-      lit("21F9040000000000")).otherwise(lit("")) // GCE: skipped by the walk
-    val payloadHex = concat(
-      lit("474946383961"),
-      expr("lpad(hex(w), 2, '0')"), lit("00"),
-      expr("lpad(hex(h), 2, '0')"), lit("00"),
-      lit("F6" + "00" + "00" + paletteHex),
-      gceHex, framesHex, lit("3B"))
-    d.withColumn("payloadHex", payloadHex)
-      .select(col("doc_id").as("asset_id"), unhex(col("payloadHex")).as("payload"))
-  }
+  def gifAnimAssets(spark: SparkSession, dir: String): DataFrame =
+    fixtureAssets(spark, dir, Image.gifAnim)
 
   /** m09 — frame-sequence decode of animated GIFs (the zero-codec video
     * stand-in): [[gifAnimAssets]] payloads through the native
@@ -4449,38 +3601,21 @@ object EntryOps {
   def gifFrameTable(spark: SparkSession, dir: String): DataFrame =
     Multimodal.gifFrameTable(gifAnimAssets(spark, dir))
 
-  def mediaDims(spark: SparkSession, dir: String): DataFrame = {
-    val w = col("doc_id") % 1000 + 1
-    val h = (col("doc_id") * 7) % 1000 + 3
-    def hx(c: Column, width: Int): Column = lpad(hex(c), width, "0")
-    def be16(c: Column): Column = hx(c, 4)
-    def be32(c: Column): Column = hx(c, 8)
-    def le16(c: Column): Column =
-      concat(hx(c.bitwiseAND(lit(255)), 2), hx(shiftright(c, 8).bitwiseAND(lit(255)), 2))
-    def le32(c: Column): Column =
-      concat(le16(c), hx(shiftright(c, 16).bitwiseAND(lit(255)), 2),
-        hx(shiftright(c, 24).bitwiseAND(lit(255)), 2))
-    val headerHex = when(col("doc_id") % 5 === 0,
-        // PNG signature + IHDR length/type + width/height (big-endian u32)
-        concat(lit("89504E470D0A1A0A" + "0000000D49484452"), be32(w), be32(h)))
-      .when(col("doc_id") % 5 === 1,
-        // GIF89a + logical screen width/height (little-endian u16)
-        concat(lit("474946383961"), le16(w), le16(h)))
-      .when(col("doc_id") % 5 === 2,
-        // BM + 12 filler bytes (size/reserved/offset) + DIB header size 40
-        // (BITMAPINFOHEADER, LE) + w/h (LE i32)
-        concat(lit("424D" + "00" * 12 + "28000000"), le32(w), le32(h)))
-      .when(col("doc_id") % 5 === 3,
-        // SOI + APP0(JFIF, len 16) + SOF0(len 17, precision 8, h, w BE u16)
-        concat(lit("FFD8" + "FFE0" + "0010" + "4A46494600010100000100010000"
-          + "FFC0" + "0011" + "08"), be16(h), be16(w)))
-      // headerless branch: a leading NUL byte matches no container signature
-      .otherwise(lit("00"))
-    val assets = docs(spark, dir).select(
-      col("doc_id").as("asset_id"),
-      unhex(concat(headerHex, hex(col("text").cast("binary")))).as("payload"))
-    Multimodal.mediaDims(assets)
-  }
+  /** m04 — REAL container-header decode: payloads carrying valid PNG /
+    * GIF89a / BMP / JPEG(APP0+SOF0) headers with doc_id-derived dimensions
+    * (plus a headerless branch; [[graft.fixtures.Image.mediaHeader]]), then
+    * the document text, sniffed back with the native
+    * [[graft.functions.MediaDims]] expression. The oracle computes the
+    * expected (format, width, height) DIRECTLY from doc_id — it never sees
+    * the bytes — so any defect in either the documented header layout or
+    * the byte parsing breaks the hash match. (Real-bytes fixtures incl.
+    * JPEG fill bytes, SOF2, and a top-down BMP are spec-checked in
+    * FunctionsSpec.)
+    */
+  def mediaDims(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.mediaDims(docs(spark, dir).select(col("doc_id").as("asset_id"),
+      concat(udf(Image.mediaHeader _).apply(col("doc_id")), col("text").cast("binary"))
+        .as("payload")))
 
   /** Window function: top-3 events by value per type (rank over partition). */
   def topkPerGroup(spark: SparkSession, dir: String): DataFrame = {
@@ -5164,8 +4299,8 @@ object EntryOps {
     * is VARCHAR throughout (the learning contract keys on arrival paths),
     * so the (hamming, ex_id) tie-break is string-ordered on both sides.
     * The planted pair ([[plantedMediaIds]]) rides the id union with its
-    * dhash derived in the `pah` CTE from [[plantedWavHex]]'s own sample
-    * formula `p(j) = (31·j² + 17·j + 5) mod 256` — outside the corpus's
+    * dhash derived in the `pah` CTE from [[graft.fixtures.Audio.plantedWav]]'s
+    * own sample formula `p(j) = (31·j² + 17·j + 5) mod 256` — outside the corpus's
     * fully-covered mod-256 hash space, so the batch-1 `exact` verdict can
     * only come THROUGH the batch-0 learned row.
     */

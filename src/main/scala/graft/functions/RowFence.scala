@@ -29,9 +29,10 @@ import org.apache.spark.sql.types.DataType
   *
   * One caller remains: [[graft.EntryOps.urlAssets]], whose raw-URL CASE
   * tree is SQL text shared with its oracle and compiled to a ~14 KB
-  * whole-stage method (past the JIT limit). The fixtures that first needed
-  * the fence, the MP4/MPEG-TS containers of m21–m25 and d36–d40, are now
-  * built in Scala by [[graft.fixtures.Video]] and never reach codegen.
+  * whole-stage method (past the JIT limit). Every binary payload fixture
+  * (the MP4/MPEG-TS containers that first needed the fence, and the image
+  * and audio payloads) is built in Scala by [[graft.fixtures]] and reaches
+  * the plan as one UDF call, never as a codegen'd expression tree.
   *
   * Contrast [[Staged]]: Staged pins projection BOUNDARIES against the
   * optimizer (and stays codegen'd); RowFence moves one projection to the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import graft.fixtures.{Audio, Image}
 import graft.functions.F
 
 /** Scalar function semantics vs the reference's observable behavior
@@ -275,7 +276,7 @@ class FunctionsSpec extends GraftSpec {
   }
 
   /** Reference PNG encoder for the spec: REAL deflate (Deflater's dynamic
-    * Huffman — the in-plan m06 fixture only exercises stored blocks), real
+    * Huffman — the m06 fixture only exercises stored blocks), real
     * CRCs, per-row filter choice with spec-correct forward filtering. Kept
     * in the test tree: production code only ever DECODES.
     */
@@ -351,7 +352,7 @@ class FunctionsSpec extends GraftSpec {
   test("png_features decodes real deflate-compressed pixels (all filters, ImageIO parity)") {
     import spark.implicits._
     // RGB 4x5, deterministic pixels, one row per filter type 0..4 — REAL
-    // dynamic-Huffman deflate (the m06 in-plan fixture covers stored blocks)
+    // dynamic-Huffman deflate (the m06 fixture covers stored blocks)
     val w = 4; val h = 5
     val rgb = Array.tabulate(w * h * 3)(i => ((i * 37 + 11) % 256).toByte)
     val png = pngEncode(w, h, colorType = 2, rgb, filterFor = y => y % 5)
@@ -419,14 +420,11 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("m06 fixture payloads are spec-valid PNGs (ImageIO parity on real bytes)") {
-    // guard against a matched construct/parse bug: the in-plan fixture's
+    // guard against a matched construct/parse bug: the fixture's
     // bytes must decode identically under the JDK's own PNG reader
-    val assets = EntryOps.pngAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") < 10).orderBy("asset_id").collect()
+    val assets = (0L until 10).map(id => id -> Image.png(id))
     assert(assets.length === 10)
-    assets.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]](1)
+    assets.foreach { case (id, bytes) =>
       val decoded = graft.functions.PngFeatures.decode(bytes)
       val (sr, sg, sb) = imageIoSums(bytes)
       assert((decoded.getLong(5), decoded.getLong(6), decoded.getLong(7)) ===
@@ -526,7 +524,7 @@ class FunctionsSpec extends GraftSpec {
     * 8×8 blocks through the m15 fixture's custom canonical tables (DC: all
     * twelve categories at length 4; AC: EOB alone at length 1), DRI/RSTn
     * between MCUs. Exercises the decoder's restart path, which neither the
-    * JDK writer (no DRI knob) nor the in-plan fixture emits.
+    * JDK writer (no DRI knob) nor the m15 fixture emits.
     */
   private def jpegEncodeGrayRestart(w: Int, h: Int, vAt: (Int, Int) => Int,
       dri: Int, rstFill: Int = 0): Array[Byte] = {
@@ -741,17 +739,14 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("m15 fixture payloads are spec-valid JPEGs (ImageIO parity on real bytes)") {
-    // guard against a matched construct/parse bug: the in-plan fixture's
+    // guard against a matched construct/parse bug: the fixture's
     // entropy-coded bytes must decode identically under the JDK's own JPEG
     // reader. Constant 8×8 blocks and zero chroma make the decode exact
     // under ANY conformant IDCT/upsampling, so the parity is equality.
-    val assets = EntryOps.jpegAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") < 40).orderBy("asset_id").collect()
+    val assets = (0L until 40).map(id => id -> Image.jpeg(id))
     assert(assets.length === 40)
     var checked = 0
-    assets.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]](1)
+    assets.foreach { case (id, bytes) =>
       val decoded = graft.functions.JpegFeatures.decode(bytes)
       assert(decoded.getUTF8String(0).toString === "jpeg")
       if (id % 13 != 5 && id % 17 != 3) { // not a planted refusal row
@@ -768,7 +763,7 @@ class FunctionsSpec extends GraftSpec {
 
   /** Real COMPRESSED GIF bytes from the JDK's own encoder: an indexed
     * image with the m08 palette formula, written via ImageIO — genuine
-    * variable-width LZW (the in-plan fixture covers the byte-aligned
+    * variable-width LZW (the m08 fixture covers the byte-aligned
     * literal-code encoding; this covers dictionary growth).
     */
   private def imageIoGif(w: Int, h: Int, pixFn: Int => Int): Array[Byte] = {
@@ -972,12 +967,9 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("m09 fixture payloads decode frame-for-frame under ImageIO") {
-    val assets = EntryOps.gifAnimAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") < 10).orderBy("asset_id").collect()
+    val assets = (0L until 10).map(id => id -> Image.gifAnim(id))
     assert(assets.length === 10)
-    assets.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]](1)
+    assets.foreach { case (id, bytes) =>
       val d = graft.functions.GifAnimFeatures.decode(bytes)
       val (nf, sr, sg, sb) = rgbSumsAllFrames(bytes)
       assert((d.getLong(3), d.getLong(5), d.getLong(6), d.getLong(7)) ===
@@ -1619,12 +1611,9 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("m08 fixture payloads are spec-valid GIFs (ImageIO parity on real bytes)") {
-    val assets = EntryOps.gifAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") < 10).orderBy("asset_id").collect()
+    val assets = (0L until 10).map(id => id -> Image.gif(id))
     assert(assets.length === 10)
-    assets.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]](1)
+    assets.foreach { case (id, bytes) =>
       val d = graft.functions.GifFeatures.decode(bytes)
       val (sr, sg, sb) = rgbSums(bytes)
       assert((d.getLong(5), d.getLong(6), d.getLong(7)) === ((sr, sg, sb)),
@@ -1779,14 +1768,11 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("m07 fixture payloads are spec-valid WAVs (javax.sound parity on real bytes)") {
-    // guard against a matched construct/parse bug: the in-plan fixture's
+    // guard against a matched construct/parse bug: the fixture's
     // bytes must decode identically under the JDK's own WAV reader
-    val assets = EntryOps.wavAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") < 15).orderBy("asset_id").collect()
+    val assets = (0L until 15).map(id => id -> Audio.wav(id))
     assert(assets.length === 15)
-    assets.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]](1)
+    assets.foreach { case (id, bytes) =>
       val d = graft.functions.WavFeatures.decode(bytes)
       val (ch, rate, frames, s0, s1, peak) = javaxSums(bytes)
       assert((d.getLong(1), d.getLong(2), d.getLong(4), d.getLong(5),
@@ -2340,16 +2326,12 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("m20 fixture payloads are spec-valid BMPs (ImageIO parity on real bytes)") {
-    // guard against a matched construct/parse bug: the in-plan fixture's
+    // guard against a matched construct/parse bug: the fixture's
     // bytes must decode identically under the JDK's own BMP reader
-    val assets = EntryOps.bmpAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") < 12 && col("asset_id") % 17 =!= 3 &&
-        col("asset_id") % 13 =!= 5)
-      .orderBy("asset_id").collect()
+    val assets = (0L until 12).filter(id => id % 17 != 3 && id % 13 != 5)
+      .map(id => id -> Image.bmp(id))
     assert(assets.nonEmpty)
-    assets.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]](1)
+    assets.foreach { case (id, bytes) =>
       val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
       assert(img != null, s"asset $id: ImageIO refused the fixture bytes")
       var jr = 0L; var jg = 0L; var jb = 0L
@@ -2369,10 +2351,7 @@ class FunctionsSpec extends GraftSpec {
     // 11 is FLAC (doc_id % 3); 51 re-ships 50's the other way around —
     // the cross-codec pairs the composed corpus must collapse. (20/21 is
     // the same shape but 20 is the % 17 truncation plant — quarantined.)
-    val byId = EntryOps.audioCorpusAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id").isin(10L, 11L, 20L, 50L, 51L))
-      .collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    val byId = Seq(10L, 11L, 20L, 50L, 51L).map(id => id -> Audio.audioCorpus(id)).toMap
     def codec(b: Array[Byte]) = if (b(0) == 'R') "wav" else "flac"
     def hash(b: Array[Byte]) = {
       val w = graft.functions.WavDHash.hash(b)

@@ -248,6 +248,21 @@ class OpsSpec extends GraftSpec {
       .getAs[Long]("vid_bytes") === 31337L)
   }
 
+  test("clearing the session-cached roots deletes the e09 feature root " +
+      "the entry built") {
+    val sf = "/root/testdata/sf0.001"
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def roots(): Set[String] =
+      tmp.list().filter(_.startsWith("graft_media_feat")).toSet
+    EntryOps.clearSessionModelRoots()
+    val before = roots()
+    EntryOps.multimodalCorpusIncremental(spark, sf)
+    val built = roots() -- before
+    assert(built.size === 1)
+    EntryOps.clearSessionModelRoots()
+    assert((roots() & built).isEmpty)
+  }
+
   test("sq8 saturation monitor: a planted out-of-range append crosses " +
       "the rebuild threshold; boundary values are not clipped") {
     import org.apache.spark.sql.functions._
@@ -2103,11 +2118,7 @@ class OpsSpec extends GraftSpec {
     // doc 41 re-ships doc 40's pixels (41 % 10 = 1) but 41 % 3 = 2 encodes
     // PROGRESSIVE while 40 encodes baseline — the payload BYTES differ, the
     // decoded rasters must not
-    val assets = EntryOps.jpegCorpusAssets(spark, dir)
-      .filter(col("asset_id").isin(40L, 41L, 3L)).orderBy("asset_id").collect()
-    val p3 = assets(0).getAs[Array[Byte]]("payload")
-    val p40 = assets(1).getAs[Array[Byte]]("payload")
-    val p41 = assets(2).getAs[Array[Byte]]("payload")
+    val Seq(p3, p40, p41) = Seq(3L, 40L, 41L).map(graft.fixtures.Image.jpegCorpus)
     assert(!java.util.Arrays.equals(p40, p41), "plant must differ at byte level")
     // encodings really differ: 40 carries SOF0, 41 carries SOF2
     def hasMarker(b: Array[Byte], m: Int): Boolean =

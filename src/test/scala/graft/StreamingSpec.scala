@@ -564,17 +564,13 @@ class StreamingSpec extends GraftSpec {
     import org.apache.spark.sql.functions._
     val in = tmp("media-in")
     val outDir = tmp("media-out").toString
-    // real fixture payloads from the oracle-checked in-plan builders: one
+    // real fixture payloads from the oracle-checked builders: one
     // animated GIF, one WAV, one unknown blob
-    val gifBytes = EntryOps.gifAnimAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") === 3L).head().getAs[Array[Byte]]("payload")
-    val wavBytes = EntryOps.wavAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") === 4L).head().getAs[Array[Byte]]("payload")
-    val jpegBytes = EntryOps.jpegAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") === 6L).head().getAs[Array[Byte]]("payload")
+    val gifBytes = graft.fixtures.Image.gifAnim(3L)
+    val wavBytes = graft.fixtures.Audio.wav(4L)
+    val jpegBytes = graft.fixtures.Image.jpeg(6L)
     // asset 5 of the e07 corpus is a FLAC encoding (5 % 3 = 2)
-    val flacBytes = EntryOps.audioCorpusAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id") === 5L).head().getAs[Array[Byte]]("payload")
+    val flacBytes = graft.fixtures.Audio.audioCorpus(5L)
     Files.write(in.resolve("a.gif"), gifBytes)
     Files.write(in.resolve("b.wav"), wavBytes)
     Files.write(in.resolve("c.bin"), "no media here".getBytes(UTF_8))
@@ -1875,9 +1871,7 @@ class StreamingSpec extends GraftSpec {
   test("streaming audio dedup: cross-codec verdicts vs persisted index") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val byId = EntryOps.audioCorpusAssets(spark, "/root/testdata/sf0.001")
-      .filter(col("asset_id").isin(7L, 10L, 11L))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload")).toMap
+    val byId = Seq(7L, 10L, 11L).map(id => id -> graft.fixtures.Audio.audioCorpus(id)).toMap
     val in = tmp("auddedup-in")
     val idx = tmp("auddedup-idx").resolve("index").toString
     val out = tmp("auddedup-out").toString
