@@ -97,7 +97,13 @@ object Bench {
   private def isSubset: Boolean =
     sys.env.get("SPARK_GRAFT_BENCH_ONLY").exists(_.trim.nonEmpty)
 
-  def main(args: Array[String]): Unit = {
+  /** The whole run in one [[Scratch]] scope, so the index overlay is
+    * deleted when the run ends; each query's [[SparkEntry.run]] scope nests
+    * inside it.
+    */
+  def main(args: Array[String]): Unit = Scratch.scoped(measure())
+
+  private def measure(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -122,9 +128,10 @@ object Bench {
     // remains priced — once, honestly — by s07/s08, whose in-query
     // training forms exist precisely as that self-contained measurement.
     // Any overlay failure falls back loudly to the raw dir (s09/s10 then
-    // build in-plan, still correct, just double-pricing training).
+    // build in-plan, still correct, just double-pricing training). The
+    // overlay is a scratch directory of the run, deleted when it ends.
     val benchDir: String = try {
-      val base = java.nio.file.Files.createTempDirectory("graft_bench_idx")
+      val base = Scratch.dir("graft_bench_idx")
       for (t <- Seq("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"))
         java.nio.file.Files.createSymbolicLink(

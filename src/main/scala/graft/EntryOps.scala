@@ -233,9 +233,10 @@ object EntryOps {
     * doc −100 (batch 0, [[plantedLearnText]] — unseen by the corpus) must
     * come back `new` and be learned, and its byte-identical copy −101
     * (batch 1) must come back `exact` with match_id −100 — knowledge only
-    * a learned row can supply. The java.nio scratch root is the
-    * Verify/bench harness's stand-in for the warehouse index root a
-    * deployment passes to the stream (s15's harness-only exemption); cost
+    * a learned row can supply. The execution's scratch root
+    * ([[Scratch.dir]]) is the Verify/bench harness's stand-in for the
+    * warehouse index root a deployment passes to the stream (s15's
+    * harness-only exemption); cost
     * at bench scale honestly prices the full replay lifecycle: one base
     * index build + three batch bodies.
     */
@@ -727,21 +728,11 @@ object EntryOps {
     * as one plan. Queries quantize and band UNDER the root's quantizer
     * (never a default); candidates are banded equi-joins, id-deduped
     * before the codes re-attach; scoring is the all-integer dot
-    * (s17's MIPS contract, k = 10). Pre-committed container at
-    * `sq_roots/` when the overlay built one; scratch-committed otherwise
-    * — both through [[sq8RootFixture]], byte-identically.
+    * (s17's MIPS contract, k = 10). The container is [[sq8Root]].
     */
   def topkSq8Rooted(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val roots = s"$dir/sq_roots"
-    val resolved = Similarity.currentPqRoot(spark, roots) match {
-      case Some(r) => r
-      case None =>
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_sq_root").resolve("container").toString
-        sq8RootFixture(spark, dir, scratch)
-        Similarity.resolvePqIndexPath(spark, scratch)
-    }
+    val resolved = sq8Root(spark, dir)
     val quantizer = spark.read.parquet(s"$resolved/quantizer")
     Similarity.topkSq8AgainstIndex(e.filter(pqQueryPred), quantizer,
       Similarity.readPqCodes(spark, resolved), k = 10)
@@ -760,19 +751,30 @@ object EntryOps {
     */
   def sq8Drift(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val roots = s"$dir/sq_roots"
-    val resolved = Similarity.currentPqRoot(spark, roots) match {
-      case Some(r) => r
-      case None =>
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_sq_root").resolve("container").toString
-        sq8RootFixture(spark, dir, scratch)
-        Similarity.resolvePqIndexPath(spark, scratch)
-    }
+    val resolved = sq8Root(spark, dir)
     val quantizer = spark.read.parquet(s"$resolved/quantizer")
     Similarity.sq8SaturationMonitor(e, quantizer,
       when(col("vec_id") % 10 === 0, lit("appended")).otherwise(lit("trained")))
   }
+
+  /** The resolved version of the s18/s19 SQ8 root: the one pre-committed
+    * at `sq_roots/` when the overlay built it, else one built in
+    * execution scratch — both through [[sq8RootFixture]], byte-identically.
+    */
+  private def sq8Root(spark: SparkSession, dir: String): String =
+    rootedVersion(spark, dir, "sq_roots") { c =>
+      sq8RootFixture(spark, dir, c)
+      Similarity.resolvePqIndexPath(spark, c)
+    }
+
+  /** The current version under `$dir/$roots` when one is committed there;
+    * otherwise `commit` builds a container in a scratch directory of the
+    * current execution ([[Scratch.dir]]) and returns its resolved version.
+    */
+  private def rootedVersion(spark: SparkSession, dir: String, roots: String)(
+      commit: String => String): String =
+    Similarity.currentPqRoot(spark, s"$dir/$roots").getOrElse(
+      commit(Scratch.dir(s"graft_$roots").resolve("container").toString))
 
   def topkIvfMultiProbe(spark: SparkSession, dir: String): DataFrame =
     Similarity.topkIvfMultiProbe(emb(spark, dir), pqQueryPred, k = 3)
@@ -874,29 +876,24 @@ object EntryOps {
     * generations + appended delta). When `dir` carries a pre-committed
     * container at `pq_roots/` (the Bench overlay builds one UNTIMED), the
     * entry prices pure query-time cost: resolve + read +
-    * ADC top-k. Otherwise (the Verify path) it commits v1 into a scratch
-    * container and queries through the same resolver — build cost
-    * in-plan, the s09 fallback pattern. Every lifecycle step is
-    * deterministic, so the oracle is s09's SQL VERBATIM (s07 bounded):
+    * ADC top-k. Otherwise (the Verify path) it commits v1 into a
+    * container in execution scratch and queries through the same
+    * resolver — build cost in-plan, the s09 fallback pattern. Every
+    * lifecycle step is deterministic, so the oracle is s09's SQL VERBATIM (s07 bounded):
     * the container, resolver, and generation read must not change one bit
     * of the result.
     */
   def topkPqRooted(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val roots = s"$dir/pq_roots"
-    val resolved = Similarity.currentPqRoot(spark, roots) match {
-      case Some(r) => r
-      case None =>
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_pq_root").resolve("container").toString
-        Similarity.commitPqRoot(spark, e, scratch)
-        val v = Similarity.resolvePqIndexPath(spark, scratch)
-        // fold the (empty) delta into a marker-committed generation, so
-        // the oracle-hash-checked route reads codes_g1 through the
-        // generation resolver — compaction's read path joins the hard
-        // correctness signal; a zero-batch fold is content-identical
-        Similarity.compactPqIndex(spark, v)
-        v
+    val resolved = rootedVersion(spark, dir, "pq_roots") { c =>
+      Similarity.commitPqRoot(spark, e, c)
+      val v = Similarity.resolvePqIndexPath(spark, c)
+      // fold the (empty) delta into a marker-committed generation, so
+      // the oracle-hash-checked route reads codes_g1 through the
+      // generation resolver — compaction's read path joins the hard
+      // correctness signal; a zero-batch fold is content-identical
+      Similarity.compactPqIndex(spark, v)
+      v
     }
     // self-describing geometry, as in topkPqIndexed: readers follow the
     // committed version's quantizer, never a hardcoded default
@@ -913,24 +910,19 @@ object EntryOps {
     * `v-NNNNNNNN/` container ([[Similarity.commitIvfPqRoot]]) resolved per
     * query, coarse probe + residual ADC + exact re-rank against
     * [[Similarity.readPqCodes]]'s generation view. Pre-committed container
-    * at `ivfpq_roots/` when the overlay built one; scratch-committed v1
-    * otherwise. Oracle: s10's SQL verbatim (s08 bounded).
+    * at `ivfpq_roots/` when the overlay built one; v1 committed in
+    * execution scratch otherwise. Oracle: s10's SQL verbatim (s08
+    * bounded).
     */
   def topkIvfPqRooted(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val roots = s"$dir/ivfpq_roots"
-    val resolved = Similarity.currentPqRoot(spark, roots) match {
-      case Some(r) => r
-      case None =>
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_ivfpq_root").resolve("container")
-          .toString
-        Similarity.commitIvfPqRoot(spark, e, scratch)
-        val v = Similarity.resolvePqIndexPath(spark, scratch)
-        // generation-read route under the oracle, as in topkPqRooted —
-        // the codes compaction is schema-agnostic (bucket rides the fold)
-        Similarity.compactPqIndex(spark, v)
-        v
+    val resolved = rootedVersion(spark, dir, "ivfpq_roots") { c =>
+      Similarity.commitIvfPqRoot(spark, e, c)
+      val v = Similarity.resolvePqIndexPath(spark, c)
+      // generation-read route under the oracle, as in topkPqRooted —
+      // the codes compaction is schema-agnostic (bucket rides the fold)
+      Similarity.compactPqIndex(spark, v)
+      v
     }
     val centroids = spark.read.parquet(s"$resolved/centroids")
     val codebooks = spark.read.parquet(s"$resolved/codebooks")
@@ -1257,47 +1249,22 @@ object EntryOps {
       .orderBy(col("w"))
   }
 
-  /** The session-cached scratch roots, by the pre-provisioned path they
-    * stand in for: the temporary directory each was built in. Every reader
+  /** `$dir/$name` when it holds every one of `parts`; otherwise a session
+    * root ([[Scratch.sessionRoot]]) built ONCE per JVM by `build`, so
+    * consumers in the same session (a plan build, repeated constructions)
+    * load it and never rebuild. The key includes the data dir, so
+    * different scale factors never share a root. Every reader
     * materializes what it reads from a root before its entry returns (the
-    * BPE model loads collect, e09's feature reads are barriered), so a
-    * dropped root breaks no plan already built.
-    */
-  private val scratchRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  sys.addShutdownHook(clearSessionModelRoots())
-
-  /** `$dir/$name` when it holds every one of `parts`; otherwise a scratch
-    * root built ONCE per JVM by `build` and cached, so consumers in the
-    * same session (a plan build, repeated constructions) load it and never
-    * rebuild. The key includes the data dir, so different scale factors
-    * never share a root.
+    * BPE model loads collect, e09's feature reads are barriered), so
+    * clearing the roots breaks no plan already built.
     */
   private def sessionRoot(spark: SparkSession, dir: String, name: String,
       parts: String*)(build: String => Unit): String = {
     val pre = s"$dir/$name"
     val fs = graft.ops.IndexFs.fs(spark, dir)
     if (parts.forall(p => graft.ops.IndexFs.exists(fs, s"$pre/$p"))) pre
-    else scratchRoots.computeIfAbsent(pre, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_$name")
-      try build(tmp.resolve("root").toString)
-      catch { case e: Throwable =>
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile); throw e }
-      tmp
-    }).resolve("root").toString
+    else Scratch.sessionRoot(pre, s"graft_$name")(build)
   }
-
-  /** Drops every session-cached scratch root and deletes its directory.
-    * PlanSnapshotSpec calls it so a query's golden `prequery_jobs` always
-    * records the COLD construction (train + persist + load), independent
-    * of which suite ran first in the shared test JVM; a shutdown hook
-    * calls it at JVM exit.
-    */
-  private[graft] def clearSessionModelRoots(): Unit =
-    scratchRoots.keySet.forEach { k =>
-      Option(scratchRoots.remove(k))
-        .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
-    }
 
   /** The t23/q38 PERSISTED 256-merge model root ([[sessionRoot]]): a
     * pre-provisioned `$dir/bpe_model_256` is used as-is; otherwise the
@@ -1516,43 +1483,6 @@ object EntryOps {
         Seq("doc_id"))
       .unionByName(plantedRefusals)
     Dedup.admitAgainstIndexes(arrivals, textIdx, embIdx, evalIdx)
-  }
-
-  /** e08's fixture split PERSISTED for the STREAMING scale probe: the
-    * three gate indexes land under `root` (text/, emb/, eval/) and the
-    * arrival cohort under `root/arrivals` — the deployment layout
-    * [[graft.streaming.LogStream.admissionArrivals]] reads per
-    * micro-batch. Built from the same cohort formulas as
-    * [[admissionPipeline]] (which keeps its in-plan build — its oracle
-    * hash-checks that composition as one plan); the probe times ONLY the
-    * per-batch stream body against these persisted tables, exactly what
-    * a production ingest pays per trigger.
-    */
-  def admissionStreamFixture(spark: SparkSession, dir: String,
-      root: String): Unit = {
-    val d = plantedCorpus(docs(spark, dir)).select(col("doc_id"), col("text"))
-    val e = emb(spark, dir)
-    val corpusE = e.filter(col("vec_id") % 10 =!= 7)
-      .select(col("vec_id"), col("embedding"))
-    val nE = graft.ops.ParquetMeta.rowCountOrScan(spark,
-      s"$dir/embeddings.parquet", e.count()) * 9L / 10L
-    val planes = grownPlanes(nE)
-    Dedup.buildCorpusIndex(d.filter(col("doc_id") % 10 =!= 7))
-      .write.mode("overwrite").parquet(s"$root/text")
-    Dedup.buildEmbedIndexBanded(corpusE, planes)
-      .write.mode("overwrite").parquet(s"$root/emb")
-    Dedup.buildEvalGramIndex(d.filter(col("doc_id") % 100 === 0), n = 8)
-      .write.mode("overwrite").parquet(s"$root/eval")
-    val plantedRefusals = spark.sql(
-      s"""SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(NULL AS STRING) AS text,
-                 ${vecSql(plantedLearnVec)} AS embedding
-          UNION ALL
-          SELECT CAST(-2 AS BIGINT), '', CAST(NULL AS ARRAY<FLOAT>)""")
-    d.filter(col("doc_id") % 10 === 7)
-      .join(e.select(col("vec_id").as("doc_id"), col("embedding")),
-        Seq("doc_id"))
-      .unionByName(plantedRefusals)
-      .write.mode("overwrite").parquet(s"$root/arrivals")
   }
 
   /** The t08/e02 fixture corpus: every train doc with doc_id % 23 == 1 gets
@@ -3319,13 +3249,7 @@ object EntryOps {
     * every verdict and every sizing column re-derived analytically.
     */
   def videoAdmission(spark: SparkSession, dir: String): DataFrame = {
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_vidadm").resolve("index").toString
-    graft.ops.Dedup.buildVideoGramIndex(
-      videoDescriptorTable(spark, dir,
-        where = !(col("doc_id") % 10).isin(1, 3, 9))
-        .select(col("doc_id"), col("text")))
-      .write.parquet(idxPath)
+    val idx = videoCorpusIndex(spark, dir)
     // barriered (r19): arr feeds the near-dup verdict (via its text) AND
     // the final admission decoration join — without the barrier each
     // consumer re-decoded every arrival container. Batch-sized (id + text
@@ -3333,8 +3257,7 @@ object EntryOps {
     val arr = videoArrivalDecorated(spark, dir,
       (col("doc_id") % 10).isin(1, 3, 9)).barriered
     val v = graft.ops.Dedup.videoNearDedupAgainstIndex(
-      arr.select(col("doc_id"), col("text")),
-      spark.read.parquet(idxPath))
+      arr.select(col("doc_id"), col("text")), idx)
       .select(col("doc_id"), col("verdict"), col("match_id"), col("jaccard"))
     arr.join(v, Seq("doc_id"))
       .select(col("doc_id"),
@@ -3366,18 +3289,26 @@ object EntryOps {
     * cohort split.
     */
   def videoDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_vididx").resolve("index").toString
+    val idx = videoCorpusIndex(spark, dir)
+    graft.ops.Dedup.videoNearDedupAgainstIndex(
+      videoArrivalText(spark, dir, (col("doc_id") % 10).isin(1, 3, 9)), idx)
+      .select(col("doc_id"), col("verdict"), col("match_id"), col("jaccard"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** d37/e10's persisted index: the corpus cohort's
+    * (doc_id % 10 ∉ {1, 3, 9}) [[graft.ops.Dedup.buildVideoGramIndex]]
+    * table, written now into a scratch directory of the current execution
+    * ([[Scratch.dir]]), and read back.
+    */
+  private def videoCorpusIndex(spark: SparkSession, dir: String): DataFrame = {
+    val path = Scratch.dir("graft_vididx").resolve("index").toString
     graft.ops.Dedup.buildVideoGramIndex(
       videoDescriptorTable(spark, dir,
         where = !(col("doc_id") % 10).isin(1, 3, 9))
         .select(col("doc_id"), col("text")))
-      .write.parquet(idxPath)
-    graft.ops.Dedup.videoNearDedupAgainstIndex(
-      videoArrivalText(spark, dir, (col("doc_id") % 10).isin(1, 3, 9)),
-      spark.read.parquet(idxPath))
-      .select(col("doc_id"), col("verdict"), col("match_id"), col("jaccard"))
-      .orderBy(col("doc_id"))
+      .write.parquet(path)
+    spark.read.parquet(path)
   }
 
   /** d38 — the SELF-LEARNING VIDEO near-dup stream (the SEVENTH learning
@@ -4041,7 +3972,7 @@ object EntryOps {
     * (doc_id, text); the `x` prefix keeps multiple chains in one query
     * from colliding.
     */
-  private def duckPositional(x: String = "", source: String = "documents"): String = {
+  private def duckPositional(x: String = "", source: String): String = {
     val gram = (0 until 5).map(j => s"l[i + $j]").mkString(" || ' ' || ")
     s"""${x}w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l
             FROM $source),
@@ -4131,20 +4062,18 @@ object EntryOps {
     * K = greatest(8, ⌈count/targetCell⌉), seeds = the K smallest vec_ids
     * (the same deterministic sample `refinedAssignment` takes). Integer
     * arithmetic only, so the Spark side's `max(8L, (n + tc−1) / tc)`
-    * matches bit-for-bit. `countExpr` overrides the corpus count with the
+    * matches bit-for-bit. `countExpr` is the corpus count: the
     * Spark side's METADATA sizing rule (footer row count × cohort share,
     * r14 verdict item 3) — integer arithmetic again, so the two sides
     * derive the identical K without either scanning the corpus for it.
     */
   private def duckRefinedAssignGrown(source: String, targetCell: Int,
-      countExpr: Option[String] = None): String = {
-    val cnt = countExpr.getOrElse(s"(SELECT count(*) FROM $source)")
-    s"""nk AS (SELECT greatest(8, ($cnt + ${targetCell - 1}) // $targetCell) AS k),
+      countExpr: String): String =
+    s"""nk AS (SELECT greatest(8, ($countExpr + ${targetCell - 1}) // $targetCell) AS k),
           cent AS (SELECT vec_id AS cid, embedding AS ce FROM (
                    SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id ASC) AS rn
                    FROM $source) WHERE rn <= (SELECT k FROM nk)),
           ${duckRefinedAssignTail(source)}"""
-  }
 
   /** Shared tail of [[duckRefinedAssign]]/[[duckRefinedAssignGrown]]: seed
     * assignment → one 2²⁰-quantized Lloyd round → final assignment, ending
@@ -4433,7 +4362,7 @@ object EntryOps {
     s"""WITH scorpus AS (SELECT vec_id, embedding FROM embeddings
                  WHERE vec_id % 10 <= 6),
           ${duckRefinedAssignGrown("scorpus", 48,
-             Some("7 * (SELECT count(*) FROM embeddings) // 10"))},
+             "7 * (SELECT count(*) FROM embeddings) // 10")},
           m0 AS (SELECT vec_id AS ex_id, bucket AS cell,
                  embedding AS ex_e FROM asg2),
           a0 AS (SELECT vec_id, embedding AS e FROM embeddings
@@ -6527,7 +6456,7 @@ object EntryOps {
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
                  WHERE vec_id % 10 != 0),
           ${duckRefinedAssignGrown("corpus", 48,
-             Some("9 * (SELECT count(*) FROM embeddings) // 10"))},
+             "9 * (SELECT count(*) FROM embeddings) // 10")},
           arr0 AS (SELECT vec_id, embedding AS e FROM embeddings
                  WHERE vec_id % 10 = 0
                  UNION ALL SELECT CAST(-1 AS BIGINT), NULL

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.F
@@ -344,12 +343,14 @@ object SparkEntry {
   /** Builds the registered query `name` over `dir` and hands it to `sink`,
     * every Spark job of both described as `graft:query/<name>`; the
     * caller's description is restored after. Construction-time jobs (eager
-    * barriers, scalar reads) are named too.
+    * barriers, scalar reads) are named too. The scratch directories the
+    * entry asks for ([[Scratch.dir]]) are deleted when `sink` returns or
+    * throws, so `sink` must consume everything it needs from the frame.
     */
   def run[T](spark: SparkSession, name: String, dir: String)(
       sink: DataFrame => T): T =
-    graft.obs.JobLedger.described(spark, s"graft:query/$name")(
-      sink(queries(name)(spark, dir)))
+    Scratch.scoped(graft.obs.JobLedger.described(spark, s"graft:query/$name")(
+      sink(queries(name)(spark, dir))))
 
   def oracleSql: Map[String, String] =
     coreOracles ++ EntryOps.oracles ++ EntryOps.indexSplitOracles ++

@@ -384,8 +384,7 @@ object FlacFeatures {
       var extra = 0
       if (c0 >= 0x80) {
         var mask = 0x40
-        var cc = c0
-        while (mask != 0 && (cc & mask) != 0) { extra += 1; mask >>= 1 }
+        while (mask != 0 && (c0 & mask) != 0) { extra += 1; mask >>= 1 }
         if (extra < 1 || extra > 6) return 1
       }
       var num =

@@ -246,14 +246,13 @@ object JpegFeatures {
     var w = 0; var h = 0
     var comps: Array[Component] = null
     var dri = 0
-    var refusal: Refusal = null
     var progressive = false
     var prog: ProgState = null
 
     var i = 2
     while (true) {
-      if (i + 2 > n) return if (refusal != null) refusal else NoDims
-      if (u(i) != 0xff) return if (refusal != null) refusal else NoDims
+      if (i + 2 > n) return NoDims
+      if (u(i) != 0xff) return NoDims
       var m = u(i + 1)
       i += 2
       // fill bytes: any number of 0xFF may precede a marker
@@ -275,8 +274,7 @@ object JpegFeatures {
             val fin = finishProgressive(prog, qt, w, h)
             return if (fin != null) fin else new Refusal(w, h, comps.length)
           }
-          return if (refusal != null) refusal
-            else if (comps != null) new Refusal(w, h, comps.length) else NoDims
+          return refusalOr(comps, w, h)
         case 0xc0 | 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
              0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
           // every SOFn shares the header layout: record dims, then refuse
@@ -310,42 +308,42 @@ object JpegFeatures {
           }
           i += len
         case 0xc4 => // DHT: one or more tables per segment
-          if (i + 2 > n) return refusalOr(refusal, comps, w, h)
+          if (i + 2 > n) return refusalOr(comps, w, h)
           val len = be16(i)
-          if (i + len > n) return refusalOr(refusal, comps, w, h)
+          if (i + len > n) return refusalOr(comps, w, h)
           var p = i + 2
           val segEnd = i + len
           while (p < segEnd) {
-            if (p + 17 > segEnd) return refusalOr(refusal, comps, w, h)
+            if (p + 17 > segEnd) return refusalOr(comps, w, h)
             val tc = u(p) >> 4
             val th = u(p) & 0x0f
-            if (tc > 1 || th > 3) return refusalOr(refusal, comps, w, h)
+            if (tc > 1 || th > 3) return refusalOr(comps, w, h)
             val bits = new Array[Int](17)
             var total = 0
             var l = 1
             while (l <= 16) { bits(l) = u(p + l); total += bits(l); l += 1 }
             if (total > 256 || p + 17 + total > segEnd)
-              return refusalOr(refusal, comps, w, h)
+              return refusalOr(comps, w, h)
             val vals = new Array[Int](total)
             var k = 0
             while (k < total) { vals(k) = u(p + 17 + k); k += 1 }
             val huff = buildHuff(bits, vals)
-            if (huff == null) return refusalOr(refusal, comps, w, h)
+            if (huff == null) return refusalOr(comps, w, h)
             if (tc == 0) dcHuff(th) = huff else acHuff(th) = huff
             p += 17 + total
           }
           i += len
         case 0xdb => // DQT: one or more tables per segment
-          if (i + 2 > n) return refusalOr(refusal, comps, w, h)
+          if (i + 2 > n) return refusalOr(comps, w, h)
           val len = be16(i)
-          if (i + len > n) return refusalOr(refusal, comps, w, h)
+          if (i + len > n) return refusalOr(comps, w, h)
           var p = i + 2
           val segEnd = i + len
           while (p < segEnd) {
             val pq = u(p) >> 4
             val tq = u(p) & 0x0f
             if (pq != 0 || tq > 3 || p + 65 > segEnd) // 16-bit tables: refuse
-              return refusalOr(refusal, comps, w, h)
+              return refusalOr(comps, w, h)
             val tab = new Array[Int](64)
             var k = 0
             while (k < 64) { tab(k) = u(p + 1 + k); k += 1 }
@@ -355,11 +353,11 @@ object JpegFeatures {
           i += len
         case 0xdd => // DRI
           if (i + 2 > n || be16(i) != 4 || i + 4 > n)
-            return refusalOr(refusal, comps, w, h)
+            return refusalOr(comps, w, h)
           dri = be16(i + 2)
           i += 4
         case 0xda => // SOS
-          if (comps == null || i + 2 > n) return refusalOr(refusal, comps, w, h)
+          if (comps == null || i + 2 > n) return refusalOr(comps, w, h)
           val len = be16(i)
           if (i + len > n) return new Refusal(w, h, comps.length)
           if (progressive) {
@@ -394,18 +392,17 @@ object JpegFeatures {
           return decodeScan(b, i + len, n, w, h, comps, qt, dcHuff, acHuff, dri)
           }
         case _ => // APPn, COM, DNL, anything else with a length: skip
-          if (i + 2 > n) return refusalOr(refusal, comps, w, h)
+          if (i + 2 > n) return refusalOr(comps, w, h)
           val len = be16(i)
-          if (len < 2 || i + len > n) return refusalOr(refusal, comps, w, h)
+          if (len < 2 || i + len > n) return refusalOr(comps, w, h)
           i += len
       }
     }
     NoDims // unreachable
   }
 
-  private def refusalOr(r: Refusal, comps: Array[Component], w: Int, h: Int): Refusal =
-    if (r != null) r
-    else if (comps != null) new Refusal(w, h, comps.length)
+  private def refusalOr(comps: Array[Component], w: Int, h: Int): Refusal =
+    if (comps != null) new Refusal(w, h, comps.length)
     else NoDims
 
   private def decodeScan(b: Array[Byte], start: Int, end: Int, w: Int, h: Int,

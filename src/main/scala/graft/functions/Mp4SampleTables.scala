@@ -65,7 +65,7 @@ case class Mp4SampleTables(child: Expression) extends UnaryExpression
 }
 
 object Mp4SampleTables {
-  import Mp4Features.{parseBox, findChild, fourcc, u32, u64, FTYP, MOOV, TRAK, MDIA, HDLR}
+  import Mp4Features.{parseBox, findChild, u32, u64, FTYP, MOOV, TRAK, MDIA, HDLR}
 
   val trackSchema: StructType = StructType(Seq(
     StructField("trak_idx", LongType, nullable = false),

@@ -38,8 +38,6 @@ case class SimHash16(child: Expression) extends UnaryExpression
 }
 
 object SimHash16 {
-  private val HexDigits = "0123456789abcdef"
-
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: UTF8String): UTF8String = {
     if (text == null) return null

@@ -194,7 +194,7 @@ object Compaction {
   /** Returns true when this date committed a new generation. */
   private def compactDate(spark: SparkSession, fs: FileSystem, s: DateState,
       minLeaves: Int, keepLatest: Int,
-      zorderBy: Option[(String, String)] = None): Boolean = {
+      zorderBy: Option[(String, String)]): Boolean = {
     val committed = s.generations.collect { case (g, p, Some(c)) => (g, p, c) }
     val currentGen = if (committed.isEmpty) 0L else committed.map(_._1).max
     val coveredNow = if (committed.isEmpty) -1L else committed.maxBy(_._1)._3

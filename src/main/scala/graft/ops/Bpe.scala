@@ -379,13 +379,4 @@ object Bpe {
         "model_id — the table was edited after training; rebuild.")
     (modelId, merges)
   }
-
-  /** [[tokens]] under a LOADED model root — the application half of the
-    * persisted lifecycle. The load is driver-side and happens once at
-    * plan construction; the merge table enters the plan as
-    * [[graft.functions.BpeApply]]'s single reference object, exactly as
-    * with a freshly trained model.
-    */
-  def tokensUnderModel(spark: SparkSession, w: Column, rootPath: String): Column =
-    tokens(w, loadBpeModel(spark, rootPath)._2)
 }

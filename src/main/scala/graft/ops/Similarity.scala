@@ -1178,7 +1178,6 @@ object Similarity {
       dims: Int = 64): (DataFrame, DataFrame, DataFrame) = {
     val sub = dims / subspaces
     val quant = 1048576L
-    def dotFD(a: String, b: String) = pqDotFD(a, b)
     val (assigned, centroids) = refinedAssignment(emb, nCells)
     // residuals r = x − c[cell]: float minus double, both exact in double
     val resid = assigned.join(

@@ -132,25 +132,6 @@ object MailParser {
     out.toSeq
   }
 
-  /** Split an address list on top-level commas (respecting quotes and <>). */
-  def splitAddresses(v: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var inQuote = false
-    var depth = 0
-    v.foreach {
-      case '"' => inQuote = !inQuote; cur += '"'
-      case '<' if !inQuote => depth += 1; cur += '<'
-      case '>' if !inQuote => depth -= 1; cur += '>'
-      case ',' if !inQuote && depth == 0 =>
-        if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-        cur.clear()
-      case c => cur += c
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.toSeq
-  }
-
   private val AngleAddr = """(.*?)<([^<>]*)>\s*""".r
 
   def parseAddress(s: String): Address = {

@@ -1,6 +1,6 @@
 package graft.render
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 
 import graft.functions.F
 import graft.model.Config

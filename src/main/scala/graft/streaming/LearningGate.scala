@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{Barrier, Dedup, IndexFs, Similarity}
+import graft.ops.{Barrier, Dedup, Similarity}
 
 /** One SELF-LEARNING dedup modality: an arrivals stream judged against a
   * persisted index root that also learns from its own verdicts, so a later
@@ -96,26 +96,20 @@ final case class LearningGate[K](
     new LogStream.Steps(spark, s"gate/$name", batchId)
 
   /** The registered-query form: `base` writes the ingest-built index
-    * under a scratch root, then `batches` run through [[batch]] as
+    * under a root in a scratch directory of the current execution
+    * ([[graft.Scratch.dir]]), then `batches` run through [[batch]] as
     * batches 0, 1, 2, … Returns `batch_id` plus `cols`, ordered by
-    * (batch_id, first of `cols`). The scratch root is deleted before this
-    * returns: every verdict table is already materialized by its barrier.
+    * (batch_id, first of `cols`).
     */
   def replay(base: String => Unit, batches: Seq[DataFrame],
       cols: String*): DataFrame = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_learn_")
-    val root = scratch.resolve("root").toString
-    try {
-      base(root)
-      batches.zipWithIndex.map { case (arr, b) =>
-        batch(arr, root, b.toLong).withColumn("batch_id", lit(b.toLong))
-      }.reduce(_ unionByName _)
-        .select(("batch_id" +: cols).map(col): _*)
-        .orderBy(col("batch_id"), col(cols.head))
-    } finally {
-      val spark = batches.head.sparkSession
-      IndexFs.rmTree(IndexFs.fs(spark, scratch.toString), scratch.toString)
-    }
+    val root = graft.Scratch.dir("graft_learn_").resolve("root").toString
+    base(root)
+    batches.zipWithIndex.map { case (arr, b) =>
+      batch(arr, root, b.toLong).withColumn("batch_id", lit(b.toLong))
+    }.reduce(_ unionByName _)
+      .select(("batch_id" +: cols).map(col): _*)
+      .orderBy(col("batch_id"), col(cols.head))
   }
 }
 

@@ -254,12 +254,12 @@ class OpsSpec extends GraftSpec {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def roots(): Set[String] =
       tmp.list().filter(_.startsWith("graft_media_feat")).toSet
-    EntryOps.clearSessionModelRoots()
+    Scratch.clearSessionRoots()
     val before = roots()
     EntryOps.multimodalCorpusIncremental(spark, sf)
     val built = roots() -- before
     assert(built.size === 1)
-    EntryOps.clearSessionModelRoots()
+    Scratch.clearSessionRoots()
     assert((roots() & built).isEmpty)
   }
 
@@ -2287,11 +2287,41 @@ class OpsSpec extends GraftSpec {
       ovl.resolve("pq_roots").toString) === Some(1L))
     assert(Similarity.commitIvfPqRoot(spark, e,
       ovl.resolve("ivfpq_roots").toString) === Some(1L))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    assert(rows(EntryOps.topkPqRooted(spark, ovl.toString))
-      === rows(EntryOps.topkPqRooted(spark, sfDir)))
-    assert(rows(EntryOps.topkIvfPqRooted(spark, ovl.toString))
-      === rows(EntryOps.topkIvfPqRooted(spark, sfDir)))
+    def rows(name: String, dir: String) =
+      SparkEntry.run(spark, name, dir)(_.collect().toSeq)
+    assert(rows("s15_topk_pq_root", ovl.toString)
+      === rows("s15_topk_pq_root", sfDir))
+    assert(rows("s16_topk_ivfpq_root", ovl.toString)
+      === rows("s16_topk_ivfpq_root", sfDir))
+  }
+
+  test("entries that build scratch roots leave no graft_* directory " +
+      "behind, whether the sink returns or throws") {
+    val sfDir = "/root/testdata/sf0.001"
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs(): Set[String] = tmp.list().filter(_.startsWith("graft_")).toSet
+    val before = graftDirs()
+    Seq("s15_topk_pq_root", "s16_topk_ivfpq_root", "s18_topk_sq8_rooted",
+      "s19_sq8_saturation", "d37_video_dedup_incremental",
+      "e10_video_admission", "d24_learning_dedup").foreach { name =>
+      assert(SparkEntry.run(spark, name, sfDir)(_.collect()).nonEmpty, name)
+      val e = intercept[IllegalStateException](SparkEntry.run(spark, name,
+        sfDir)(_ => throw new IllegalStateException(s"$name sink failed")))
+      assert(e.getMessage === s"$name sink failed")
+    }
+    assert(graftDirs() -- before === Set.empty[String])
+  }
+
+  test("Scratch.dir outside an execution scope throws and names " +
+      "SparkEntry.run") {
+    val e = intercept[IllegalStateException](Scratch.dir("graft_orphan"))
+    assert(e.getMessage.contains("SparkEntry.run"))
+    val scope = new Scratch.Scope
+    val d = scope.dir("graft_scope")
+    scope.close()
+    scope.close()
+    assert(!java.nio.file.Files.exists(d))
+    intercept[IllegalStateException](scope.dir("graft_scope"))
   }
 
   test("versioned-root commit race: concurrent committers with a zero " +

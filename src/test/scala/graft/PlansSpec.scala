@@ -168,8 +168,8 @@ class PlansSpec extends GraftSpec {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = SparkEntry.queries("s04_topk_lsh_bands")(spark, sfDir)
-        .queryExecution.executedPlan
+      val plan = SparkEntry.run(spark, "s04_topk_lsh_bands", sfDir)(
+        _.queryExecution.executedPlan)
       val pairShuffles = plan.collect {
         case e: ShuffleExchangeExec
             if e.output.exists(_.name == "query_id") &&
@@ -195,8 +195,8 @@ class PlansSpec extends GraftSpec {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = SparkEntry.queries("q33_stratified_sample")(spark, sfDir)
-        .queryExecution.executedPlan
+      val plan = SparkEntry.run(spark, "q33_stratified_sample", sfDir)(
+        _.queryExecution.executedPlan)
       val wins = plan.collect { case w: WindowExec => w }
       val localRank = wins.filter(_.windowExpression.exists(_.name == "lrk"))
       assert(localRank.nonEmpty, "expected the salted local-rank window (lrk)")
@@ -219,8 +219,9 @@ class PlansSpec extends GraftSpec {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        violations(name, fn(spark, sfDir).queryExecution.executedPlan)
+      val all = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+        SparkEntry.run(spark, name, sfDir)(
+          df => violations(name, df.queryExecution.executedPlan))
       }
       assert(all.isEmpty, "\n" + all.mkString("\n"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
-import scala.collection.mutable
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -26,19 +24,13 @@ abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  private val tempDirs = mutable.ArrayBuffer[Path]()
+  private val scratch = new Scratch.Scope
 
   /** A fresh temporary directory, deleted with its contents after the
     * spec's last test.
     */
-  def tempDir(prefix: String): Path = tempDirs.synchronized {
-    val dir = Files.createTempDirectory(prefix)
-    tempDirs += dir
-    dir
-  }
+  def tempDir(prefix: String): Path = scratch.dir(prefix)
 
   override def afterAll(): Unit =
-    try tempDirs.synchronized(tempDirs.foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)))
-    finally super.afterAll()
+    try scratch.close() finally super.afterAll()
 }

@@ -1267,12 +1267,11 @@ class StreamingSpec extends GraftSpec {
       .map(_.toString.split('/').last).filter(_.startsWith("graft_learn_"))
       .toSet
     val before = scratchRoots()
-    val out = EntryOps.dedupLearningReplay(spark, dir.toString)
+    val v = SparkEntry.run(spark, "d24_learning_dedup", dir.toString)(
+      _.select("batch_id", "doc_id", "verdict", "match_id")
+        .as[(Long, Long, String, Option[Long])].collect())
     assert(scratchRoots() -- before === Set.empty[String])
-    // the verdicts outlive the root (barriered before it was deleted),
-    // including the planted copy only a learned row can catch
-    val v = out.select("batch_id", "doc_id", "verdict", "match_id")
-      .as[(Long, Long, String, Option[Long])].collect()
+    // the verdicts include the planted copy only a learned row can catch
     assert(v.length === 14)
     assert(v.contains((1L, -101L, "exact", Some(-100L))), v.toSeq)
   }
