@@ -116,8 +116,6 @@ object Main {
     // so overlapping cron fires or a concurrent live stream are safe.
     case List("maintain", warehouse) =>
       val fs = graft.ops.IndexFs.fs(spark, warehouse)
-      def learnedish(names: Seq[String]): Boolean =
-        names.contains("learned") || names.exists(_.startsWith("learned_g"))
       val actions = graft.ops.IndexFs.childNames(fs, warehouse).sorted.flatMap { name =>
         val child = s"$warehouse/$name"
         if (graft.ops.Similarity.currentPqRoot(spark, child).isDefined) {
@@ -127,11 +125,11 @@ object Main {
           Some(s"$name: container -> generation $g, gc'd $n versions")
         } else {
           val kids = graft.ops.IndexFs.childNames(fs, child)
-          if (learnedish(kids)) {
+          if (graft.ops.IndexFs.Learned.holds(kids)) {
             val g = graft.ops.Dedup.compactLearnedDelta(spark, child)
             Some(s"$name: learned root -> generation $g")
-          } else if (kids.contains("members") &&
-              learnedish(graft.ops.IndexFs.childNames(fs, s"$child/members"))) {
+          } else if (kids.contains("members") && graft.ops.IndexFs.Learned
+              .holds(graft.ops.IndexFs.childNames(fs, s"$child/members"))) {
             val g = graft.ops.Dedup.compactLearnedDelta(spark, s"$child/members")
             Some(s"$name/members: learned root -> generation $g")
           } else if (kids.contains("codebooks") && kids.contains("codes")) {

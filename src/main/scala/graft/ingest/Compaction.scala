@@ -134,8 +134,8 @@ object Compaction {
   /** Compact every date whose un-covered positive leaf count is at least
     * `minLeaves`, keeping the newest `keepLatest` batch leaves out of the
     * rewrite (replay safety).
-    */
-  /** `zorderBy`: when set, the compaction rewrite also Z-ORDER clusters the
+    *
+    * `zorderBy`: when set, the compaction rewrite also Z-ORDER clusters the
     * generation leaf on the two named columns ([[Ingest.writeZOrdered]]'s
     * range-normalized Morton layout) — compaction is the natural home for
     * multi-dimensional re-clustering because it already rewrites the data
@@ -180,7 +180,7 @@ object Compaction {
   private def withDateLock(fs: FileSystem, dateDir: Path,
       lockTimeoutMs: Long)(body: => Unit): Unit = {
     val lock = new Path(dateDir, "_graft_compact.lock")
-    def claim(): Boolean = Ingest.tryClaim(fs, lock)
+    def claim(): Boolean = graft.ops.IndexFs.tryClaim(fs, lock.toString)
     val owned = claim() || {
       val stale =
         try System.currentTimeMillis() -

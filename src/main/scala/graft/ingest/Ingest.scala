@@ -389,7 +389,7 @@ object Ingest {
       val next = committedVersion + 1
       val target = new org.apache.hadoop.fs.Path(path, f"v-$next%08d")
       val lock = new org.apache.hadoop.fs.Path(path, f"v-$next%08d.lock")
-      if (tryClaim(fs, lock)) {
+      if (graft.ops.IndexFs.tryClaim(fs, lock.toString)) {
         if (fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))) {
           // `next` was committed between our resolve and claim (the previous
           // holder releases its lock only after _SUCCESS): stale merge base
@@ -448,21 +448,6 @@ object Ingest {
   private def dimension(spark: SparkSession, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(graft.model.Schemas.contacts.map(_.copy(nullable = true))))
-
-  /** Atomic create-if-absent claim marker. `java.io.File.createNewFile` is
-    * the atomic primitive on the local FS; elsewhere `create(overwrite=false)`
-    * is atomic on HDFS (namenode-arbitrated) — the two stores this layer
-    * targets directly (object stores: see the commit protocol note above).
-    */
-  private[ingest] def tryClaim(fs: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path): Boolean = {
-    fs.mkdirs(lock.getParent)
-    if (fs.getScheme == "file")
-      new java.io.File(lock.toUri.getPath).createNewFile()
-    else
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-  }
 
   private[ingest] val VersionDirRe = ".*/v-(\\d{8})$".r
   private[ingest] val LockFileRe = ".*/v-(\\d{8})\\.lock$".r

@@ -620,186 +620,33 @@ object Dedup {
     * ([[spanCheckAgainstIndex]]'s run merging depends on it) because its
     * learning stream writes only first-seen grams.
     *
-    * Every part is read pinned ([[readPinned]]): its data schema comes from
-    * one leaf's footer, so the read runs no schema-inference job; the live
-    * side's `batch_id` is still discovered from the paths.
+    * Every part is read pinned ([[IndexFs.readPinned]]): its data schema
+    * comes from one leaf's footer, so the read runs no schema-inference
+    * job; the live side's `batch_id` is still discovered from the paths.
     */
   def readWithLearned(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame = {
-    val base = readPinned(spark, s"$rootPath/base")
-    // Hadoop FileSystem listing ([[IndexFs]]) so a learned-delta root on
-    // hdfs://s3a:// works the same as local disk
-    val fs = IndexFs.fs(spark, rootPath)
-    val (gen, horizon) = currentLearnedGeneration(fs, rootPath)
-    // a compacted generation serves batches ≤ its horizon with batch_id
-    // kept AS A COLUMN (not a partition): the beforeBatch replay contract
-    // must keep filtering inside the consolidated files (row-group stats
-    // prune), and the small-file problem was the partition count
-    val genSide = gen.map(g =>
-      readPinned(spark, s"$rootPath/$LearnedGenPrefix$g")
-        .filter(col("batch_id") < beforeBatch).drop("batch_id"))
-    val learned = s"$rootPath/learned"
-    val hasLive = IndexFs.childNames(fs, learned)
-      .exists(_.startsWith("batch_id="))
-    val liveSide =
-      if (hasLive) Some(readPinned(spark, learned)
-        // > horizon: a replayed old batch's re-written partition must be
-        // invisible once its rows live in the generation (same discipline
-        // as readPqCodes); < beforeBatch: the replay-safety contract
-        .filter(col("batch_id") > horizon && col("batch_id") < beforeBatch)
-        .drop("batch_id"))
-      else None
-    (Seq(base) ++ genSide ++ liveSide).reduce(_ unionByName _)
-  }
-
-  /** `spark.read.parquet(path)` with the data schema pinned from one leaf's
-    * footer ([[ParquetMeta.dataSchema]]): no schema-inference job. With no
-    * readable leaf, the inferring read, which behaves as it always did.
-    */
-  private def readPinned(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    ParquetMeta.dataSchema(spark, path)
-      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-
-  private val LearnedGenPrefix = "learned_g"
-  private val LearnedGenMarker = "_GRAFT_LEARNED_GEN"
-  private val LearnedCompactLock = "_GRAFT_LEARNED_COMPACT.lock"
-
-  /** Highest MARKED learned generation and the batch horizon its marker
-    * records (−1 when none — all learned partitions are live). Unmarked
-    * generation dirs (torn compaction) are invisible.
-    */
-  /** All MARKED learned generations (id → horizon), ascending. */
-  private def listLearnedGenerations(fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: String): Seq[(Long, Long)] = {
-    val Gen = (LearnedGenPrefix + "(\\d+)").r
-    IndexFs.childNames(fs, rootPath).flatMap {
-      case Gen(g) =>
-        // torn/garbled marker → None: the generation stays uncommitted
-        // instead of crashing the read path (IndexFs.readMarkerLong)
-        IndexFs.readMarkerLong(fs,
-          s"$rootPath/$LearnedGenPrefix$g/$LearnedGenMarker")
-          .map(g.toLong -> _)
-      case _ => None
-    }.sortBy(_._1)
-  }
-
-  private def currentLearnedGeneration(fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: String): (Option[Long], Long) =
-    listLearnedGenerations(fs, rootPath).lastOption match {
-      case Some((g, h)) => (Some(g), h)
-      case None         => (None, -1L)
-    }
+      rootPath: String, beforeBatch: Long = Long.MaxValue): DataFrame =
+    (IndexFs.readPinned(spark, s"$rootPath/base") +:
+      IndexFs.Learned.readParts(spark, rootPath, Some(beforeBatch)))
+      .reduce(_ unionByName _)
 
   /** COMPACT a self-learning index root's `learned/` delta — the
     * batch-per-partition layout every learning stream writes
     * ([[graft.streaming.LearningGate]] and the substring check) grows
     * one directory per micro-batch forever; this folds the partitions at
     * or below the current horizon into one consolidated
-    * `learned_g<G+1>/` GENERATION, `batch_id` retained as a column so the
-    * `beforeBatch` replay contract ([[readCorpusIndex]]) keeps holding
-    * bit-for-bit across the flip — an in-flight stream's redelivered
-    * batch still sees knowledge STRICTLY below itself, compacted or not.
-    *
-    * Commit/GC/locking protocol = [[graft.ops.Similarity.compactPqIndex]]
-    * verbatim: marker after data by tmp+rename (torn run invisible,
-    * readers never see a partial marker), holder-token claim-lock with
-    * heartbeat (a live holder is never classified stale) and stale-steal
-    * (concurrent maintainers no-op, returning the current generation),
-    * token-suffixed staging dir renamed into place only after re-verifying
-    * ownership (a stolen claim aborts instead of interleaving files),
-    * superseded generations and absorbed partitions GC'd by the NEXT run
-    * (one grace cycle for in-flight readers). Works on any learned root —
-    * gram, content-hash, embedding, media, or the sem members subtree —
-    * because the fold never looks at the row schema: both of its reads take
-    * theirs from the leaves' footers ([[readPinned]]), with no inference job.
-    * Returns the committed generation id.
+    * `learned_g<G+1>/` GENERATION ([[IndexFs.Layout.fold]]), `batch_id`
+    * retained as a column so the `beforeBatch` replay contract
+    * ([[readCorpusIndex]]) keeps holding bit-for-bit across the flip — an
+    * in-flight stream's redelivered batch still sees knowledge STRICTLY
+    * below itself, compacted or not. Works on any learned root — gram,
+    * content-hash, embedding, media, or the sem members subtree — because
+    * the fold never looks at the row schema. Returns the committed
+    * generation id (0 while nothing is learned).
     */
   def compactLearnedDelta(spark: org.apache.spark.sql.SparkSession,
-      rootPath: String, lockTimeoutMs: Long = 10 * 60 * 1000L): Long = {
-    val fs = IndexFs.fs(spark, rootPath)
-    val lock = s"$rootPath/$LearnedCompactLock"
-    val token = java.util.UUID.randomUUID().toString
-    val (genAtEntry, _) = currentLearnedGeneration(fs, rootPath)
-    def current(): Long =
-      currentLearnedGeneration(fs, rootPath)._1.getOrElse(0L)
-    if (!IndexFs.tryClaim(fs, lock, token)) {
-      val stale = IndexFs.mtime(fs, lock)
-        .forall(System.currentTimeMillis() - _ > lockTimeoutMs)
-      val progressed =
-        currentLearnedGeneration(fs, rootPath)._1 != genAtEntry
-      if (stale && !progressed) {
-        val torn = genAtEntry.getOrElse(0L) + 1L
-        // marker re-checked at deletion time (see compactPqIndex)
-        val tornDir = s"$rootPath/$LearnedGenPrefix$torn"
-        if (!IndexFs.exists(fs, s"$tornDir/$LearnedGenMarker"))
-          IndexFs.rmTree(fs, tornDir)
-        IndexFs.childNames(fs, rootPath)
-          .filter(_.startsWith(s"$LearnedGenPrefix$torn${Similarity.StageSep}"))
-          .foreach(n => IndexFs.rmTree(fs, s"$rootPath/$n"))
-        IndexFs.release(fs, lock)
-        if (!IndexFs.tryClaim(fs, lock, token)) return current()
-      } else return current()
-    }
-    try IndexFs.withHeartbeat(fs, lock, token, lockTimeoutMs / 4) {
-      val gens = listLearnedGenerations(fs, rootPath)
-      val (gen, prevHorizon) = gens.lastOption match {
-        case Some((g, h)) => (Some(g), h)
-        case None         => (None, -1L)
-      }
-      val learned = s"$rootPath/learned"
-      val B = "batch_id=(\\d+)".r
-      val liveBatches: Seq[Long] = IndexFs.childNames(fs, learned).flatMap {
-        case B(b) => Some(b.toLong); case _ => None
-      }
-      val horizon = (liveBatches.filter(_ > prevHorizon) :+ prevHorizon).max
-      val prevGen = gen.map(g =>
-        readPinned(spark, s"$rootPath/$LearnedGenPrefix$g"))
-      val fresh =
-        if (horizon > prevHorizon)
-          Some(readPinned(spark, learned)
-            .filter(col("batch_id") > prevHorizon &&
-              col("batch_id") <= horizon)
-            .withColumn("batch_id", col("batch_id").cast("long")))
-        else None
-      val next = gen.getOrElse(0L) + 1L
-      val genDir = s"$rootPath/$LearnedGenPrefix$next"
-      val stage = s"$genDir${Similarity.StageSep}$token"
-      (prevGen.toSeq ++ fresh.toSeq) match {
-        case Nil => 0L // nothing learned yet: compaction is a no-op
-        case dfs =>
-          dfs.reduce(_ unionByName _)
-            .write.mode("overwrite").parquet(stage)
-          // ownership verified FIRST; only the live holder reclaims a torn
-          // predecessor's unmarked genDir (in `gens` if marked) and renames.
-          // Re-verified around the rename and before the marker (r12
-          // advice — see Similarity.compactPqIndex's publish block for the
-          // race and residual analysis)
-          val published = IndexFs.ownsClaim(fs, lock, token) && {
-            IndexFs.rmTree(fs, genDir)
-            IndexFs.ownsClaim(fs, lock, token) &&
-            IndexFs.rename(fs, stage, genDir) &&
-            IndexFs.ownsClaim(fs, lock, token)
-          }
-          if (!published) {
-            IndexFs.rmTree(fs, stage)
-            current()
-          } else {
-            IndexFs.commitSmallString(fs, s"$genDir/$LearnedGenMarker",
-              s"$horizon\n")
-            // GC superseded state BEFORE this run: generations below the
-            // previous one, and absorbed partitions at or below the
-            // PREVIOUS horizon — this run's predecessors survive one grace
-            // cycle for in-flight readers
-            gens.dropRight(1).foreach { case (g, _) =>
-              IndexFs.rmTree(fs, s"$rootPath/$LearnedGenPrefix$g") }
-            liveBatches.filter(_ <= prevHorizon).foreach { b =>
-              IndexFs.rmTree(fs, s"$learned/batch_id=$b") }
-            next
-          }
-      }
-    } finally IndexFs.releaseIfOwner(fs, lock, token)
-  }
+      rootPath: String, lockTimeoutMs: Long = 10 * 60 * 1000L): Long =
+    IndexFs.Learned.fold(spark, rootPath, lockTimeoutMs)
 
   /** Corpus-side MEDIA dedup index: one row per asset with its perceptual
     * hash (a 64-char bitstring from [[graft.functions.PpmDHash]] /

@@ -1,24 +1,26 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Hadoop-`FileSystem` primitives for the ANN / learned-delta index roots.
+/** The on-disk commit protocol of the ANN / learned-delta index roots, and
+  * the Hadoop-`FileSystem` primitives under it.
   *
-  * The index lifecycle ([[Similarity.compactPqIndex]]'s generation flips,
-  * [[Dedup]]'s `learned/` deltas) needs a handful of filesystem moves —
-  * list children, read/write a small marker, recursive delete, an atomic
-  * claim — and it needs them against WHATEVER store the index root lives
-  * on. `java.nio.file` only speaks the local disk; routing everything
-  * through the Hadoop `FileSystem` API (the same layer `spark.read` and
-  * the fact tables' `ingest.Ingest`/`ingest.Compaction` already use) makes
-  * an `hdfs://` or `s3a://` index root work identically to a local one —
-  * the resolver picks the driver from the path's scheme and the cluster's
-  * `hadoopConfiguration`.
+  * Three maintenance entries publish into an index root: the PQ codes
+  * compaction and the learned-delta compaction ([[Layout.fold]]) and the
+  * versioned-root commit ([[Similarity.commitPqRoot]] and its siblings).
+  * All three [[withClaim]] a lock and [[Claim.publish]] a staged dir under
+  * it; the two compactions and their readers ([[Layout.readParts]]) share
+  * one generation [[Layout]] each. No other code writes the protocol.
   *
-  * Driver-side only, and only against METADATA-sized payloads (dir
-  * listings, one-line markers): the data planes stay DataFrame reads and
-  * writes.
+  * Every filesystem move goes through the Hadoop `FileSystem` API (the same
+  * layer `spark.read` and the fact tables' `ingest.Ingest`/
+  * `ingest.Compaction` use), so an `hdfs://` or `s3a://` index root works
+  * identically to a local one — the resolver picks the driver from the
+  * path's scheme and the cluster's `hadoopConfiguration`. The primitives
+  * are driver-side and METADATA-sized (dir listings, one-line markers);
+  * the data planes stay DataFrame reads and writes.
   */
 private[graft] object IndexFs {
 
@@ -115,17 +117,16 @@ private[graft] object IndexFs {
     try Some(fs.getFileStatus(new Path(p)).getModificationTime)
     catch { case _: java.io.FileNotFoundException => None }
 
-  /** Atomic create-if-absent claim marker — `ingest.Ingest.tryClaim`'s
-    * protocol verbatim: `java.io.File.createNewFile` is the atomic
-    * primitive on the local FS; elsewhere `create(overwrite=false)` is
-    * atomic on HDFS (namenode-arbitrated). On object stores WITHOUT atomic
+  /** Atomic create-if-absent claim marker, also the fact tables' claim
+    * (`ingest.Ingest.upsertContacts`, `ingest.Compaction`):
+    * `java.io.File.createNewFile` is the atomic primitive on the local FS;
+    * elsewhere `create(overwrite=false)` is atomic on HDFS
+    * (namenode-arbitrated). On object stores WITHOUT atomic
     * create-if-absent (s3a without S3 conditional writes) the claim is
-    * ADVISORY ONLY — creation can race — so the claim-locked maintenance
-    * entries ([[Similarity.compactPqIndex]], [[Dedup.compactLearnedDelta]],
-    * the versioned-root commits) additionally verify the holder TOKEN
-    * ([[ownsClaim]]) immediately before publishing, and stage data under
-    * token-suffixed dirs renamed into place — a lost race then aborts a
-    * commit instead of mixing files.
+    * ADVISORY ONLY — creation can race — so [[withClaim]] additionally
+    * verifies the holder TOKEN ([[ownsClaim]]) immediately before
+    * publishing, and stages data under token-suffixed dirs renamed into
+    * place — a lost race then aborts a commit instead of mixing files.
     */
   def tryClaim(fs: FileSystem, lock: String): Boolean = {
     val p = new Path(lock)
@@ -249,4 +250,233 @@ private[graft] object IndexFs {
     */
   def releaseIfOwner(fs: FileSystem, lock: String, token: String): Unit =
     if (ownsClaim(fs, lock, token)) release(fs, lock)
+
+  /** Separator for token-suffixed STAGING dirs (`codes_g3__<token>`,
+    * `v-00000002__<token>`): anchored \d+ name regexes never match a
+    * staged name, so staging is invisible to every reader until the
+    * holder-verified rename publishes it under the committed name.
+    */
+  val StageSep = "__"
+
+  /** A claim held under a holder token: the only way to publish. */
+  final class Claim private[IndexFs] (fs: FileSystem, lock: String,
+      token: String) {
+
+    /** Write `dest` through `write` into a token-suffixed staging dir,
+      * rename it into place, then commit `marker` (holding `content`)
+      * AFTER the data. False, with the staging dir discarded, when the
+      * claim was lost: the committed state is whatever the current holder
+      * published.
+      *
+      * Ownership is verified FIRST: only the live holder may reclaim an
+      * unmarked `dest` (a torn predecessor's garbage), so the rename cannot
+      * be blocked, and a stolen claim never touches the stealer's
+      * in-progress dir. It is re-verified BETWEEN the destructive rmTree
+      * and the rename, and again before the marker: a holder paused past
+      * the stale timeout right after the first check could otherwise
+      * delete a stealer's freshly renamed (not-yet-marked) dir and publish
+      * its stale write over it. A failed late check leaves `dest` unmarked
+      * — invisible to readers, reclaimed as torn by the next holder. The
+      * residual (a pause INSIDE the rmTree→rename pair) is documented in
+      * docs/PLANS.md: it can discard a stealer's newer write, never mix
+      * files or lose source data.
+      */
+    def publish(dest: String, marker: String, content: String)(
+        write: String => Unit): Boolean = {
+      val stage = s"$dest$StageSep$token"
+      write(stage)
+      val published = ownsClaim(fs, lock, token) && {
+        rmTree(fs, dest)
+        ownsClaim(fs, lock, token) &&
+        rename(fs, stage, dest) &&
+        ownsClaim(fs, lock, token)
+      }
+      if (published) commitSmallString(fs, s"$dest/$marker", content)
+      else rmTree(fs, stage)
+      published
+    }
+  }
+
+  /** Run `body` holding `lock`, or return `lost` when another maintainer
+    * holds it. A lock untouched for `timeoutMs` whose holder made no
+    * progress (`stealable`) belongs to a crashed holder — live holders
+    * heartbeat ([[withHeartbeat]]), so stale means crashed — and is
+    * stolen: the unmarked `<root>/<torn>` dir and every `<torn>__*`
+    * staging dir it left are removed, the lock released and the claim
+    * retried once. The body runs under the heartbeat; the lock is
+    * released only while still owned.
+    */
+  def withClaim[T](fs: FileSystem, lock: String, timeoutMs: Long,
+      root: String, torn: String, marker: String)(stealable: => Boolean,
+      lost: => T)(body: Claim => T): T = {
+    val token = java.util.UUID.randomUUID().toString
+    if (!tryClaim(fs, lock, token)) {
+      val stale = mtime(fs, lock)
+        .forall(System.currentTimeMillis() - _ > timeoutMs)
+      if (!stale || !stealable) return lost
+      // marker re-checked at deletion time: a dir the holder committed
+      // after the progress check is not torn
+      if (!exists(fs, s"$root/$torn/$marker")) rmTree(fs, s"$root/$torn")
+      childNames(fs, root).filter(_.startsWith(s"$torn$StageSep"))
+        .foreach(n => rmTree(fs, s"$root/$n"))
+      release(fs, lock)
+      if (!tryClaim(fs, lock, token)) return lost
+    }
+    try withHeartbeat(fs, lock, token, timeoutMs / 4) {
+      body(new Claim(fs, lock, token))
+    } finally releaseIfOwner(fs, lock, token)
+  }
+
+  private val BatchDir = "batch_id=(\\d+)".r
+
+  /** The `batch_id=N` partition ids under `dir`; empty when absent. */
+  def batchIds(fs: FileSystem, dir: String): Seq[Long] =
+    childNames(fs, dir).collect { case BatchDir(b) => b.toLong }
+
+  def batchDir(dir: String, batchId: Long): String = s"$dir/batch_id=$batchId"
+
+  /** `spark.read.parquet(path)` with the data schema pinned from one leaf's
+    * footer ([[ParquetMeta.dataSchema]]): no schema-inference job;
+    * partition columns are still discovered from the paths. With no
+    * readable leaf, the inferring read, which behaves as it always did.
+    */
+  def readPinned(spark: SparkSession, path: String): DataFrame =
+    ParquetMeta.dataSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** A GENERATION layout over an index root: a stream appends
+    * `<delta>/batch_id=N` partitions; [[fold]] merges them with generation
+    * G (or the `seed` dir) into `<prefix><G+1>/`, committed by `marker`
+    * (holding the highest batch absorbed, the horizon) under the `lock`
+    * claim; [[readParts]] serves the newest marked generation plus the
+    * partitions above its horizon. `keepsBatchId`: the generation keeps
+    * `batch_id` as a long column (a reader filters on it) instead of
+    * dropping it.
+    *
+    * The horizon assumes ONE append-stream lineage (monotone batch ids per
+    * checkpoint — the same assumption the delta's replay idempotence
+    * rests on); a re-checkpointed stream needs a fresh index root.
+    */
+  final case class Layout(prefix: String, marker: String, lock: String,
+      delta: String, seed: Option[String], keepsBatchId: Boolean) {
+    private val Gen = s"$prefix(\\d+)".r
+
+    /** Whether a root's child `names` hold this layout's delta or a
+      * generation.
+      */
+    def holds(names: Seq[String]): Boolean =
+      names.contains(delta) || names.exists(_.startsWith(prefix))
+
+    /** (generation, horizon) for every MARKED generation, ascending. An
+      * unmarked generation dir (a torn fold) and a torn or garbled marker
+      * ([[readMarkerLong]]) are invisible, never a reader crash.
+      */
+    def generations(fs: FileSystem, root: String): Seq[(Long, Long)] =
+      childNames(fs, root).flatMap {
+        case Gen(g) =>
+          readMarkerLong(fs, s"$root/$prefix$g/$marker").map(g.toLong -> _)
+        case _ => None
+      }.sortBy(_._1)
+
+    /** The dir serving below the horizon (the newest of the marked `gens`,
+      * else the seed) and that horizon (−1 with none).
+      */
+    private def served(root: String,
+        gens: Seq[(Long, Long)]): (Option[String], Long) =
+      gens.lastOption match {
+        case Some((g, h)) => (Some(s"$root/$prefix$g"), h)
+        case None         => (seed.map(s => s"$root/$s"), -1L)
+      }
+
+    /** The parts a reader unions: the served generation (or seed) and the
+      * live partitions above its horizon, `batch_id` dropped, every part
+      * read pinned ([[readPinned]]). With `beforeBatch` (a layout that
+      * keeps `batch_id`), both parts hold only batches below it.
+      */
+    def readParts(spark: SparkSession, root: String,
+        beforeBatch: Option[Long]): Seq[DataFrame] = {
+      val fs = IndexFs.fs(spark, root)
+      val (gen, horizon) = served(root, generations(fs, root))
+      val genPart = gen.map { p =>
+        val df = readPinned(spark, p)
+        beforeBatch.fold(df)(b =>
+          df.filter(col("batch_id") < b).drop("batch_id"))
+      }
+      val d = s"$root/$delta"
+      // a fully-GC'd delta has no partitions left — nothing live to union
+      val livePart = if (batchIds(fs, d).isEmpty) None else Some {
+        // > horizon: a replayed old batch's re-written partition is
+        // invisible once its rows live in the generation
+        val above = col("batch_id") > horizon
+        readPinned(spark, d)
+          .filter(beforeBatch.fold(above)(b => above && col("batch_id") < b))
+          .drop("batch_id")
+      }
+      genPart.toSeq ++ livePart
+    }
+
+    /** Fold the served generation (or seed) and the delta's partitions up to
+      * the current horizon into the next generation, claim-locked
+      * ([[withClaim]]) and published by marker ([[Claim.publish]]).
+      * Batches landing during the fold have higher ids and stay live.
+      * GC removes what was superseded BEFORE this run — generations below
+      * the previous one, partitions at or below the previous horizon — so
+      * this run's predecessors survive one grace cycle for in-flight
+      * readers. A seed is never GC'd. Returns the committed generation:
+      * the current one for a loser or a lost claim, 0 with nothing to fold.
+      */
+    def fold(spark: SparkSession, root: String, lockTimeoutMs: Long): Long = {
+      val fs = IndexFs.fs(spark, root)
+      def current(): Option[Long] = generations(fs, root).lastOption.map(_._1)
+      val atEntry = current()
+      withClaim(fs, s"$root/$lock", lockTimeoutMs, root,
+          s"$prefix${atEntry.getOrElse(0L) + 1L}", marker)(
+          current() == atEntry, current().getOrElse(0L)) { claim =>
+        val gens = generations(fs, root)
+        val (prev, prevHorizon) = served(root, gens)
+        val d = s"$root/$delta"
+        val live = batchIds(fs, d)
+        val horizon = (live.filter(_ > prevHorizon) :+ prevHorizon).max
+        val fresh =
+          if (horizon <= prevHorizon) None
+          else Some {
+            val slice = readPinned(spark, d).filter(
+              col("batch_id") > prevHorizon && col("batch_id") <= horizon)
+            if (keepsBatchId)
+              slice.withColumn("batch_id", col("batch_id").cast("long"))
+            else slice.drop("batch_id")
+          }
+        (prev.map(readPinned(spark, _)).toSeq ++ fresh) match {
+          case Nil => 0L
+          case parts =>
+            val next = gens.lastOption.map(_._1).getOrElse(0L) + 1L
+            val genDir = s"$root/$prefix$next"
+            val merged = parts.reduce(_ unionByName _)
+            if (!claim.publish(genDir, marker, s"$horizon\n")(
+                merged.write.mode("overwrite").parquet(_)))
+              current().getOrElse(0L)
+            else {
+              gens.dropRight(1).foreach { case (g, _) =>
+                rmTree(fs, s"$root/$prefix$g") }
+              live.filter(_ <= prevHorizon)
+                .foreach(b => rmTree(fs, batchDir(d, b)))
+              next
+            }
+        }
+      }
+    }
+  }
+
+  /** PQ / IVF-PQ / SQ8 codes: the build's `codes/` seeds generation 1, and
+    * the append delta is `codes_appended/`.
+    */
+  val PqCodes = Layout("codes_g", "_GRAFT_PQ_GEN", "_GRAFT_PQ_COMPACT.lock",
+    "codes_appended", seed = Some("codes"), keepsBatchId = false)
+
+  /** A self-learning root's `learned/` delta: `base/` stays apart (readers
+    * union it), and a generation keeps `batch_id` for the readers'
+    * strictly-below-b replay bound.
+    */
+  val Learned = Layout("learned_g", "_GRAFT_LEARNED_GEN",
+    "_GRAFT_LEARNED_COMPACT.lock", "learned", seed = None, keepsBatchId = true)
 }

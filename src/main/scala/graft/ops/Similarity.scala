@@ -492,66 +492,9 @@ object Similarity {
     * parquet tables themselves.
     */
   def readPqCodes(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = {
-    val fs = IndexFs.fs(spark, indexPath)
-    val (gen, horizon) = currentCodesGeneration(fs, indexPath)
-    val base = gen match {
-      case Some(g) => spark.read.parquet(s"$indexPath/$GenPrefix$g")
-      case None    => spark.read.parquet(s"$indexPath/codes")
-    }
-    val delta = s"$indexPath/codes_appended"
-    // a fully-GC'd delta dir has no partitions left — reading it would
-    // fail schema inference, and there is nothing live to union anyway
-    val hasLive = IndexFs.childNames(fs, delta)
-      .exists(_.startsWith("batch_id="))
-    if (hasLive) {
-      val app = spark.read.parquet(delta)
-        .filter(col("batch_id") > horizon) // partition-pruned
-        .drop("batch_id")
-      base.unionByName(app)
-    } else base
-  }
-
-  private val GenPrefix = "codes_g"
-  private val GenMarker = "_GRAFT_PQ_GEN"
-  private val CompactLock = "_GRAFT_PQ_COMPACT.lock"
-
-  /** Separator for token-suffixed STAGING dirs (`codes_g3__<token>`,
-    * `v-00000002__<token>`): anchored \d+ name regexes never match a
-    * staged name, so staging is invisible to every reader until the
-    * holder-verified rename publishes it under the committed name.
-    */
-  private[ops] val StageSep = "__"
-
-  /** Highest MARKED codes generation under the index root, with the append
-    * horizon its marker records (−1 when none — base `codes/` serves, all
-    * appended batches are live). An unmarked generation dir (torn
-    * compaction) is invisible, exactly the fact-table commit protocol.
-    */
-  private def currentCodesGeneration(
-      fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: String): (Option[Long], Long) = {
-    listGenerations(fs, indexPath).lastOption match {
-      case Some((g, h)) => (Some(g), h)
-      case None         => (None, -1L)
-    }
-  }
-
-  /** (generation, horizon) pairs for every MARKED generation, ascending.
-    * A torn/garbled marker reads as None ([[IndexFs.readMarkerLong]]) —
-    * the generation stays invisible rather than crashing the read path.
-    */
-  private def listGenerations(fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: String): Seq[(Long, Long)] = {
-    val Gen = (GenPrefix + "(\\d+)").r
-    IndexFs.childNames(fs, indexPath)
-      .flatMap {
-        case Gen(g) =>
-          IndexFs.readMarkerLong(fs, s"$indexPath/$GenPrefix$g/$GenMarker")
-            .map(g.toLong -> _)
-        case _ => None
-      }.sortBy(_._1)
-  }
+      indexPath: String): DataFrame =
+    IndexFs.PqCodes.readParts(spark, indexPath, beforeBatch = None)
+      .reduce(_ unionByName _)
 
   /** COMPACT a PQ index's codes — fold the streaming append delta
     * ([[graft.streaming.LogStream.pqIndexAppendArrivals]]'s
@@ -561,157 +504,23 @@ object Similarity {
     * codes are merged bytes, codebooks untouched; retraining is
     * [[buildPqIndex]] when [[pqIndexDrift]] says so.
     *
-    * Commit protocol = the fact-table compaction's marker discipline
-    * (`ingest.Compaction`): the merged codes land in `codes_g<G+1>/`,
-    * then a `_GRAFT_PQ_GEN` marker (recording the highest appended
-    * batch_id absorbed) is written AFTER the data. [[readPqCodes]] serves
-    * the highest MARKED generation plus appended batches ABOVE its
-    * horizon — a torn compaction is invisible, and there is no instant at
-    * which a code row is absent or double-counted. Superseded generations
-    * and absorbed append partitions are GC'd by the NEXT run
-    * (current-plus-previous retention — an in-flight reader that resolved
-    * just before the flip is still scanning them).
+    * The merged codes land in `codes_g<G+1>/` with a `_GRAFT_PQ_GEN`
+    * marker recording the highest appended batch_id absorbed, under the
+    * `_GRAFT_PQ_COMPACT.lock` claim ([[IndexFs.Layout.fold]]): a
+    * concurrent maintainer no-ops and returns the currently committed
+    * generation (0 when only base `codes/` serves).
     *
-    * The horizon assumes ONE append-stream lineage (monotone batch ids per
-    * checkpoint — the same assumption the delta's replay idempotence
-    * rests on); a re-checkpointed stream needs a fresh index root or a
-    * rebuild.
-    *
-    * CONCURRENCY: compaction is guarded by an atomic claim-lock at the
-    * index root (`_GRAFT_PQ_COMPACT.lock`, `ingest.Ingest.tryClaim`'s
-    * create-if-absent protocol via [[IndexFs.tryClaim]]) carrying a unique
-    * HOLDER TOKEN, so two maintenance jobs cannot race the generation id.
-    * The LOSER no-ops and returns the currently committed generation (0
-    * when only base `codes/` serves) — compaction is idempotent
-    * maintenance, the winner is doing the work. While the holder works, a
-    * daemon HEARTBEAT refreshes the lock, so a live holder is never
-    * classified stale no matter how long the merge runs; a lock untouched
-    * for `lockTimeoutMs` with no MARKED generation newer than the loser
-    * observed is therefore a genuinely crashed holder: its torn staging
-    * dirs and lock are removed and the claim retried. The merged codes are
-    * staged under a token-suffixed dir and RENAMED into the generation dir
-    * only after re-verifying ownership — a holder that lost its claim
-    * (paused past the timeout, then stolen) aborts cleanly instead of
-    * interleaving files with the stealer's write — and the marker is
-    * published by tmp+rename ([[IndexFs.commitSmallString]]), so readers
-    * never observe a torn marker. All filesystem moves go through the
-    * Hadoop `FileSystem` API ([[IndexFs]]), so the index root may live on
-    * `hdfs://`/`s3a://` as well as local disk; on object stores without
-    * atomic create-if-absent the claim itself is advisory, but the
-    * token-verify + staged-rename still prevents a lost race from
-    * committing mixed data (see [[IndexFs.tryClaim]]).
-    * Returns the committed generation id.
+    * Base `codes/` is the BUILD's artifact and is never GC'd here: a
+    * RETRAIN (new codebooks) must land in a fresh index root (or clear
+    * the generations and the delta first) — codes are only meaningful
+    * under the codebooks that produced them, and stale generations would
+    * silently shadow a re-written codes/ otherwise. Returns the committed
+    * generation id.
     */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
-      lockTimeoutMs: Long = 10 * 60 * 1000L): Long = {
-    val fs = IndexFs.fs(spark, indexPath)
-    val lock = s"$indexPath/$CompactLock"
-    val token = java.util.UUID.randomUUID().toString
-    val gensAtEntry = listGenerations(fs, indexPath)
-    def current(): Long =
-      listGenerations(fs, indexPath).lastOption.map(_._1).getOrElse(0L)
-    if (!IndexFs.tryClaim(fs, lock, token)) {
-      // lock held: a live concurrent compactor owns the root — no-op —
-      // unless the lock is STALE with no newer marked generation (a
-      // crashed holder; live holders heartbeat), in which case steal:
-      // torn dirs (committed-name and staging) + lock removed
-      val stale = IndexFs.mtime(fs, lock)
-        .forall(System.currentTimeMillis() - _ > lockTimeoutMs)
-      val progressed =
-        listGenerations(fs, indexPath).lastOption.map(_._1) !=
-          gensAtEntry.lastOption.map(_._1)
-      if (stale && !progressed) {
-        val torn = gensAtEntry.lastOption.map(_._1).getOrElse(0L) + 1L
-        // marker re-checked at deletion time: a generation the holder
-        // committed between our progress check and here is NOT torn
-        val tornDir = s"$indexPath/$GenPrefix$torn"
-        if (!IndexFs.exists(fs, s"$tornDir/$GenMarker"))
-          IndexFs.rmTree(fs, tornDir)
-        IndexFs.childNames(fs, indexPath)
-          .filter(_.startsWith(s"$GenPrefix$torn$StageSep"))
-          .foreach(n => IndexFs.rmTree(fs, s"$indexPath/$n"))
-        IndexFs.release(fs, lock)
-        if (!IndexFs.tryClaim(fs, lock, token)) return current()
-      } else return current()
-    }
-    try IndexFs.withHeartbeat(fs, lock, token, lockTimeoutMs / 4) {
-      val gens = listGenerations(fs, indexPath)
-      val (baseDf, prevHorizon) = gens.lastOption match {
-        case Some((g, h)) =>
-          (spark.read.parquet(s"$indexPath/$GenPrefix$g"), h)
-        case None => (spark.read.parquet(s"$indexPath/codes"), -1L)
-      }
-      // horizon = highest appended batch DIRECTORY at merge start: batches
-      // landing during the merge have higher ids and stay live in the delta
-      val delta = s"$indexPath/codes_appended"
-      val B = "batch_id=(\\d+)".r
-      val liveBatches: Seq[Long] = IndexFs.childNames(fs, delta).flatMap {
-        case B(b) => Some(b.toLong); case _ => None
-      }
-      val horizon = (liveBatches.filter(_ > prevHorizon) :+ prevHorizon).max
-      val merged =
-        if (horizon > prevHorizon)
-          baseDf.unionByName(spark.read.parquet(delta)
-            .filter(col("batch_id") > prevHorizon &&
-              col("batch_id") <= horizon)
-            .drop("batch_id"))
-        else baseDf
-      val next = gens.lastOption.map(_._1).getOrElse(0L) + 1L
-      val genDir = s"$indexPath/$GenPrefix$next"
-      // stage under a token-suffixed name (invisible to the generation
-      // regex), then verify ownership and rename — two writers can never
-      // interleave files in one committed dir
-      val stage = s"$genDir$StageSep$token"
-      merged.write.mode("overwrite").parquet(stage)
-      // ownership verified FIRST: only the live holder may reclaim an
-      // unmarked genDir (a torn predecessor's garbage — it would be in
-      // `gens` if marked) so the publishing rename cannot be blocked;
-      // a stolen claim must not touch the stealer's in-progress dir.
-      // Re-verified BETWEEN the destructive rmTree and the rename, and
-      // again before the marker commit (r12 advice): a holder paused past
-      // the stale timeout right after the first check could otherwise
-      // delete a stealer's freshly renamed (not-yet-marked) generation
-      // and publish its stale merge over it. The checks shrink that
-      // window to single-operation width; the residual (a pause INSIDE
-      // the rmTree→rename pair) is documented with the advisory-claim
-      // caveat in docs/PLANS.md — it can discard a stealer's newer fold
-      // (re-foldable, idempotent), never mix files or lose source data.
-      val published = IndexFs.ownsClaim(fs, lock, token) && {
-        IndexFs.rmTree(fs, genDir)
-        IndexFs.ownsClaim(fs, lock, token) &&
-        IndexFs.rename(fs, stage, genDir) &&
-        IndexFs.ownsClaim(fs, lock, token)
-      }
-      if (!published) {
-        // claim stolen mid-merge (or a racer committed first): abort —
-        // our staging dir is ours to discard, the committed state is
-        // whatever the current holder published. (If the rename itself
-        // landed but the post-rename ownership check failed, genDir is
-        // left UNMARKED — invisible to readers, reclaimed as torn garbage
-        // by the next holder.)
-        IndexFs.rmTree(fs, stage)
-        current()
-      } else {
-        // marker AFTER the data — the atomic flip readers key on
-        IndexFs.commitSmallString(fs, s"$genDir/$GenMarker", s"$horizon\n")
-        // GC: everything SUPERSEDED BEFORE this run — generations below the
-        // previous one, and append partitions at or below the PREVIOUS
-        // horizon. This run's predecessors survive one more cycle for
-        // in-flight readers.
-        gens.dropRight(1).foreach { case (g, _) =>
-          IndexFs.rmTree(fs, s"$indexPath/$GenPrefix$g") }
-        // base `codes/` is the BUILD's artifact and is never GC'd here: a
-        // RETRAIN (new codebooks) must land in a fresh index root (or clear
-        // codes_g*/codes_appended first) — codes are only meaningful under
-        // the codebooks that produced them, and stale generations would
-        // silently shadow a re-written codes/ otherwise.
-        liveBatches.filter(_ <= prevHorizon).foreach { b =>
-          IndexFs.rmTree(fs, s"$delta/batch_id=$b") }
-        next
-      }
-    } finally IndexFs.releaseIfOwner(fs, lock, token)
-  }
+      lockTimeoutMs: Long = 10 * 60 * 1000L): Long =
+    IndexFs.PqCodes.fold(spark, indexPath, lockTimeoutMs)
 
   /** PQ index QUANTIZATION-DRIFT metric — the REBUILD TRIGGER for the
     * train/append cadence: per cohort (caller-labeled, e.g. trained vs
@@ -808,15 +617,17 @@ object Similarity {
     * through [[IndexFs]], so the container may live on `hdfs://`/`s3a://`.
     */
   def currentPqRoot(spark: org.apache.spark.sql.SparkSession,
-      rootsPath: String): Option[String] = {
-    val fs = IndexFs.fs(spark, rootsPath)
-    IndexFs.childNames(fs, rootsPath).flatMap {
+      rootsPath: String): Option[String] =
+    markedVersions(IndexFs.fs(spark, rootsPath), rootsPath).lastOption
+      .map(v => f"$rootsPath/v-$v%08d")
+
+  /** The container's MARKED version ids, ascending. */
+  private def markedVersions(fs: org.apache.hadoop.fs.FileSystem,
+      rootsPath: String): Seq[Long] =
+    IndexFs.childNames(fs, rootsPath).collect {
       case RootDirRe(n)
-        if IndexFs.exists(fs, s"$rootsPath/v-$n/$RootMarker") =>
-        Some(n.toLong)
-      case _ => None
-    }.maxOption.map(v => f"$rootsPath/v-$v%08d")
-  }
+        if IndexFs.exists(fs, s"$rootsPath/v-$n/$RootMarker") => n.toLong
+    }.sorted
 
   /** An index path a READER should scan: the current committed version of
     * a versioned container, or the path itself when it is a plain index
@@ -829,10 +640,9 @@ object Similarity {
     currentPqRoot(spark, path).getOrElse(path)
 
   /** BUILD a PQ index into the container's NEXT version and commit it by
-    * marker — the write side of the versioned-root flip. Claim-locked
-    * (`v-<N>.lock`, [[IndexFs.tryClaim]]): a concurrent maintainer
-    * no-ops with None; a stale lock (crashed holder, no marker landed)
-    * is stolen with its torn version dir, the fact-table protocol.
+    * marker — the write side of the versioned-root flip, claim-locked by
+    * `v-<N>.lock` ([[IndexFs.withClaim]]): a concurrent maintainer no-ops
+    * with None, and so does a holder whose claim was stolen mid-build.
     * Returns the committed version id.
     *
     * `emb` must be the corpus the new index should COVER — including any
@@ -854,67 +664,23 @@ object Similarity {
         codes.write.mode("overwrite").parquet(s"$vdir/codes")
     }
 
-  /** The shared versioned-root commit protocol: claim the next version's
-    * lock with a holder token, heartbeat it while `write` runs into a
-    * token-suffixed STAGING dir, re-verify ownership, rename into the
-    * version dir, marker AFTER the data (tmp+rename —
-    * [[IndexFs.commitSmallString]]), release-if-owner. Stale-lock steal
-    * (now reliable: live holders heartbeat, so stale ⇒ crashed) and
-    * loser-no-op semantics as documented on [[commitPqRoot]]; a holder
-    * whose claim was stolen mid-build aborts with None and discards its
-    * own staging dir — two builders can never interleave one version dir.
+  /** Claim the container's next version and publish `write`'s output as
+    * that version ([[IndexFs.Claim.publish]]); None when the claim is lost
+    * or the version is already marked. A stale lock whose version never
+    * got its marker belongs to a crashed holder and is stolen.
     */
   private def commitNextRoot(fs: org.apache.hadoop.fs.FileSystem,
       rootsPath: String, lockTimeoutMs: Long)(
       write: String => Unit): Option[Long] = {
-    val versions = IndexFs.childNames(fs, rootsPath).flatMap {
-      case RootDirRe(n) => Some(n.toLong); case _ => None
-    }
-    val marked = versions.filter(v =>
-      IndexFs.exists(fs, f"$rootsPath/v-$v%08d/$RootMarker"))
-    val next = (marked :+ 0L).max + 1
-    val vdir = f"$rootsPath/v-$next%08d"
+    val next = (markedVersions(fs, rootsPath) :+ 0L).max + 1
     val vname = f"v-$next%08d"
-    val lock = s"$vdir.lock"
-    val token = java.util.UUID.randomUUID().toString
-    if (!IndexFs.tryClaim(fs, lock, token)) {
-      val stale = IndexFs.mtime(fs, lock)
-        .forall(System.currentTimeMillis() - _ > lockTimeoutMs)
-      if (!stale || IndexFs.exists(fs, s"$vdir/$RootMarker")) return None
-      IndexFs.rmTree(fs, vdir) // crashed holder's torn version
-      IndexFs.childNames(fs, rootsPath)
-        .filter(_.startsWith(s"$vname$StageSep"))
-        .foreach(n => IndexFs.rmTree(fs, s"$rootsPath/$n"))
-      IndexFs.release(fs, lock)
-      if (!IndexFs.tryClaim(fs, lock, token)) return None
+    val vdir = s"$rootsPath/$vname"
+    def committed = IndexFs.exists(fs, s"$vdir/$RootMarker")
+    IndexFs.withClaim[Option[Long]](fs, s"$vdir.lock", lockTimeoutMs,
+        rootsPath, vname, RootMarker)(!committed, None) { claim =>
+      if (committed || !claim.publish(vdir, RootMarker, "1\n")(write)) None
+      else Some(next)
     }
-    try IndexFs.withHeartbeat(fs, lock, token, lockTimeoutMs / 4) {
-      if (IndexFs.exists(fs, s"$vdir/$RootMarker")) None
-      else {
-        val stage = s"$vdir$StageSep$token"
-        write(stage)
-        // ownership verified FIRST; only the live holder reclaims an
-        // unmarked vdir (a torn predecessor's garbage — a marked one
-        // short-circuited above) and renames its staging into place.
-        // Re-verified around the rename and before the marker (r12
-        // advice — see compactPqIndex's publish block for the race and
-        // residual analysis); a failed late check leaves vdir unmarked,
-        // which the next holder reclaims as torn garbage.
-        val published = IndexFs.ownsClaim(fs, lock, token) && {
-          IndexFs.rmTree(fs, vdir)
-          IndexFs.ownsClaim(fs, lock, token) &&
-          IndexFs.rename(fs, stage, vdir) &&
-          IndexFs.ownsClaim(fs, lock, token)
-        }
-        if (!published) {
-          IndexFs.rmTree(fs, stage)
-          None
-        } else {
-          IndexFs.commitSmallString(fs, s"$vdir/$RootMarker", "1\n")
-          Some(next)
-        }
-      }
-    } finally IndexFs.releaseIfOwner(fs, lock, token)
   }
 
   /** GC superseded container VERSIONS, keeping the newest `keep` MARKED
@@ -933,13 +699,7 @@ object Similarity {
       rootsPath: String, keep: Int = 2): Int = {
     require(keep >= 1, "must keep at least the current version")
     val fs = IndexFs.fs(spark, rootsPath)
-    val marked = IndexFs.childNames(fs, rootsPath).flatMap {
-      case RootDirRe(n)
-        if IndexFs.exists(fs, s"$rootsPath/v-$n/$RootMarker") =>
-        Some(n.toLong)
-      case _ => None
-    }.sorted
-    val doomed = marked.dropRight(keep)
+    val doomed = markedVersions(fs, rootsPath).dropRight(keep)
     doomed.foreach(v => IndexFs.rmTree(fs, f"$rootsPath/v-$v%08d"))
     doomed.size
   }
@@ -1051,9 +811,7 @@ object Similarity {
       embCurrent: DataFrame, oldRoot: String, newRoot: String): Unit = {
     val fs = IndexFs.fs(spark, oldRoot)
     val delta = s"$oldRoot/codes_appended"
-    val hasLive = IndexFs.childNames(fs, delta)
-      .exists(_.startsWith("batch_id="))
-    if (!hasLive) return
+    if (IndexFs.batchIds(fs, delta).isEmpty) return
     // anti-join against everything the new root SERVES (base + compacted
     // generations + already-carried/streamed appends — readPqCodes), not
     // just the build's base: a second carry pass is then a no-op instead
@@ -1061,7 +819,7 @@ object Similarity {
     val newServed = readPqCodes(spark, newRoot).select(col("vec_id"))
     // one row per missed vector, first batch that carried it (an append
     // stream writes each arrival once; min is the deterministic tiebreak)
-    val missing = spark.read.parquet(delta)
+    val missing = IndexFs.readPinned(spark, delta)
       .groupBy(col("vec_id"))
       .agg(min(col("batch_id")).cast("long").as("batch_id"))
       .join(newServed, Seq("vec_id"), "left_anti")
@@ -1722,15 +1480,12 @@ object Similarity {
     */
   def sq8IndexAppend(spark: org.apache.spark.sql.SparkSession,
       arrivals: DataFrame, indexPath: String): Long = {
-    val fs = IndexFs.fs(spark, indexPath)
     val delta = s"$indexPath/codes_appended"
-    val next = IndexFs.childNames(fs, delta)
-      .collect { case n if n.startsWith("batch_id=") =>
-        n.stripPrefix("batch_id=").toLong }
-      .foldLeft(-1L)(math.max) + 1
+    val next = (IndexFs.batchIds(IndexFs.fs(spark, indexPath), delta) :+ -1L)
+      .max + 1
     val quantizer = spark.read.parquet(s"$indexPath/quantizer")
     codeUnderQuantizer(arrivals, quantizer)
-      .write.mode("overwrite").parquet(s"$delta/batch_id=$next")
+      .write.mode("overwrite").parquet(IndexFs.batchDir(delta, next))
     next
   }
 

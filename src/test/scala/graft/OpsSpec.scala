@@ -1051,16 +1051,52 @@ class OpsSpec extends GraftSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$idx/codes_appended/batch_id=0")))
     // a STALE lock (crashed holder — old mtime, no marked progress) is
-    // stolen and the chain continues intact
-    java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 3600 * 1000L))
-    assert(Similarity.compactPqIndex(spark, idx) === 1L)
-    assert(!java.nio.file.Files.exists(lock), "lock released after commit")
+    // stolen at each of the three claim sites: the holder also left an
+    // unmarked next-generation (next-version) dir and a staging dir, and
+    // one maintenance call removes both, commits and releases the lock
+    def crashed(root: String, lockName: String, next: String)(
+        maintain: => Any, committed: Any, marker: String): Unit = {
+      def p(n: String) = java.nio.file.Paths.get(s"$root/$n")
+      val stage = s"${next}__deadbeef"
+      Seq(next, stage).foreach { d =>
+        java.nio.file.Files.createDirectories(p(d))
+        java.nio.file.Files.writeString(p(s"$d/torn"), "crashed holder")
+      }
+      if (!java.nio.file.Files.exists(p(lockName)))
+        java.nio.file.Files.createFile(p(lockName))
+      java.nio.file.Files.setLastModifiedTime(p(lockName),
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - 3600 * 1000L))
+      assert(maintain === committed, s"$root: the steal commits")
+      assert(!java.nio.file.Files.exists(p(s"$next/torn")),
+        s"$root: torn $next reclaimed")
+      assert(!java.nio.file.Files.exists(p(stage)), s"$root: staging reclaimed")
+      assert(java.nio.file.Files.exists(p(s"$next/$marker")),
+        s"$root: $next committed by marker")
+      assert(!java.nio.file.Files.exists(p(lockName)),
+        s"$root: lock released after commit")
+    }
+    crashed(idx, "_GRAFT_PQ_COMPACT.lock", "codes_g1")(
+      Similarity.compactPqIndex(spark, idx), 1L, "_GRAFT_PQ_GEN")
     assert(Similarity.readPqCodes(spark, idx)
       .select("vec_id").distinct().count() === emb.count())
     // sequential runs still chain normally after the steal
     assert(Similarity.compactPqIndex(spark, idx) === 2L)
+    val learned = tempDir("graft_learned_lock").resolve("index").toString
+    val knowledge = emb.select(col("vec_id").as("ex_id"))
+    knowledge.filter(col("ex_id") % 2 === 0).write.parquet(s"$learned/base")
+    knowledge.filter(col("ex_id") % 2 === 1)
+      .withColumn("batch_id", col("ex_id") % 3)
+      .write.partitionBy("batch_id").parquet(s"$learned/learned")
+    crashed(learned, "_GRAFT_LEARNED_COMPACT.lock", "learned_g1")(
+      Dedup.compactLearnedDelta(spark, learned), 1L, "_GRAFT_LEARNED_GEN")
+    assert(Dedup.readWithLearned(spark, learned).count() === emb.count())
+    val container = tempDir("graft_root_lock").resolve("container").toString
+    crashed(container, "v-00000001.lock", "v-00000001")(
+      Similarity.commitPqRoot(spark, emb, container), Some(1L),
+      "_GRAFT_PQ_ROOT")
+    assert(Similarity.resolvePqIndexPath(spark, container)
+      .endsWith("v-00000001"))
   }
 
   test("minhashLsh band-frequency cap bounds a degenerate hot band") {
